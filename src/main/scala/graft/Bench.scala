@@ -356,24 +356,29 @@ object HostProbe {
   * readings; a current min above band x tolerance is flagged in the
   * bench JSON so drift fails in the round artifact itself. */
 object BenchBands {
-  def load(path: String): (Double, Map[String, Double]) =
-    try {
-      import org.json4s._
-      val o = jackson.JsonMethods.parse(new String(
+  /** Throws, naming `path`, when the file is missing, does not parse or
+    * has no `bands` object: an empty band table would turn the gate off
+    * without a word. */
+  def load(path: String): (Double, Map[String, Double]) = {
+    import org.json4s._
+    val o = try jackson.JsonMethods.parse(new String(
         java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
         "UTF-8"))
-      val tol = o \ "tolerance" match {
-        case JDouble(x) => x
-        case JInt(x) => x.toDouble
-        case _ => 2.0
-      }
-      val bands = o \ "bands" match {
-        case JObject(fields) => fields.collect {
-          case JField(k, JDouble(v)) => k -> v
-          case JField(k, JInt(v)) => k -> v.toDouble
-        }.toMap
-        case _ => Map.empty[String, Double]
-      }
-      (tol, bands)
-    } catch { case _: Exception => (2.0, Map.empty) }
+      catch { case e: Exception => throw new IllegalStateException(
+        s"bench bands file $path is missing or does not parse: $e", e) }
+    val tol = o \ "tolerance" match {
+      case JDouble(x) => x
+      case JInt(x) => x.toDouble
+      case _ => 2.0
+    }
+    val bands = o \ "bands" match {
+      case JObject(fields) => fields.collect {
+        case JField(k, JDouble(v)) => k -> v
+        case JField(k, JInt(v)) => k -> v.toDouble
+      }.toMap
+      case _ => throw new IllegalStateException(
+        s"bench bands file $path has no `bands` object")
+    }
+    (tol, bands)
+  }
 }

@@ -1,10 +1,14 @@
 package graft.sources.pcap
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.{BinaryType, LongType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
+
+import graft.sources.HadoopConfBroadcast
 
 /** Batch WRITE side of the `pcap` format — the export path the reference
   * lacks entirely: filter packets with SQL, write a valid classic-libpcap
@@ -68,14 +72,14 @@ class PcapBatchWrite(dir: String, linkType: Int, schema: StructType,
     tsIdx: Int, frameIdx: Int, writeTsIndex: Boolean,
     ng: Boolean = false) extends BatchWrite {
 
-  private val conf = new SerializableHadoopConf(
-    org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
+  private val conf =
+    HadoopConfBroadcast(org.apache.spark.sql.SparkSession.active)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     // create the directory up front so zero-partition writes still leave
     // a valid (empty) target
     val p = new Path(dir)
-    p.getFileSystem(conf.value).mkdirs(p)
+    p.getFileSystem(conf.value.value).mkdirs(p)
     new PcapDataWriterFactory(dir, linkType, conf, tsIdx, frameIdx,
       writeTsIndex, ng)
   }
@@ -85,7 +89,7 @@ class PcapBatchWrite(dir: String, linkType: Int, schema: StructType,
 }
 
 class PcapDataWriterFactory(dir: String, linkType: Int,
-    conf: SerializableHadoopConf, tsIdx: Int, frameIdx: Int,
+    conf: Broadcast[SerializableConfiguration], tsIdx: Int, frameIdx: Int,
     writeTsIndex: Boolean, ng: Boolean = false)
   extends DataWriterFactory {
 
@@ -95,12 +99,12 @@ class PcapDataWriterFactory(dir: String, linkType: Int,
 }
 
 class PcapDataWriter(dir: String, linkType: Int,
-    conf: SerializableHadoopConf, tsIdx: Int, frameIdx: Int,
+    conf: Broadcast[SerializableConfiguration], tsIdx: Int, frameIdx: Int,
     writeTsIndex: Boolean, partitionId: Int, taskId: Long,
     ng: Boolean = false)
   extends DataWriter[InternalRow] {
 
-  private val fs = new Path(dir).getFileSystem(conf.value)
+  private val fs = new Path(dir).getFileSystem(conf.value.value)
   private val finalPath = new Path(dir,
     f"part-$partitionId%05d-$taskId." + (if (ng) "pcapng" else "pcap"))
   private val tmpPath = new Path(dir, finalPath.getName + ".inprogress")
@@ -135,7 +139,7 @@ class PcapDataWriter(dir: String, linkType: Int,
       out.write(le32(32))
     } else {
       out.write(le32(0xA1B2C3D4L))        // LE microsecond magic
-      out.write(Array[Byte](4, 0, 2, 0))  // version 2.4 (LE u16 pair)
+      out.write(Array[Byte](2, 0, 4, 0))  // version 2.4 (LE u16 pair)
       out.write(le32(0)); out.write(le32(0)) // thiszone, sigfigs
       out.write(le32(65535))              // snaplen
       out.write(le32(linkType.toLong))

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -14,8 +15,10 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.pcap.{DecodeOptions, PayloadDecoders}
+import graft.sources.HadoopConfBroadcast
 
 /** `spark.read.format("pcap")` — DataSource V2 batch source for classic
   * libpcap capture files.
@@ -39,7 +42,9 @@ import graft.pcap.{DecodeOptions, PayloadDecoders}
   *     hadoop-pcap-serde/README.md:16-19), so a 100 TB landing directory
   *     of many captures still yields bounded, balanced tasks;
   *   - `.gz` (any Hadoop codec) transparently decompressed, matching
-  *     PcapInputFormat.java:46-49.
+  *     PcapInputFormat.java:46-49;
+  *   - the Hadoop conf reaches executors as one per-session broadcast
+  *     ([[graft.sources.HadoopConfBroadcast]]), never inside a task.
   *
   * Options: `decoder` = `ip` (default) | `dns`; `md5` = `true` to compute
   * the frame digest (reference conf flag
@@ -429,7 +434,7 @@ class PcapScan(requiredSchema: StructType, options: CaseInsensitiveStringMap,
       keepFrame = need("frame"),
       tcpOptions = need("tcp_mss") || need("tcp_wscale") ||
         need("tcp_sack_ok") || need("tcp_ts_ok"))
-    new PcapReaderFactory(new SerializableHadoopConf(hadoopConf),
+    new PcapReaderFactory(HadoopConfBroadcast(sparkSession),
       requiredSchema, decode, PcapPacketFilter.compile(pushedFilters),
       // batch (not streaming) reads emit ColumnarBatches for flat
       // projections; option("columnar","false") forces the row path
@@ -442,7 +447,8 @@ class PcapScan(requiredSchema: StructType, options: CaseInsensitiveStringMap,
 /** Files of one task. Serialized to executors; paths only. */
 case class PcapInputPartition(files: Seq[String]) extends InputPartition
 
-class PcapReaderFactory(conf: SerializableHadoopConf, schema: StructType,
+class PcapReaderFactory(conf: Broadcast[SerializableConfiguration],
+    schema: StructType,
     decode: DecodeOptions,
     filter: PcapPacketFilter.Predicate = PcapPacketFilter.acceptAll,
     columnar: Boolean = false,
@@ -455,14 +461,14 @@ class PcapReaderFactory(conf: SerializableHadoopConf, schema: StructType,
   override def createReader(partition: InputPartition): PartitionReader[
     org.apache.spark.sql.catalyst.InternalRow] =
     new PcapPartitionReader(
-      partition.asInstanceOf[PcapInputPartition].files, conf.value, schema,
-      decode, filter)
+      partition.asInstanceOf[PcapInputPartition].files, conf.value.value,
+      schema, decode, filter)
 
   override def createColumnarReader(partition: InputPartition):
       PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new PcapColumnarPartitionReader(
-      partition.asInstanceOf[PcapInputPartition].files, conf.value, schema,
-      decode, filter, batchSize)
+      partition.asInstanceOf[PcapInputPartition].files, conf.value.value,
+      schema, decode, filter, batchSize)
 }
 
 class PcapPacketsMetric extends org.apache.spark.sql.connector.metric.CustomSumMetric {
@@ -473,21 +479,6 @@ class PcapPacketsMetric extends org.apache.spark.sql.connector.metric.CustomSumM
 class PcapBytesMetric extends org.apache.spark.sql.connector.metric.CustomSumMetric {
   override def name(): String = "bytesDecoded"
   override def description(): String = "pcap bytes decoded"
-}
-
-/** Minimal serializable Hadoop Configuration wrapper (the Spark-internal
-  * one is `private[spark]`). */
-class SerializableHadoopConf(@transient var value: Configuration)
-  extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
-  }
 }
 
 /** Helper to open a (possibly codec-compressed) pcap file as a stream. */

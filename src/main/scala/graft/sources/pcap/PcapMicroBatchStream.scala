@@ -2,6 +2,7 @@ package graft.sources.pcap
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types.StructType
@@ -396,7 +397,8 @@ class PcapMicroBatchStream(
       keepFrame = need("frame"),
       tcpOptions = need("tcp_mss") || need("tcp_wscale") ||
         need("tcp_sack_ok") || need("tcp_ts_ok"))
-    new PcapReaderFactory(new SerializableHadoopConf(conf), schema, decode)
+    new PcapReaderFactory(
+      graft.sources.HadoopConfBroadcast(SparkSession.active), schema, decode)
   }
 
   override def stop(): Unit = ()

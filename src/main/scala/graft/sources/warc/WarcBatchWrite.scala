@@ -1,12 +1,14 @@
 package graft.sources.warc
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.{BinaryType, IntegerType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
-import graft.sources.pcap.SerializableHadoopConf
+import graft.sources.HadoopConfBroadcast
 
 /** Batch WRITE side of the `warc` format — corpus → crawl-archive
   * export in the Common Crawl framing (one gzip member per record),
@@ -143,14 +145,14 @@ class WarcStreamingWrite(dir: String, cols: WarcWriteCols, gz: Boolean,
     jobTag: String, dedupDigest: Boolean = false, cdxj: Boolean = false)
   extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
 
-  private val conf = new SerializableHadoopConf(
-    org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
+  private val conf =
+    HadoopConfBroadcast(org.apache.spark.sql.SparkSession.active)
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.streaming
         .StreamingDataWriterFactory = {
     val p = new Path(dir)
-    p.getFileSystem(conf.value).mkdirs(p)
+    p.getFileSystem(conf.value.value).mkdirs(p)
     new WarcStreamingWriterFactory(dir, cols, conf, gz, writeIndex,
       defaultDate, defaultContentType, jobTag, dedupDigest, cdxj)
   }
@@ -172,13 +174,13 @@ class WarcBatchWrite(dir: String, cols: WarcWriteCols,
     dedupDigest: Boolean = false, cdxj: Boolean = false)
   extends BatchWrite {
 
-  private val conf = new SerializableHadoopConf(
-    org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
+  private val conf =
+    HadoopConfBroadcast(org.apache.spark.sql.SparkSession.active)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DataWriterFactory = {
     val p = new Path(dir)
-    p.getFileSystem(conf.value).mkdirs(p)
+    p.getFileSystem(conf.value.value).mkdirs(p)
     new WarcDataWriterFactory(dir, cols, conf, gz, writeIndex,
       defaultDate, defaultContentType, jobTag, dedupDigest, cdxj)
   }
@@ -192,7 +194,7 @@ class WarcBatchWrite(dir: String, cols: WarcWriteCols,
         case WarcWriteCommitted(p) if p.nonEmpty => new Path(p).getName
       }.toSet
       val dp = new Path(dir)
-      val fs = dp.getFileSystem(conf.value)
+      val fs = dp.getFileSystem(conf.value.value)
       if (fs.exists(dp))
         fs.listStatus(dp).foreach { st =>
           val n = st.getPath.getName
@@ -209,7 +211,8 @@ class WarcBatchWrite(dir: String, cols: WarcWriteCols,
 }
 
 class WarcStreamingWriterFactory(dir: String, cols: WarcWriteCols,
-    conf: SerializableHadoopConf, gz: Boolean, writeIndex: Boolean,
+    conf: Broadcast[SerializableConfiguration], gz: Boolean,
+    writeIndex: Boolean,
     defaultDate: String, defaultContentType: String, jobTag: String,
     dedupDigest: Boolean = false, cdxj: Boolean = false)
   extends org.apache.spark.sql.connector.write.streaming
@@ -225,7 +228,8 @@ class WarcStreamingWriterFactory(dir: String, cols: WarcWriteCols,
 }
 
 class WarcDataWriterFactory(dir: String, cols: WarcWriteCols,
-    conf: SerializableHadoopConf, gz: Boolean, writeIndex: Boolean,
+    conf: Broadcast[SerializableConfiguration], gz: Boolean,
+    writeIndex: Boolean,
     defaultDate: String, defaultContentType: String, jobTag: String,
     dedupDigest: Boolean = false, cdxj: Boolean = false)
   extends DataWriterFactory {
@@ -240,13 +244,14 @@ class WarcDataWriterFactory(dir: String, cols: WarcWriteCols,
 }
 
 class WarcDataWriter(dir: String, cols: WarcWriteCols,
-    conf: SerializableHadoopConf, gz: Boolean, writeIndex: Boolean,
+    conf: Broadcast[SerializableConfiguration], gz: Boolean,
+    writeIndex: Boolean,
     defaultDate: String, defaultContentType: String,
     baseName: String, tmpTag: String, replaceOnCommit: Boolean,
     dedupDigest: Boolean = false, cdxj: Boolean = false)
   extends DataWriter[InternalRow] {
 
-  private val fs = new Path(dir).getFileSystem(conf.value)
+  private val fs = new Path(dir).getFileSystem(conf.value.value)
   private val finalPath = new Path(dir,
     baseName + "." + (if (gz) "warc.gz" else "warc"))
   // dot-prefixed (so a concurrent listing never reads half a file as

@@ -4,6 +4,7 @@ import java.util
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -14,8 +15,9 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
-import graft.sources.pcap.SerializableHadoopConf
+import graft.sources.HadoopConfBroadcast
 
 /** Web ARChive (WARC 1.0/1.1, ISO 28500) DSv2 source
   * (`format("warc")`) — the container the canonical LLM text pipeline
@@ -557,7 +559,7 @@ class WarcScan(requiredSchema: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new WarcReaderFactory(new SerializableHadoopConf(hadoopConf),
+    new WarcReaderFactory(HadoopConfBroadcast(sparkSession),
       requiredSchema, options.getLong("maxRecordBytes", 1L << 30),
       pushedFilters,
       options.getBoolean("decodeContentEncoding", true))
@@ -575,7 +577,7 @@ case class WarcFileSlice(path: String, start: Long, length: Long,
 case class WarcInputPartition(slices: Seq[WarcFileSlice])
   extends InputPartition
 
-class WarcReaderFactory(conf: SerializableHadoopConf,
+class WarcReaderFactory(conf: Broadcast[SerializableConfiguration],
     schema: StructType, maxRecordBytes: Long,
     pushedFilters: Array[org.apache.spark.sql.sources.Filter] =
       Array.empty,
@@ -585,7 +587,7 @@ class WarcReaderFactory(conf: SerializableHadoopConf,
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] =
     new WarcPartitionReader(
-      partition.asInstanceOf[WarcInputPartition].slices, conf.value,
+      partition.asInstanceOf[WarcInputPartition].slices, conf.value.value,
       schema, maxRecordBytes, WarcRecordFilter.compile(pushedFilters),
       decodeContentEncoding)
 }

@@ -5,6 +5,7 @@ import java.util
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -17,9 +18,10 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{BinaryType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.operators.Multimodal.TarCodec
-import graft.sources.pcap.SerializableHadoopConf
+import graft.sources.HadoopConfBroadcast
 
 /** WebDataset-style tar-shard source + sink (`format("wds")`) — the
   * layout multimodal training actually reads: samples packed as
@@ -442,7 +444,7 @@ class WdsScan(requiredSchema: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new WdsReaderFactory(new SerializableHadoopConf(hadoopConf),
+    new WdsReaderFactory(HadoopConfBroadcast(sparkSession),
       requiredSchema,
       options.getLong("maxEntryBytes", 1L << 30),
       pushedFilters)
@@ -456,7 +458,8 @@ case class WdsSlice(path: String, start: Long, length: Long)
 /** Shards of one task. Serialized to executors; paths + ranges only. */
 case class WdsInputPartition(slices: Seq[WdsSlice]) extends InputPartition
 
-class WdsReaderFactory(conf: SerializableHadoopConf, schema: StructType,
+class WdsReaderFactory(conf: Broadcast[SerializableConfiguration],
+    schema: StructType,
     maxEntryBytes: Long,
     pushedFilters: Array[org.apache.spark.sql.sources.Filter] =
       Array.empty) extends PartitionReaderFactory {
@@ -464,8 +467,8 @@ class WdsReaderFactory(conf: SerializableHadoopConf, schema: StructType,
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] =
     new WdsPartitionReader(
-      partition.asInstanceOf[WdsInputPartition].slices, conf.value, schema,
-      maxEntryBytes, WdsEntryFilter.compile(pushedFilters))
+      partition.asInstanceOf[WdsInputPartition].slices, conf.value.value,
+      schema, maxEntryBytes, WdsEntryFilter.compile(pushedFilters))
 }
 
 /** Open a (possibly codec-compressed) shard as a stream: `.tar.zst`
@@ -764,8 +767,7 @@ class WdsBatchWrite(dir: String, keyIdx: Int,
     maxCount: Long, maxSize: Long)
   extends BatchWrite {
 
-  private val conf = new SerializableHadoopConf(
-    SparkSession.active.sessionState.newHadoopConf())
+  private val conf = HadoopConfBroadcast(SparkSession.active)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DataWriterFactory =
@@ -782,7 +784,7 @@ class WdsBatchWrite(dir: String, keyIdx: Int,
         case WdsWriteCommitted(ps, _) => ps.map(new Path(_).getName)
       }.flatten.toSet
       val dp = new Path(dir)
-      val fs = dp.getFileSystem(conf.value)
+      val fs = dp.getFileSystem(conf.value.value)
       if (fs.exists(dp))
         fs.listStatus(dp).foreach { st =>
           val n = st.getPath.getName
@@ -801,7 +803,7 @@ class WdsBatchWrite(dir: String, keyIdx: Int,
 }
 
 class WdsDataWriterFactory(dir: String, keyIdx: Int,
-    binCols: Seq[(String, Int)], conf: SerializableHadoopConf,
+    binCols: Seq[(String, Int)], conf: Broadcast[SerializableConfiguration],
     jobTag: String, maxCount: Long, maxSize: Long)
   extends DataWriterFactory {
 
@@ -809,7 +811,7 @@ class WdsDataWriterFactory(dir: String, keyIdx: Int,
       : DataWriter[InternalRow] =
     new WdsShardWriter(dir,
       f"shard-$jobTag-$partitionId%05d-$taskId",
-      keyIdx, binCols, conf.value, replaceOnCommit = false,
+      keyIdx, binCols, conf.value.value, replaceOnCommit = false,
       maxCount, maxSize)
 }
 
@@ -826,8 +828,7 @@ class WdsStreamingWrite(dir: String, keyIdx: Int,
     binCols: Seq[(String, Int)], jobTag: String,
     maxCount: Long, maxSize: Long) extends StreamingWrite {
 
-  private val conf = new SerializableHadoopConf(
-    SparkSession.active.sessionState.newHadoopConf())
+  private val conf = HadoopConfBroadcast(SparkSession.active)
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : StreamingDataWriterFactory =
@@ -844,7 +845,7 @@ class WdsStreamingWrite(dir: String, keyIdx: Int,
 }
 
 class WdsStreamingWriterFactory(dir: String, keyIdx: Int,
-    binCols: Seq[(String, Int)], conf: SerializableHadoopConf,
+    binCols: Seq[(String, Int)], conf: Broadcast[SerializableConfiguration],
     jobTag: String, maxCount: Long, maxSize: Long)
   extends StreamingDataWriterFactory {
 
@@ -857,7 +858,7 @@ class WdsStreamingWriterFactory(dir: String, keyIdx: Int,
     // (the batch path gets this for free by keeping taskId in names)
     new WdsShardWriter(dir,
       f"shard-$jobTag-e$epochId%06d-p$partitionId%05d",
-      keyIdx, binCols, conf.value, replaceOnCommit = true,
+      keyIdx, binCols, conf.value.value, replaceOnCommit = true,
       maxCount, maxSize, tmpTag = s".t$taskId")
 }
 

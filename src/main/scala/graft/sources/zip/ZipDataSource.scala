@@ -4,6 +4,7 @@ import java.util
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -12,8 +13,9 @@ import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, String
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
-import graft.sources.pcap.SerializableHadoopConf
+import graft.sources.HadoopConfBroadcast
 
 /** ZIP archive source (`format("zip")`) — the container public datasets
   * actually ship in (Kaggle exports, ImageNet-style image bundles,
@@ -200,7 +202,7 @@ class ZipScan(requiredSchema: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ZipReaderFactory(new SerializableHadoopConf(hadoopConf),
+    new ZipReaderFactory(HadoopConfBroadcast(sparkSession),
       requiredSchema)
 }
 
@@ -213,12 +215,13 @@ case class ZipEntrySlice(path: String, name: String, localOffset: Long,
 case class ZipInputPartition(entries: Seq[ZipEntrySlice])
   extends InputPartition
 
-class ZipReaderFactory(conf: SerializableHadoopConf, schema: StructType)
+class ZipReaderFactory(conf: Broadcast[SerializableConfiguration],
+    schema: StructType)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] =
     new ZipPartitionReader(
-      partition.asInstanceOf[ZipInputPartition].entries, conf.value,
+      partition.asInstanceOf[ZipInputPartition].entries, conf.value.value,
       schema)
 }
 

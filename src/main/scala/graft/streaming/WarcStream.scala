@@ -33,8 +33,7 @@ object WarcStream {
       .add("modificationTime", org.apache.spark.sql.types.TimestampType)
       .add("length", org.apache.spark.sql.types.LongType)
       .add("content", org.apache.spark.sql.types.BinaryType)
-    val conf = new graft.sources.pcap.SerializableHadoopConf(
-      s.sessionState.newHadoopConf())
+    val conf = graft.sources.HadoopConfBroadcast(s)
     val reader = s.readStream.format("binaryFile")
       .option("pathGlobFilter", fileGlob)
       .schema(schema)
@@ -44,7 +43,7 @@ object WarcStream {
       .select($"path").as[String]
       .flatMap { path =>
         val fname = path.substring(path.lastIndexOf('/') + 1)
-        val in = graft.sources.warc.WarcFileOpener.open(conf.value, path)
+        val in = graft.sources.warc.WarcFileOpener.open(conf.value.value, path)
         val tc = org.apache.spark.TaskContext.get()
         if (tc != null)
           tc.addTaskCompletionListener[Unit](_ =>

@@ -45,8 +45,7 @@ object WdsStream {
       .add("modificationTime", org.apache.spark.sql.types.TimestampType)
       .add("length", org.apache.spark.sql.types.LongType)
       .add("content", org.apache.spark.sql.types.BinaryType)
-    val conf = new graft.sources.pcap.SerializableHadoopConf(
-      s.sessionState.newHadoopConf())
+    val conf = graft.sources.HadoopConfBroadcast(s)
     s.readStream.format("binaryFile")
       .option("pathGlobFilter", shardGlob)
       .schema(schema)
@@ -54,7 +53,7 @@ object WdsStream {
       .select($"path").as[String]
       .flatMap { path =>
         val shard = path.substring(path.lastIndexOf('/') + 1)
-        val in = graft.sources.wds.WdsShardOpener.open(conf.value, path)
+        val in = graft.sources.wds.WdsShardOpener.open(conf.value.value, path)
         // a flatMap iterator has no close() hook, so a corrupt shard
         // (walk throws) or an unconsumed iterator (a limit upstream)
         // would leak the open FS stream — the task-completion listener

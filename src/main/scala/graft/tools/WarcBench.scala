@@ -30,15 +30,14 @@ object WarcBench {
     fs.mkdirs(new org.apache.hadoop.fs.Path(dir))
     // build the crawl ON EXECUTORS: each task writes one file of
     // request+response pairs with pageKb deterministic body bytes
-    val conf = new graft.sources.pcap.SerializableHadoopConf(
-      spark.sessionState.newHadoopConf())
+    val conf = graft.sources.HadoopConfBroadcast(spark)
     spark.range(nFiles.toLong).repartition(nFiles).as[Long]
       .foreachPartition { (it: Iterator[Long]) =>
         it.foreach { f =>
           val gz = f % 2 == 1
           val name = if (gz) f"crawl-$f%04d.warc.gz" else f"crawl-$f%04d.warc"
           val p = new org.apache.hadoop.fs.Path(dir, name)
-          val out = p.getFileSystem(conf.value).create(p, true)
+          val out = p.getFileSystem(conf.value.value).create(p, true)
           try {
             val recs = Iterator(WarcSynth.warcinfoRecord(f.toInt)) ++
               (0 until perFile).iterator.flatMap { k =>
@@ -150,7 +149,7 @@ object WarcBench {
     val bigMb = fs.getFileStatus(bigPath).getLen / 1048576
     val tIdx0 = System.nanoTime()
     val nIndexed = graft.sources.warc.WarcCdx.writeIndex(
-      conf.value, bigPath)
+      conf.value.value, bigPath)
     val cdxIndexS = (System.nanoTime() - tIdx0) / 1e9
     val (tBigWhole, bw) = best3(
       spark.read.format("warc").option("useWcdx", "false")

@@ -22,9 +22,22 @@ class BenchBandsSpec extends AnyFunSuite {
       "band values must be positive sub-minute seconds")
   }
 
-  test("a missing or corrupt bands file degrades to an empty gate") {
-    val (tol, bands) = BenchBands.load("/nonexistent/bands.json")
-    assert(tol == 2.0 && bands.isEmpty)
+  test("a missing or corrupt bands file fails loudly, naming the path") {
+    val missing = intercept[IllegalStateException](
+      BenchBands.load("/nonexistent/bands.json"))
+    assert(missing.getMessage.contains("/nonexistent/bands.json"))
+    val dir = java.nio.file.Files.createTempDirectory("bands")
+    def write(name: String, body: String): String = {
+      val p = dir.resolve(name)
+      java.nio.file.Files.write(p, body.getBytes("UTF-8"))
+      p.toString
+    }
+    val corrupt = write("corrupt.json", """{"tolerance": 2.0, "bands": {""")
+    assert(intercept[IllegalStateException](BenchBands.load(corrupt))
+      .getMessage.contains(corrupt))
+    val noBands = write("nobands.json", """{"tolerance": 2.0}""")
+    assert(intercept[IllegalStateException](BenchBands.load(noBands))
+      .getMessage.contains(noBands))
   }
 
   test("the host-load marker is wired: the spin probe measures plausible " +

@@ -31,6 +31,17 @@ class CoverageSyncSpec extends AnyFunSuite {
         s"registry has ${registry.size} — update COVERAGE.md")
   }
 
+  test("README.md's operator count matches the registry") {
+    val readme = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("README.md")), "UTF-8")
+    val decl = """operator inventory\W+(\d+) named""".r.findFirstMatchIn(readme)
+    assert(decl.isDefined,
+      "README.md must state `operator inventory — N named queries`")
+    assert(decl.get.group(1).toInt == registry.size,
+      s"README.md states ${decl.get.group(1)} queries, " +
+        s"registry has ${registry.size} — update README.md")
+  }
+
   test("every query-shaped citation in COVERAGE.md is a live query") {
     val token =
       """\b(?:q\d{2}_[a-z0-9_]+|(?:dedup|mm|pcap|pcapng|pipeline|sim|text)_[a-z0-9_]+)\b""".r

@@ -185,6 +185,27 @@ class PcapSinkSpec extends AnyFunSuite {
       .exists(_.getName.endsWith(".tsidx")))
   }
 
+  test("classic parts carry the exact libpcap 2.4 global header") {
+    val src = mixedCapture()
+    val outDir = java.nio.file.Files.createTempDirectory("sink_hdr").toString
+    spark.read.format("pcap").load(src)
+      .select("ts_micro", "frame").coalesce(1)
+      .write.format("pcap").option("linkType", "113")
+      .mode("append").save(outDir)
+    val parts = new java.io.File(outDir).listFiles()
+      .filter(_.getName.endsWith(".pcap"))
+    assert(parts.length == 1)
+    val head = java.nio.file.Files.readAllBytes(parts.head.toPath).take(24)
+    // LE microsecond magic, version major 2 minor 4 (u16 each),
+    // thiszone 0, sigfigs 0, snaplen 65535, linktype 113
+    val want = Array(0xD4, 0xC3, 0xB2, 0xA1, 0x02, 0x00, 0x04, 0x00,
+      0, 0, 0, 0, 0, 0, 0, 0, 0xFF, 0xFF, 0x00, 0x00, 113, 0, 0, 0)
+      .map(_.toByte)
+    assert(head.sameElements(want),
+      head.map(b => f"${b & 0xFF}%02x").mkString(" "))
+    assert(head.sameElements(PcapSynth.globalHeader(113)))
+  }
+
   test("missing required columns fail fast at planning") {
     val src = mixedCapture()
     val outDir = java.nio.file.Files.createTempDirectory("sink_bad").toString
