@@ -31,14 +31,17 @@ object Decap extends Serializable {
   /** IANA-assigned VXLAN outer UDP destination port. */
   val VxlanPort = 4789
 
-  // one decoder per thread: PacketBuilder/FrameDecoder are cheap but
-  // mutable; mapPartitions tasks share the object across rows
-  private val decoders =
-    new ThreadLocal[FrameDecoder] {
-      override def initialValue(): FrameDecoder =
-        new FrameDecoder(DecodeOptions(
-          appDecoder = Some(DnsPayloadDecoder),
-          udpsum = false, extHeaderStrings = false, dnsSections = false))
+  // one decoder and slot per thread: both are cheap but mutable, and
+  // mapPartitions tasks share the object across rows
+  private final class Inner {
+    val decoder = new FrameDecoder(DecodeOptions(
+      appDecoder = Some(DnsPayloadDecoder),
+      udpsum = false, extHeaderStrings = false, dnsSections = false))
+    val slot = new PacketSlot
+  }
+  private val inners =
+    new ThreadLocal[Inner] {
+      override def initialValue(): Inner = new Inner
     }
 
   /** Decap one outer-UDP payload. RFC 7348 §5: 8-byte header — flags
@@ -49,10 +52,9 @@ object Decap extends Serializable {
     if ((payload(0) & 0x08) == 0) return None
     val vni = ((payload(4) & 0xFF) << 16) |
       ((payload(5) & 0xFF) << 8) | (payload(6) & 0xFF)
-    innerOf(payload, 8, linkType = 1).map { case (b, sp, dp) =>
-      VxlanInner(vni, b.src.get, b.dst.get, b.protocol.get, sp, dp,
-        b.dns.flatMap(_.qname), b.dns.map(_.rcode))
-    }
+    innerOf(payload, 8, linkType = 1).map(f =>
+      VxlanInner(vni, f.src, f.dst, f.protocol, f.srcPort,
+        f.dstPort, f.dnsQname, f.dnsRcode))
   }
 
   /** GENEVE-decapped inner packet; `nOptions` counts the variable-
@@ -107,10 +109,9 @@ object Decap extends Serializable {
       case 0x0800 | 0x86DD => 101 // raw inner IP
       case _ => return None
     }
-    innerOf(payload, innerOff, linkType = lt).map { case (b, sp, dp) =>
-      GeneveInner(vni, n, b.src.get, b.dst.get, b.protocol.get, sp, dp,
-        b.dns.flatMap(_.qname), b.dns.map(_.rcode))
-    }
+    innerOf(payload, innerOff, linkType = lt).map(f =>
+      GeneveInner(vni, n, f.src, f.dst, f.protocol, f.srcPort,
+        f.dstPort, f.dnsQname, f.dnsRcode))
   }
 
   /** GRE-decapped inner packet; `key` is the RFC 2890 key word (the
@@ -146,10 +147,9 @@ object Decap extends Serializable {
         k
       } else 0L
     if ((flags & 0x1000) != 0) off += 4 // sequence
-    innerOf(payload, off, linkType = 101).map { case (b, sp, dp) =>
-      GreInner(key, b.src.get, b.dst.get, b.protocol.get, sp, dp,
-        b.dns.flatMap(_.qname), b.dns.map(_.rcode))
-    }
+    innerOf(payload, off, linkType = 101).map(f =>
+      GreInner(key, f.src, f.dst, f.protocol, f.srcPort,
+        f.dstPort, f.dnsQname, f.dnsRcode))
   }
 
   /** IP-in-IP-decapped inner packet; `innerV` is the inner IP version —
@@ -175,10 +175,9 @@ object Decap extends Serializable {
     val want =
       if (outerProto == 4) 4 else if (outerProto == 41) 6 else -1
     if (v != want) return None
-    innerOf(payload, 0, linkType = 101).map { case (b, sp, dp) =>
-      IpipInner(v, b.src.get, b.dst.get, b.protocol.get, sp, dp,
-        b.dns.flatMap(_.qname), b.dns.map(_.rcode))
-    }
+    innerOf(payload, 0, linkType = 101).map(f =>
+      IpipInner(v, f.src, f.dst, f.protocol, f.srcPort,
+        f.dstPort, f.dnsQname, f.dnsRcode))
   }
 
   /** Parsed ARP message (RFC 826 over Ethernet/IPv4). */
@@ -333,17 +332,30 @@ object Decap extends Serializable {
     Some(RtpFields(v, pt, seq, be32(4), be32(8)))
   }
 
+  /** The inner flow's fields every decap result carries. */
+  private final case class Flow(src: String, dst: String, protocol: String,
+      srcPort: Int, dstPort: Int, dnsQname: Option[String],
+      dnsRcode: Option[String])
+
+  private val FlowBits = PacketSlot.Src | PacketSlot.Dst |
+    PacketSlot.Protocol | PacketSlot.SrcPort | PacketSlot.DstPort
+
   /** Decode the inner packet at `off` through the shared decoder;
     * Some only when L3 endpoints + L4 ports all decoded. */
   private def innerOf(payload: Array[Byte], off: Int, linkType: Int)
-      : Option[(PacketBuilder, Int, Int)] = {
+      : Option[Flow] = {
     if (payload.length <= off) return None
-    val b = new PacketBuilder
-    decoders.get().decode(b, payload, off, payload.length - off, linkType)
-    for {
-      _ <- b.src; _ <- b.dst; _ <- b.protocol
-      sp <- b.srcPort
-      dp <- b.dstPort
-    } yield (b, sp, dp)
+    val inner = inners.get()
+    val s = inner.slot
+    s.clear()
+    inner.decoder.decode(s, payload, off, payload.length - off, linkType)
+    if ((s.present & FlowBits) != FlowBits) None
+    else {
+      val dns = if (s.has(PacketSlot.Dns)) s.dns else null
+      Some(Flow(s.addrString(dst = false), s.addrString(dst = true),
+        s.protocol, s.srcPort, s.dstPort,
+        if (dns == null) None else dns.qname,
+        if (dns == null) None else Some(dns.rcode)))
+    }
   }
 }

@@ -101,8 +101,24 @@ object DnsParser {
     * formatting, which is the bulk of the per-packet allocation. */
   def parse(data: Array[Byte], start: Int, end: Int,
       emitSections: Boolean): Option[DnsFields] =
-    try Some(parseStrict(new Cursor(data, start, end), emitSections))
-    catch { case _: Exception => None }
+    Option(parseOrNull(data, start, end, emitSections, emitQname = true))
+
+  /** The scan's variant: null where [[parse]] gives None, and
+    * `emitQname = false` leaves `qname` None while still walking and
+    * validating the question name (the `dns_qname` column is pruned;
+    * `qtypeStr` is unaffected). */
+  def parseOrNull(data: Array[Byte], start: Int, end: Int,
+      emitSections: Boolean, emitQname: Boolean): DnsFields =
+    try parseStrict(new Cursor(data, start, end), emitSections, emitQname)
+    catch { case _: Exception => null }
+
+  /** Every wire-format violation the walk detects. One shared instance
+    * without a stack trace: capture traffic carries malformed messages
+    * at a steady rate, and filling in a stack per rejected message cost
+    * more than parsing the valid ones. Immutable (no stack, suppression
+    * disabled), so sharing it across threads is safe. */
+  private object Malformed
+    extends RuntimeException("malformed DNS message", null, false, false)
 
   private final class Cursor(val raw: Array[Byte], val base: Int, val limit: Int) {
     // `pos` is message-relative; raw access adds `base`
@@ -110,20 +126,20 @@ object DnsParser {
     def length: Int = limit - base
     def at(i: Int): Int = {
       val j = base + i
-      if (i < 0 || j >= limit) throw new IndexOutOfBoundsException
+      if (i < 0 || j >= limit) throw Malformed
       raw(j) & 0xFF
     }
     def u8(): Int = { val v = at(pos); pos += 1; v }
     def u16(): Int = { val v = (at(pos) << 8) | at(pos + 1); pos += 2; v }
     def u32(): Long = { (u16().toLong << 16) | u16().toLong }
     def bytes(n: Int): Array[Byte] = {
-      if (n < 0 || base + pos + n > limit) throw new IndexOutOfBoundsException
+      if (n < 0 || base + pos + n > limit) throw Malformed
       val r = java.util.Arrays.copyOfRange(raw, base + pos, base + pos + n)
       pos += n; r
     }
     /** Same bounds contract as `bytes`, no copy (skip mode). */
     def skipBytes(n: Int): Unit = {
-      if (n < 0 || base + pos + n > limit) throw new IndexOutOfBoundsException
+      if (n < 0 || base + pos + n > limit) throw Malformed
       pos += n
     }
   }
@@ -151,25 +167,26 @@ object DnsParser {
         val ptr = ((len & 0x3F) << 8) | c.at(p + 1)
         if (after < 0) after = p + 2
         jumps += 1
-        if (jumps > c.length) throw new IllegalStateException("pointer loop")
+        if (jumps > c.length) throw Malformed // pointer loop
         p = ptr
       } else if (len == 0) {
         p += 1
         done = true
       } else {
-        if (p + 1 + len > c.length) throw new IndexOutOfBoundsException
-        var i = p + 1
-        while (i < p + 1 + len) {
-          val b = c.at(i)
-          if (sb != null) {
+        if (p + 1 + len > c.length) throw Malformed
+        // the label's bytes are in bounds now; a walk need not read them
+        if (sb != null) {
+          var i = p + 1
+          while (i < p + 1 + len) {
+            val b = c.at(i)
             if (b < 0x21 || b > 0x7E) sb.append(f"\\$b%03d")
             else if (b == '.' || b == ';' || b == '\\' || b == '(' || b == ')' ||
                      b == '"' || b == '@' || b == '$') sb.append('\\').append(b.toChar)
             else sb.append(b.toChar)
+            i += 1
           }
-          i += 1
+          sb.append('.')
         }
-        if (sb != null) sb.append('.')
         p += 1 + len
       }
     }
@@ -199,13 +216,13 @@ object DnsParser {
         val ptr = ((len & 0x3F) << 8) | c.at(p + 1)
         if (after < 0) after = p + 2
         jumps += 1
-        if (jumps > c.length) throw new IllegalStateException("pointer loop")
+        if (jumps > c.length) throw Malformed // pointer loop
         p = ptr
       } else if (len == 0) {
         p += 1
         done = true
       } else {
-        if (p + 1 + len > c.length) throw new IndexOutOfBoundsException
+        if (p + 1 + len > c.length) throw Malformed
         var i = p + 1
         while (i < p + 1 + len) {
           val b = c.at(i)
@@ -238,8 +255,9 @@ object DnsParser {
     else new String(buf, 0, n, java.nio.charset.StandardCharsets.ISO_8859_1)
   }
 
-  private def parseStrict(c: Cursor, emitSections: Boolean): DnsFields = {
-    require(c.length >= 12, "short DNS header")
+  private def parseStrict(c: Cursor, emitSections: Boolean,
+      emitQname: Boolean): DnsFields = {
+    if (c.length < 12) throw Malformed // short DNS header
     val id = c.u16()
     val flagsWord = c.u16()
     val qd = c.u16(); val an = c.u16(); val ns = c.u16(); val ar = c.u16()
@@ -254,7 +272,8 @@ object DnsParser {
     var i = 0
     while (i < qd) {
       if (i == 0) {
-        qname = Some(readQNameLower(c))
+        if (emitQname) qname = Some(readQNameLower(c))
+        else readNameInto(c, null) // the same walk and checks, no string
         qtype = c.u16(); c.u16() // qclass
       } else {
         readNameInto(c, null) // walk + validate only
@@ -290,7 +309,7 @@ object DnsParser {
       qname = qname,
       qtype = qtype,
       qtypeStr =
-        if (!qname.isDefined) None
+        if (qd == 0) None
         else if (qtype >= 0 && qtype < 512) TypeSomeArr(qtype)
         else Some(typeString(qtype)),
       answer = answer,
@@ -309,7 +328,7 @@ object DnsParser {
     val rdlen = c.u16()
     val rdStart = c.pos
     val rdEnd = rdStart + rdlen
-    if (c.base + rdEnd > c.limit) throw new IndexOutOfBoundsException
+    if (c.base + rdEnd > c.limit) throw Malformed
     val rdata = formatRdata(c, t, cls, ttl, rdStart, rdlen, emit)
     c.pos = rdEnd
     if (!emit) null

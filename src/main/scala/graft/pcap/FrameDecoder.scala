@@ -18,96 +18,55 @@ private[pcap] object Boxes {
   * (8 bits of byte 13 + the NS bit, data-offset byte bit 0). Flag names
   * join LSB-first with '|' — the order people write them ("SYN|ACK").
   * A superset field: the reference decodes no TCP flags at all. */
-private[pcap] object TcpFlagNames {
-  private val names =
+private[graft] object TcpFlagNames {
+  private val flags =
     Array("FIN", "SYN", "RST", "PSH", "ACK", "URG", "ECE", "CWR", "NS")
-  val some: Array[Some[String]] = Array.tabulate(512) { bits =>
+  val names: Array[String] = Array.tabulate(512) { bits =>
     val sb = new StringBuilder
     var i = 0
     while (i < 9) {
       if ((bits & (1 << i)) != 0) {
         if (sb.nonEmpty) sb.append('|')
-        sb.append(names(i))
+        sb.append(flags(i))
       }
       i += 1
     }
-    Some(sb.toString)
+    sb.toString
   }
-}
-
-/** Mutable per-packet accumulator; one PacketRecord built at the end.
-  * Shared by the classic-pcap and pcapng container readers. */
-private[pcap] final class PacketBuilder {
-  var ts, tsMicro, size: Option[Long] = None
-  var md5v, etherType, protocol, src, dst, extHeaders: Option[String] = None
-  var ttl, srcPort, dstPort, udpsum, len, payloadLen, extCount: Option[Int] = None
-  var tcpSeq, tcpAck: Option[Long] = None
-  var tcpFlags: Option[String] = None
-  var icmpType, icmpCode, tcpWindow: Option[Int] = None
-  var tcpMss, tcpWscale: Option[Int] = None
-  var tcpSackOk, tcpTsOk: Option[Boolean] = None
-  var vlanId, vlanPcp, vlanInnerId: Option[Int] = None
-  var mplsLabels: Option[Seq[Int]] = None
-  var frag: Option[Boolean] = None
-  var ipId, fragOffset: Option[Int] = None
-  var dns: Option[DnsFields] = None
-  var payload: Option[Array[Byte]] = None
-  var frame: Option[Array[Byte]] = None
-  /** IP protocol id for branch decisions (-1 = none); `protocol` holds
-    * the display string. Not part of the built record. */
-  var protoId: Int = -1
-
-  def build(): PacketRecord = PacketRecord(
-    ts = ts, tsMicro = tsMicro, size = size, md5 = md5v,
-    etherType = etherType, ttl = ttl, protocol = protocol,
-    src = src, dst = dst, srcPort = srcPort, dstPort = dstPort,
-    udpsum = udpsum, tcpSeq = tcpSeq, tcpFlags = tcpFlags, tcpAck = tcpAck,
-    icmpType = icmpType, icmpCode = icmpCode, tcpWindow = tcpWindow,
-    tcpMss = tcpMss, tcpWscale = tcpWscale,
-    tcpSackOk = tcpSackOk, tcpTsOk = tcpTsOk,
-    vlanId = vlanId, vlanPcp = vlanPcp, vlanInnerId = vlanInnerId,
-    mplsLabels = mplsLabels,
-    len = len, frag = frag, ipId = ipId, fragOffset = fragOffset,
-    payloadLen = payloadLen,
-    extCount = extCount, extHeaders = extHeaders, dns = dns,
-    payload = payload, frame = frame)
+  val some: Array[Some[String]] = names.map(Some(_))
 }
 
 /** Per-frame L2→L4(+app) decode, container-independent: both the classic
   * libpcap reader and the pcapng reader feed captured frames through one
-  * instance per stream. Semantics documented on [[PcapStreamReader]]. */
+  * instance per stream, into the stream's [[PacketSlot]]. Semantics
+  * documented on [[PcapStreamReader]]. */
 private[pcap] final class FrameDecoder(options: DecodeOptions) {
   import PcapStreamReader._
+  import PacketSlot._
 
   private val md: MessageDigest =
     if (options.md5) MessageDigest.getInstance("MD5") else null
   private val appDec: PayloadDecoder = options.appDecoder.orNull
 
-  // the same ether-type name repeats for almost every frame of a capture;
-  // reuse its Some wrapper instead of allocating one per packet
-  private var lastEtherName: String = null
-  private var lastEtherSome: Some[String] = null
-
-  /** Decode the frame at `data[off, off+len)` into `b` (offset-based so
-    * container readers can decode in place from a reused read buffer —
-    * nothing here retains `data`: every emitted field is a copy).
-    * `ts`/`tsMicro`/`size` are the container's concern and must be set by
-    * the caller. */
-  def decode(b: PacketBuilder, data: Array[Byte], off: Int, len: Int,
+  /** Decode the frame at `data[off, off+len)` into `s`, adding to the
+    * fields already present. Offset-based so container readers decode in
+    * place from a reused read buffer: the slot keeps offsets into `data`,
+    * valid until the buffer is refilled. `ts`/`tsMicro`/`size` are the
+    * container's concern; the caller clears the slot and sets them. */
+  def decode(s: PacketSlot, data: Array[Byte], off: Int, len: Int,
       linkType: Int): Unit = {
     val end = off + len
-    if (options.keepFrame)
-      b.frame = Some(java.util.Arrays.copyOfRange(data, off, end))
+    s.data = data
+    s.frameOff = off
+    s.frameLen = len
+    if (options.keepFrame) s.present |= Frame
     if (md != null) {
       md.update(data, off, len)
-      b.md5v = Some(upperHex(md.digest()))
+      s.md5 = upperHex(md.digest())
+      s.present |= Md5
     }
-    val ether = etherTypeName(linkType, data, off, end)
-    if (ether ne lastEtherName) {
-      lastEtherName = ether
-      lastEtherSome = Some(ether)
-    }
-    b.etherType = lastEtherSome
+    s.etherType = etherTypeName(linkType, data, off, end)
+    s.present |= EtherType
     // 802.1Q / 802.1ad tags (Ethernet only, mirroring ipStartIdx's
     // unwrap): vlan_id/vlan_pcp carry the OUTERMOST tag's TCI (the
     // service tag on QinQ frames), vlan_inner_id the customer tag
@@ -118,12 +77,15 @@ private[pcap] final class FrameDecoder(options: DecodeOptions) {
       val et0 = beU16(data, off + 12)
       if (et0 == 0x8100 || et0 == 0x88A8) {
         val tci = beU16(data, off + 14)
-        b.vlanId = Boxes.int(tci & 0xFFF)
-        b.vlanPcp = Boxes.int(tci >>> 13)
+        s.vlanId = tci & 0xFFF
+        s.vlanPcp = tci >>> 13
+        s.present |= VlanId | VlanPcp
         if (end - off >= 22) {
           val et1 = beU16(data, off + 16)
-          if (et1 == 0x8100 || et1 == 0x88A8)
-            b.vlanInnerId = Boxes.int(beU16(data, off + 18) & 0xFFF)
+          if (et1 == 0x8100 || et1 == 0x88A8) {
+            s.vlanInnerId = beU16(data, off + 18) & 0xFFF
+            s.present |= VlanInnerId
+          }
         }
       }
     }
@@ -145,42 +107,50 @@ private[pcap] final class FrameDecoder(options: DecodeOptions) {
         n += 1
       }
       if (bottom) {
-        val labels = new Array[Int](n)
+        if (n > s.mpls.length) s.mpls = new Array[Int](n)
         var i = 0
         p = mplsAt
         while (i < n) {
-          labels(i) = ((data(p) & 0xFF) << 12) |
+          s.mpls(i) = ((data(p) & 0xFF) << 12) |
             ((data(p + 1) & 0xFF) << 4) | ((data(p + 2) & 0xFF) >>> 4)
           p += 4
           i += 1
         }
-        b.mplsLabels = Some(scala.collection.immutable.ArraySeq
-          .unsafeWrapArray(labels))
+        s.mplsCount = n
+        s.present |= Mpls
       }
     }
     val ip = ipStartIdx(linkType, data, off, end)
-    if (ip >= 0 && ip < end) decodeIp(b, data, ip, end)
+    if (ip >= 0 && ip < end) decodeIp(s, data, ip, end)
   }
 
   /** Whole-array convenience (tests, chunkers). */
-  def decode(b: PacketBuilder, data: Array[Byte], linkType: Int): Unit =
-    decode(b, data, 0, data.length, linkType)
+  def decode(s: PacketSlot, data: Array[Byte], linkType: Int): Unit =
+    decode(s, data, 0, data.length, linkType)
 
-  private def decodeIp(b: PacketBuilder, data: Array[Byte], ip: Int,
+  /** The L4 payload is `data[ps, end)` (empty when `ps` is past `end`). */
+  private def setPayload(s: PacketSlot, ps: Int, end: Int): Unit = {
+    val pl = if (ps > end) 0 else end - ps
+    s.len = pl
+    s.payloadOff = end - pl
+    s.present |= (if (options.keepPayload) Len | Payload else Len)
+  }
+
+  private def decodeIp(s: PacketSlot, data: Array[Byte], ip: Int,
       end: Int): Unit =
     (data(ip) >> 4) & 0xF match {
       // length guards: a frame shorter than the fixed L3 header yields a
       // record without L3 fields rather than an exception (fuzz-found;
       // the reference would AIOOBE here)
       case 4 if ip + 20 <= end =>
-        b.ttl = Boxes.int(data(ip + 8) & 0xFF)
+        s.ttl = data(ip + 8) & 0xFF
         val pid = data(ip + 9) & 0xFF
-        b.protoId = pid
-        b.protocol = ProtocolSomeArr(pid)
-        if (options.addrStrings) {
-          b.src = Some(ipv4String(data, ip + 12))
-          b.dst = Some(ipv4String(data, ip + 16))
-        }
+        s.protoId = pid
+        s.present |= Ttl | Protocol
+        s.ipVersion = 4
+        s.srcOff = ip + 12
+        s.dstOff = ip + 16
+        if (options.addrStrings) s.present |= Src | Dst
         // IHL < 5 is invalid (header shorter than its fixed part) — an
         // unguarded offset would read L4 fields from inside the IP header
         val ihl = (data(ip) & 0xF) * 4
@@ -193,70 +163,53 @@ private[pcap] final class FrameDecoder(options: DecodeOptions) {
         val flagsFrag = beU16(data, ip + 6)
         val fragOff = (flagsFrag & 0x1FFF) * 8
         if (fragOff > 0 || (flagsFrag & 0x2000) != 0) {
-          b.frag = Boxes.someTrue
-          b.ipId = Boxes.int(beU16(data, ip + 4))
-          b.fragOffset = Boxes.int(fragOff)
+          s.frag = true
+          s.ipId = beU16(data, ip + 4)
+          s.fragOffset = fragOff
+          s.present |= Frag | IpId | FragOffset
         }
         if (ihl >= 20) {
-          if (fragOff > 0) {
-            val ps = ip + ihl
-            val pl = if (ps > end) 0 else end - ps
-            b.len = Boxes.int(pl)
-            if (options.keepPayload)
-              b.payload = Some(java.util.Arrays.copyOfRange(
-                data, end - pl, end))
-          }
-          else if (pid == 6 || pid == 17) decodeL4(b, data, ip, ihl, end, v6 = false)
-          else if (pid == 1) decodeIcmp(b, data, ip + ihl, end)
-          else if (options.keepPayload && ip + ihl < end) {
+          if (fragOff > 0) setPayload(s, ip + ihl, end)
+          else if (pid == 6 || pid == 17) decodeL4(s, data, ip, ihl, end, v6 = false)
+          else if (pid == 1) decodeIcmp(s, data, ip + ihl, end)
+          else if (options.keepPayload && ip + ihl < end)
             // no L4 parser for this protocol (GRE, ESP, OSPF, ...):
             // expose the raw IP payload so downstream operators can
             // decap/parse it (graft.pcap.Decap) — ports stay NULL,
             // the same honesty rule as fragments
-            val ps = ip + ihl
-            b.len = Boxes.int(end - ps)
-            b.payload = Some(java.util.Arrays.copyOfRange(data, ps, end))
-          }
+            setPayload(s, ip + ihl, end)
         }
       case 6 if ip + 40 <= end =>
-        b.ttl = Boxes.int(data(ip + 7) & 0xFF)
-        b.payloadLen = Boxes.int(beU16(data, ip + 4))
-        if (options.addrStrings) {
-          b.src = Some(ipv6String(data, ip + 8))
-          b.dst = Some(ipv6String(data, ip + 24))
-        }
-        val dataStart = walkV6ExtHeaders(b, data, ip, end)
+        s.ttl = data(ip + 7) & 0xFF
+        s.payloadLen = beU16(data, ip + 4)
+        s.present |= Ttl | PayloadLen
+        s.ipVersion = 6
+        s.srcOff = ip + 8
+        s.dstOff = ip + 24
+        if (options.addrStrings) s.present |= Src | Dst
+        val dataStart = walkV6ExtHeaders(s, data, ip, end)
         // NON-FIRST fragment (RFC 8200 §4.5): the bytes after the
         // Fragment header are mid-payload of the original datagram,
         // NOT an L4 header — the same decode-honesty rule as the v4
         // path above (parsing ports there is the classic misparse).
         // The raw chunk rides the payload column, (ip_id, frag_offset)
         // from the Fragment header feed downstream reassembly.
-        if (dataStart > 0 && b.fragOffset.exists(_ > 0)) {
-          val ps = ip + dataStart
-          val pl = if (ps > end) 0 else end - ps
-          b.len = Boxes.int(pl)
-          if (options.keepPayload)
-            b.payload = Some(java.util.Arrays.copyOfRange(
-              data, end - pl, end))
-        }
-        else if (dataStart > 0 && (b.protoId == 6 || b.protoId == 17))
-          decodeL4(b, data, ip, dataStart, end, v6 = true)
-        else if (dataStart > 0 && b.protoId == 58)
-          decodeIcmp(b, data, ip + dataStart, end)
+        if (dataStart > 0 && s.has(FragOffset) && s.fragOffset > 0)
+          setPayload(s, ip + dataStart, end)
+        else if (dataStart > 0 && (s.protoId == 6 || s.protoId == 17))
+          decodeL4(s, data, ip, dataStart, end, v6 = true)
+        else if (dataStart > 0 && s.protoId == 58)
+          decodeIcmp(s, data, ip + dataStart, end)
         else if (dataStart > 0 && options.keepPayload &&
-            ip + dataStart < end) {
+            ip + dataStart < end)
           // v6 twin of the unhandled-protocol raw-payload rule above
-          val ps = ip + dataStart
-          b.len = Boxes.int(end - ps)
-          b.payload = Some(java.util.Arrays.copyOfRange(data, ps, end))
-        }
+          setPayload(s, ip + dataStart, end)
       case _ => ()
     }
 
   /** Walk the v6 extension chain. Returns the L4 offset from ip —
     * -1 when No-Next-Header terminates the chain. */
-  private def walkV6ExtHeaders(b: PacketBuilder, data: Array[Byte], ip: Int,
+  private def walkV6ExtHeaders(s: PacketSlot, data: Array[Byte], ip: Int,
       end: Int): Int = {
     var count = 0
     var offset = 40
@@ -266,30 +219,30 @@ private[pcap] final class FrameDecoder(options: DecodeOptions) {
     var done = false
     while (!done && ip + offset < end) {
       val isExt = ExtHeaderNames.contains(next)
-      val name = if (isExt) ExtHeaderNames(next) else protocolName(next)
-      if (chain != null) chain.append('[').append(name).append(']')
+      if (chain != null) chain.append('[').append(
+        if (isExt) ExtHeaderNames(next) else protocolName(next)).append(']')
       if (next == NoNextHeader) {
         done = true                       // result stays -1
       } else if (!isExt) {
-        b.protoId = next
-        b.protocol =
-          if (next < 256) ProtocolSomeArr(next) else Some(name)
+        s.protoId = next
+        s.present |= Protocol
         result = offset
         done = true
       } else {
         count += 1
         if (next == FragmentHeader) {
-          b.frag = Boxes.someTrue
+          s.frag = true
+          s.present |= Frag
           if (ip + offset + 8 <= end) {
             // RFC 8200 §4.5: offset (13 bits, 8-octet units) + id (u32,
             // stored as the signed int column value)
-            b.fragOffset = Boxes.int(
-              (beU16(data, ip + offset + 2) >>> 3) * 8)
-            b.ipId = Boxes.int(
+            s.fragOffset = (beU16(data, ip + offset + 2) >>> 3) * 8
+            s.ipId =
               ((data(ip + offset + 4) & 0xFF) << 24) |
               ((data(ip + offset + 5) & 0xFF) << 16) |
               ((data(ip + offset + 6) & 0xFF) << 8) |
-              (data(ip + offset + 7) & 0xFF))
+              (data(ip + offset + 7) & 0xFF)
+            s.present |= FragOffset | IpId
           }
           next = data(ip + offset) & 0xFF
           offset += 8                     // fragment header is fixed 8 bytes
@@ -304,33 +257,42 @@ private[pcap] final class FrameDecoder(options: DecodeOptions) {
         }
       }
     }
-    b.extCount = Boxes.int(count)
-    if (chain != null && chain.nonEmpty) b.extHeaders = Some(chain.toString)
+    s.extCount = count
+    s.present |= ExtCount
+    if (chain != null && chain.nonEmpty) {
+      s.extHeaders = chain.toString
+      s.present |= ExtHeaders
+    }
     result
   }
 
   /** Ports + (UDP) checksum + payload slice + optional DNS decode.
     * `l4Start` is relative to ip; `end` bounds the frame. */
-  private def decodeL4(b: PacketBuilder, data: Array[Byte], ip: Int,
+  private def decodeL4(s: PacketSlot, data: Array[Byte], ip: Int,
       l4Start: Int, end: Int, v6: Boolean): Unit = {
     val l4 = ip + l4Start
     if (l4 + 4 > end) return
     val srcPort = beU16(data, l4)
     val dstPort = beU16(data, l4 + 2)
-    b.srcPort = Boxes.int(srcPort)
-    b.dstPort = Boxes.int(dstPort)
+    s.srcPort = srcPort
+    s.dstPort = dstPort
+    s.present |= SrcPort | DstPort
     val headerSize =
-      if (b.protoId == 17) {            // UDP
-        if (options.udpsum) b.udpsum = udpChecksum(data, ip, l4Start, end, v6)
+      if (s.protoId == 17) {            // UDP
+        if (options.udpsum) {
+          val ck = udpChecksum(data, ip, l4Start, end, v6)
+          if (ck >= 0) { s.udpsum = ck; s.present |= Udpsum }
+        }
         8
       } else {                          // TCP (callers guard protoId 6/17)
         if (l4 + 13 > end) return
-        b.tcpSeq = Some(
+        s.tcpSeq =
           ((data(l4 + 4) & 0xFFL) << 24) | ((data(l4 + 5) & 0xFFL) << 16) |
-          ((data(l4 + 6) & 0xFFL) << 8) | (data(l4 + 7) & 0xFFL))
-        b.tcpAck = Some(
+          ((data(l4 + 6) & 0xFFL) << 8) | (data(l4 + 7) & 0xFFL)
+        s.tcpAck =
           ((data(l4 + 8) & 0xFFL) << 24) | ((data(l4 + 9) & 0xFFL) << 16) |
-          ((data(l4 + 10) & 0xFFL) << 8) | (data(l4 + 11) & 0xFFL))
+          ((data(l4 + 10) & 0xFFL) << 8) | (data(l4 + 11) & 0xFFL)
+        s.present |= TcpSeq | TcpAck
         // flags byte (13) sits one past the data-offset byte the guard
         // above covers; the NS bit is bit 0 of byte 12. All-zero flags
         // are invalid-in-practice — leave the column NULL rather than
@@ -338,10 +300,15 @@ private[pcap] final class FrameDecoder(options: DecodeOptions) {
         if (l4 + 14 <= end) {
           val flagBits =
             (data(l4 + 13) & 0xFF) | ((data(l4 + 12) & 0x1) << 8)
-          if (flagBits != 0) b.tcpFlags = TcpFlagNames.some(flagBits)
+          if (flagBits != 0) {
+            s.tcpFlagBits = flagBits
+            s.present |= TcpFlags
+          }
         }
-        if (l4 + 16 <= end)
-          b.tcpWindow = Boxes.int(beU16(data, l4 + 14))
+        if (l4 + 16 <= end) {
+          s.tcpWindow = beU16(data, l4 + 14)
+          s.present |= TcpWindow
+        }
         val dataOff = ((data(l4 + 12) >> 4) & 0xF) * 4
         // TCP options walk (p0f-style SYN fingerprint surface): MSS,
         // window scale, SACK-permitted, timestamps. Only when the whole
@@ -366,10 +333,13 @@ private[pcap] final class FrameDecoder(options: DecodeOptions) {
               val olen = data(o + 1) & 0xFF
               if (olen < 2 || o + olen > oEnd) { ok = false; loop = false }
               else {
-                if (kind == 2 && olen == 4)
-                  b.tcpMss = Boxes.int(beU16(data, o + 2))
-                else if (kind == 3 && olen == 3)
-                  b.tcpWscale = Boxes.int(data(o + 2) & 0xFF)
+                if (kind == 2 && olen == 4) {
+                  s.tcpMss = beU16(data, o + 2)
+                  s.present |= TcpMss
+                } else if (kind == 3 && olen == 3) {
+                  s.tcpWscale = data(o + 2) & 0xFF
+                  s.present |= TcpWscale
+                }
                 else if (kind == 4 && olen == 2) sack = true
                 else if (kind == 8 && olen == 10) tsOpt = true
                 o += olen
@@ -377,54 +347,48 @@ private[pcap] final class FrameDecoder(options: DecodeOptions) {
             }
           }
           if (ok) {
-            b.tcpSackOk = if (sack) Boxes.someTrue else Boxes.someFalse
-            b.tcpTsOk = if (tsOpt) Boxes.someTrue else Boxes.someFalse
-          } else { b.tcpMss = None; b.tcpWscale = None }
+            s.tcpSackOk = sack
+            s.tcpTsOk = tsOpt
+            s.present |= TcpSackOk | TcpTsOk
+          } else s.present &= ~(TcpMss | TcpWscale)
         }
         dataOff
       }
-    val payloadStart = l4 + headerSize
-    val payloadLen = if (payloadStart > end) 0 else end - payloadStart
-    b.len = Boxes.int(payloadLen)
+    setPayload(s, l4 + headerSize, end)
     // app-layer decode runs in place over the frame — no payload copy
-    if (appDec != null)
-      b.dns = appDec.decodeAt(b.protocol.get, srcPort, dstPort,
-        data, end - payloadLen, end, options.dnsSections)
-    if (options.keepPayload)
-      b.payload = Some(java.util.Arrays.copyOfRange(
-        data, end - payloadLen, end))
+    if (appDec != null) {
+      s.dns = appDec.decodeFields(protocolName(s.protoId), srcPort, dstPort,
+        data, s.payloadOff, end, options.dnsSections, options.dnsQname)
+      if (s.dns != null) s.present |= Dns
+    }
   }
 
   /** ICMPv4/ICMPv6 type + code (superset columns — the reference names
     * the protocol and stops). `len`/`payload` carry the bytes after the
     * fixed 8-byte header (echo id/seq + data), same slicing contract as
     * TCP/UDP. */
-  private def decodeIcmp(b: PacketBuilder, data: Array[Byte], l4: Int,
+  private def decodeIcmp(s: PacketSlot, data: Array[Byte], l4: Int,
       end: Int): Unit = {
     if (l4 + 2 > end) return
-    b.icmpType = Boxes.int(data(l4) & 0xFF)
-    b.icmpCode = Boxes.int(data(l4 + 1) & 0xFF)
-    val payloadStart = l4 + 8
-    val payloadLen = if (payloadStart > end) 0 else end - payloadStart
-    b.len = Boxes.int(payloadLen)
-    if (options.keepPayload)
-      b.payload = Some(java.util.Arrays.copyOfRange(
-        data, end - payloadLen, end))
+    s.icmpType = data(l4) & 0xFF
+    s.icmpCode = data(l4 + 1) & 0xFF
+    s.present |= IcmpType | IcmpCode
+    setPayload(s, l4 + 8, end)
   }
 
   /** One's-complement checksum residual over pseudo-header + captured UDP
-    * segment: 0 = valid. None when the checksum field is zero or the
-    * packet is too short (parity with getUdpChecksum returning -1,
+    * segment: 0 = valid. -1 (NULL) when the checksum field is zero or
+    * the packet is too short (parity with getUdpChecksum returning -1,
     * PcapReader.java:123-165). The v6 pseudo-header fix is documented on
     * [[PcapStreamReader]]. */
   private def udpChecksum(data: Array[Byte], ip: Int, l4Start: Int, end: Int,
-      v6: Boolean): Option[Int] = {
+      v6: Boolean): Int = {
     val l4 = ip + l4Start
     // explicit bound: with a reused read buffer, indexes past `end` no
     // longer fault — they'd silently read the previous frame's bytes
-    if (l4 + 8 > end) return None
+    if (l4 + 8 > end) return -1
     try {
-      if (data(l4 + 6) == 0 && data(l4 + 7) == 0) return None
+      if (data(l4 + 6) == 0 && data(l4 + 7) == 0) return -1
       val addrLen = if (v6) 16 else 4
       val srcOff = if (v6) ip + 8 else ip + 12
       val dstOff = if (v6) ip + 24 else ip + 16
@@ -452,9 +416,9 @@ private[pcap] final class FrameDecoder(options: DecodeOptions) {
       }
       sum = (sum >> 16) + (sum & 0xFFFF)
       sum += sum >> 16
-      Boxes.int(~sum & 0xFFFF)
+      ~sum & 0xFFFF
     } catch {
-      case _: ArrayIndexOutOfBoundsException => None
+      case _: ArrayIndexOutOfBoundsException => -1
     }
   }
 }

@@ -12,6 +12,7 @@ final case class DnsFields(
     opcode: String,
     rcode: String,
     qname: Option[String],   // lowercased, trailing dot; None when qd=0
+                             // or when the decode pruned dns_qname
     qtype: Int,              // 0 when no question
     qtypeStr: Option[String],
     answer: Seq[String],

@@ -41,6 +41,18 @@ trait PayloadDecoder extends Serializable {
       frame: Array[Byte], start: Int, end: Int,
       emitSections: Boolean): Option[DnsFields] =
     decodeAt(protocol, srcPort, dstPort, frame, start, end)
+
+  /** The scan's hook: the same decode with a second pruning hint, null
+    * where the other overloads return None. `emitQname = false` means the
+    * caller will not read `dns_qname`, so a decoder MAY leave `qname`
+    * None (same failure rule as `emitSections`). Default falls back to
+    * the `emitSections` overload, so third-party decoders are
+    * unaffected. */
+  def decodeFields(protocol: String, srcPort: Int, dstPort: Int,
+      frame: Array[Byte], start: Int, end: Int, emitSections: Boolean,
+      emitQname: Boolean): DnsFields =
+    decodeAt(protocol, srcPort, dstPort, frame, start, end, emitSections)
+      .orNull
 }
 
 /** The shipped instance: DNS over UDP port 53 (DnsPcapReader.java:23,38;
@@ -62,9 +74,15 @@ object DnsPayloadDecoder extends PayloadDecoder {
   override def decodeAt(protocol: String, srcPort: Int, dstPort: Int,
       frame: Array[Byte], start: Int, end: Int,
       emitSections: Boolean): Option[DnsFields] =
+    Option(decodeFields(protocol, srcPort, dstPort, frame, start, end,
+      emitSections, emitQname = true))
+
+  override def decodeFields(protocol: String, srcPort: Int, dstPort: Int,
+      frame: Array[Byte], start: Int, end: Int, emitSections: Boolean,
+      emitQname: Boolean): DnsFields =
     if (protocol == "UDP" && (srcPort == 53 || dstPort == 53))
-      DnsParser.parse(frame, start, end, emitSections)
-    else None
+      DnsParser.parseOrNull(frame, start, end, emitSections, emitQname)
+    else null
 }
 
 /** EXTENSION (SURVEY.md §7.5 "TCP-DNS as extension option"): additionally
@@ -90,15 +108,22 @@ object DnsTcpPayloadDecoder extends PayloadDecoder {
   override def decodeAt(protocol: String, srcPort: Int, dstPort: Int,
       frame: Array[Byte], start: Int, end: Int,
       emitSections: Boolean): Option[DnsFields] =
-    if (srcPort != 53 && dstPort != 53) None
+    Option(decodeFields(protocol, srcPort, dstPort, frame, start, end,
+      emitSections, emitQname = true))
+
+  override def decodeFields(protocol: String, srcPort: Int, dstPort: Int,
+      frame: Array[Byte], start: Int, end: Int, emitSections: Boolean,
+      emitQname: Boolean): DnsFields =
+    if (srcPort != 53 && dstPort != 53) null
     else protocol match {
-      case "UDP" => DnsParser.parse(frame, start, end, emitSections)
+      case "UDP" =>
+        DnsParser.parseOrNull(frame, start, end, emitSections, emitQname)
       case "TCP" if end - start >= 2 =>
         val msgLen = ((frame(start) & 0xFF) << 8) | (frame(start + 1) & 0xFF)
-        if (msgLen == 0 || start + 2 + msgLen > end) None
-        else DnsParser.parse(frame, start + 2, start + 2 + msgLen,
-          emitSections)
-      case _ => None
+        if (msgLen == 0 || start + 2 + msgLen > end) null
+        else DnsParser.parseOrNull(frame, start + 2, start + 2 + msgLen,
+          emitSections, emitQname)
+      case _ => null
     }
 }
 

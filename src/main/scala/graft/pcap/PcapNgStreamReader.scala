@@ -27,13 +27,12 @@ import java.io.{IOException, InputStream}
 final class PcapNgStreamReader(
     in: InputStream,
     options: DecodeOptions = DecodeOptions())
-  extends Iterator[PacketRecord] {
+  extends PacketReader {
 
   import PcapNgStreamReader._
 
   private val is = new FastIn(in)
   private val frameDecoder = new FrameDecoder(options)
-  private var nextRec: PacketRecord = _
   private var eof = false
 
   private var bigEndian = false
@@ -57,24 +56,20 @@ final class PcapNgStreamReader(
     ok
   }
 
-  override def hasNext: Boolean = {
-    while (nextRec == null && !eof) nextRec = readBlock()
-    nextRec != null
+  override def advance(): Boolean = {
+    while (!eof) if (readBlock()) return true
+    false
   }
 
-  override def next(): PacketRecord = {
-    if (!hasNext) throw new NoSuchElementException("end of pcapng stream")
-    val r = nextRec; nextRec = null; r
-  }
+  private val head = new Array[Byte](8)
 
-  /** Read one block; returns a record for packet blocks, null otherwise. */
-  private def readBlock(): PacketRecord = {
-    val head = new Array[Byte](8)
-    if (!readFully(head)) return null
+  /** Read one block; true when it was a packet block, now in `slot`. */
+  private def readBlock(): Boolean = {
+    if (!readFully(head)) return false
     // SHB needs special handling: its own byte-order magic defines how to
     // read its length (block type 0x0A0D0D0A is palindromic)
     val rawType = PcapStreamReader.leU32(head, 0)
-    if (rawType == ShbType) return readShb(head)
+    if (rawType == ShbType) { readShb(head); return false }
     if (!inSection)
       throw new IOException("pcapng: block before Section Header")
     val blockType = u32(head, 0)
@@ -88,18 +83,18 @@ final class PcapNgStreamReader(
     val bodyLen = totalLen - 12
     if (bodyLen > bodyBuf.length)
       bodyBuf = new Array[Byte](math.max(bodyLen, bodyBuf.length * 2))
-    if (!readFully(bodyBuf, bodyLen)) return null
+    if (!readFully(bodyBuf, bodyLen)) return false
     skip(4) // trailing total length
     blockType match {
-      case IdbType => readIdb(bodyBuf, bodyLen); null
-      case EpbType => readEpb(bodyBuf, bodyLen)
-      case SpbType => readSpb(bodyBuf, bodyLen)
-      case _ => null // NRB/ISB/custom: skipped
+      case IdbType => readIdb(bodyBuf, bodyLen); false
+      case EpbType => readEpb(bodyBuf, bodyLen); slot.recordBytes = totalLen; true
+      case SpbType => readSpb(bodyBuf, bodyLen); slot.recordBytes = totalLen; true
+      case _ => false // NRB/ISB/custom: skipped
     }
   }
 
-  // blocks are parsed in place from this reusable buffer (everything a
-  // block contributes — Iface params, decoded fields — is copied out)
+  // blocks are parsed in place from this reusable buffer: Iface params
+  // are copied out, the slot points into it until the next advance()
   private var bodyBuf = new Array[Byte](64 * 1024)
 
   private def readFully(buf: Array[Byte], len: Int): Boolean = {
@@ -108,9 +103,9 @@ final class PcapNgStreamReader(
     ok
   }
 
-  private def readShb(head: Array[Byte]): Null = {
+  private def readShb(head: Array[Byte]): Unit = {
     val rest = new Array[Byte](16)
-    if (!readFully(rest)) return null
+    if (!readFully(rest)) return
     val bom = PcapStreamReader.leU32(rest, 0)
     bigEndian = bom match {
       case ByteOrderMagic => false
@@ -128,7 +123,6 @@ final class PcapNgStreamReader(
       throw new IOException(s"pcapng: bad SHB block length $totalLen")
     // consume the remainder of the SHB (options + trailing length)
     skip(totalLen.toInt - head.length - rest.length)
-    null
   }
 
   private def readIdb(body: Array[Byte], bodyLen: Int): Unit = {
@@ -175,7 +169,7 @@ final class PcapNgStreamReader(
     r
   }
 
-  private def readEpb(body: Array[Byte], bodyLen: Int): PacketRecord = {
+  private def readEpb(body: Array[Byte], bodyLen: Int): Unit = {
     if (bodyLen < 20)
       throw new IOException("pcapng: truncated EPB")
     val ifIdRaw = u32(body, 0)
@@ -189,18 +183,19 @@ final class PcapNgStreamReader(
     if (capLenRaw > PcapStreamReader.MaxCapturedLength)
       throw new IOException(s"pcapng: bad EPB captured length $capLenRaw")
     val capLen = capLenRaw.toInt
-    val b = new PacketBuilder
+    val s = slot
+    s.clear()
     val tsSec = java.lang.Long.divideUnsigned(tsUnits, unitsPerSec)
     val sub = java.lang.Long.remainderUnsigned(tsUnits, unitsPerSec)
-    b.ts = Some(tsSec)
-    b.tsMicro = Some(tsSec * 1000000L + sub * 1000000L / unitsPerSec)
-    b.size = Some(capLen.toLong)
+    s.ts = tsSec
+    s.tsMicro = tsSec * 1000000L + sub * 1000000L / unitsPerSec
+    s.size = capLen.toLong
+    s.present = PacketSlot.Ts | PacketSlot.TsMicro | PacketSlot.Size
     if (capLen > 0 && 20 + capLen <= bodyLen)
-      frameDecoder.decode(b, body, 20, capLen, linkType)
-    b.build()
+      frameDecoder.decode(s, body, 20, capLen, linkType)
   }
 
-  private def readSpb(body: Array[Byte], bodyLen: Int): PacketRecord = {
+  private def readSpb(body: Array[Byte], bodyLen: Int): Unit = {
     // Simple Packet Block: no interface id / timestamp; belongs to
     // interface 0 by spec. The SPB itself has no captured-length field:
     // capLen = min(origLen, interface snaplen), clamped to the block
@@ -220,11 +215,12 @@ final class PcapNgStreamReader(
     val capLen =
       math.min(math.min(origLen.toLong, effSnap), (bodyLen - 4).toLong)
         .toInt
-    val b = new PacketBuilder
-    b.size = Some(capLen.toLong)
+    val s = slot
+    s.clear()
+    s.size = capLen.toLong
+    s.present = PacketSlot.Size
     if (capLen > 0)
-      frameDecoder.decode(b, body, 4, capLen, linkType)
-    b.build()
+      frameDecoder.decode(s, body, 4, capLen, linkType)
   }
 
   private def skip(n: Int): Unit =
@@ -247,7 +243,7 @@ object PcapNgStreamReader {
 /** Container sniffer: classic pcap (any endian/resolution magic) vs
   * pcapng, selected from the first 4 bytes without consuming them. */
 object PacketReaders {
-  def open(in: InputStream, options: DecodeOptions): Iterator[PacketRecord] = {
+  def open(in: InputStream, options: DecodeOptions): PacketReader = {
     val pb = new java.io.PushbackInputStream(in, 4)
     val head = new Array[Byte](4)
     var got = 0

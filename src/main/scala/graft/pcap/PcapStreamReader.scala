@@ -33,7 +33,10 @@ final case class DecodeOptions(
     /** false when none of tcp_mss/tcp_wscale/tcp_sack_ok/tcp_ts_ok is
       * requested: skips the TCP option-region walk (bounded ≤ 40 bytes
       * per packet, but zero is still cheaper). */
-    tcpOptions: Boolean = true)
+    tcpOptions: Boolean = true,
+    /** false when `dns_qname` is not requested: the question name is
+      * still walked and validated, but its string is not built. */
+    dnsQname: Boolean = true)
 
 object DecodeOptions {
   /** Convenience for the common case. */
@@ -41,9 +44,9 @@ object DecodeOptions {
 }
 
 /** Streaming classic-libpcap decoder: validates the 24-byte global header,
-  * then yields one [[PacketRecord]] per packet. Decoding accumulates into
-  * a single mutable builder per packet (one record allocation, no
-  * copy-chain churn — this loop runs per packet at 100 TB).
+  * then decodes one packet per [[advance]] into the reader's reused
+  * [[PacketSlot]] (no per-packet allocation — this loop runs per packet
+  * at 100 TB); as an iterator it yields one [[PacketRecord]] per packet.
   *
   * Semantics match the reference decoder
   * (hadoop-pcap-lib/.../PcapReader.java) — see the quirk register in
@@ -78,13 +81,12 @@ object DecodeOptions {
 final class PcapStreamReader(
     in: InputStream,
     options: DecodeOptions = DecodeOptions())
-  extends Iterator[PacketRecord] {
+  extends PacketReader {
 
   import PcapStreamReader._
 
   private val is = new FastIn(in)
   private var eof = false
-  private var nextRec: PacketRecord = _
   private val hdrBuf = new Array[Byte](PacketHeaderSize)
 
   // Container variant, detected from the magic (extension beyond the
@@ -100,12 +102,12 @@ final class PcapStreamReader(
       ((b(off + 2) & 0xFFL) << 8) | (b(off + 3) & 0xFFL)
     else leU32(b, off)
 
-  /** None only for an empty stream (parity: "skipping empty file"). */
-  private val linkType: Option[Int] = {
+  /** -1 only for an empty stream (parity: "skipping empty file"). */
+  private val linkType: Int = {
     val hdr = new Array[Byte](GlobalHeaderSize)
     if (!readFully(hdr)) {
       if (!eof) throw new IOException("Couldn't read PCAP header")
-      None
+      -1
     } else {
       leU32(hdr, 0) match {
         case Magic => ()
@@ -118,21 +120,11 @@ final class PcapStreamReader(
       val lt = cu32(hdr, 20).toInt
       if (!SupportedLinkTypes.contains(lt))
         throw new IOException(s"Unsupported link type: $lt")
-      Some(lt)
+      lt
     }
   }
 
   private val frameDecoder = new FrameDecoder(options)
-
-  override def hasNext: Boolean = {
-    if (nextRec == null && linkType.isDefined) nextRec = readPacket()
-    nextRec != null
-  }
-
-  override def next(): PacketRecord = {
-    if (!hasNext) throw new NoSuchElementException("end of pcap stream")
-    val r = nextRec; nextRec = null; r
-  }
 
   private def readFully(buf: Array[Byte]): Boolean = {
     val ok = is.readFully(buf)
@@ -140,15 +132,8 @@ final class PcapStreamReader(
     ok
   }
 
-  // whole-second timestamps and frame sizes repeat across long runs of
-  // adjacent packets — reuse the last Some(Long) instead of boxing anew
-  private var lastTsSec = Long.MinValue
-  private var lastTsSome: Some[Long] = null
-  private var lastSize = Long.MinValue
-  private var lastSizeSome: Some[Long] = null
-
-  private def readPacket(): PacketRecord = {
-    if (!readFully(hdrBuf)) return null
+  override def advance(): Boolean = {
+    if (linkType < 0 || !readFully(hdrBuf)) return false
 
     val tsSec = cu32(hdrBuf, 0)
     val tsSub = cu32(hdrBuf, 4)
@@ -161,31 +146,28 @@ final class PcapStreamReader(
     if (capLen > MaxCapturedLength)
       throw new IOException(s"corrupt pcap: captured length $capLen")
 
-    val b = new PacketBuilder
-    if (tsSec != lastTsSec || lastTsSome == null) {
-      lastTsSec = tsSec
-      lastTsSome = Some(tsSec)
-    }
-    b.ts = lastTsSome
-    b.tsMicro = Some(tsSec * 1000000L + tsUsec)
+    val s = slot
+    s.clear()
+    s.ts = tsSec
+    s.tsMicro = tsSec * 1000000L + tsUsec
+    s.present = PacketSlot.Ts | PacketSlot.TsMicro
+    s.recordBytes = PacketHeaderSize
 
     val len = capLen.toInt
     if (len > frameBuf.length)
       frameBuf = new Array[Byte](math.max(len, frameBuf.length * 2))
     if (!readFully(frameBuf, len))
-      return b.build() // truncated body -> ts-only record
+      return true // truncated body -> ts-only record
 
-    if (capLen != lastSize || lastSizeSome == null) {
-      lastSize = capLen
-      lastSizeSome = Some(capLen)
-    }
-    b.size = lastSizeSome
-    frameDecoder.decode(b, frameBuf, 0, len, linkType.get)
-    b.build()
+    s.size = capLen
+    s.present |= PacketSlot.Size
+    s.recordBytes += capLen
+    frameDecoder.decode(s, frameBuf, 0, len, linkType)
+    true
   }
 
-  // decode reads frames in place from this reusable buffer (FrameDecoder
-  // copies everything it emits; nothing retains the buffer)
+  // frames decode in place from this reusable buffer; the slot points
+  // into it until the next advance()
   private var frameBuf = new Array[Byte](64 * 1024)
 
   private def readFully(buf: Array[Byte], len: Int): Boolean = {
@@ -375,15 +357,70 @@ object PcapStreamReader {
     case _ => -1
   }
 
-  def ipv4String(b: Array[Byte], off: Int): String =
-    s"${b(off) & 0xFF}.${b(off + 1) & 0xFF}.${b(off + 2) & 0xFF}.${b(off + 3) & 0xFF}"
+  def ipv4String(b: Array[Byte], off: Int): String = {
+    val out = new Array[Byte](15)
+    new String(out, 0, ipv4Text(b, off, out),
+      java.nio.charset.StandardCharsets.ISO_8859_1)
+  }
 
-  /** RFC-form IPv6 text via InetAddress, matching
-    * PcapReaderUtil.convertIPv6Address (java.net formatting, no `::`
-    * compression). */
-  def ipv6String(b: Array[Byte], off: Int): String =
-    java.net.InetAddress.getByAddress(
-      java.util.Arrays.copyOfRange(b, off, off + 16)).getHostAddress
+  /** RFC-form IPv6 text matching PcapReaderUtil.convertIPv6Address, i.e.
+    * `InetAddress.getHostAddress` (java.net formatting, no `::`
+    * compression; an IPv4-mapped address prints as dotted quad). */
+  def ipv6String(b: Array[Byte], off: Int): String = {
+    val out = new Array[Byte](39)
+    new String(out, 0, ipv6Text(b, off, out),
+      java.nio.charset.StandardCharsets.ISO_8859_1)
+  }
+
+  /** Dotted-quad text of `b[off, off+4)` into `out` from index 0;
+    * returns its length (at most 15). */
+  private[graft] def ipv4Text(b: Array[Byte], off: Int,
+      out: Array[Byte]): Int = {
+    var n = 0
+    var i = 0
+    while (i < 4) {
+      if (i > 0) { out(n) = '.'; n += 1 }
+      val t = OctetText(b(off + i) & 0xFF)
+      System.arraycopy(t, 0, out, n, t.length)
+      n += t.length
+      i += 1
+    }
+    n
+  }
+
+  /** decimal text of 0..255 */
+  private val OctetText: Array[Array[Byte]] = Array.tabulate(256)(
+    _.toString.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
+
+  private val HexDigits = "0123456789abcdef".getBytes(
+    java.nio.charset.StandardCharsets.ISO_8859_1)
+
+  /** [[ipv6String]]'s text of `b[off, off+16)` into `out` from index 0;
+    * returns its length (at most 39). */
+  private[graft] def ipv6Text(b: Array[Byte], off: Int,
+      out: Array[Byte]): Int = {
+    // java.net turns an IPv4-mapped address (::ffff:a.b.c.d) into an
+    // Inet4Address, which prints as a dotted quad
+    var z = 0
+    while (z < 10 && b(off + z) == 0) z += 1
+    if (z == 10 && b(off + 10) == -1 && b(off + 11) == -1)
+      return ipv4Text(b, off + 12, out)
+    var n = 0
+    var g = 0
+    while (g < 8) {
+      if (g > 0) { out(n) = ':'; n += 1 }
+      val v = ((b(off + 2 * g) & 0xFF) << 8) | (b(off + 2 * g + 1) & 0xFF)
+      var shift = 12
+      while (shift > 0 && (v >>> shift) == 0) shift -= 4
+      while (shift >= 0) {
+        out(n) = HexDigits((v >>> shift) & 0xF)
+        n += 1
+        shift -= 4
+      }
+      g += 1
+    }
+    n
+  }
 
   def upperHex(bytes: Array[Byte]): String = {
     val sb = new StringBuilder(bytes.length * 2)

@@ -17,9 +17,9 @@ import graft.pcap.DecodeOptions
   * the scan output through codegen'd `ColumnarToRow` — the decode-bound
   * telemetry projections (qname/qtype aggregations over multi-GB
   * captures) are where the allocation pressure showed up in profiles.
-  * Projections that include the DNS RR-section array columns fall back
-  * to [[PcapPartitionReader]] (see [[PcapSchema.columnarEligible]]);
-  * results are identical either way (PcapGoldenSpec runs both paths).
+  * The column readers copy each field straight out of the feed's reused
+  * packet slot; results are identical to the row path (PcapGoldenSpec
+  * runs both).
   */
 class PcapColumnarPartitionReader(
     files: Seq[String],
@@ -33,7 +33,7 @@ class PcapColumnarPartitionReader(
   private val feed = new PacketFeed(files, conf, decode)
   private val vectors = OnHeapColumnVector.allocateColumns(batchSize, schema)
   private val batch = new ColumnarBatch(vectors.asInstanceOf[Array[ColumnVector]])
-  private val appenders = PcapSchema.colBuilder(schema)
+  private val cols = PcapSchema.columns(schema)
   private var exhausted = false
 
   override def next(): Boolean = {
@@ -42,15 +42,14 @@ class PcapColumnarPartitionReader(
     while (i < vectors.length) { vectors(i).reset(); i += 1 }
     var n = 0
     while (n < batchSize && !exhausted) {
-      val rec = feed.next()
-      if (rec == null) exhausted = true
-      else if (filter(rec)) {
-        var c = 0
-        while (c < appenders.length) {
-          appenders(c)(vectors(c), rec, feed.pktIdx, feed.currentFileBytes)
-          c += 1
+      if (!feed.next()) exhausted = true
+      else {
+        val s = feed.slot
+        if (filter(s)) {
+          var c = 0
+          while (c < cols.length) { cols(c).append(vectors(c), s, feed); c += 1 }
+          n += 1
         }
-        n += 1
       }
     }
     batch.setNumRows(n)

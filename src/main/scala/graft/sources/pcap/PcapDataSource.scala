@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.pcap.{DecodeOptions, PayloadDecoders}
+import graft.pcap.DecodeOptions
 import graft.sources.HadoopConfBroadcast
 
 /** `spark.read.format("pcap")` — DataSource V2 batch source for classic
@@ -412,36 +412,15 @@ class PcapScan(requiredSchema: StructType, options: CaseInsensitiveStringMap,
       .map(b => PcapInputPartition(b): InputPartition).toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val appDecoder = PayloadDecoders.forName(
-      options.getOrDefault("decoder", "ip"))
-    val wantsDnsCols = requiredSchema.fieldNames.exists(_.startsWith("dns_"))
-    val sectionCols = Set("dns_answer", "dns_authority", "dns_additional")
-    val need = requiredSchema.fieldNames.toSet
-    val decode = DecodeOptions(
-      appDecoder = if (wantsDnsCols) appDecoder else None,
-      md5 = options.getBoolean("md5", false) && need("md5"),
-      keepPayload = need("payload"),
-      // prune RR-section string building when none of the section
-      // columns is requested (qname/qtype telemetry projections)
-      dnsSections = requiredSchema.fieldNames.exists(sectionCols),
-      // columns referenced by residual filters are always part of the
-      // required schema, so schema-driven pruning can never starve a
-      // pushed predicate (PrunedDecodeParitySpec)
-      udpsum = need("udpsum"),
-      addrStrings = need("src") || need("dst"),
-      extHeaderStrings = need("ext_headers"),
-      keepFrame = need("frame"),
-      tcpOptions = need("tcp_mss") || need("tcp_wscale") ||
-        need("tcp_sack_ok") || need("tcp_ts_ok"))
+  override def createReaderFactory(): PartitionReaderFactory =
     new PcapReaderFactory(HadoopConfBroadcast(sparkSession),
-      requiredSchema, decode, PcapPacketFilter.compile(pushedFilters),
+      requiredSchema, PcapSchema.decodeOptions(requiredSchema, options),
+      PcapPacketFilter.compile(pushedFilters),
       // batch (not streaming) reads emit ColumnarBatches for flat
       // projections; option("columnar","false") forces the row path
       // for A/B measurement
       columnar = options.getBoolean("columnar", true),
       batchSize = options.getInt("columnarBatchSize", 4096))
-  }
 }
 
 /** Files of one task. Serialized to executors; paths only. */
@@ -449,7 +428,7 @@ case class PcapInputPartition(files: Seq[String]) extends InputPartition
 
 class PcapReaderFactory(conf: Broadcast[SerializableConfiguration],
     schema: StructType,
-    decode: DecodeOptions,
+    val decode: DecodeOptions,
     filter: PcapPacketFilter.Predicate = PcapPacketFilter.acceptAll,
     columnar: Boolean = false,
     batchSize: Int = 4096)

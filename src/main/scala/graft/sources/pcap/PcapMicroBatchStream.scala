@@ -7,8 +7,6 @@ import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFacto
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types.StructType
 
-import graft.pcap.DecodeOptions
-
 /** Streaming extension of the pcap source: `readStream.format("pcap")`
   * over a landing directory of capture files (SURVEY.md §1.4 flags this
   * as the natural Structured Streaming extension — the reference is
@@ -379,27 +377,10 @@ class PcapMicroBatchStream(
       PcapInputPartition(Seq(f.path)): InputPartition).toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val appDecoder = graft.pcap.PayloadDecoders.forName(
-      options.getOrDefault("decoder", "ip"))
-    val need = schema.fieldNames.toSet
-    val decode = DecodeOptions(
-      appDecoder =
-        if (schema.fieldNames.exists(_.startsWith("dns_"))) appDecoder
-        else None,
-      md5 = options.getBoolean("md5", false) && need("md5"),
-      keepPayload = need("payload"),
-      dnsSections = schema.fieldNames.exists(
-        Set("dns_answer", "dns_authority", "dns_additional")),
-      udpsum = need("udpsum"),
-      addrStrings = need("src") || need("dst"),
-      extHeaderStrings = need("ext_headers"),
-      keepFrame = need("frame"),
-      tcpOptions = need("tcp_mss") || need("tcp_wscale") ||
-        need("tcp_sack_ok") || need("tcp_ts_ok"))
+  override def createReaderFactory(): PartitionReaderFactory =
     new PcapReaderFactory(
-      graft.sources.HadoopConfBroadcast(SparkSession.active), schema, decode)
-  }
+      graft.sources.HadoopConfBroadcast(SparkSession.active), schema,
+      PcapSchema.decodeOptions(schema, options))
 
   override def stop(): Unit = ()
 }

@@ -2,20 +2,21 @@ package graft.sources.pcap
 
 import org.apache.spark.sql.sources._
 
-import graft.pcap.PacketRecord
+import graft.pcap.PacketSlot
+import graft.pcap.PacketSlot._
 
 /** Compiles the subset of Spark `Filter`s the decoder can evaluate per
   * packet (port/protocol/ether_type/src/dst equality and IN; ts range;
   * dns_qname/dns_rcode equality, prefix, suffix, contains; dns_qr
-  * equality) into one predicate over [[PacketRecord]]. A packet failing a
-  * pushed filter is skipped before row materialization — Spark still
-  * applies the full filter post-scan, so pushdown is purely a
-  * row-skipping optimization (a qname-suffix scan over a 100 TB archive
+  * equality) into one predicate over the decoder's [[PacketSlot]]. A
+  * packet failing a pushed filter is skipped before row materialization
+  * — Spark still applies the full filter post-scan, so pushdown is purely
+  * a row-skipping optimization (a qname-suffix scan over a 100 TB archive
   * decodes every packet but materializes only the matching rows, and
   * RR-section string building is skipped for everything else).
   */
 object PcapPacketFilter {
-  type Predicate = PacketRecord => Boolean
+  type Predicate = PacketSlot => Boolean
   val acceptAll: Predicate = _ => true
 
   private val columns = Set("src_port", "dst_port", "protocol",
@@ -41,20 +42,7 @@ object PcapPacketFilter {
     case _ => false
   }
 
-  private def field(c: String, r: PacketRecord): Option[Any] = c match {
-    case "src_port" => r.srcPort
-    case "dst_port" => r.dstPort
-    case "protocol" => r.protocol
-    case "ether_type" => r.etherType
-    case "ts" => r.ts
-    case "src" => r.src
-    case "dst" => r.dst
-    case "tcp_flags" => r.tcpFlags
-    case "dns_qname" => r.dns.flatMap(_.qname)
-    case "dns_rcode" => r.dns.map(_.rcode)
-    case "dns_qr" => r.dns.map(_.qr)
-    case _ => None
-  }
+  private val UTF_8 = java.nio.charset.StandardCharsets.UTF_8
 
   private def asLong(v: Any): Long = v match {
     case i: Int => i.toLong
@@ -63,39 +51,116 @@ object PcapPacketFilter {
     case _ => Long.MinValue
   }
 
-  /** numeric-tolerant equality (Spark may hand us Int or Long literals) */
-  private def same(x: Any, v: Any): Boolean = (x, v) match {
-    case (a: Int, b) => asLong(a) == asLong(b)
-    case (a: Long, b) => a == asLong(b)
-    case (a, b) => a == b
+  private def presence(c: String): Long = c match {
+    case "src_port" => SrcPort
+    case "dst_port" => DstPort
+    case "protocol" => Protocol
+    case "ether_type" => EtherType
+    case "ts" => Ts
+    case "src" => Src
+    case "dst" => Dst
+    case "tcp_flags" => TcpFlags
+    case _ => Dns // dns_qname, dns_rcode, dns_qr
   }
+
+  /** The column's value as a string (null = NULL), for the string
+    * columns other than the addresses. */
+  private def strOf(c: String): PacketSlot => String = c match {
+    case "protocol" => _.protocol
+    case "ether_type" => _.etherType
+    case "tcp_flags" => _.tcpFlags
+    case "dns_qname" => _.dns.qname.orNull
+    case "dns_rcode" => _.dns.rcode
+    case _ => null
+  }
+
+  private def hasLong(want: Array[Long], x: Long): Boolean = {
+    var i = 0
+    while (i < want.length && want(i) != x) i += 1
+    i < want.length
+  }
+
+  private def hasStr(want: Array[String], x: String): Boolean = {
+    var i = 0
+    while (i < want.length && !want(i).equals(x)) i += 1
+    i < want.length
+  }
+
+  private def sameBytes(a: Array[Byte], b: Array[Byte], n: Int): Boolean = {
+    if (a.length != n) return false
+    var i = 0
+    while (i < n && a(i) == b(i)) i += 1
+    i == n
+  }
+
+  /** Equality against any of `vs`: numeric-tolerant (Spark may hand us
+    * Int or Long literals); a value of the wrong type never matches. */
+  private def oneOf(c: String, vs: Array[Any]): Predicate = {
+    val longs = vs.map(asLong)
+    val strs = vs.collect { case x: String => x }
+    c match {
+      case "src_port" => s => s.has(SrcPort) && hasLong(longs, s.srcPort)
+      case "dst_port" => s => s.has(DstPort) && hasLong(longs, s.dstPort)
+      case "ts" => s => s.has(Ts) && hasLong(longs, s.ts)
+      case "src" | "dst" =>
+        // compare the address text as formatted into the slot's scratch,
+        // without building a String per packet
+        val want = strs.map(_.getBytes(UTF_8))
+        val dst = c == "dst"
+        val bit = presence(c)
+        s => s.has(bit) && {
+          val n = s.addrText(dst)
+          var i = 0
+          while (i < want.length && !sameBytes(want(i), s.text, n)) i += 1
+          i < want.length
+        }
+      case "dns_qr" =>
+        val t = vs.contains(true)
+        val f = vs.contains(false)
+        s => s.has(Dns) && (if (s.dns.qr) t else f)
+      case _ => str(c)(hasStr(strs, _))
+    }
+  }
+
+  private def str(c: String)(test: String => Boolean): Predicate = {
+    val bit = presence(c)
+    val get = strOf(c)
+    s => s.has(bit) && { val x = get(s); x != null && test(x) }
+  }
+
+  private def ts(test: Long => Boolean): Predicate =
+    s => s.has(Ts) && test(s.ts)
 
   private def one(f: Filter): Predicate = f match {
     // a record missing the column is NULL → the filter can't match;
     // skipping is safe (Spark's residual filter would drop it anyway)
+    case IsNotNull("dns_qname") =>
+      s => s.has(Dns) && s.dns.qname.isDefined
     case IsNotNull(c) =>
-      r => field(c, r).isDefined
-    case EqualTo(c, v) =>
-      r => field(c, r).exists(same(_, v))
-    case In(c, vs) =>
-      r => field(c, r).exists(x => vs.exists(same(x, _)))
-    case GreaterThan("ts", v) => r => r.ts.exists(_ > asLong(v))
-    case GreaterThanOrEqual("ts", v) => r => r.ts.exists(_ >= asLong(v))
-    case LessThan("ts", v) => r => r.ts.exists(_ < asLong(v))
-    case LessThanOrEqual("ts", v) => r => r.ts.exists(_ <= asLong(v))
-    case StringStartsWith(c, p) =>
-      r => field(c, r).exists { case s: String => s.startsWith(p); case _ => false }
-    case StringEndsWith(c, p) =>
-      r => field(c, r).exists { case s: String => s.endsWith(p); case _ => false }
-    case StringContains(c, p) =>
-      r => field(c, r).exists { case s: String => s.contains(p); case _ => false }
+      val bit = presence(c)
+      s => s.has(bit)
+    case EqualTo(c, v) => oneOf(c, Array(v))
+    case In(c, vs) => oneOf(c, vs)
+    case GreaterThan("ts", v) => val x = asLong(v); ts(_ > x)
+    case GreaterThanOrEqual("ts", v) => val x = asLong(v); ts(_ >= x)
+    case LessThan("ts", v) => val x = asLong(v); ts(_ < x)
+    case LessThanOrEqual("ts", v) => val x = asLong(v); ts(_ <= x)
+    case StringStartsWith(c, p) => str(c)(_.startsWith(p))
+    case StringEndsWith(c, p) => str(c)(_.endsWith(p))
+    case StringContains(c, p) => str(c)(_.contains(p))
     case _ => acceptAll
   }
 
+  /** One closure per filter, each bound to its column when compiled. */
   def compile(filters: Array[Filter]): Predicate =
-    if (filters.isEmpty) acceptAll
-    else {
-      val ps = filters.map(one)
-      r => ps.forall(_(r))
+    filters.filter(supported).map(one) match {
+      case Array() => acceptAll
+      case Array(p) => p
+      case ps =>
+        s => {
+          var i = 0
+          while (i < ps.length && ps(i)(s)) i += 1
+          i == ps.length
+        }
     }
 }

@@ -2,16 +2,18 @@ package graft.sources.pcap
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecificInternalRow
 import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.pcap.{DecodeOptions, PacketRecord}
+import graft.pcap.{DecodeOptions, PacketReader, PacketSlot}
 
 /** Sequential decode of one [[PcapInputPartition]]'s files — the packet
   * feed both the row reader below and [[PcapColumnarPartitionReader]]
   * draw from (the Spark analogue of PcapRecordReader +
   * CombinePcapRecordReader under hadoop-pcap-lib/.../io/reader/).
+  * Each packet is decoded into the file reader's reused [[PacketSlot]].
   * `pktIdx` restarts at 1 per file, matching the reference's per-split
   * LongWritable key (PcapRecordReader.java:43-54). */
 private[pcap] class PacketFeed(
@@ -19,7 +21,9 @@ private[pcap] class PacketFeed(
 
   private val fileIter = files.iterator
   private var stream: java.io.InputStream = _
-  private var packets: Iterator[PacketRecord] = Iterator.empty
+  private var reader: PacketReader = _
+  /** The current packet; valid until the next [[next]]. */
+  var slot: PacketSlot = _
   var currentFile: UTF8String = _
   var currentFileBytes: Array[Byte] = _
   var pktIdx = 0L
@@ -33,21 +37,22 @@ private[pcap] class PacketFeed(
     currentFileBytes = path.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     currentFile = UTF8String.fromBytes(currentFileBytes)
     stream = PcapFileOpener.open(conf, path)
-    packets = graft.pcap.PacketReaders.open(stream, decode)
+    reader = graft.pcap.PacketReaders.open(stream, decode)
+    slot = reader.slot
     pktIdx = 0L
     true
   }
 
-  /** Next decoded record, or null when every file is exhausted. */
-  def next(): PacketRecord = {
-    while (!packets.hasNext) {
-      if (!advanceFile()) return null
+  /** Decode the next packet into [[slot]]; false when every file is
+    * exhausted. */
+  def next(): Boolean = {
+    while (reader == null || !reader.advance()) {
+      if (!advanceFile()) return false
     }
-    val rec = packets.next()
     pktIdx += 1
     nPackets += 1
-    nBytes += rec.size.getOrElse(0L) + 16L
-    rec
+    nBytes += slot.recordBytes
+    true
   }
 
   def metrics(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
@@ -68,10 +73,10 @@ private[pcap] class PacketFeed(
     if (stream != null) { stream.close(); stream = null }
 }
 
-/** Row-at-a-time reader: streams decoded packets as `InternalRow`s.
-  * Used when the projection includes nested columns (the DNS RR-section
-  * arrays) or when `columnar` is disabled; flat projections go through
-  * [[PcapColumnarPartitionReader]] instead. */
+/** Row-at-a-time reader: streams decoded packets as `InternalRow`s, one
+  * reused mutable row (Spark projects it to an `UnsafeRow` right after
+  * the scan). Used by streaming scans and when `columnar` is disabled;
+  * batch scans go through [[PcapColumnarPartitionReader]] instead. */
 class PcapPartitionReader(
     files: Seq[String],
     conf: Configuration,
@@ -80,19 +85,19 @@ class PcapPartitionReader(
     filter: PcapPacketFilter.Predicate = PcapPacketFilter.acceptAll)
   extends PartitionReader[InternalRow] {
 
-  private val build = PcapSchema.rowBuilder(schema)
+  private val cols = PcapSchema.columns(schema)
   private val feed = new PacketFeed(files, conf, decode)
-  private var row: InternalRow = _
+  private val row = new SpecificInternalRow(schema.fields.map(_.dataType).toSeq)
 
   override def next(): Boolean = {
-    while (true) {
-      val rec = feed.next()
-      if (rec == null) return false
-      if (filter(rec)) {
-        row = build(rec, feed.pktIdx, feed.currentFile)
+    while (feed.next()) {
+      val s = feed.slot
+      // a pushed-filter miss skips row materialization entirely
+      if (filter(s)) {
+        var i = 0
+        while (i < cols.length) { cols(i).set(row, i, s, feed); i += 1 }
         return true
       }
-      // pushed-filter miss: skip row materialization entirely
     }
     false
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.pcap.PacketRecord
+import graft.pcap.{DnsFields, PacketSlot}
 
 /** The fixed wide schema of the `pcap` format — the union of every field
   * the reference can emit (packet/Packet.java:9-24, packet/DnsPacket.java:
@@ -67,14 +67,188 @@ object PcapSchema {
     StructField("payload", BinaryType),
     StructField("frame", BinaryType)))
 
-  private def utf8(s: String): AnyRef = UTF8String.fromString(s)
+  /** The decoder switches a required schema asks for: work whose column
+    * is not requested is skipped (DNS parse, RR-section and qname
+    * strings, MD5 digest, payload and frame copies, checksum, address and
+    * extension-header strings, TCP option walk). Columns referenced by
+    * residual filters are always part of the required schema, so this
+    * can never starve a pushed predicate (PrunedDecodeParitySpec). Batch
+    * and streaming scans both derive their options here. */
+  def decodeOptions(required: StructType,
+      options: org.apache.spark.sql.util.CaseInsensitiveStringMap)
+      : graft.pcap.DecodeOptions = {
+    val need = required.fieldNames.toSet
+    // resolved even when unused: an unknown decoder name fails planning
+    val appDecoder = graft.pcap.PayloadDecoders.forName(
+      options.getOrDefault("decoder", "ip"))
+    graft.pcap.DecodeOptions(
+      appDecoder =
+        if (required.fieldNames.exists(_.startsWith("dns_"))) appDecoder
+        else None,
+      md5 = options.getBoolean("md5", false) && need("md5"),
+      keepPayload = need("payload"),
+      dnsSections = need("dns_answer") || need("dns_authority") ||
+        need("dns_additional"),
+      udpsum = need("udpsum"),
+      addrStrings = need("src") || need("dst"),
+      extHeaderStrings = need("ext_headers"),
+      keepFrame = need("frame"),
+      tcpOptions = need("tcp_mss") || need("tcp_wscale") ||
+        need("tcp_sack_ok") || need("tcp_ts_ok"),
+      dnsQname = need("dns_qname"))
+  }
+
+  // ----- column readers ----------------------------------------------------
+  // One reader per column over the decoder's reused PacketSlot. It either
+  // appends the packet's value straight into a WritableColumnVector (the
+  // columnar scan: no per-row object and nothing boxed; downstream
+  // operators read the batch through codegen'd ColumnarToRow) or sets it
+  // into the row reader's reused mutable row. A field whose presence bit
+  // is clear is NULL. The DNS RR-section array columns append through the
+  // vector's child (offsets row in the parent, elements in `arrayData()`),
+  // so every projection takes the columnar path.
+
+  import org.apache.spark.sql.execution.vectorized.WritableColumnVector
+  import PacketSlot._
+
+  private[pcap] abstract class Col {
+    def append(v: WritableColumnVector, s: PacketSlot, f: PacketFeed): Unit
+    def set(row: InternalRow, i: Int, s: PacketSlot, f: PacketFeed): Unit
+  }
+
+  // primitive-returning getters (a Function1 over an object would box)
+  private trait LongOf { def apply(s: PacketSlot): Long }
+  private trait IntOf { def apply(s: PacketSlot): Int }
+  private trait BoolOf { def apply(s: PacketSlot): Boolean }
+
+  private final class LongCol(bit: Long, get: LongOf) extends Col {
+    def append(v: WritableColumnVector, s: PacketSlot, f: PacketFeed): Unit =
+      if (s.has(bit)) v.appendLong(get(s)) else v.appendNull()
+    def set(row: InternalRow, i: Int, s: PacketSlot, f: PacketFeed): Unit =
+      if (s.has(bit)) row.setLong(i, get(s)) else row.setNullAt(i)
+  }
+
+  private final class IntCol(bit: Long, get: IntOf) extends Col {
+    def append(v: WritableColumnVector, s: PacketSlot, f: PacketFeed): Unit =
+      if (s.has(bit)) v.appendInt(get(s)) else v.appendNull()
+    def set(row: InternalRow, i: Int, s: PacketSlot, f: PacketFeed): Unit =
+      if (s.has(bit)) row.setInt(i, get(s)) else row.setNullAt(i)
+  }
+
+  private final class BoolCol(bit: Long, get: BoolOf) extends Col {
+    def append(v: WritableColumnVector, s: PacketSlot, f: PacketFeed): Unit =
+      if (s.has(bit)) v.appendBoolean(get(s)) else v.appendNull()
+    def set(row: InternalRow, i: Int, s: PacketSlot, f: PacketFeed): Unit =
+      if (s.has(bit)) row.setBoolean(i, get(s)) else row.setNullAt(i)
+  }
+
+  /** A string field; null from `get` is NULL too. `interned` columns hold
+    * low-cardinality values (protocol names, flag combos, mnemonics) whose
+    * encoded forms are cached. */
+  private final class StrCol(bit: Long, interned: Boolean,
+      get: PacketSlot => String) extends Col {
+    def append(v: WritableColumnVector, s: PacketSlot, f: PacketFeed): Unit = {
+      val x = if (s.has(bit)) get(s) else null
+      if (x == null) v.appendNull()
+      else {
+        val b = if (interned) bytesI(x) else x.getBytes(UTF_8)
+        v.appendByteArray(b, 0, b.length)
+      }
+    }
+    def set(row: InternalRow, i: Int, s: PacketSlot, f: PacketFeed): Unit = {
+      val x = if (s.has(bit)) get(s) else null
+      if (x == null) row.setNullAt(i)
+      else row.update(i, if (interned) utf8i(x) else UTF8String.fromString(x))
+    }
+  }
+
+  /** src / dst: the text is formatted from the frame bytes straight into
+    * the vector, never through a String. */
+  private final class AddrCol(dst: Boolean) extends Col {
+    private val bit = if (dst) Dst else Src
+    def append(v: WritableColumnVector, s: PacketSlot, f: PacketFeed): Unit =
+      if (s.has(bit)) v.appendByteArray(s.text, 0, s.addrText(dst))
+      else v.appendNull()
+    def set(row: InternalRow, i: Int, s: PacketSlot, f: PacketFeed): Unit =
+      if (s.has(bit)) row.update(i, UTF8String.fromBytes(
+        java.util.Arrays.copyOf(s.text, s.addrText(dst))))
+      else row.setNullAt(i)
+  }
+
+  /** payload / frame: a slice of the frame buffer, copied into the vector
+    * (or, for a row, out into its own array). */
+  private final class BytesCol(bit: Long, off: IntOf, len: IntOf) extends Col {
+    def append(v: WritableColumnVector, s: PacketSlot, f: PacketFeed): Unit =
+      if (s.has(bit)) v.appendByteArray(s.data, off(s), len(s))
+      else v.appendNull()
+    def set(row: InternalRow, i: Int, s: PacketSlot, f: PacketFeed): Unit =
+      if (s.has(bit)) {
+        val o = off(s)
+        row.update(i, java.util.Arrays.copyOfRange(s.data, o, o + len(s)))
+      } else row.setNullAt(i)
+  }
+
+  /** Array-of-string append: the offsets row goes into the parent FIRST
+    * (appendArray records the child's CURRENT element count as the start
+    * offset), then the elements into the child vector. */
+  private final class StrArrayCol(get: DnsFields => Seq[String]) extends Col {
+    def append(v: WritableColumnVector, s: PacketSlot, f: PacketFeed): Unit =
+      if (!s.has(Dns)) v.appendNull()
+      else {
+        val xs = get(s.dns)
+        v.appendArray(xs.length)
+        val child = v.arrayData()
+        xs.foreach { x =>
+          val b = x.getBytes(UTF_8)
+          child.appendByteArray(b, 0, b.length)
+        }
+      }
+    def set(row: InternalRow, i: Int, s: PacketSlot, f: PacketFeed): Unit =
+      if (!s.has(Dns)) row.setNullAt(i)
+      else {
+        val xs = get(s.dns)
+        row.update(i,
+          if (xs.isEmpty) emptyStrArray
+          else ArrayData.toArrayData(xs.map(UTF8String.fromString).toArray))
+      }
+  }
+
+  /** mpls_labels, same offsets-then-elements contract as [[StrArrayCol]]. */
+  private object MplsCol extends Col {
+    def append(v: WritableColumnVector, s: PacketSlot, f: PacketFeed): Unit =
+      if (!s.has(Mpls)) v.appendNull()
+      else {
+        v.appendArray(s.mplsCount)
+        v.arrayData().appendInts(s.mplsCount, s.mpls, 0)
+      }
+    def set(row: InternalRow, i: Int, s: PacketSlot, f: PacketFeed): Unit =
+      if (!s.has(Mpls)) row.setNullAt(i)
+      else row.update(i, ArrayData.toArrayData(
+        java.util.Arrays.copyOf(s.mpls, s.mplsCount)))
+  }
+
+  private object PktIdxCol extends Col {
+    def append(v: WritableColumnVector, s: PacketSlot, f: PacketFeed): Unit =
+      v.appendLong(f.pktIdx)
+    def set(row: InternalRow, i: Int, s: PacketSlot, f: PacketFeed): Unit =
+      row.setLong(i, f.pktIdx)
+  }
+
+  private object FileCol extends Col {
+    def append(v: WritableColumnVector, s: PacketSlot, f: PacketFeed): Unit =
+      v.appendByteArray(f.currentFileBytes, 0, f.currentFileBytes.length)
+    def set(row: InternalRow, i: Int, s: PacketSlot, f: PacketFeed): Unit =
+      row.update(i, f.currentFile)
+  }
+
+  private val UTF_8 = java.nio.charset.StandardCharsets.UTF_8
 
   /** Low-cardinality columns (protocol names, flag combos, type mnemonics)
-    * repeat millions of times at scale; intern their UTF8String forms.
-    * Bounded: only the first 4096 distinct values are cached. */
+    * repeat millions of times at scale; intern their UTF8String and UTF-8
+    * byte forms. Bounded: only the first 4096 distinct values are cached. */
   private val interned =
     new java.util.concurrent.ConcurrentHashMap[String, UTF8String]()
-  private def utf8i(s: String): AnyRef = {
+  private def utf8i(s: String): UTF8String = {
     val cached = interned.get(s)
     if (cached != null) cached
     else {
@@ -83,215 +257,79 @@ object PcapSchema {
       v
     }
   }
-
-  private val emptyStrArray: AnyRef = ArrayData.toArrayData(Array.empty[AnyRef])
-  private def strArray(xs: Seq[String]): AnyRef =
-    if (xs.isEmpty) emptyStrArray
-    else ArrayData.toArrayData(xs.map(UTF8String.fromString).toArray)
-
-  /** Per-column extractor: (record, pktIdx, fileName) → Catalyst value. */
-  type Extractor = (PacketRecord, Long, UTF8String) => AnyRef
-
-  private val extractors: Map[String, Extractor] = Map(
-    "ts" -> ((r, _, _) => r.ts.map(java.lang.Long.valueOf).orNull),
-    "ts_micro" -> ((r, _, _) => r.tsMicro.map(java.lang.Long.valueOf).orNull),
-    "time" -> ((r, _, _) => r.tsMicro.map(java.lang.Long.valueOf).orNull),
-    "size" -> ((r, _, _) => r.size.map(java.lang.Long.valueOf).orNull),
-    "md5" -> ((r, _, _) => r.md5.map(utf8).orNull),
-    "ether_type" -> ((r, _, _) => r.etherType.map(utf8i).orNull),
-    "ttl" -> ((r, _, _) => r.ttl.map(Int.box).orNull),
-    "protocol" -> ((r, _, _) => r.protocol.map(utf8i).orNull),
-    "src" -> ((r, _, _) => r.src.map(utf8).orNull),
-    "dst" -> ((r, _, _) => r.dst.map(utf8).orNull),
-    "src_port" -> ((r, _, _) => r.srcPort.map(Int.box).orNull),
-    "dst_port" -> ((r, _, _) => r.dstPort.map(Int.box).orNull),
-    "udpsum" -> ((r, _, _) => r.udpsum.map(Int.box).orNull),
-    "tcp_seq" -> ((r, _, _) => r.tcpSeq.map(java.lang.Long.valueOf).orNull),
-    "tcp_flags" -> ((r, _, _) => r.tcpFlags.map(utf8i).orNull),
-    "tcp_ack" -> ((r, _, _) => r.tcpAck.map(java.lang.Long.valueOf).orNull),
-    "icmp_type" -> ((r, _, _) => r.icmpType.map(Int.box).orNull),
-    "icmp_code" -> ((r, _, _) => r.icmpCode.map(Int.box).orNull),
-    "tcp_window" -> ((r, _, _) => r.tcpWindow.map(Int.box).orNull),
-    "tcp_mss" -> ((r, _, _) => r.tcpMss.map(Int.box).orNull),
-    "tcp_wscale" -> ((r, _, _) => r.tcpWscale.map(Int.box).orNull),
-    "tcp_sack_ok" -> ((r, _, _) => r.tcpSackOk.map(Boolean.box).orNull),
-    "tcp_ts_ok" -> ((r, _, _) => r.tcpTsOk.map(Boolean.box).orNull),
-    "vlan_id" -> ((r, _, _) => r.vlanId.map(Int.box).orNull),
-    "vlan_pcp" -> ((r, _, _) => r.vlanPcp.map(Int.box).orNull),
-    "vlan_inner_id" -> ((r, _, _) => r.vlanInnerId.map(Int.box).orNull),
-    "mpls_labels" -> ((r, _, _) =>
-      r.mplsLabels.map(xs => ArrayData.toArrayData(xs.toArray)).orNull),
-    "len" -> ((r, _, _) => r.len.map(Int.box).orNull),
-    "frag" -> ((r, _, _) => r.frag.map(Boolean.box).orNull),
-    "ip_id" -> ((r, _, _) => r.ipId.map(Int.box).orNull),
-    "frag_offset" -> ((r, _, _) => r.fragOffset.map(Int.box).orNull),
-    "payload_len" -> ((r, _, _) => r.payloadLen.map(Int.box).orNull),
-    "ext_count" -> ((r, _, _) => r.extCount.map(Int.box).orNull),
-    "ext_headers" -> ((r, _, _) => r.extHeaders.map(utf8).orNull),
-    "dns_queryid" -> ((r, _, _) => r.dns.map(d => Int.box(d.queryId)).orNull),
-    "dns_flags" -> ((r, _, _) => r.dns.map(d => utf8i(d.flags)).orNull),
-    "dns_qr" -> ((r, _, _) => r.dns.map(d => Boolean.box(d.qr)).orNull),
-    "dns_opcode" -> ((r, _, _) => r.dns.map(d => utf8i(d.opcode)).orNull),
-    "dns_rcode" -> ((r, _, _) => r.dns.map(d => utf8i(d.rcode)).orNull),
-    "dns_qname" -> ((r, _, _) => r.dns.flatMap(_.qname).map(utf8).orNull),
-    "dns_qtype" -> ((r, _, _) => r.dns.map(d => Int.box(d.qtype)).orNull),
-    "dns_qtype_str" -> ((r, _, _) => r.dns.flatMap(_.qtypeStr).map(utf8i).orNull),
-    "dns_answer" -> ((r, _, _) => r.dns.map(d => strArray(d.answer)).orNull),
-    "dns_authority" -> ((r, _, _) => r.dns.map(d => strArray(d.authority)).orNull),
-    "dns_additional" -> ((r, _, _) => r.dns.map(d => strArray(d.additional)).orNull),
-    "pkt_idx" -> ((_, idx, _) => java.lang.Long.valueOf(idx)),
-    "file" -> ((_, _, f) => f),
-    "payload" -> ((r, _, _) => r.payload.orNull),
-    "frame" -> ((r, _, _) => r.frame.orNull))
-
-  /** Compile the pruned schema into a row writer. */
-  def rowBuilder(schema: StructType): (PacketRecord, Long, UTF8String) => InternalRow = {
-    val fns = schema.fieldNames.map(extractors)
-    (rec, idx, file) => {
-      val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(fns.length)
-      var i = 0
-      while (i < fns.length) {
-        row.update(i, fns(i)(rec, idx, file))
-        i += 1
-      }
-      row
-    }
-  }
-
-  // ----- columnar emission (SURVEY.md §4: vectorized scan) ----------------
-  // Per-column appenders writing decoded values straight into
-  // WritableColumnVectors — no per-row object, no boxed field array, and
-  // downstream operators read the batch through codegen'd ColumnarToRow.
-  // The DNS RR-section array columns append through the vector's child
-  // (offsets row in the parent, elements in `arrayData()`), so every
-  // projection — RR-heavy ones included — takes the columnar path.
-
-  import org.apache.spark.sql.execution.vectorized.WritableColumnVector
-
-  /** Appender: (vector, record, pktIdx, fileNameUtf8Bytes) → appended. */
-  type ColAppender = (WritableColumnVector, PacketRecord, Long, Array[Byte]) => Unit
-
-  /** Every pcap column has a columnar appender since the RR-section
-    * arrays gained child-vector appends (round-6 verdict #5); the
-    * row reader remains only as the golden-parity twin. */
-  def columnarEligible(schema: StructType): Boolean = true
-
-  /** Interned UTF-8 byte forms of the low-cardinality strings (same
-    * bound and purpose as the UTF8String intern cache above). */
   private val internedBytes =
     new java.util.concurrent.ConcurrentHashMap[String, Array[Byte]]()
   private def bytesI(s: String): Array[Byte] = {
     val cached = internedBytes.get(s)
     if (cached != null) cached
     else {
-      val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val b = s.getBytes(UTF_8)
       if (internedBytes.size < 4096) internedBytes.putIfAbsent(s, b)
       b
     }
   }
 
-  @inline private def putLong(v: WritableColumnVector, o: Option[Long]): Unit =
-    o match { case Some(x) => v.appendLong(x); case None => v.appendNull() }
-  @inline private def putInt(v: WritableColumnVector, o: Option[Int]): Unit =
-    o match { case Some(x) => v.appendInt(x); case None => v.appendNull() }
-  @inline private def putBool(v: WritableColumnVector, o: Option[Boolean]): Unit =
-    o match { case Some(x) => v.appendBoolean(x); case None => v.appendNull() }
-  @inline private def putBytes(v: WritableColumnVector, b: Array[Byte]): Unit =
-    v.appendByteArray(b, 0, b.length)
-  @inline private def putStr(v: WritableColumnVector, o: Option[String]): Unit =
-    o match {
-      case Some(s) =>
-        putBytes(v, s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      case None => v.appendNull()
-    }
-  @inline private def putStrI(v: WritableColumnVector, o: Option[String]): Unit =
-    o match { case Some(s) => putBytes(v, bytesI(s)); case None => v.appendNull() }
+  private val emptyStrArray: ArrayData =
+    ArrayData.toArrayData(Array.empty[AnyRef])
 
-  /** Array-of-string append: the offsets row goes into the parent FIRST
-    * (appendArray records the child's CURRENT element count as the start
-    * offset), then the elements into the child vector. */
-  @inline private def putStrArray(v: WritableColumnVector,
-      o: Option[Seq[String]]): Unit = o match {
-    case Some(xs) =>
-      v.appendArray(xs.length)
-      val child = v.arrayData()
-      xs.foreach { s =>
-        val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        child.appendByteArray(b, 0, b.length)
-      }
-    case None => v.appendNull()
-  }
+  private val cols: Map[String, Col] = Map(
+    "ts" -> new LongCol(Ts, _.ts),
+    "ts_micro" -> new LongCol(TsMicro, _.tsMicro),
+    "time" -> new LongCol(TsMicro, _.tsMicro), // TimestampType micros
+    "size" -> new LongCol(Size, _.size),
+    "md5" -> new StrCol(Md5, interned = false, _.md5),
+    "ether_type" -> new StrCol(EtherType, interned = true, _.etherType),
+    "ttl" -> new IntCol(Ttl, _.ttl),
+    "protocol" -> new StrCol(Protocol, interned = true, _.protocol),
+    "src" -> new AddrCol(dst = false),
+    "dst" -> new AddrCol(dst = true),
+    "src_port" -> new IntCol(SrcPort, _.srcPort),
+    "dst_port" -> new IntCol(DstPort, _.dstPort),
+    "udpsum" -> new IntCol(Udpsum, _.udpsum),
+    "tcp_seq" -> new LongCol(TcpSeq, _.tcpSeq),
+    "tcp_flags" -> new StrCol(TcpFlags, interned = true, _.tcpFlags),
+    "tcp_ack" -> new LongCol(TcpAck, _.tcpAck),
+    "icmp_type" -> new IntCol(IcmpType, _.icmpType),
+    "icmp_code" -> new IntCol(IcmpCode, _.icmpCode),
+    "tcp_window" -> new IntCol(TcpWindow, _.tcpWindow),
+    "tcp_mss" -> new IntCol(TcpMss, _.tcpMss),
+    "tcp_wscale" -> new IntCol(TcpWscale, _.tcpWscale),
+    "tcp_sack_ok" -> new BoolCol(TcpSackOk, _.tcpSackOk),
+    "tcp_ts_ok" -> new BoolCol(TcpTsOk, _.tcpTsOk),
+    "vlan_id" -> new IntCol(VlanId, _.vlanId),
+    "vlan_pcp" -> new IntCol(VlanPcp, _.vlanPcp),
+    "vlan_inner_id" -> new IntCol(VlanInnerId, _.vlanInnerId),
+    "mpls_labels" -> MplsCol,
+    "len" -> new IntCol(Len, _.len),
+    "frag" -> new BoolCol(Frag, _.frag),
+    "ip_id" -> new IntCol(IpId, _.ipId),
+    "frag_offset" -> new IntCol(FragOffset, _.fragOffset),
+    "payload_len" -> new IntCol(PayloadLen, _.payloadLen),
+    "ext_count" -> new IntCol(ExtCount, _.extCount),
+    "ext_headers" -> new StrCol(ExtHeaders, interned = false, _.extHeaders),
+    "dns_queryid" -> new IntCol(Dns, _.dns.queryId),
+    "dns_flags" -> new StrCol(Dns, interned = true, _.dns.flags),
+    "dns_qr" -> new BoolCol(Dns, _.dns.qr),
+    "dns_opcode" -> new StrCol(Dns, interned = true, _.dns.opcode),
+    "dns_rcode" -> new StrCol(Dns, interned = true, _.dns.rcode),
+    "dns_qname" -> new StrCol(Dns, interned = false, _.dns.qname.orNull),
+    "dns_qtype" -> new IntCol(Dns, _.dns.qtype),
+    "dns_qtype_str" ->
+      new StrCol(Dns, interned = true, _.dns.qtypeStr.orNull),
+    "dns_answer" -> new StrArrayCol(_.answer),
+    "dns_authority" -> new StrArrayCol(_.authority),
+    "dns_additional" -> new StrArrayCol(_.additional),
+    "pkt_idx" -> PktIdxCol,
+    "file" -> FileCol,
+    "payload" -> new BytesCol(Payload, _.payloadOff, _.len),
+    "frame" -> new BytesCol(Frame, _.frameOff, _.frameLen))
 
-  /** Array-of-int append, same offsets-then-elements contract as
-    * [[putStrArray]]. */
-  @inline private def putIntArray(v: WritableColumnVector,
-      o: Option[Seq[Int]]): Unit = o match {
-    case Some(xs) =>
-      v.appendArray(xs.length)
-      val child = v.arrayData()
-      xs.foreach(child.appendInt)
-    case None => v.appendNull()
-  }
+  /** The column readers of a pruned schema, in its order. */
+  private[pcap] def columns(schema: StructType): Array[Col] =
+    schema.fieldNames.map(cols)
 
-  private val colAppenders: Map[String, ColAppender] = Map(
-    "ts" -> ((v, r, _, _) => putLong(v, r.ts)),
-    "ts_micro" -> ((v, r, _, _) => putLong(v, r.tsMicro)),
-    "time" -> ((v, r, _, _) => putLong(v, r.tsMicro)), // TimestampType micros
-    "size" -> ((v, r, _, _) => putLong(v, r.size)),
-    "md5" -> ((v, r, _, _) => putStr(v, r.md5)),
-    "ether_type" -> ((v, r, _, _) => putStrI(v, r.etherType)),
-    "ttl" -> ((v, r, _, _) => putInt(v, r.ttl)),
-    "protocol" -> ((v, r, _, _) => putStrI(v, r.protocol)),
-    "src" -> ((v, r, _, _) => putStr(v, r.src)),
-    "dst" -> ((v, r, _, _) => putStr(v, r.dst)),
-    "src_port" -> ((v, r, _, _) => putInt(v, r.srcPort)),
-    "dst_port" -> ((v, r, _, _) => putInt(v, r.dstPort)),
-    "udpsum" -> ((v, r, _, _) => putInt(v, r.udpsum)),
-    "tcp_seq" -> ((v, r, _, _) => putLong(v, r.tcpSeq)),
-    "tcp_flags" -> ((v, r, _, _) => putStrI(v, r.tcpFlags)),
-    "tcp_ack" -> ((v, r, _, _) => putLong(v, r.tcpAck)),
-    "icmp_type" -> ((v, r, _, _) => putInt(v, r.icmpType)),
-    "icmp_code" -> ((v, r, _, _) => putInt(v, r.icmpCode)),
-    "tcp_window" -> ((v, r, _, _) => putInt(v, r.tcpWindow)),
-    "tcp_mss" -> ((v, r, _, _) => putInt(v, r.tcpMss)),
-    "tcp_wscale" -> ((v, r, _, _) => putInt(v, r.tcpWscale)),
-    "tcp_sack_ok" -> ((v, r, _, _) => putBool(v, r.tcpSackOk)),
-    "tcp_ts_ok" -> ((v, r, _, _) => putBool(v, r.tcpTsOk)),
-    "vlan_id" -> ((v, r, _, _) => putInt(v, r.vlanId)),
-    "vlan_pcp" -> ((v, r, _, _) => putInt(v, r.vlanPcp)),
-    "vlan_inner_id" -> ((v, r, _, _) => putInt(v, r.vlanInnerId)),
-    "mpls_labels" -> ((v, r, _, _) => putIntArray(v, r.mplsLabels)),
-    "len" -> ((v, r, _, _) => putInt(v, r.len)),
-    "frag" -> ((v, r, _, _) => putBool(v, r.frag)),
-    "ip_id" -> ((v, r, _, _) => putInt(v, r.ipId)),
-    "frag_offset" -> ((v, r, _, _) => putInt(v, r.fragOffset)),
-    "payload_len" -> ((v, r, _, _) => putInt(v, r.payloadLen)),
-    "ext_count" -> ((v, r, _, _) => putInt(v, r.extCount)),
-    "ext_headers" -> ((v, r, _, _) => putStr(v, r.extHeaders)),
-    "dns_queryid" -> ((v, r, _, _) => putInt(v, r.dns.map(_.queryId))),
-    "dns_flags" -> ((v, r, _, _) => putStrI(v, r.dns.map(_.flags))),
-    "dns_qr" -> ((v, r, _, _) => putBool(v, r.dns.map(_.qr))),
-    "dns_opcode" -> ((v, r, _, _) => putStrI(v, r.dns.map(_.opcode))),
-    "dns_rcode" -> ((v, r, _, _) => putStrI(v, r.dns.map(_.rcode))),
-    "dns_qname" -> ((v, r, _, _) => putStr(v, r.dns.flatMap(_.qname))),
-    "dns_qtype" -> ((v, r, _, _) => putInt(v, r.dns.map(_.qtype))),
-    "dns_qtype_str" -> ((v, r, _, _) => putStrI(v, r.dns.flatMap(_.qtypeStr))),
-    "dns_answer" -> ((v, r, _, _) => putStrArray(v, r.dns.map(_.answer))),
-    "dns_authority" -> ((v, r, _, _) => putStrArray(v, r.dns.map(_.authority))),
-    "dns_additional" -> ((v, r, _, _) => putStrArray(v, r.dns.map(_.additional))),
-    "pkt_idx" -> ((v, _, idx, _) => { v.appendLong(idx); () }),
-    "file" -> ((v, _, _, f) => putBytes(v, f)),
-    "payload" -> ((v, r, _, _) => r.payload match {
-      case Some(b) => putBytes(v, b)
-      case None => v.appendNull()
-    }),
-    "frame" -> ((v, r, _, _) => r.frame match {
-      case Some(b) => putBytes(v, b)
-      case None => v.appendNull()
-    }))
-
-  /** Compile the pruned schema into the per-column appender array; call
-    * only when [[columnarEligible]]. */
-  def colBuilder(schema: StructType): Array[ColAppender] =
-    schema.fieldNames.map(colAppenders)
+  /** Every pcap column has a columnar reader since the RR-section arrays
+    * gained child-vector appends (round-6 verdict #5); the row reader
+    * remains as the golden-parity twin and the streaming path. */
+  def columnarEligible(schema: StructType): Boolean = true
 }

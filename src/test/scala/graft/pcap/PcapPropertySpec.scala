@@ -125,4 +125,32 @@ class PcapPropertySpec extends AnyFunSuite {
         f.qname.contains(s"h$n.example.com.")))
     }
   }
+
+  test("address text matches java.net formatting") {
+    def viaJava(b: Array[Byte]): String =
+      java.net.InetAddress.getByAddress(b).getHostAddress
+    val v6 = Seq.fill(300) {
+      val b = new Array[Byte](16)
+      rnd.nextBytes(b)
+      // zero runs, so groups print without leading zeros
+      (0 until 16).foreach(i => if (rnd.nextInt(3) == 0) b(i) = 0)
+      b
+    } ++ Seq(
+      new Array[Byte](16),
+      Array.fill[Byte](16)(-1),
+      // IPv4-mapped: java.net prints the embedded IPv4 address
+      Array.fill[Byte](10)(0) ++ Array[Byte](-1, -1, 192.toByte, 0, 2, 1),
+      // IPv4-compatible (not mapped): stays IPv6 text
+      Array.fill[Byte](12)(0) ++ Array[Byte](10, 0, 0, 1))
+    v6.foreach { b =>
+      assert(PcapStreamReader.ipv6String(b, 0) == viaJava(b))
+    }
+    val v4 = Seq.fill(300) {
+      val b = new Array[Byte](4); rnd.nextBytes(b); b
+    } ++ Seq(Array[Byte](0, 0, 0, 0), Array.fill[Byte](4)(-1),
+      Array[Byte](10, 9, 99, 100))
+    v4.foreach { b =>
+      assert(PcapStreamReader.ipv4String(b, 0) == viaJava(b))
+    }
+  }
 }

@@ -64,6 +64,20 @@ class PcapSqlDdlSpec extends AnyFunSuite {
     assert(m.contains("packetsDecoded") && m.contains("bytesDecoded"))
     assert(m("packetsDecoded").value == 2L)
     assert(m("bytesDecoded").value == 677L - 24L) // file minus global header
+
+    // pcapng counts whole blocks: the file minus its section and
+    // interface header blocks (28 + 20 bytes)
+    val recs = new PcapStreamReader(new java.io.FileInputStream(fixture),
+      DecodeOptions(keepFrame = true)).toList
+    val ng = PcapSynth.fileNg(Seq(1),
+      recs.map(r => (0, r.tsMicro.get, r.frame.get)))
+    val ngPath = java.nio.file.Files.createTempFile("ddl", ".pcapng")
+    java.nio.file.Files.write(ngPath, ng)
+    val ngDf = spark.read.format("pcap").load(ngPath.toString)
+    ngDf.collect()
+    val ngM = ngDf.queryExecution.executedPlan.collectLeaves().head.metrics
+    assert(ngM("packetsDecoded").value == 2L)
+    assert(ngM("bytesDecoded").value == ng.length - 28L - 20L)
   }
 
   test("pcap -> parquet ETL round trip (the archive workflow)") {
