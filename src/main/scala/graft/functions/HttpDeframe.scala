@@ -1,11 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
 
 /** HTTP/1.1 response de-framing (RFC 9112 §6): turn a reassembled
   * response STREAM into the actual entity body. The reference engine has
@@ -24,54 +20,14 @@ import org.apache.spark.sql.types._
   *   - `Content-Encoding: gzip` → the de-framed bytes are a gzip
   *     member; inflate (bounded — see BodyCap) to recover the entity.
   *
-  * Output: struct(status INT, body BINARY). NULL (never a throw) for
-  * anything that is not a well-formed HTTP/1.x response prefix or whose
-  * framing is corrupt — random bytes, truncated chunk frames, bad gzip
-  * streams (HttpDeframeSpec fuzzes this). A native Catalyst `Expression`
-  * with `doGenCode` (the static parse call stays inside whole-stage
-  * codegen), the [[TlsClientHelloExpr]] pattern.
+  * [[deframe]] returns a (status INT, body BINARY) row, or null (never a
+  * throw) for anything that is not a well-formed HTTP/1.x response
+  * prefix or whose framing is corrupt — random bytes, truncated chunk
+  * frames, bad gzip streams (HttpDeframeSpec fuzzes this). The corpus
+  * bridge's gate ([[HttpConversation.gate]]) calls it once per
+  * conversation.
   */
-case class HttpDeframeExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = HttpParse.schema
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes() =
-    if (child.dataType == BinaryType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"http_deframe expects BINARY, got ${child.dataType.catalogString}")
-
-  override def nullSafeEval(input: Any): Any =
-    HttpParse.deframe(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val row = ctx.freshName("httpRow")
-      s"""
-        org.apache.spark.sql.catalyst.InternalRow $row =
-          graft.functions.HttpParse.deframe($c);
-        if ($row == null) { ${ev.isNull} = true; } else { ${ev.value} = $row; }
-      """
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): HttpDeframeExpr =
-    copy(child = newChild)
-  override def prettyName: String = "http_deframe"
-}
-
-object HttpDeframeExpr {
-  def http_deframe(c: Column): Column = {
-    import org.apache.spark.sql.GraftSqlBridge
-    GraftSqlBridge.column(HttpDeframeExpr(GraftSqlBridge.expression(c)))
-  }
-}
-
 object HttpParse {
-  val schema: StructType = StructType(Seq(
-    StructField("status", IntegerType),
-    StructField("body", BinaryType)))
-
   /** Header-block cap (a response head beyond this is hostile/garbage)
     * and inflated-body cap (gzip-bomb guard: a 10^6:1 bomb otherwise
     * turns a 1 KB capture payload into a GB of executor heap). */
@@ -85,19 +41,14 @@ object HttpParse {
     * clients send `host:` and `HOST:` too. The response-side
     * `header()` below has always matched case-insensitively
     * (regionMatches(true, ...)); this is the request side's shared
-    * single pattern — the batch bridge queries feed it to
+    * single pattern — the HTTP request queries feed it to
     * `regexp_extract` (Spark compiles the same Java regex syntax) and
-    * the streaming bridge matches it directly, so the two surfaces
-    * cannot drift apart. Optional-whitespace padding around the value
-    * is RFC 9112's OWS. */
+    * the corpus gate compiles it once, so the surfaces cannot drift
+    * apart. Optional-whitespace padding around the value is RFC 9112's
+    * OWS. */
   def headerRegex(name: String): String =
     "(?i)\r\n" + java.util.regex.Pattern.quote(name) +
       ":[ \t]*(\\S+)[ \t]*\r\n"
-
-  /** Scala-side twin of the `regexp_extract(txt, headerRegex(n), 1)`
-    * SQL form, for the streaming bridge. */
-  def requestHeader(txt: String, name: String): Option[String] =
-    headerRegex(name).r.findFirstMatchIn(txt).map(_.group(1))
 
   /** Null, never throws — input is untrusted capture payload. */
   def deframe(bytes: Array[Byte]): InternalRow =

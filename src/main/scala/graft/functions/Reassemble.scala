@@ -119,34 +119,14 @@ class ReassembleAgg(maxStreamBytes: Long, maxSegments: Int = 1 << 18)
   require(maxStreamBytes > 0 && maxStreamBytes <= Int.MaxValue &&
     maxSegments > 0 && maxSegments <= Int.MaxValue / 2)
 
-  private def compact(b: ReassemblyBuf): Unit =
-    Reassemble.compactBuf(b, maxStreamBytes, maxSegments)
-
   override def zero: ReassemblyBuf = new ReassemblyBuf
 
-  override def reduce(b: ReassemblyBuf, s: TcpSeg): ReassemblyBuf = {
-    b.segs += BufSeg(s.tcp_seq, s.pkt_idx, 0, s.payload)
-    b.total += s.payload.length
-    if (b.total > maxStreamBytes * 2 || b.segs.length > maxSegments * 2)
-      compact(b)
-    b
-  }
+  override def reduce(b: ReassemblyBuf, s: TcpSeg): ReassemblyBuf =
+    Reassemble.addSeg(b, s.tcp_seq, s.pkt_idx, s.payload, maxStreamBytes,
+      maxSegments)
 
-  override def merge(a: ReassemblyBuf, b: ReassemblyBuf): ReassemblyBuf = {
-    a.segs ++= b.segs
-    a.total += b.total
-    a.truncated ||= b.truncated
-    // earliest recorded stop wins (coverage only grows, so the true
-    // stop can only move earlier)
-    if (b.stopSeq < a.stopSeq ||
-        (b.stopSeq == a.stopSeq && b.stopPkt < a.stopPkt)) {
-      a.stopSeq = b.stopSeq
-      a.stopPkt = b.stopPkt
-    }
-    if (a.total > maxStreamBytes * 2 || a.segs.length > maxSegments * 2)
-      compact(a)
-    a
-  }
+  override def merge(a: ReassemblyBuf, b: ReassemblyBuf): ReassemblyBuf =
+    Reassemble.mergeBuf(a, b, maxStreamBytes, maxSegments)
 
   override def finish(b: ReassemblyBuf): Reassembled =
     Reassemble.finishBuf(b, maxStreamBytes, maxSegments)
@@ -222,6 +202,41 @@ object Reassemble {
     b.segs = out
     b.total = bytes
     b.truncated ||= dropped
+  }
+
+  /** Appends one segment to `b` and returns it, compacting once the raw
+    * payload passes 2×cap or the segment count 2×`maxSegments` (the
+    * class doc's memory bound). */
+  private[graft] def addSeg(b: ReassemblyBuf, seq: Long, pktIdx: Long,
+      payload: Array[Byte], maxStreamBytes: Long,
+      maxSegments: Int): ReassemblyBuf = {
+    b.segs += BufSeg(seq, pktIdx, 0, payload)
+    b.total += payload.length
+    bounded(b, maxStreamBytes, maxSegments)
+  }
+
+  private def bounded(b: ReassemblyBuf, maxStreamBytes: Long,
+      maxSegments: Int): ReassemblyBuf = {
+    if (b.total > maxStreamBytes * 2 || b.segs.length > maxSegments * 2)
+      compactBuf(b, maxStreamBytes, maxSegments)
+    b
+  }
+
+  /** Folds `b` into `a` and returns `a`, with the same compaction
+    * trigger. */
+  private[graft] def mergeBuf(a: ReassemblyBuf, b: ReassemblyBuf,
+      maxStreamBytes: Long, maxSegments: Int): ReassemblyBuf = {
+    a.segs ++= b.segs
+    a.total += b.total
+    a.truncated ||= b.truncated
+    // earliest recorded stop wins (coverage only grows, so the true
+    // stop can only move earlier)
+    if (b.stopSeq < a.stopSeq ||
+        (b.stopSeq == a.stopSeq && b.stopPkt < a.stopPkt)) {
+      a.stopSeq = b.stopSeq
+      a.stopPkt = b.stopPkt
+    }
+    bounded(a, maxStreamBytes, maxSegments)
   }
 
   /** Final compaction + concatenation of the kept prefix. */

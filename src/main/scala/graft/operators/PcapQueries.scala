@@ -1805,13 +1805,14 @@ object PcapQueries {
 
   /** The pcap→corpus bridge, parameterized for reuse on arbitrary
     * captures (the Q entry binds the fixture's constants): one capture
-    * scan, direction-normalized per-conversation reassembly of BOTH
-    * sides in one aggregation, then RFC 9112 body de-framing
-    * (Content-Length cut / chunked walk / gzip decode — the
-    * [[graft.functions.HttpDeframeExpr]] native expression) before the
-    * quality gate and the digest dedup. The response stream stays
-    * BINARY until de-framed: a gzip body cast to string before decode
-    * would be corrupt.
+    * scan, then ONE aggregation per direction-normalized conversation
+    * ([[graft.functions.HttpConversationAgg]]) that reassembles both
+    * sides and gates the document in its `finish` — RFC 9112 body
+    * de-framing (Content-Length cut / chunked walk / gzip decode), 2xx,
+    * the token-count and distinct-ratio quality gate, Host provenance —
+    * then the digest dedup window. The response stream stays BINARY
+    * until de-framed: a gzip body cast to string before decode would be
+    * corrupt.
     *
     * `docIdBase >= 0` derives doc_id as `client_port - docIdBase` (the
     * fixture's stable mapping); `docIdBase < 0` uses a 64-bit hash of
@@ -1837,14 +1838,18 @@ object PcapQueries {
     * window) and by `pcap_corpus_stream_twin` — the batch twin whose
     * row set the STREAMING bridge
     * ([[graft.streaming.CorpusBridgeStream]]) is spec-matched against,
-    * the `pcap_syn_portscan_twin` oracled-twin pattern. */
+    * the `pcap_syn_portscan_twin` oracled-twin pattern. `text` is a
+    * binary cast of the body, byte for byte, so `md5(text)` digests the
+    * bytes sent even when they are not valid UTF-8. */
   private[graft] def httpCorpusGated(s: SparkSession, path: String,
       serverPort: Int, docIdBase: Int,
       maxBytesPerDirection: Long =
         graft.functions.Reassemble.DefaultMaxStreamBytes): DataFrame = {
     import s.implicits._
-    import graft.functions.HttpDeframeExpr.http_deframe
-    val conv = s.read.format("pcap").load(path)
+    val docId =
+      if (docIdBase >= 0) ($"client_port" - docIdBase).cast("long")
+      else xxhash64($"client", $"client_port")
+    s.read.format("pcap").load(path)
       .filter($"protocol" === "TCP" && $"tcp_seq".isNotNull &&
         $"payload".isNotNull)
       .select(
@@ -1856,32 +1861,12 @@ object PcapQueries {
           .otherwise($"dst_port").as("client_port"),
         ($"dst_port" === serverPort).as("is_req"),
         $"tcp_seq", $"pkt_idx", $"payload")
-      .groupBy($"server", $"client", $"client_port", $"is_req")
-      .agg(graft.functions.Reassemble.stream(maxBytesPerDirection).as("r"))
-      .select($"server", $"client", $"client_port", $"is_req",
-        $"r.stream".as("raw"))
       .groupBy($"server", $"client", $"client_port")
-      .agg(
-        max(when($"is_req", $"raw")).as("req_raw"),
-        max(when(!$"is_req", $"raw")).as("rsp_raw"))
-      .filter($"req_raw".isNotNull && $"rsp_raw".isNotNull)
-    val docId =
-      if (docIdBase >= 0) ($"client_port" - docIdBase).cast("long")
-      else xxhash64($"client", $"client_port")
-    val gated = conv
-      .withColumn("rsp", http_deframe($"rsp_raw"))
-      .filter($"rsp".isNotNull &&
-        $"rsp.status" >= 200 && $"rsp.status" < 300)
-      .select(docId.as("doc_id"),
-        regexp_extract($"req_raw".cast("string"),
-          graft.functions.HttpParse.headerRegex("Host"), 1).as("host"),
-        $"rsp.body".cast("string").as("text"))
-      .withColumn("w", split($"text", " "))
-      .withColumn("n_tokens", size($"w").cast("long"))
-      .filter($"n_tokens" >= 20 &&
-        expr("size(array_distinct(w)) * 1000000L div size(w)")
-          >= 300000L)
-    gated.select($"doc_id", $"host", $"n_tokens", $"text")
+      .agg(graft.functions.HttpConversation.document(maxBytesPerDirection)
+        .as("d"))
+      .filter($"d.ok")
+      .select(docId.as("doc_id"), $"d.host".as("host"),
+        $"d.n_tokens".as("n_tokens"), $"d.body".cast("string").as("text"))
   }
 
   private def httpConvOracle(n: Int): String = {
@@ -3666,17 +3651,15 @@ object PcapQueries {
     // must be gated, the boilerplate group must collapse to one row
     // with its duplicate count. Scale shape: the packet relation is
     // read and shuffled ONCE — both directions key by the
-    // direction-normalized conversation endpoint + an is_req flag, so
-    // one reassembly aggregation covers requests and responses, and a
-    // second aggregation over per-flow rows (tiny) pivots the two
-    // directions onto one conversation row (the two-groupBy + join
-    // formulation recomputed the capture scan per direction); then one
-    // window on the 16-byte body digest for the dedup. Round 10: bodies
-    // are now really FRAMED (Content-Length cut with a pipelined
-    // follow-up response to swallow, chunked transfer coding, gzip
-    // content coding — one third of the fixture each) and the bridge
-    // de-frames them with the native http_deframe expression before
-    // gating; see httpToCorpus.
+    // direction-normalized conversation endpoint, and one typed
+    // aggregation (HttpConversationAgg) reassembles requests and
+    // responses side by side and gates each conversation once in its
+    // finish; then one window on the 16-byte body digest for the dedup.
+    // Two shuffles in all. Bodies are really FRAMED (Content-Length cut
+    // with a pipelined follow-up response to swallow, chunked transfer
+    // coding, gzip content coding — one third of the fixture each) and
+    // the gate de-frames them (HttpParse.deframe) before the quality
+    // checks; see httpToCorpus.
     Q("pcap_http_to_corpus",
       (s, d) => httpToCorpus(s, httpCorpusSynthPath,
         serverPort = 80, docIdBase = 42000),

@@ -1304,8 +1304,9 @@ object PcapSynth {
     *   - f % 3 == 2: `Content-Encoding: gzip` with the gzip member's
     *     length as Content-Length — compressed bytes are not text.
     * Correct recovery of [[corpusBody]] therefore requires real RFC
-    * 9112 §6 framing + gzip decode, which is what the bridge's
-    * http_deframe expression does. */
+    * 9112 §6 framing + gzip decode, which the bridge's gate
+    * ([[graft.functions.HttpConversation.gate]], via
+    * [[graft.functions.HttpParse.deframe]]) does once per conversation. */
   def httpCorpusResponseBytes(f: Int): Array[Byte] = {
     val body = corpusBody(f).getBytes("US-ASCII")
     (f % 3) match {

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoder}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
-import graft.functions.{BufSeg, Reassemble, ReassemblyBuf}
+import graft.functions.{ConvBuf, ConvSeg, HttpConversationAgg}
 
 /** One gated corpus document emitted by the streaming bridge, keyed by
   * the conversation's client endpoint (doc_id derivation happens
@@ -20,18 +20,18 @@ final case class CorpusDocOut(client: String, client_port: Int,
   *
   * Composition: the same direction-normalized conversation key as the
   * batch bridge, with per-direction reassembly and the document cut in
-  * ONE `flatMapGroupsWithState` stage. Round 11: the per-conversation
-  * state is no longer an eagerly-committed in-order prefix — it is the
-  * batch aggregator's OWN compacted segment buffer
-  * ([[graft.functions.ReassemblyBuf]], run through the shared
-  * [[Reassemble.compactBuf]] sweep each batch). That sweep is proven
-  * monotone under ANY merge order (the batch aggregator's partition-
-  * independence argument), and cross-micro-batch arrival reordering is
-  * exactly that situation — so a segment arriving in a LATER micro-
-  * batch with an EARLIER sequence number slots into its sorted
-  * position instead of being dropped below a committed frontier (the
-  * round-10 arrival-order bug), and the streamed bytes equal the batch
-  * aggregation's BY CONSTRUCTION, for any admission order the
+  * ONE `flatMapGroupsWithState` stage whose per-conversation state IS
+  * the batch aggregator's buffer ([[graft.functions.ConvBuf]], two
+  * [[graft.functions.ReassemblyBuf]]s): each micro-batch's segments go
+  * through [[HttpConversationAgg]]'s own `reduce`, and the buffer is
+  * compacted by the shared sweep at the end of the batch. That sweep is
+  * proven monotone under ANY merge order (the batch aggregator's
+  * partition-independence argument), and cross-micro-batch arrival
+  * reordering is exactly that situation — so a segment arriving in a
+  * LATER micro-batch with an EARLIER sequence number slots into its
+  * sorted position instead of being dropped below a committed frontier
+  * (the round-10 arrival-order bug), and the streamed bytes equal the
+  * batch aggregation's BY CONSTRUCTION, for any admission order the
   * watermark admits. (Events later than the watermark are dropped by
   * the engine — the standard streaming lateness contract; size the
   * watermark delay to the expected admission disorder.)
@@ -48,15 +48,14 @@ final case class CorpusDocOut(client: String, client_port: Int,
   * A document EMITS when its conversation has been idle past
   * `idleSeconds` of event time (the watermark-driven
   * `EventTimeTimeout`): streams carry no in-band "response complete"
-  * marker, so quiescence IS the close signal. At emission the response
-  * prefix is de-framed (`HttpParse.deframe`: Content-Length cut /
-  * chunked / gzip — all framing state lives in the conversation
-  * buffer, so a chunk boundary landing exactly on a micro-batch
-  * boundary is invisible), status-gated to 2xx, and the batch bridge's
-  * quality gate replays byte-for-byte (split(" ", -1) tokens ≥ 20,
-  * integer distinct-ratio ≥ 0.3, the DuckDB oracle's exact
-  * arithmetic), with the body's lowercase-hex md5 as the dedup key
-  * downstream consumers group on.
+  * marker, so quiescence IS the close signal. At emission the buffer
+  * goes through the aggregator's own `finish`, and so through the
+  * batch bridge's gate ([[graft.functions.HttpConversation.gate]]:
+  * de-frame — all framing state lives in the conversation buffer, so a
+  * chunk boundary landing exactly on a micro-batch boundary is
+  * invisible — 2xx, the token gates, Host): the two bridges share one
+  * gate by construction, with the lowercase-hex md5 of the body bytes
+  * as the dedup key downstream consumers group on.
   *
   * Scale shape: one shuffle on the conversation key; state is O(active
   * conversations) × the direction cap (the compaction bound — segments
@@ -71,45 +70,6 @@ object CorpusBridgeStream {
   final case class SegIn(server: String, client: String,
       client_port: Int, is_req: Boolean, tcp_seq: Long, pkt_idx: Long,
       payload: Array[Byte], time: java.sql.Timestamp)
-
-  /** One buffered segment in checkpointed state — the state-encoder
-    * form of [[graft.functions.BufSeg]]. */
-  final case class SegSt(seq: Long, pktIdx: Long, drop: Int,
-      bytes: Array[Byte])
-
-  /** One direction's compacted buffer: `seen` records that the
-    * direction ever received a segment (the batch twin's "this
-    * direction's aggregation row exists" — a cap can empty the buffer
-    * without un-seeing it), the rest mirrors [[ReassemblyBuf]]. */
-  final case class DirSt(seen: Boolean, segs: Array[SegSt], total: Long,
-      truncated: Boolean, stopSeq: Long, stopPkt: Long)
-
-  /** Per-conversation state: the two direction buffers. */
-  final case class ConvSt(req: DirSt, rsp: DirSt)
-
-  private def emptyDir: DirSt = DirSt(seen = false,
-    Array.empty[SegSt], 0L, truncated = false,
-    Long.MaxValue, Long.MaxValue)
-
-  private def toBuf(d: DirSt): ReassemblyBuf = {
-    val b = new ReassemblyBuf
-    b.segs = scala.collection.mutable.ArrayBuffer.from(
-      d.segs.iterator.map(s => BufSeg(s.seq, s.pktIdx, s.drop, s.bytes)))
-    b.total = d.total
-    b.truncated = d.truncated
-    b.stopSeq = d.stopSeq
-    b.stopPkt = d.stopPkt
-    b
-  }
-
-  private def fromBuf(b: ReassemblyBuf, seen: Boolean): DirSt =
-    DirSt(seen,
-      b.segs.iterator.map(s => SegSt(s.seq, s.pktIdx, s.drop, s.payload))
-        .toArray,
-      b.total, b.truncated, b.stopSeq, b.stopPkt)
-
-  /** The DoS segment-count guard, same default as the batch agg. */
-  private val MaxSegments = 1 << 18
 
   /** `packets`: streaming DataFrame with the pcap source's schema
     * (`time`, `protocol`, `src`/`dst`, ports, `tcp_seq`, `pkt_idx`,
@@ -138,39 +98,32 @@ object CorpusBridgeStream {
         $"tcp_seq", $"pkt_idx", $"payload", $"time")
       .withWatermark("time", watermark)
       .as[SegIn]
+    val agg = new HttpConversationAgg(maxBytesPerDirection)
+    implicit val stateEncoder: Encoder[ConvBuf] = agg.bufferEncoder
     val docs = segs
       .groupByKey(x => (x.server, x.client, x.client_port))
-      .flatMapGroupsWithState[ConvSt, CorpusDocOut](
+      .flatMapGroupsWithState[ConvBuf, CorpusDocOut](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         case ((_, client, cport), _, state) if state.hasTimedOut =>
-          val st = state.get
+          val doc = agg.finish(state.get)
           state.remove()
-          finish(client, cport, st, maxBytesPerDirection)
-        case ((_, client, cport), rows, state: GroupState[ConvSt]) =>
-          var st = state.getOption.getOrElse(ConvSt(emptyDir, emptyDir))
-          val arr = rows.toArray
+          if (!doc.ok) Iterator.empty
+          else Iterator.single(CorpusDocOut(client, cport, doc.host,
+            doc.n_tokens, java.security.MessageDigest.getInstance("MD5")
+              .digest(doc.body).map(b => f"${b & 0xFF}%02x").mkString))
+        case (_, rows, state) =>
+          val st = state.getOption.getOrElse(agg.zero)
           var maxEventMs = Long.MinValue
-          arr.foreach { x =>
-            val ms = x.time.getTime
-            if (ms > maxEventMs) maxEventMs = ms
+          // new segments join their direction's buffer and the shared
+          // sweep re-runs — sort position, cover-trimming, and the
+          // cap's stop key do the ordering work, so arrival order
+          // (within or across micro-batches) is irrelevant
+          rows.foreach { x =>
+            maxEventMs = math.max(maxEventMs, x.time.getTime)
+            agg.reduce(st, ConvSeg(x.is_req, x.tcp_seq, x.pkt_idx,
+              x.payload))
           }
-          // each direction's new segments join its compacted buffer and
-          // the shared sweep re-runs — sort position, cover-trimming,
-          // and the cap's stop key do the ordering work, so arrival
-          // order (within or across micro-batches) is irrelevant
-          for (isReq <- Seq(true, false)) {
-            val dir = arr.filter(_.is_req == isReq)
-            if (dir.nonEmpty) {
-              val b = toBuf(if (isReq) st.req else st.rsp)
-              dir.foreach { x =>
-                b.segs += BufSeg(x.tcp_seq, x.pkt_idx, 0, x.payload)
-                b.total += x.payload.length
-              }
-              Reassemble.compactBuf(b, maxBytesPerDirection, MaxSegments)
-              val d = fromBuf(b, seen = true)
-              st = if (isReq) st.copy(req = d) else st.copy(rsp = d)
-            }
-          }
+          agg.compact(st)
           state.update(st)
           // clamped to the watermark: a straggler batch whose events
           // are already below the watermark (e.g. files admitted out of
@@ -187,37 +140,5 @@ object CorpusBridgeStream {
       if (docIdBase >= 0) ($"client_port" - docIdBase).cast("long")
       else xxhash64($"client", $"client_port")
     docs.select(docId.as("doc_id"), $"host", $"n_tokens", $"body_md5")
-  }
-
-  private val Utf8 = java.nio.charset.StandardCharsets.UTF_8
-
-  /** Conversation close: concatenate each direction's kept prefix
-    * (the batch aggregator's own finish), de-frame, status-gate,
-    * quality-gate, digest — the batch bridge's exact arithmetic (and
-    * the DuckDB oracle's). Capped directions contribute their strict
-    * prefix exactly as in batch; `deframe` fails closed on a response
-    * whose framing is incomplete within it. */
-  private def finish(client: String, clientPort: Int, st: ConvSt,
-      maxBytesPerDirection: Long): Iterator[CorpusDocOut] = {
-    if (!st.req.seen || !st.rsp.seen) return Iterator.empty
-    val req = Reassemble.finishBuf(toBuf(st.req),
-      maxBytesPerDirection, MaxSegments)
-    val rspRaw = Reassemble.finishBuf(toBuf(st.rsp),
-      maxBytesPerDirection, MaxSegments)
-    val rsp = graft.functions.HttpParse.deframe(rspRaw.stream)
-    if (rsp == null) return Iterator.empty
-    val status = rsp.getInt(0)
-    if (status < 200 || status >= 300) return Iterator.empty
-    val text = new String(rsp.getBinary(1), Utf8)
-    val w = text.split(" ", -1)
-    if (w.length < 20) return Iterator.empty
-    if (w.distinct.length.toLong * 1000000L / w.length < 300000L)
-      return Iterator.empty
-    val host = graft.functions.HttpParse
-      .requestHeader(new String(req.stream, Utf8), "Host").getOrElse("")
-    val md5 = java.security.MessageDigest.getInstance("MD5")
-      .digest(text.getBytes(Utf8)).map(b => f"${b & 0xFF}%02x").mkString
-    Iterator.single(
-      CorpusDocOut(client, clientPort, host, w.length.toLong, md5))
   }
 }

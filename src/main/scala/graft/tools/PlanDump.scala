@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Writes `.explain("formatted")` of named queries to files —
   * `runMain graft.tools.PlanDump <outDir> <suffix> <sfDir> q1 q2 ...`
-  * producing `<outDir>/<query>_<suffix>.txt`. Used for the round-17
-  * plans/r17 before/after evidence.
+  * producing `<outDir>/<query>_<suffix>.txt`. Each query runs first,
+  * so the dump is its final adaptive plan (most plans/r17 and r18
+  * dumps predate this and show initial plans).
   *
   * Note for iterative queries (pagerank/LPA/kcore): their driver loops
   * run eagerly inside the query constructor and the returned frame is
@@ -37,6 +38,7 @@ object PlanDump {
     names.foreach { n =>
       try {
         val df = graft.SparkEntry.queries(n)(spark, sfDir)
+        df.collect()
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(outDir, s"${n}_$suffix.txt"), capture(df))
         println(s"dumped $n")

@@ -1,11 +1,18 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The corpus bridge's one-pass claim, asserted structurally: exactly
-  * one pcap scan node in the physical plan (the two-direction + join
-  * formulation planned two). */
+/** The corpus bridge's plan claims, asserted structurally: exactly one
+  * pcap scan node in the physical plan (the two-direction + join
+  * formulation planned two), and a final adaptive plan with one
+  * conversation aggregation — two hash exchanges, no sort aggregate, and
+  * no de-frame or split expression in any node, because the gate runs
+  * once per conversation inside the aggregator. */
 class BridgePlanSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -21,6 +28,42 @@ class BridgePlanSpec extends AnyFunSuite {
     val scans = "PcapScan".r.findAllIn(plan).length
     assert(scans == 1, s"expected 1 pcap scan, found $scans:\n$plan")
     assert(df.count() > 0)
+  }
+
+  /** Every node of the final (post-execution) adaptive plan, query
+    * stages included. */
+  private def finalNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => finalNodes(a.executedPlan)
+    case q: QueryStageExec => q +: finalNodes(q.plan)
+    case n => n +: n.children.flatMap(finalNodes)
+  }
+
+  test("pcap_http_to_corpus runs as one conversation aggregation: two " +
+      "hash exchanges, no sort aggregate, no per-row deframe or split") {
+    val df = SparkEntry.queries("pcap_http_to_corpus")(
+      spark, "/root/testdata/sf0.001")
+    assert(df.collect().nonEmpty)
+    val root = df.queryExecution.executedPlan
+    assert(root.toString.contains("isFinalPlan=true"))
+    val nodes = finalNodes(root)
+    val shown = root.toString
+    assert(nodes.count(_.simpleString(1000).contains("PcapScan(")) == 1,
+      shown)
+    val keys = nodes.collect {
+      case e: ShuffleExchangeExec => e.outputPartitioning match {
+        case h: HashPartitioning =>
+          h.expressions.flatMap(_.references.map(_.name)).toSet
+        case other => fail(s"non-hash exchange $other:\n$shown")
+      }
+    }
+    assert(keys.toSet == Set(Set("server", "client", "client_port"),
+      Set("body_md5")) && keys.length == 2, s"exchanges $keys:\n$shown")
+    assert(!nodes.exists(_.nodeName == "SortAggregate"), shown)
+    val perRow = nodes.flatMap(_.expressions).flatMap(_.collect {
+      case e if e.prettyName == "http_deframe" || e.prettyName == "split" =>
+        e.prettyName
+    })
+    assert(perRow.isEmpty, s"per-row $perRow:\n$shown")
   }
 
   test("the endpoint-hash doc_id mode (a real capture's mapping) " +

@@ -280,6 +280,88 @@ class CorpusBridgeStreamSpec extends AnyFunSuite {
     } finally query.stop()
   }
 
+  /** Runs a document stream over everything landed in `dir`, then two
+    * flushes past every idle horizon, and returns the emitted rows. */
+  private def streamToQuiescence(stream: org.apache.spark.sql.DataFrame,
+      dir: java.nio.file.Path,
+      name: String): Set[(Long, String, Long, String)] = {
+    val query = stream.writeStream.format("memory")
+      .queryName(name).outputMode("append").start()
+    try {
+      query.processAllAvailable()
+      landFlush(dir, "flush1.pcap", 1700800600L)
+      query.processAllAvailable()
+      landFlush(dir, "flush2.pcap", 1700800700L)
+      query.processAllAvailable()
+      spark.table(name).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
+          r.getString(3))).toSet
+    } finally query.stop()
+  }
+
+  /** The batch bridge's gated rows over `dir`, digested like the twin. */
+  private def batchRows(dir: java.nio.file.Path,
+      cap: Long): Set[(Long, String, Long, String)] = {
+    import org.apache.spark.sql.functions.{col, md5}
+    graft.operators.PcapQueries.httpCorpusGated(spark, dir.toString,
+        serverPort = 80, docIdBase = 42000, maxBytesPerDirection = cap)
+      .select(col("doc_id"), col("host"), col("n_tokens"),
+        md5(col("text").cast("binary")).as("body_md5"))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
+        r.getString(3))).toSet
+  }
+
+  private def hexMd5(b: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("MD5").digest(b)
+      .map(x => f"${x & 0xFF}%02x").mkString
+
+  test("a body that is not valid UTF-8 digests the same bytes in stream " +
+      "and batch, and a lower-case host: header is the Host") {
+    val body = "caf".getBytes("US-ASCII") ++ Array(0xE9.toByte) ++
+      (0 until 24).map(k => s" t$k").mkString.getBytes("US-ASCII")
+    val rsp = (s"HTTP/1.1 200 OK\r\nContent-Length: ${body.length}" +
+      "\r\n\r\n").getBytes("US-ASCII") ++ body
+    val req = "GET /latin1 HTTP/1.1\r\nhost: lower.example.com\r\n\r\n"
+      .getBytes("US-ASCII")
+    val client = Array[Byte](10, 14, 0, 5)
+    val server = Array[Byte](10, 4, 0, 1)
+    val dir = Files.createTempDirectory("corpus_bridge_latin1")
+    PcapSynth.writeAtomic(dir.resolve("a.pcap"), PcapSynth.file(Seq(
+      (1700800000L, 0L, PcapSynth.ipv4TcpFrame(client, server, 42005, 80,
+        ttl = 62, payload = req, seq = 0L, flags = 0x18)),
+      (1700800001L, 0L, PcapSynth.ipv4TcpFrame(server, client, 80, 42005,
+        ttl = 60, payload = rsp, seq = 0L, flags = 0x18)))))
+    val got = streamToQuiescence(docStream(dir), dir, "corpus_docs_latin1")
+    assert(got == Set((5L, "lower.example.com", 25L, hexMd5(body))),
+      s"streamed $got")
+    val batch =
+      batchRows(dir, graft.functions.Reassemble.DefaultMaxStreamBytes)
+    assert(batch == got, s"stream $got vs batch $batch")
+  }
+
+  test("at a cap that truncates some responses, the streamed rows equal " +
+      "the batch bridge's at the same cap") {
+    val sizes = (0 until NFlows)
+      .map(f => PcapSynth.httpCorpusResponseBytes(f).length).sorted
+    val cap = sizes(NFlows / 2).toLong
+    val dir = Files.createTempDirectory("corpus_bridge_capped")
+    landWaves(dir, waves = 3, which = 0 until 3)
+    val stream = CorpusBridgeStream.documents(
+      spark.readStream.format("pcap")
+        .option("maxFilesPerTrigger", "1").load(dir.toString),
+      serverPort = 80, docIdBase = 42000,
+      watermark = "5 seconds", idleSeconds = 10,
+      maxBytesPerDirection = cap)
+    val got = streamToQuiescence(stream, dir, "corpus_docs_capped")
+    val batch = batchRows(dir, cap)
+    val uncapped = twinRows()
+    assert(batch.nonEmpty && batch.size < uncapped.size,
+      s"cap $cap must drop some documents and keep others: " +
+        s"${batch.size} of ${uncapped.size}")
+    assert(got == batch, s"capped: missing=${(batch -- got).take(3)} " +
+      s"extra=${(got -- batch).take(3)}")
+  }
+
   test("checkpoint restart mid-capture neither loses nor duplicates " +
       "documents (exactly-once)") {
     val dir = Files.createTempDirectory("corpus_bridge_restart")
