@@ -4,6 +4,7 @@ import java.lang.ref.WeakReference
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
@@ -28,9 +29,15 @@ object HadoopConfBroadcast {
 
   private var slot: Slot = _
 
-  def apply(spark: SparkSession): Broadcast[SerializableConfiguration] = {
+  def apply(spark: SparkSession): Broadcast[SerializableConfiguration] =
+    apply(spark, spark.sessionState.newHadoopConf())
+
+  /** As above, for a caller that already built the session's Hadoop conf
+    * (a scan that lists and prunes with it); `conf` must not be changed
+    * afterwards, since the broadcast may hold it. */
+  def apply(spark: SparkSession, conf: Configuration)
+      : Broadcast[SerializableConfiguration] = {
     val sc = spark.sparkContext
-    val conf = spark.sessionState.newHadoopConf()
     val entries = conf.iterator.asScala.map(e => e.getKey -> e.getValue).toMap
     synchronized {
       val s = slot

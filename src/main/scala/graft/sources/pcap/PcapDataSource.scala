@@ -30,7 +30,9 @@ import graft.sources.HadoopConfBroadcast
   * a DSv2 `TableProvider` whose `PartitionReader` runs the decoder core and
   * writes `InternalRow`s directly — no boxing boundary, with column
   * pruning pushed *into* the decoder (skip DNS parse / MD5 / payload
-  * retention when unrequested), which the reference cannot do.
+  * retention when unrequested), which the reference cannot do, and
+  * filters pushed there exactly ([[PcapPacketFilter]]): a pushed filter
+  * is evaluated once, per packet, and never again post-scan.
   *
   * Scale design:
   *   - pcap has no sync markers → never byte-range split
@@ -151,19 +153,21 @@ class PcapScanBuilder(options: CaseInsensitiveStringMap)
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  /** Accept simple comparisons the decoder can evaluate per packet; all
-    * filters are also returned as residual so Spark re-checks them —
-    * the pushdown is a row-skipping optimization, never a semantic
-    * contract (SURVEY.md §4 roadmap item). */
+  /** Exact pushdown: the filters [[PcapPacketFilter.supported]] accepts
+    * run in the decoder with SQL semantics and are not returned, so Spark
+    * plans no post-scan `Filter` for them; only the rest come back as
+    * residual. A windowed query then carries no window literal in its
+    * generated code, so its stage compiles once per query shape, not once
+    * per window. `option("pushdown","false")` pushes nothing and keeps
+    * every filter post-scan: the parity reference. */
   override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter]):
       Array[org.apache.spark.sql.sources.Filter] = {
-    // option("pushdown","false") disables the row-skip for A/B measurement
-    // (semantics are unchanged either way: all filters stay residual)
-    pushed =
+    val (exact, residual) =
       if (options.getBoolean("pushdown", true))
-        filters.filter(PcapPacketFilter.supported)
-      else Array.empty
-    filters // everything stays post-scan too
+        filters.partition(PcapPacketFilter.supported)
+      else (Array.empty[org.apache.spark.sql.sources.Filter], filters)
+    pushed = exact
+    residual
   }
 
   override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
@@ -174,11 +178,12 @@ class PcapScanBuilder(options: CaseInsensitiveStringMap)
   // `.tsidx` sidecar: COUNT(*) sums the sidecar counts, MIN/MAX(ts)
   // fold the sidecar second-bounds (the sidecar records whole-second
   // ts, exactly the `ts` column's unit), all answered from the listing
-  // alone — O(files), not O(bytes). Catalyst only offers the aggregate
-  // when no filter sits between the Aggregate and the scan (our pushed
-  // filters are always residual, so ANY filter blocks the offer — a
-  // filtered count/range still decodes), and any file lacking the
-  // needed sidecar field declines the pushdown and falls back to the
+  // alone — O(files), not O(bytes). Catalyst offers the aggregate
+  // only when no post-scan filter is left, which an exactly pushed
+  // filter leaves none of; the sidecars count whole files, so
+  // pushAggregation declines whenever any filter was pushed (a
+  // filtered count/range still decodes). Any file lacking the needed
+  // sidecar field also declines the pushdown and falls back to the
   // full scan. `option("countPushdown","false")` disables.
 
   /** Classify a pushable stats aggregation into per-column tags
@@ -209,15 +214,17 @@ class PcapScanBuilder(options: CaseInsensitiveStringMap)
     * would read; None if the set is empty (MIN/MAX would be NULL —
     * let the scan path answer that) or ANY file lacks a sidecar; the
     * count is None if any sidecar is count-less (pre-round-9 format). */
-  // ONE listing per scan BUILD, shared with the scan this builder
-  // produces (the aggregate probe and the scan's stats/planning all
-  // need the same capture set)
+  // ONE Hadoop conf and ONE listing per scan BUILD, shared with the
+  // scan this builder produces: the aggregate probe, the ts pruning, the
+  // scan's stats/planning and the executors' broadcast all use them (a
+  // session conf copy is ~1,100 entries; the listing is O(files) RPCs)
+  private lazy val hadoopConf: Configuration =
+    SparkSession.active.sessionState.newHadoopConf()
+
   private lazy val listedFilesMemo: Seq[FileStatus] =
-    PcapTable.listDataFiles(options,
-      SparkSession.active.sessionState.newHadoopConf())
+    PcapTable.listDataFiles(options, hadoopConf)
 
   private def sidecarStats(): Option[(Long, Long, Option[Long])] = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
     val files = listedFilesMemo
     if (files.isEmpty) return None
     var mn = Long.MaxValue
@@ -225,7 +232,7 @@ class PcapScanBuilder(options: CaseInsensitiveStringMap)
     var total: Option[Long] = Some(0L)
     files.foreach { st =>
       PcapTsIndex.readSidecarStats(
-          st.getPath.getFileSystem(conf), st.getPath) match {
+          st.getPath.getFileSystem(hadoopConf), st.getPath) match {
         case Some((lo, hi, n)) =>
           mn = math.min(mn, lo)
           mx = math.max(mx, hi)
@@ -270,7 +277,7 @@ class PcapScanBuilder(options: CaseInsensitiveStringMap)
         case 'n' => mn
         case 'x' => mx
       })
-    case _ => new PcapScan(required, options, pushed,
+    case _ => new PcapScan(required, options, pushed, hadoopConf,
       () => listedFilesMemo)
   }
 }
@@ -313,9 +320,12 @@ class PcapStatsReaderFactory extends PartitionReaderFactory {
   }
 }
 
+/** The decoding scan. `hadoopConf` and `listed` are the builder's one
+  * conf and one listing. */
 class PcapScan(requiredSchema: StructType, options: CaseInsensitiveStringMap,
-    pushedFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
-    listed: () => Seq[FileStatus] = null)
+    val pushedFilters: Array[org.apache.spark.sql.sources.Filter],
+    hadoopConf: Configuration,
+    listed: () => Seq[FileStatus])
   extends Scan with Batch
   with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
@@ -330,7 +340,7 @@ class PcapScan(requiredSchema: StructType, options: CaseInsensitiveStringMap,
   // planInputPartitions both need the file set, and a repeated
   // listing is O(files) RPCs per query on an object store
   private lazy val prunedFilesMemo: Seq[FileStatus] =
-    pruneByTs(listFiles())
+    pruneByTs(listed())
 
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics =
@@ -349,6 +359,8 @@ class PcapScan(requiredSchema: StructType, options: CaseInsensitiveStringMap,
       Array[org.apache.spark.sql.connector.metric.CustomMetric] =
     Array(new PcapPacketsMetric, new PcapBytesMetric)
 
+  // Spark builds a micro-batch scan without filter pushdown (a streaming
+  // query's filters stay post-scan), so no pushed filter is lost here
   override def toMicroBatchStream(checkpointLocation: String):
       org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new PcapMicroBatchStream(options, requiredSchema, hadoopConf)
@@ -358,18 +370,12 @@ class PcapScan(requiredSchema: StructType, options: CaseInsensitiveStringMap,
 
   private def sparkSession = SparkSession.active
 
-  private def hadoopConf: Configuration =
-    sparkSession.sessionState.newHadoopConf()
-
-  private def listFiles(): Seq[FileStatus] =
-    if (listed != null) listed()
-    else PcapTable.listDataFiles(options, hadoopConf)
-
   /** Drop files whose per-file ts stats cannot intersect the pushed ts
     * bounds (SURVEY.md §4 file-level skipping). Stats come from exact
     * `.tsidx` sidecars, or — only under `assumeMonotonicTs` — a cheap
     * first/last-record probe; files without stats always survive, and
-    * the pushed filters stay residual, so semantics are unchanged. */
+    * the decoder still applies the pushed bounds to every packet of a
+    * kept file. */
   private def pruneByTs(files: Seq[FileStatus]): Seq[FileStatus] =
     PcapTsIndex.tsBounds(pushedFilters) match {
       case Some((lo, hi)) if options.getBoolean("tsPruning", true) =>
@@ -413,8 +419,9 @@ class PcapScan(requiredSchema: StructType, options: CaseInsensitiveStringMap,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PcapReaderFactory(HadoopConfBroadcast(sparkSession),
-      requiredSchema, PcapSchema.decodeOptions(requiredSchema, options),
+    new PcapReaderFactory(HadoopConfBroadcast(sparkSession, hadoopConf),
+      requiredSchema,
+      PcapSchema.decodeOptions(requiredSchema, options, pushedFilters),
       PcapPacketFilter.compile(pushedFilters),
       // batch (not streaming) reads emit ColumnarBatches for flat
       // projections; option("columnar","false") forces the row path

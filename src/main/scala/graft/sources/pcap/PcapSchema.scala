@@ -67,24 +67,26 @@ object PcapSchema {
     StructField("payload", BinaryType),
     StructField("frame", BinaryType)))
 
-  /** The decoder switches a required schema asks for: work whose column
-    * is not requested is skipped (DNS parse, RR-section and qname
-    * strings, MD5 digest, payload and frame copies, checksum, address and
-    * extension-header strings, TCP option walk). Columns referenced by
-    * residual filters are always part of the required schema, so this
-    * can never starve a pushed predicate (PrunedDecodeParitySpec). Batch
-    * and streaming scans both derive their options here. */
+  /** The decoder switches a scan asks for: work whose column is neither
+    * requested nor read by a pushed filter is skipped (DNS parse,
+    * RR-section and qname strings, MD5 digest, payload and frame copies,
+    * checksum, address and extension-header strings, TCP option walk).
+    * Spark prunes a column that only a pushed (non-residual) filter
+    * reads from the required schema, so the filters' columns count here
+    * too, or the predicate would test a field the decoder never filled
+    * (PrunedDecodeParitySpec, PcapExactPushdownSpec). Batch and
+    * streaming scans both derive their options here. */
   def decodeOptions(required: StructType,
-      options: org.apache.spark.sql.util.CaseInsensitiveStringMap)
+      options: org.apache.spark.sql.util.CaseInsensitiveStringMap,
+      pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
       : graft.pcap.DecodeOptions = {
-    val need = required.fieldNames.toSet
+    val need = required.fieldNames.toSet ++ pushed.flatMap(_.references)
     // resolved even when unused: an unknown decoder name fails planning
     val appDecoder = graft.pcap.PayloadDecoders.forName(
       options.getOrDefault("decoder", "ip"))
     graft.pcap.DecodeOptions(
       appDecoder =
-        if (required.fieldNames.exists(_.startsWith("dns_"))) appDecoder
-        else None,
+        if (need.exists(_.startsWith("dns_"))) appDecoder else None,
       md5 = options.getBoolean("md5", false) && need("md5"),
       keepPayload = need("payload"),
       dnsSections = need("dns_answer") || need("dns_authority") ||
@@ -111,35 +113,44 @@ object PcapSchema {
   import org.apache.spark.sql.execution.vectorized.WritableColumnVector
   import PacketSlot._
 
-  private[pcap] abstract class Col {
+  // Serializable: a pushed IsNotNull predicate ships the column's reader
+  // to the executors inside the reader factory
+  private[pcap] abstract class Col extends Serializable {
+    /** The column is non-NULL for this packet: `append`/`set` write NULL
+      * exactly when this is false, and a pushed `IsNotNull` filter is this
+      * test, so it keeps exactly the rows SQL's `IS NOT NULL` keeps. */
+    def nonNull(s: PacketSlot): Boolean
     def append(v: WritableColumnVector, s: PacketSlot, f: PacketFeed): Unit
     def set(row: InternalRow, i: Int, s: PacketSlot, f: PacketFeed): Unit
   }
 
   // primitive-returning getters (a Function1 over an object would box)
-  private trait LongOf { def apply(s: PacketSlot): Long }
-  private trait IntOf { def apply(s: PacketSlot): Int }
-  private trait BoolOf { def apply(s: PacketSlot): Boolean }
+  private trait LongOf extends Serializable { def apply(s: PacketSlot): Long }
+  private trait IntOf extends Serializable { def apply(s: PacketSlot): Int }
+  private trait BoolOf extends Serializable { def apply(s: PacketSlot): Boolean }
 
   private final class LongCol(bit: Long, get: LongOf) extends Col {
+    def nonNull(s: PacketSlot): Boolean = s.has(bit)
     def append(v: WritableColumnVector, s: PacketSlot, f: PacketFeed): Unit =
-      if (s.has(bit)) v.appendLong(get(s)) else v.appendNull()
+      if (nonNull(s)) v.appendLong(get(s)) else v.appendNull()
     def set(row: InternalRow, i: Int, s: PacketSlot, f: PacketFeed): Unit =
-      if (s.has(bit)) row.setLong(i, get(s)) else row.setNullAt(i)
+      if (nonNull(s)) row.setLong(i, get(s)) else row.setNullAt(i)
   }
 
   private final class IntCol(bit: Long, get: IntOf) extends Col {
+    def nonNull(s: PacketSlot): Boolean = s.has(bit)
     def append(v: WritableColumnVector, s: PacketSlot, f: PacketFeed): Unit =
-      if (s.has(bit)) v.appendInt(get(s)) else v.appendNull()
+      if (nonNull(s)) v.appendInt(get(s)) else v.appendNull()
     def set(row: InternalRow, i: Int, s: PacketSlot, f: PacketFeed): Unit =
-      if (s.has(bit)) row.setInt(i, get(s)) else row.setNullAt(i)
+      if (nonNull(s)) row.setInt(i, get(s)) else row.setNullAt(i)
   }
 
   private final class BoolCol(bit: Long, get: BoolOf) extends Col {
+    def nonNull(s: PacketSlot): Boolean = s.has(bit)
     def append(v: WritableColumnVector, s: PacketSlot, f: PacketFeed): Unit =
-      if (s.has(bit)) v.appendBoolean(get(s)) else v.appendNull()
+      if (nonNull(s)) v.appendBoolean(get(s)) else v.appendNull()
     def set(row: InternalRow, i: Int, s: PacketSlot, f: PacketFeed): Unit =
-      if (s.has(bit)) row.setBoolean(i, get(s)) else row.setNullAt(i)
+      if (nonNull(s)) row.setBoolean(i, get(s)) else row.setNullAt(i)
   }
 
   /** A string field; null from `get` is NULL too. `interned` columns hold
@@ -147,6 +158,7 @@ object PcapSchema {
     * encoded forms are cached. */
   private final class StrCol(bit: Long, interned: Boolean,
       get: PacketSlot => String) extends Col {
+    def nonNull(s: PacketSlot): Boolean = s.has(bit) && get(s) != null
     def append(v: WritableColumnVector, s: PacketSlot, f: PacketFeed): Unit = {
       val x = if (s.has(bit)) get(s) else null
       if (x == null) v.appendNull()
@@ -166,11 +178,12 @@ object PcapSchema {
     * the vector, never through a String. */
   private final class AddrCol(dst: Boolean) extends Col {
     private val bit = if (dst) Dst else Src
+    def nonNull(s: PacketSlot): Boolean = s.has(bit)
     def append(v: WritableColumnVector, s: PacketSlot, f: PacketFeed): Unit =
-      if (s.has(bit)) v.appendByteArray(s.text, 0, s.addrText(dst))
+      if (nonNull(s)) v.appendByteArray(s.text, 0, s.addrText(dst))
       else v.appendNull()
     def set(row: InternalRow, i: Int, s: PacketSlot, f: PacketFeed): Unit =
-      if (s.has(bit)) row.update(i, UTF8String.fromBytes(
+      if (nonNull(s)) row.update(i, UTF8String.fromBytes(
         java.util.Arrays.copyOf(s.text, s.addrText(dst))))
       else row.setNullAt(i)
   }
@@ -178,11 +191,12 @@ object PcapSchema {
   /** payload / frame: a slice of the frame buffer, copied into the vector
     * (or, for a row, out into its own array). */
   private final class BytesCol(bit: Long, off: IntOf, len: IntOf) extends Col {
+    def nonNull(s: PacketSlot): Boolean = s.has(bit)
     def append(v: WritableColumnVector, s: PacketSlot, f: PacketFeed): Unit =
-      if (s.has(bit)) v.appendByteArray(s.data, off(s), len(s))
+      if (nonNull(s)) v.appendByteArray(s.data, off(s), len(s))
       else v.appendNull()
     def set(row: InternalRow, i: Int, s: PacketSlot, f: PacketFeed): Unit =
-      if (s.has(bit)) {
+      if (nonNull(s)) {
         val o = off(s)
         row.update(i, java.util.Arrays.copyOfRange(s.data, o, o + len(s)))
       } else row.setNullAt(i)
@@ -192,8 +206,9 @@ object PcapSchema {
     * (appendArray records the child's CURRENT element count as the start
     * offset), then the elements into the child vector. */
   private final class StrArrayCol(get: DnsFields => Seq[String]) extends Col {
+    def nonNull(s: PacketSlot): Boolean = s.has(Dns)
     def append(v: WritableColumnVector, s: PacketSlot, f: PacketFeed): Unit =
-      if (!s.has(Dns)) v.appendNull()
+      if (!nonNull(s)) v.appendNull()
       else {
         val xs = get(s.dns)
         v.appendArray(xs.length)
@@ -204,7 +219,7 @@ object PcapSchema {
         }
       }
     def set(row: InternalRow, i: Int, s: PacketSlot, f: PacketFeed): Unit =
-      if (!s.has(Dns)) row.setNullAt(i)
+      if (!nonNull(s)) row.setNullAt(i)
       else {
         val xs = get(s.dns)
         row.update(i,
@@ -215,19 +230,21 @@ object PcapSchema {
 
   /** mpls_labels, same offsets-then-elements contract as [[StrArrayCol]]. */
   private object MplsCol extends Col {
+    def nonNull(s: PacketSlot): Boolean = s.has(Mpls)
     def append(v: WritableColumnVector, s: PacketSlot, f: PacketFeed): Unit =
-      if (!s.has(Mpls)) v.appendNull()
+      if (!nonNull(s)) v.appendNull()
       else {
         v.appendArray(s.mplsCount)
         v.arrayData().appendInts(s.mplsCount, s.mpls, 0)
       }
     def set(row: InternalRow, i: Int, s: PacketSlot, f: PacketFeed): Unit =
-      if (!s.has(Mpls)) row.setNullAt(i)
+      if (!nonNull(s)) row.setNullAt(i)
       else row.update(i, ArrayData.toArrayData(
         java.util.Arrays.copyOf(s.mpls, s.mplsCount)))
   }
 
   private object PktIdxCol extends Col {
+    def nonNull(s: PacketSlot): Boolean = true
     def append(v: WritableColumnVector, s: PacketSlot, f: PacketFeed): Unit =
       v.appendLong(f.pktIdx)
     def set(row: InternalRow, i: Int, s: PacketSlot, f: PacketFeed): Unit =
@@ -235,6 +252,7 @@ object PcapSchema {
   }
 
   private object FileCol extends Col {
+    def nonNull(s: PacketSlot): Boolean = true
     def append(v: WritableColumnVector, s: PacketSlot, f: PacketFeed): Unit =
       v.appendByteArray(f.currentFileBytes, 0, f.currentFileBytes.length)
     def set(row: InternalRow, i: Int, s: PacketSlot, f: PacketFeed): Unit =
@@ -327,6 +345,10 @@ object PcapSchema {
   /** The column readers of a pruned schema, in its order. */
   private[pcap] def columns(schema: StructType): Array[Col] =
     schema.fieldNames.map(cols)
+
+  /** The NULL test of column `c`'s reader, as a packet predicate. */
+  private[pcap] def nonNull(c: String): Option[PacketSlot => Boolean] =
+    cols.get(c).map(col => col.nonNull(_))
 
   /** Every pcap column has a columnar reader since the RR-section arrays
     * gained child-vector appends (round-6 verdict #5); the row reader

@@ -24,9 +24,9 @@ import graft.pcap.PcapStreamReader._
   *      time-ordered captures (the common case for live taps, not a
   *      format guarantee), hence the explicit opt-in.
   *
-  * Files with no stats are never pruned, and Spark's residual filters
-  * re-check every row regardless — pruning can only skip work, not
-  * change results.
+  * Files with no stats are never pruned, and the scan's pushed ts
+  * predicate still checks every packet of a kept file — pruning can only
+  * skip work, not change results.
   */
 object PcapTsIndex {
 

@@ -8,10 +8,9 @@ import org.apache.spark.sql.SparkSession
   * so the dump is its final adaptive plan (most plans/r17 and r18
   * dumps predate this and show initial plans).
   *
-  * Note for iterative queries (pagerank/LPA/kcore): their driver loops
-  * run eagerly inside the query constructor and the returned frame is
-  * only the post-checkpoint tail, so the dump also captures ONE
-  * mid-loop iteration plan for those (suffixed `_iter`). */
+  * Iterative queries (pagerank/LPA/kcore) run their driver loops eagerly
+  * inside the query constructor and return only the post-checkpoint
+  * tail, so their dump shows that tail's plan, not a loop iteration's. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)

@@ -78,7 +78,8 @@ class PcapCountPushdownSpec extends AnyFunSuite {
     val df = spark.read.format("pcap").load(d)
       .filter("protocol = 'ICMP'").groupBy().count()
     assert(!planOf(df).contains("PcapStatsScan"),
-      "a filter must force the decoding scan (filters are residual)")
+      "a filter must force the decoding scan (a pushed filter declines " +
+        "the sidecar count)")
     assert(df.collect().head.getLong(0) > 0)
   }
 

@@ -129,6 +129,38 @@ class PcapStreamingSpec extends AnyFunSuite {
     } finally query.stop()
   }
 
+  test("a streamed ts + dst_port filter returns only the matching rows") {
+    // the batch scan evaluates these filters in the decoder and leaves
+    // Spark no post-scan copy; the streamed rows must still match them
+    val dir = Files.createTempDirectory("pcap_landing_filter")
+    def frame(i: Int) = graft.pcap.PcapSynth.ipv4UdpFrame(
+      Array[Byte](10, 0, 0, 1), Array[Byte](10, 0, 0, 2), 4000 + i,
+      if (i % 3 == 0) 53 else 9999, ttl = 64,
+      payload = graft.pcap.PcapSynth.dnsQuery(i, s"n$i.example.com"))
+    val where = "ts >= 1005 AND ts <= 1040 AND dst_port = 53"
+    val query = spark.readStream.format("pcap").option("decoder", "dns")
+      .load(dir.toString).where(where)
+      .select("ts", "dst_port", "dns_qname")
+      .writeStream.format("memory")
+      .queryName("pcap_stream_filtered").outputMode("append").start()
+    try {
+      for (f <- 0 until 3) {
+        Files.write(dir.resolve(s"f$f.pcap"), graft.pcap.PcapSynth.file(
+          (0 until 20).map(j => f * 20 + j).map(i => (1000L + i, 0L, frame(i)))))
+        query.processAllAvailable()
+      }
+      val got = spark.table("pcap_stream_filtered").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).sorted.toSeq
+      val want = (5 to 40).filter(_ % 3 == 0)
+        .map(i => (1000L + i, 53, s"n$i.example.com."))
+      assert(got == want)
+      assert(got == spark.read.format("pcap").option("decoder", "dns")
+        .option("pushdown", "false").load(dir.toString).where(where)
+        .select("ts", "dst_port", "dns_qname").collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).sorted.toSeq)
+    } finally query.stop()
+  }
+
   test("checkpointed restart is exactly-once: no dupes or loss across a " +
        "simulated failure") {
     val dir = Files.createTempDirectory("pcap_landing_eo")

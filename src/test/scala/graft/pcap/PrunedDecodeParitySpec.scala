@@ -5,9 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Schema-driven decode pruning (udpsum / src,dst strings / ext_headers /
   * dns_qname) must be invisible in results: a pruned projection returns exactly the
-  * columns an unpruned full-schema read returns, and residual filters on
-  * a column that is NOT in the output projection still see its value
-  * (Spark keeps filter-referenced columns in the required schema).
+  * columns an unpruned full-schema read returns, and filters on a column
+  * that is NOT in the output projection still see its value (Spark keeps
+  * a residual filter's columns in the required schema; the columns of a
+  * filter pushed into the decoder count toward its decode options).
   */
 class PrunedDecodeParitySpec extends AnyFunSuite {
 
@@ -74,7 +75,7 @@ class PrunedDecodeParitySpec extends AnyFunSuite {
 
   test("residual filter on a column outside the projection still works") {
     // src is pruned from the OUTPUT projection but referenced by the
-    // filter — Spark's required schema keeps it, so the decoder must
+    // filter, which is pushed into the decoder — so the decoder must
     // still format address strings
     val qnames = spark.read.format("pcap").load(capture)
       .filter("src = '10.0.0.16'").select("dns_qname").collect()
