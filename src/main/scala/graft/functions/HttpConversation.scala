@@ -1,70 +1,54 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder, Encoders}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.functions.{col, when, xxhash64}
 
 /** One TCP segment of an HTTP conversation, tagged with its direction.
-  * Field names are the bridge's column names so `udaf(...)($"is_req",
-  * $"tcp_seq", $"pkt_idx", $"payload")` lines up positionally. */
+  * Field names are the bridge's column names, so the segment relation
+  * decodes into it by name. */
 final case class ConvSeg(is_req: Boolean, tcp_seq: Long, pkt_idx: Long,
     payload: Array[Byte])
 
-/** The corpus gate's verdict on one conversation. A rejection is
-  * `ok = false`, not a null struct: the output encoder asserts a
-  * top-level Product is never null. `body` is the de-framed bytes as
-  * sent, never re-encoded, so digests agree on non-UTF-8 bodies. */
+/** The corpus gate's verdict on one conversation (a rejection is
+  * `ok = false`). `body` is the de-framed bytes as sent, never
+  * re-encoded, so digests agree on non-UTF-8 bodies. */
 final case class CorpusDoc(ok: Boolean, host: String, n_tokens: Long,
     body: Array[Byte])
 
-/** Both directions of one conversation, and the streaming bridge's
-  * per-conversation state. A null side was never seen; a seen side
-  * stays non-null even if the cap empties it. */
+/** Both directions of one conversation. A null side was never seen; a
+  * seen side stays non-null even if the cap empties it. */
 final class ConvBuf extends Serializable {
   var req: ReassemblyBuf = _
   var rsp: ReassemblyBuf = _
 }
 
-/** The pcap→corpus bridge's conversation step as one typed aggregation:
-  * both directions reassemble in [[ReassemblyBuf]]s through
-  * [[Reassemble.addSeg]] / [[Reassemble.mergeBuf]] /
-  * [[Reassemble.finishBuf]], so the per-direction cap, cover-trim and
-  * merge-order independence are [[ReassembleAgg]]'s, and `finish` runs
+/** The pcap→corpus bridge's per-conversation step, one path for the
+  * batch bridge (one sorted group) and the streaming bridge (one
+  * state): `reduce` adds a segment to its direction's [[ReassemblyBuf]]
+  * ([[Reassemble.addSeg]], so cap, cover-trim and arrival-order
+  * independence are [[ReassembleAgg]]'s); `finish` runs
   * [[HttpConversation.gate]] once per conversation.
   *
   * The gate lives in `finish`, not in Catalyst expressions over the
-  * aggregated streams: a Project that aliases `deframe(rsp)` and
+  * reassembled streams: a Project that aliases `deframe(rsp)` and
   * `split(text, ' ')` followed by a Filter on them is rewritten by
   * filter pushdown, which inlines each alias into every conjunct, so
   * the de-frame ran once per conjunct (seven times) and the split four
   * times for every conversation. Here each runs exactly once. */
-class HttpConversationAgg(maxBytesPerDirection: Long)
-  extends Aggregator[ConvSeg, ConvBuf, CorpusDoc] {
+class HttpConversationAgg(maxBytesPerDirection: Long) extends Serializable {
 
   require(maxBytesPerDirection > 0 && maxBytesPerDirection <= Int.MaxValue)
   private val maxSegments = 1 << 18 // ReassembleAgg's DoS guard
 
-  override def zero: ConvBuf = new ConvBuf
+  def zero: ConvBuf = new ConvBuf
 
   private def add(d: ReassemblyBuf, s: ConvSeg): ReassemblyBuf =
     Reassemble.addSeg(if (d == null) new ReassemblyBuf else d, s.tcp_seq,
       s.pkt_idx, s.payload, maxBytesPerDirection, maxSegments)
 
-  override def reduce(b: ConvBuf, s: ConvSeg): ConvBuf = {
+  def reduce(b: ConvBuf, s: ConvSeg): ConvBuf = {
     if (s.is_req) b.req = add(b.req, s) else b.rsp = add(b.rsp, s)
     b
-  }
-
-  private def mergeSide(a: ReassemblyBuf, b: ReassemblyBuf): ReassemblyBuf =
-    if (a == null) b
-    else if (b == null) a
-    else Reassemble.mergeBuf(a, b, maxBytesPerDirection, maxSegments)
-
-  override def merge(a: ConvBuf, b: ConvBuf): ConvBuf = {
-    a.req = mergeSide(a.req, b.req)
-    a.rsp = mergeSide(a.rsp, b.rsp)
-    a
   }
 
   /** Compacts both sides now; the streaming bridge calls this once per
@@ -73,15 +57,14 @@ class HttpConversationAgg(maxBytesPerDirection: Long)
     if (d != null) Reassemble.compactBuf(d, maxBytesPerDirection, maxSegments)
   }
 
-  override def finish(b: ConvBuf): CorpusDoc =
+  def finish(b: ConvBuf): CorpusDoc =
     if (b.req == null || b.rsp == null) HttpConversation.Rejected
     else HttpConversation.gate(
       Reassemble.finishBuf(b.req, maxBytesPerDirection, maxSegments).stream,
       Reassemble.finishBuf(b.rsp, maxBytesPerDirection, maxSegments).stream)
 
-  override def bufferEncoder: Encoder[ConvBuf] = Encoders.kryo[ConvBuf]
-  override def outputEncoder: Encoder[CorpusDoc] =
-    ExpressionEncoder[CorpusDoc]()
+  /** The streaming bridge's state encoder. */
+  def stateEncoder: Encoder[ConvBuf] = Encoders.kryo[ConvBuf]
 }
 
 object HttpConversation {
@@ -91,7 +74,7 @@ object HttpConversation {
     java.util.regex.Pattern.compile(HttpParse.headerRegex("Host"))
   private val Utf8 = java.nio.charset.StandardCharsets.UTF_8
 
-  /** The corpus gate, shared by the batch aggregator and the streaming
+  /** The corpus gate, shared by the batch bridge and the streaming
     * bridge ([[graft.streaming.CorpusBridgeStream]]): de-frame the
     * response stream (RFC 9112, [[HttpParse.deframe]]), keep 2xx only,
     * then at least 20 `split(" ", -1)` tokens with an integer distinct
@@ -114,11 +97,27 @@ object HttpConversation {
       body)
   }
 
-  /** `struct(ok, host, n_tokens, body)` aggregation column over
-    * (`is_req`, `tcp_seq`, `pkt_idx`, `payload`). */
-  def document(maxBytesPerDirection: Long): Column =
-    functions.udaf(new HttpConversationAgg(maxBytesPerDirection),
-        Encoders.product[ConvSeg])
-      .apply(functions.col("is_req"), functions.col("tcp_seq"),
-        functions.col("pkt_idx"), functions.col("payload"))
+  /** Both bridges' segment relation over pcap-schema `packets`: TCP
+    * payload segments keyed by the direction-normalized conversation
+    * (`server`, `client`, `client_port`), with the [[ConvSeg]] columns
+    * and `extra`. */
+  def segments(packets: DataFrame, serverPort: Int,
+      extra: Column*): DataFrame = {
+    val toServer = col("dst_port") === serverPort
+    def pick(req: String, rsp: String) =
+      when(toServer, col(req)).otherwise(col(rsp))
+    packets.filter(col("protocol") === "TCP" && col("tcp_seq").isNotNull &&
+        col("payload").isNotNull)
+      .select(Seq(pick("dst", "src").as("server"),
+        pick("src", "dst").as("client"),
+        pick("src_port", "dst_port").as("client_port"),
+        toServer.as("is_req"), col("tcp_seq"), col("pkt_idx"),
+        col("payload")) ++ extra: _*)
+  }
+
+  /** Both bridges' doc_id: `client_port - docIdBase` when
+    * `docIdBase >= 0`, else a 64-bit hash of the client endpoint. */
+  def docId(docIdBase: Int): Column =
+    if (docIdBase >= 0) (col("client_port") - docIdBase).cast("long")
+    else xxhash64(col("client"), col("client_port"))
 }

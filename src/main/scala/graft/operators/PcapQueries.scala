@@ -1805,14 +1805,13 @@ object PcapQueries {
 
   /** The pcap→corpus bridge, parameterized for reuse on arbitrary
     * captures (the Q entry binds the fixture's constants): one capture
-    * scan, then ONE aggregation per direction-normalized conversation
-    * ([[graft.functions.HttpConversationAgg]]) that reassembles both
-    * sides and gates the document in its `finish` — RFC 9112 body
-    * de-framing (Content-Length cut / chunked walk / gzip decode), 2xx,
-    * the token-count and distinct-ratio quality gate, Host provenance —
-    * then the digest dedup window. The response stream stays BINARY
-    * until de-framed: a gzip body cast to string before decode would be
-    * corrupt.
+    * scan, then the gated conversation relation of [[httpCorpusGated]]
+    * — each direction-normalized conversation reassembled and gated
+    * once: RFC 9112 body de-framing (Content-Length cut / chunked walk /
+    * gzip decode), 2xx, the token-count and distinct-ratio quality
+    * gate, Host provenance — then the digest dedup window. The
+    * response stream stays BINARY until de-framed: a gzip body cast to
+    * string before decode would be corrupt.
     *
     * `docIdBase >= 0` derives doc_id as `client_port - docIdBase` (the
     * fixture's stable mapping); `docIdBase < 0` uses a 64-bit hash of
@@ -1840,33 +1839,33 @@ object PcapQueries {
     * ([[graft.streaming.CorpusBridgeStream]]) is spec-matched against,
     * the `pcap_syn_portscan_twin` oracled-twin pattern. `text` is a
     * binary cast of the body, byte for byte, so `md5(text)` digests the
-    * bytes sent even when they are not valid UTF-8. */
+    * bytes sent even when they are not valid UTF-8.
+    *
+    * Segments shuffle once on the conversation key ([[Spread.forGrouping]])
+    * and sort; each conversation's go through
+    * [[graft.functions.HttpConversationAgg]]'s `reduce` and `finish` in
+    * one call, the streaming bridge's path. Not a `udaf`: that plans an
+    * ObjectHashAggregate pair, and each side falls back to sorting past
+    * 128 groups per task. */
   private[graft] def httpCorpusGated(s: SparkSession, path: String,
       serverPort: Int, docIdBase: Int,
       maxBytesPerDirection: Long =
         graft.functions.Reassemble.DefaultMaxStreamBytes): DataFrame = {
     import s.implicits._
-    val docId =
-      if (docIdBase >= 0) ($"client_port" - docIdBase).cast("long")
-      else xxhash64($"client", $"client_port")
-    s.read.format("pcap").load(path)
-      .filter($"protocol" === "TCP" && $"tcp_seq".isNotNull &&
-        $"payload".isNotNull)
-      .select(
-        when($"dst_port" === serverPort, $"dst").otherwise($"src")
-          .as("server"),
-        when($"dst_port" === serverPort, $"src").otherwise($"dst")
-          .as("client"),
-        when($"dst_port" === serverPort, $"src_port")
-          .otherwise($"dst_port").as("client_port"),
-        ($"dst_port" === serverPort).as("is_req"),
-        $"tcp_seq", $"pkt_idx", $"payload")
-      .groupBy($"server", $"client", $"client_port")
-      .agg(graft.functions.HttpConversation.document(maxBytesPerDirection)
-        .as("d"))
-      .filter($"d.ok")
-      .select(docId.as("doc_id"), $"d.host".as("host"),
-        $"d.n_tokens".as("n_tokens"), $"d.body".cast("string").as("text"))
+    import graft.functions.{ConvSeg, HttpConversation, HttpConversationAgg}
+    val keys = Seq($"server", $"client", $"client_port")
+    val segs = HttpConversation.segments(s.read.format("pcap").load(path),
+      serverPort)
+    val agg = new HttpConversationAgg(maxBytesPerDirection)
+    Spread.forGrouping(segs, keys: _*)
+      .groupBy(keys: _*).as[(String, String, Int), ConvSeg]
+      .flatMapGroups { (k: (String, String, Int), rows: Iterator[ConvSeg]) =>
+        val d = agg.finish(rows.foldLeft(agg.zero)(agg.reduce))
+        if (d.ok) Iterator.single((k._2, k._3, d.host, d.n_tokens, d.body))
+        else Iterator.empty
+      }.toDF("client", "client_port", "host", "n_tokens", "body")
+      .select(HttpConversation.docId(docIdBase).as("doc_id"), $"host",
+        $"n_tokens", $"body".cast("string").as("text"))
   }
 
   private def httpConvOracle(n: Int): String = {
@@ -3651,15 +3650,16 @@ object PcapQueries {
     // must be gated, the boilerplate group must collapse to one row
     // with its duplicate count. Scale shape: the packet relation is
     // read and shuffled ONCE — both directions key by the
-    // direction-normalized conversation endpoint, and one typed
-    // aggregation (HttpConversationAgg) reassembles requests and
-    // responses side by side and gates each conversation once in its
-    // finish; then one window on the 16-byte body digest for the dedup.
-    // Two shuffles in all. Bodies are really FRAMED (Content-Length cut
-    // with a pipelined follow-up response to swallow, chunked transfer
-    // coding, gzip content coding — one third of the fixture each) and
-    // the gate de-frames them (HttpParse.deframe) before the quality
-    // checks; see httpToCorpus.
+    // direction-normalized conversation endpoint, sort, and each
+    // conversation's segments go to one HttpConversationAgg reduce +
+    // finish, which reassembles requests and responses side by side and
+    // gates the conversation once — the streaming bridge's own
+    // per-conversation path; then one window on the 16-byte body digest
+    // for the dedup. Two shuffles in all. Bodies are really FRAMED
+    // (Content-Length cut with a pipelined follow-up response to
+    // swallow, chunked transfer coding, gzip content coding — one third
+    // of the fixture each) and the gate de-frames them
+    // (HttpParse.deframe) before the quality checks; see httpToCorpus.
     Q("pcap_http_to_corpus",
       (s, d) => httpToCorpus(s, httpCorpusSynthPath,
         serverPort = 80, docIdBase = 42000),

@@ -31,6 +31,12 @@ import org.apache.spark.sql.functions.{col, expr}
   * and the exchange are skipped outright. The three former copies of
   * this idea (Spread.byKey / Multimodal.spreadIds /
   * MediaDedup.spreadSorted) now share this one implementation.
+  *
+  * [[forGrouping]] serves the pcap→corpus bridge's conversation
+  * grouping (`PcapQueries.httpCorpusGated`). AQE coalesces an exchange
+  * by shuffled BYTES (1 MB minimum), which would put a small capture's
+  * CPU-dense segments in ONE task; a fixed-count exchange is never
+  * coalesced.
   */
 object Spread {
 
@@ -58,6 +64,14 @@ object Spread {
   }
 
   def byKey(df: DataFrame, key: String): DataFrame = byExpr(df, col(key))
+
+  /** [[byExpr]] without the probe, for a grouping on `keys` that
+    * shuffles anyway and so reuses this exchange; identity leaves the
+    * planner's AQE-sized one. */
+  def forGrouping(df: DataFrame, keys: Column*): DataFrame =
+    if (!mightBeNarrow(df)) df
+    else df.repartition(df.sparkSession.sparkContext.defaultParallelism,
+      keys: _*)
 
   /** An id list spread on the id itself — the per-id codec sweeps. */
   def ids(ds: Dataset[Long]): Dataset[Long] = {

@@ -1,10 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoder}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
-import graft.functions.{ConvBuf, ConvSeg, HttpConversationAgg}
+import graft.functions.{ConvBuf, ConvSeg, HttpConversation,
+  HttpConversationAgg}
 
 /** One gated corpus document emitted by the streaming bridge, keyed by
   * the conversation's client endpoint (doc_id derivation happens
@@ -18,20 +18,19 @@ final case class CorpusDocOut(client: String, client_port: Int,
   * gated documents stream out as their conversations quiesce, instead
   * of waiting for a closed capture to re-scan.
   *
-  * Composition: the same direction-normalized conversation key as the
-  * batch bridge, with per-direction reassembly and the document cut in
-  * ONE `flatMapGroupsWithState` stage whose per-conversation state IS
-  * the batch aggregator's buffer ([[graft.functions.ConvBuf]], two
-  * [[graft.functions.ReassemblyBuf]]s): each micro-batch's segments go
-  * through [[HttpConversationAgg]]'s own `reduce`, and the buffer is
+  * Composition: the batch bridge's segment relation and conversation
+  * key ([[graft.functions.HttpConversation.segments]]), with
+  * per-direction reassembly and the document cut in ONE
+  * `flatMapGroupsWithState` stage whose per-conversation state is a
+  * [[graft.functions.ConvBuf]] (two [[graft.functions.ReassemblyBuf]]s):
+  * each micro-batch's segments go through [[HttpConversationAgg]]'s
+  * `reduce`, as the batch bridge's sorted group does, and the buffer is
   * compacted by the shared sweep at the end of the batch. That sweep is
-  * proven monotone under ANY merge order (the batch aggregator's
-  * partition-independence argument), and cross-micro-batch arrival
-  * reordering is exactly that situation — so a segment arriving in a
+  * proven monotone under ANY arrival order, so a segment arriving in a
   * LATER micro-batch with an EARLIER sequence number slots into its
   * sorted position instead of being dropped below a committed frontier
   * (the round-10 arrival-order bug), and the streamed bytes equal the
-  * batch aggregation's BY CONSTRUCTION, for any admission order the
+  * batch bridge's BY CONSTRUCTION, for any admission order the
   * watermark admits. (Events later than the watermark are dropped by
   * the engine — the standard streaming lateness contract; size the
   * watermark delay to the expected admission disorder.)
@@ -49,8 +48,8 @@ final case class CorpusDocOut(client: String, client_port: Int,
   * `idleSeconds` of event time (the watermark-driven
   * `EventTimeTimeout`): streams carry no in-band "response complete"
   * marker, so quiescence IS the close signal. At emission the buffer
-  * goes through the aggregator's own `finish`, and so through the
-  * batch bridge's gate ([[graft.functions.HttpConversation.gate]]:
+  * goes through the same `finish`, and so through the batch bridge's
+  * gate ([[graft.functions.HttpConversation.gate]]:
   * de-frame — all framing state lives in the conversation buffer, so a
   * chunk boundary landing exactly on a micro-batch boundary is
   * invisible — 2xx, the token gates, Host): the two bridges share one
@@ -84,22 +83,11 @@ object CorpusBridgeStream {
         graft.functions.Reassemble.DefaultMaxStreamBytes): DataFrame = {
     val s = packets.sparkSession
     import s.implicits._
-    val segs = packets
-      .filter($"protocol" === "TCP" && $"tcp_seq".isNotNull &&
-        $"payload".isNotNull)
-      .select(
-        when($"dst_port" === serverPort, $"dst").otherwise($"src")
-          .as("server"),
-        when($"dst_port" === serverPort, $"src").otherwise($"dst")
-          .as("client"),
-        when($"dst_port" === serverPort, $"src_port")
-          .otherwise($"dst_port").cast("int").as("client_port"),
-        ($"dst_port" === serverPort).as("is_req"),
-        $"tcp_seq", $"pkt_idx", $"payload", $"time")
+    val segs = HttpConversation.segments(packets, serverPort, $"time")
       .withWatermark("time", watermark)
       .as[SegIn]
     val agg = new HttpConversationAgg(maxBytesPerDirection)
-    implicit val stateEncoder: Encoder[ConvBuf] = agg.bufferEncoder
+    implicit val stateEncoder: Encoder[ConvBuf] = agg.stateEncoder
     val docs = segs
       .groupByKey(x => (x.server, x.client, x.client_port))
       .flatMapGroupsWithState[ConvBuf, CorpusDocOut](
@@ -136,9 +124,7 @@ object CorpusBridgeStream {
               state.getCurrentWatermarkMs() + 1000L))
           Iterator.empty
       }.toDF()
-    val docId =
-      if (docIdBase >= 0) ($"client_port" - docIdBase).cast("long")
-      else xxhash64($"client", $"client_port")
-    docs.select(docId.as("doc_id"), $"host", $"n_tokens", $"body_md5")
+    docs.select(HttpConversation.docId(docIdBase).as("doc_id"), $"host",
+      $"n_tokens", $"body_md5")
   }
 }

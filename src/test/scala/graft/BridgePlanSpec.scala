@@ -3,16 +3,17 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AQEShuffleReadExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The corpus bridge's plan claims, asserted structurally: exactly one
   * pcap scan node in the physical plan (the two-direction + join
-  * formulation planned two), and a final adaptive plan with one
-  * conversation aggregation — two hash exchanges, no sort aggregate, and
-  * no de-frame or split expression in any node, because the gate runs
-  * once per conversation inside the aggregator. */
+  * formulation planned two), and a final adaptive plan that groups each
+  * conversation once — two hash exchanges, the conversation one
+  * core-wide with no AQE shuffle read over it, no aggregate operator,
+  * and no de-frame or split expression in any node, because the gate
+  * runs once per conversation inside the group function. */
 class BridgePlanSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -38,8 +39,9 @@ class BridgePlanSpec extends AnyFunSuite {
     case n => n +: n.children.flatMap(finalNodes)
   }
 
-  test("pcap_http_to_corpus runs as one conversation aggregation: two " +
-      "hash exchanges, no sort aggregate, no per-row deframe or split") {
+  test("pcap_http_to_corpus groups each conversation once: a " +
+      "core-wide uncoalesced conversation exchange, no aggregate, no " +
+      "per-row deframe or split") {
     val df = SparkEntry.queries("pcap_http_to_corpus")(
       spark, "/root/testdata/sf0.001")
     assert(df.collect().nonEmpty)
@@ -49,16 +51,25 @@ class BridgePlanSpec extends AnyFunSuite {
     val shown = root.toString
     assert(nodes.count(_.simpleString(1000).contains("PcapScan(")) == 1,
       shown)
-    val keys = nodes.collect {
-      case e: ShuffleExchangeExec => e.outputPartitioning match {
-        case h: HashPartitioning =>
-          h.expressions.flatMap(_.references.map(_.name)).toSet
-        case other => fail(s"non-hash exchange $other:\n$shown")
-      }
-    }
+    val exchanges = nodes.collect { case e: ShuffleExchangeExec => e }
+    val keys = exchanges.map(e => e.outputPartitioning match {
+      case h: HashPartitioning =>
+        h.expressions.flatMap(_.references.map(_.name)).toSet
+      case other => fail(s"non-hash exchange $other:\n$shown")
+    })
     assert(keys.toSet == Set(Set("server", "client", "client_port"),
       Set("body_md5")) && keys.length == 2, s"exchanges $keys:\n$shown")
-    assert(!nodes.exists(_.nodeName == "SortAggregate"), shown)
+    val conv = exchanges(keys.indexOf(Set("server", "client",
+      "client_port")))
+    assert(conv.shuffleOrigin == REPARTITION_BY_NUM &&
+      conv.numPartitions == spark.sparkContext.defaultParallelism, shown)
+    val reads = nodes.collect { case r: AQEShuffleReadExec =>
+      finalNodes(r.child).collectFirst { case e: ShuffleExchangeExec => e }
+    }.flatten
+    assert(!reads.contains(conv), shown)
+    assert(!nodes.exists(n => Set("ObjectHashAggregate", "SortAggregate",
+      "HashAggregate").contains(n.nodeName)), shown)
+    assert(nodes.exists(_.nodeName == "MapGroups"), shown)
     val perRow = nodes.flatMap(_.expressions).flatMap(_.collect {
       case e if e.prettyName == "http_deframe" || e.prettyName == "split" =>
         e.prettyName
