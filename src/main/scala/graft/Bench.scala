@@ -7,6 +7,24 @@ import org.apache.spark.sql.SparkSession
   * decode proxy on SPARK_GRAFT_SF_DIR, and prints one JSON line the
   * driver collects into BENCH_r{N}.json. */
 object Bench {
+
+  /** The cold policy of a timed rep: drops the [[Memo]] families that,
+    * left warm, would make reps 2-5 of `query` time a memo hit instead
+    * of the operator its number is meant to own — the span relation
+    * (a ~0.1 s lookup instead of the L-gram sweep), the media hash
+    * relations (decode + join), the shingle/signature relations (the
+    * minhash sweep) and the PCA scatter stats (the stats sweep + driver
+    * eigensolve; targeted, so the query block and the IVF-PQ codes of a
+    * similarity query benched later stay warm). OptProfile applies the
+    * same policy. */
+  private[graft] def clearCold(query: String): Unit = Seq(
+    "spans" -> (query.startsWith("text_repeat_spans") ||
+      query == "text_strip_repeat_spans"),
+    "media" -> Seq("mm_dhash", "mm_video", "mm_audio").exists(query.startsWith),
+    "dedup" -> query.startsWith("dedup_"),
+    "sim_pca" -> query.startsWith("sim_pca")
+  ).foreach { case (family, cold) => if (cold) Memo.clear(family) }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -52,31 +70,7 @@ object Bench {
     def timedQuery(name: String): Double =
       if (name == DecodeName) timedDecode()
       else {
-        // the round-10 leak fix memoizes the span relation per dataset;
-        // left warm, every timed rep of the span queries would measure
-        // a memo lookup (~0.1 s) instead of the L-gram sweep — clear it
-        // so the band gate keeps watching the real operator
-        if (name.startsWith("text_repeat_spans") ||
-          name == "text_strip_repeat_spans")
-          graft.operators.TextAnalysis.clearSpanMemo()
-        // same rule for the round-11 media-relation memos: left warm,
-        // reps 2-5 would time a cache hit instead of the decode + join
-        if (name.startsWith("mm_dhash") || name.startsWith("mm_video") ||
-          name.startsWith("mm_audio"))
-          graft.operators.MediaDedup.clearMemos()
-        // same rule for the round-11 shingle/signature memos: left
-        // warm, reps 2-5 of the minhash headline would time a cache
-        // hit instead of the shingle + signature sweep
-        if (name.startsWith("dedup_"))
-          graft.operators.Dedup.clearRelMemos()
-        // round 13: the PCA memo holds the scatter stats — left warm,
-        // reps would time the projection only instead of the one-pass
-        // stats sweep + driver eigensolve the number is meant to own
-        // (targeted: a full clearMemos would also drop the query block
-        // and unpersist the IVF-PQ codes of any similarity query
-        // benched after this one)
-        if (name.startsWith("sim_pca"))
-          graft.operators.Similarity.clearPcaMemo()
+        clearCold(name)
         val t0 = System.nanoTime()
         try {
           SparkEntry.queries(name)(spark, sfDir).count()
@@ -177,14 +171,15 @@ object Bench {
     // (written by the first run above) on disk — times index load +
     // probe for a FRESH session, vs the warm in-memory number in
     // `queries`. Re-training from scratch would be ~5x slower.
-    graft.operators.Similarity.clearMemos()
+    Memo.clear("similarity")
+    Memo.clear("sim_pca")
     val ivfpqCold = timedQuery("sim_ann_ivfpq")
     // cold-start pagerank (round-18, verdict item): the graph memos are
     // deliberately left warm across the timed reps (the artifact policy
     // predates round 17), so the `queries` number is the 20-round loop
     // only. This line is what a FRESH session pays: edge-artifact load
     // from disk + adjacency build + RDD partitioning + the loop.
-    graft.operators.Graph.clearMemos()
+    Memo.clear("graph")
     val pagerankCold = timedQuery("pipeline_pagerank")
     // metadata-only count(*) uplift (round-9): sidecar the bench capture
     // dir once (quiet in-process ETL pass — PcapStatsWriter would print

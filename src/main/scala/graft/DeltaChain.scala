@@ -49,14 +49,10 @@ final class DeltaChain(
 
   private val sidecar = "meta.json"
 
-  private val builds = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.atomic.AtomicInteger]()
-
   /** Full (non-append) builds observed for dataset `d` this session —
     * the artifact specs' proof that cold loads and appends never re-run
-    * the expensive build. */
-  def buildsFor(d: String): Int =
-    Option(builds.get(d)).map(_.get).getOrElse(0)
+    * the expensive build. Counted in [[Memo]] under the chain's subdir. */
+  def buildsFor(d: String): Long = Memo.builds(defaultSubdir, d)
 
   /** Content-addressed artifact dir (shared [[Artifact]] addressing). */
   def dir(s: SparkSession, d: String): java.nio.file.Path =
@@ -220,8 +216,7 @@ final class DeltaChain(
       }
       .orElse(tryAppend(s, d, tablePath, key, delta, merge))
       .getOrElse {
-        builds.computeIfAbsent(d,
-          _ => new java.util.concurrent.atomic.AtomicInteger).incrementAndGet()
+        Memo.countBuild("artifact", defaultSubdir, d)
         val (rel, boundary) = build()
         java.nio.file.Files.createDirectories(aDir)
         rel.write.mode("overwrite")

@@ -18,20 +18,15 @@ object Tables {
     * Tables.scala" setup jobs inside every relational rep). A
     * production deployment reads these tables through a catalog whose
     * schema is known; this memo gives the same effect for path tables.
-    * Keyed on (path, content fingerprint), so a REGENERATED or
-    * APPENDED dataset (the DeltaChain incremental tests deliver new
-    * files into the table dir) re-infers immediately — only the
-    * schema is reused, never file lists or data: every scan still
+    * Guarded by the path's content fingerprint ([[Memo]]), so a
+    * REGENERATED or APPENDED dataset (the DeltaChain incremental tests
+    * deliver new files into the table dir) re-infers immediately — only
+    * the schema is reused, never file lists or data: every scan still
     * plans and reads from the parquet inputs of THIS invocation. */
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      (String, Long), org.apache.spark.sql.types.StructType]()
-
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val key = (path, fingerprint(path))
-    val schema = schemaMemo.computeIfAbsent(key,
-      _ => spark.read.parquet(path).schema)
+    val schema = Memo.value(spark, "schema", "schema", path, path)(
+      spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
   }
 

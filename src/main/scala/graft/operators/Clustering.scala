@@ -88,30 +88,27 @@ object Clustering {
   /** Trained centroids per dataset dir: k x dim plain doubles, ~4 KB.
     * Three battery queries (sim_kmeans_cluster, dedup_semantic,
     * sim_ann_ivf_kmeans) depend on the same model; memoizing the trained
-    * model means the 3-iteration Lloyd job runs once per dataset, and the
-    * training-time embedding cache can be unpersisted as soon as training
-    * finishes instead of living for the session. */
-  private val centMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Long, Seq[Double])]]()
+    * model in [[graft.Memo]] (family "kmeans", guarded by the embeddings
+    * table's content) means the 3-iteration Lloyd job runs once per
+    * dataset, and the training-time embedding cache can be unpersisted
+    * as soon as training finishes instead of living for the session. */
+  private def trained(s: SparkSession, d: String): Seq[(Long, Seq[Double])] =
+    graft.Memo.value(s, "kmeans", "centroids", d,
+      s"$d/embeddings.parquet")(train(s, d))
 
   /** Trained centroid vectors in cid order — the offline-index artifact
     * the IVF-PQ coarse quantizer embeds as a plan literal. Bit-identical
     * to the oracle's `c3` CTE (integer-exact updates, see class doc). */
   private[operators] def trainedCentroidArrays(
       s: SparkSession, d: String): Seq[Seq[Double]] =
-    centMemo.computeIfAbsent(d, _ => train(s, d)).map(_._2)
-
-  /** Test hook (ADVICE r4): memos are keyed by dataset dir only, so a
-    * test that regenerates data at the same path must clear them. */
-  private[graft] def clearMemos(): Unit = centMemo.clear()
+    trained(s, d).map(_._2)
 
   /** The trained model + assignment: (centroids (cid, c), assignment
     * (vec_id, cluster, dist)) after [[Iters]] Lloyd iterations. */
   private[graft] def kmeansCore(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     import s.implicits._
-    val trained = centMemo.computeIfAbsent(d, _ => train(s, d))
-    val cents = trained.toDF("cid", "c")
+    val cents = trained(s, d).toDF("cid", "c")
     // final assignment is one narrow pass over the (uncached) embeddings
     (cents, assign(embDouble(s, d), cents))
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Memo, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -46,54 +46,14 @@ object Dedup {
   // (within one query AND across the battery's dedup queries), so they
   // are cached — but a fresh `.cache()` per invocation stacks
   // plan-identical registrations ("Asked to cache already cached
-  // data", the round-10 advisory's leak class, fixed in MediaDedup the
-  // same round). Same remedy here: ONE cached relation per
-  // (kind, dataset) — builds run outside the map lock (builders nest:
-  // signatures → shingles) and an atomic merge keeps one entry; a
-  // rare concurrent double-build shares the single CacheManager slot.
-  // Dropped via [[clearRelMemos]]; Bench clears per rep so the band
-  // keeps measuring the cold sweep.
-  private val relMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-  private val relBuilds =
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      java.util.concurrent.atomic.AtomicLong]()
-  /** Times the (kind, dataset) relation was actually built — the spec's
-    * proof that repeated consumers ride the memo. */
-  private[graft] def relBuildsFor(kind: String, d: String): Long = {
-    val c = relBuilds.get((kind, d))
-    if (c == null) 0L else c.get()
-  }
-  private[graft] def clearRelMemos(): Unit = {
-    relMemo.forEach { (_, df) =>
-      if (!df.sparkSession.sparkContext.isStopped) df.unpersist()
-    }
-    relMemo.clear()
-  }
-  private def memoizedRel(kind: String, d: String)(build: => DataFrame)
-      : DataFrame = {
-    val k = (kind, d)
-    val prev = relMemo.get(k)
-    if (prev != null && !prev.sparkSession.sparkContext.isStopped)
-      return prev
-    // Build OUTSIDE the map's bin lock: builders memoize recursively
-    // (signatures → shingles), and ConcurrentHashMap forbids a nested
-    // update from inside compute's remapping function when the two
-    // keys share a bin ("Recursive update" — seen once the key set
-    // grew past the default table size). A concurrent double-build is
-    // tolerated; the merge below keeps exactly one cached copy and
-    // the loser unpersists.
-    relBuilds.computeIfAbsent(k,
-      _ => new java.util.concurrent.atomic.AtomicLong()).incrementAndGet()
-    val built = build.cache()
-    // concurrent double-build: the loser must NOT unpersist — both
-    // DataFrames canonicalize to the same plan, so the CacheManager
-    // holds ONE shared entry (the loser's cache() was a no-op) and an
-    // unpersist here would evict the winner's cache. Dropping the
-    // loser reference leaks nothing.
-    relMemo.merge(k, built, (old, nw) =>
-      if (!old.sparkSession.sparkContext.isStopped) old else nw)
-  }
+  // data", the round-10 advisory's leak class). Same remedy as
+  // MediaDedup: ONE cached relation per (kind, dataset) in [[graft.Memo]]
+  // (family "dedup"), guarded by the documents table's content. Bench
+  // clears the family per rep so the band keeps measuring the cold
+  // sweep.
+  private def memoizedRel(s: SparkSession, kind: String, d: String)(
+      build: => DataFrame): DataFrame =
+    Memo.frame(s, "dedup", kind, d, s"$d/documents.parquet")(build)
 
   /** Distinct word 3-gram shingles per document (lowercased, ws-split).
     * Deduplication happens per-document with `array_distinct` BEFORE the
@@ -103,7 +63,7 @@ object Dedup {
     * Cached via the per-dataset memo: the battery's five shingle
     * consumers share one relation. */
   private def shingles(s: SparkSession, d: String): DataFrame =
-    memoizedRel("shingles", d)(shinglesOf(Tables.documents(s, d)))
+    memoizedRel(s, "shingles", d)(shinglesOf(Tables.documents(s, d)))
 
   /** The same shingling over an arbitrary (doc_id, text) relation — the
     * incremental index paths shingle a base SPLIT or a delivery's files
@@ -181,7 +141,7 @@ object Dedup {
     * band frames consume it (at 100 TB: persist to disk or checkpoint
     * — signatures are tiny vs the corpus). */
   private def signatures(s: SparkSession, d: String): DataFrame =
-    memoizedRel("signatures", d)(signaturesOf(shingles(s, d)))
+    memoizedRel(s, "signatures", d)(signaturesOf(shingles(s, d)))
 
   /** MinHash signature (m0..m7) of any (doc_id, shingle) relation —
     * uncached; the full-corpus consumer above caches, the incremental
@@ -247,7 +207,7 @@ object Dedup {
     * bucketCap does not enter the stats, so one relation serves any
     * cap. */
   private def bandStatsRel(s: SparkSession, d: String): DataFrame =
-    memoizedRel("bandstats", d)(bandStats(bandsOf(signatures(s, d))))
+    memoizedRel(s, "bandstats", d)(bandStats(bandsOf(signatures(s, d))))
 
   private[graft] def minhashPairs(s: SparkSession, d: String,
       bucketCap: Int = BucketCap): DataFrame = {
@@ -408,25 +368,8 @@ object Dedup {
     * the DeltaChain sidecar layout). */
   private val IdxFmt = 1L
 
-  private val idxChain = new graft.DeltaChain(
+  private[graft] val idxChain = new graft.DeltaChain(
     "spark.graft.dedupidx.dir", "graft_dedup_idx", IdxFmt, "buckets")
-
-  private val idxMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private[graft] def idxBuildsFor(d: String): Int = idxChain.buildsFor(d)
-  private[graft] def idxAppendsFor(s: SparkSession, d: String): Long =
-    idxChain.appendsFor(s, d)
-  private[graft] def idxPayloadDirsFor(s: SparkSession, d: String)
-      : Seq[String] = idxChain.payloadDirsFor(s, d)
-  private[graft] def idxDir(s: SparkSession, d: String): java.nio.file.Path =
-    idxChain.dir(s, d)
-  private[graft] def clearIdxMemos(): Unit = {
-    idxMemo.forEach { (_, df) =>
-      if (!df.sparkSession.sparkContext.isStopped) df.unpersist()
-    }
-    idxMemo.clear()
-  }
 
   /** Per-bucket summary of a band frame. */
   private def bucketSummary(bands: DataFrame): DataFrame =
@@ -448,11 +391,14 @@ object Dedup {
     * Append boundary: delivered doc_ids must be strictly above the
     * build-time max (a re-delivered doc_id would double-count bcnt). */
   private[graft] def lshBucketIndex(s: SparkSession, d: String): DataFrame = {
-    val memo = idxMemo.get(d)
-    if (memo != null && !memo.sparkSession.sparkContext.isStopped)
-      return memo
-    import s.implicits._
     val tablePath = s"$d/documents.parquet"
+    Memo.frame(s, "dedup_idx", "lsh_index", d, tablePath)(
+      lshBucketIndexOf(s, d, tablePath))
+  }
+
+  private def lshBucketIndexOf(s: SparkSession, d: String,
+      tablePath: String): DataFrame = {
+    import s.implicits._
     def mergeBuckets(df: DataFrame): DataFrame =
       df.groupBy($"band", $"x", $"y")
         .agg(min($"bmin").as("bmin"), sum($"bcnt").as("bcnt"))
@@ -470,13 +416,7 @@ object Dedup {
         else Some((baseBuckets(delivery), bounds.getLong(1)))
       },
       merge = mergeBuckets)
-    val out = mergeBuckets(raw).cache()
-    // two racing first callers both build: unpersist the replaced
-    // entry (the Similarity memo pattern) so the loser's cached
-    // relation doesn't stay pinned for process lifetime
-    Option(idxMemo.put(d, out)).foreach(prev =>
-      if (!prev.sparkSession.sparkContext.isStopped) prev.unpersist())
-    out
+    mergeBuckets(raw)
   }
 
   /** The incremental-dedup screen: band the delivery split's documents
@@ -519,27 +459,9 @@ object Dedup {
   /** Digest-index format version (1 = (h, dmin, dcnt) summary rows). */
   private val DigestIdxFmt = 1L
 
-  private val digestChain = new graft.DeltaChain(
+  private[graft] val digestChain = new graft.DeltaChain(
     "spark.graft.digestidx.dir", "graft_digest_idx", DigestIdxFmt,
     "digests")
-
-  private val digestMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private[graft] def digestBuildsFor(d: String): Int =
-    digestChain.buildsFor(d)
-  private[graft] def digestAppendsFor(s: SparkSession, d: String): Long =
-    digestChain.appendsFor(s, d)
-  private[graft] def digestPayloadDirsFor(s: SparkSession, d: String)
-      : Seq[String] = digestChain.payloadDirsFor(s, d)
-  private[graft] def digestDir(s: SparkSession, d: String)
-      : java.nio.file.Path = digestChain.dir(s, d)
-  private[graft] def clearDigestMemos(): Unit = {
-    digestMemo.forEach { (_, df) =>
-      if (!df.sparkSession.sparkContext.isStopped) df.unpersist()
-    }
-    digestMemo.clear()
-  }
 
   /** Per-digest summary of the base split — shared by the build and
     * delta computations so they cannot disagree on the indexed
@@ -554,11 +476,14 @@ object Dedup {
     * → delta append (delivery files only) → full build, via the shared
     * [[graft.DeltaChain]]; merged across payload dirs on load. */
   private[graft] def digestIndex(s: SparkSession, d: String): DataFrame = {
-    val memo = digestMemo.get(d)
-    if (memo != null && !memo.sparkSession.sparkContext.isStopped)
-      return memo
-    import s.implicits._
     val tablePath = s"$d/documents.parquet"
+    Memo.frame(s, "dedup_digest", "digest_index", d, tablePath)(
+      digestIndexOf(s, d, tablePath))
+  }
+
+  private def digestIndexOf(s: SparkSession, d: String,
+      tablePath: String): DataFrame = {
+    import s.implicits._
     def mergeDigests(df: DataFrame): DataFrame =
       df.groupBy($"h")
         .agg(min($"dmin").as("dmin"), sum($"dcnt").as("dcnt"))
@@ -576,10 +501,7 @@ object Dedup {
         else Some((baseDigestSummary(delivery), bounds.getLong(1)))
       },
       merge = mergeDigests)
-    val out = mergeDigests(raw).cache()
-    Option(digestMemo.put(d, out)).foreach(prev =>
-      if (!prev.sparkSession.sparkContext.isStopped) prev.unpersist())
-    out
+    mergeDigests(raw)
   }
 
   /** The incremental exact-dedup screen: digest the delivery and probe

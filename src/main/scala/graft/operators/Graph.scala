@@ -56,23 +56,6 @@ object Graph {
   // src-partitioned relation, so the 25 iteration joins across the two
   // queries reuse a single edge build AND a single partitioning.
 
-  private val edgeMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private val edgeBuilds = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.atomic.AtomicInteger]()
-  private[graft] def buildsFor(d: String): Int =
-    Option(edgeBuilds.get(d)).map(_.get).getOrElse(0)
-  private[graft] def clearMemos(): Unit = {
-    edgeMemo.forEach { (_, df) =>
-      if (!df.sparkSession.sparkContext.isStopped) df.unpersist()
-    }
-    edgeMemo.clear()
-    adjRddMemo.forEach { (_, v) =>
-      if (!v._1.sparkContext.isStopped) { v._1.unpersist(); v._3.unpersist() }
-    }
-    adjRddMemo.clear()
-  }
-
   /** Persisted-graph format version (1 = distinct-pair weighted edges;
     * 2 = payload-dir list + file inventory + frozen append boundary;
     * 3 = the shared [[graft.DeltaChain]] sidecar layout — the boundary
@@ -91,19 +74,12 @@ object Graph {
     * split would have pairs partially counted in the base artifact, so
     * the delta self-join would UNDERCOUNT its weight — monotone order
     * keys are the contract, violations force a full rebuild). */
-  private val chain = new graft.DeltaChain(
+  private[graft] val chain = new graft.DeltaChain(
     "spark.graft.graph.dir", "graft_graph", GraphFmt, "edges")
 
-  private[graft] def graphDir(s: SparkSession, d: String): java.nio.file.Path =
-    chain.dir(s, d)
-
-  /** Sidecar-recorded payload dirs for `d` (test hook). */
-  private[graft] def payloadDirsFor(s: SparkSession, d: String): Seq[String] =
-    chain.payloadDirsFor(s, d)
-
-  /** Sidecar-recorded append count for `d` (test hook; -1 = none). */
-  private[graft] def appendsFor(s: SparkSession, d: String): Long =
-    chain.appendsFor(s, d)
+  /** The graph memos ([[graft.Memo]] family "graph") all derive from
+    * lineitem. */
+  private def lineitemPath(d: String): String = s"$d/lineitem.parquet"
 
   /** The weighted co-purchase edge relation of a lineitem slice:
     * distinct (order, part) self-join, both directions, counted. Used
@@ -128,20 +104,19 @@ object Graph {
     * src-repartition always cost — no extra shuffle, and downstream
     * consumers keep the distinct-pair invariant (pagerank counts each
     * edge once; LPA's w-threshold sees merged weights). */
-  private[graft] def coPurchaseEdges(s: SparkSession, d: String): DataFrame = {
-    val memo = edgeMemo.get(d)
-    if (memo != null && !memo.sparkSession.sparkContext.isStopped)
-      return memo
+  private[graft] def coPurchaseEdges(s: SparkSession, d: String): DataFrame =
+    graft.Memo.frame(s, "graph", "edges", d, lineitemPath(d))(
+      coPurchaseEdgesOf(s, d))
+
+  private def coPurchaseEdgesOf(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val tablePath = s"$d/lineitem.parquet"
+    val tablePath = lineitemPath(d)
     // staleness key rows: raw lineitem count (a parquet-metadata count,
     // no shuffle — the distinct-pair count would itself cost the join
     // the artifact exists to avoid)
     val edges = chain.payload(s, d, tablePath,
       rows = Tables.lineitem(s, d).count(),
       build = () => {
-        edgeBuilds.computeIfAbsent(d,
-          _ => new java.util.concurrent.atomic.AtomicInteger).incrementAndGet()
         val e = edgeJoin(Tables.lineitem(s, d)
           .select($"l_orderkey", $"l_partkey"))
         val maxOk = Tables.lineitem(s, d).agg(max($"l_orderkey"))
@@ -167,12 +142,9 @@ object Graph {
     // requiredOrdering, so iterations sort only the |V|-row rank/label
     // side. This is the local-mode twin of "bucket + sort the edge
     // table by src on a real cluster" (guide §2.4/§3).
-    val out = edges.repartition($"src")
+    edges.repartition($"src")
       .groupBy($"src", $"dst").agg(sum($"w").as("w"))
       .sortWithinPartitions($"src")
-      .cache()
-    edgeMemo.put(d, out)
-    out
   }
 
   /** Chunked adjacency-list form (src, od, dsts) of a distinct
@@ -204,27 +176,20 @@ object Graph {
 
   /** Memoized co-purchase adjacency at weight threshold `minW`
     * (1 = the full graph for pagerank, [[LpaMinW]] for LPA) — rides the
-    * same per-dataset memo/lifecycle as the edge artifact (keys are
-    * suffixed so [[clearMemos]] drops both). Round 18: no longer
+    * same memo family as the edge artifact. Round 18: no longer
     * `.cache()`d — since the iterative consumers moved to the RDD
     * substrate, this DataFrame is scanned exactly once (by
     * [[adjacencyRdd]]'s build), and paying a columnar cache write for a
     * single read only slowed the cold path (the persisted RDD is the
     * reusable artifact now). */
   private[graft] def coPurchaseAdjacency(s: SparkSession, d: String,
-      minW: Long): DataFrame = {
-    import s.implicits._
-    val key = s"$d#adj$minW"
-    val memo = edgeMemo.get(key)
-    if (memo != null && !memo.sparkSession.sparkContext.isStopped)
-      return memo
-    val e0 = coPurchaseEdges(s, d)
-    val e = (if (minW > 1) e0.filter($"w" >= minW) else e0)
-      .select($"src", $"dst")
-    val out = chunkedAdjacency(e)
-    edgeMemo.put(key, out)
-    out
-  }
+      minW: Long): DataFrame =
+    graft.Memo.value(s, "graph", s"adj$minW", d, lineitemPath(d)) {
+      import s.implicits._
+      val e0 = coPurchaseEdges(s, d)
+      chunkedAdjacency((if (minW > 1) e0.filter($"w" >= minW) else e0)
+        .select($"src", $"dst"))
+    }
 
   // ----- round-18: RDD substrate for the iterative loops ------------------
   // Measured (OptProfile, sf0.1): every pagerank iteration spent ~6.5 s of
@@ -246,32 +211,26 @@ object Graph {
   // equivalence is re-proven by GraphRddLoopSpec (RDD loop == SQL loop
   // bit-for-bit) and the full DuckDB battery.
 
+  private[graft] type AdjRdd =
+    (org.apache.spark.rdd.RDD[(Long, (Long, Array[Long]))],
+     org.apache.spark.HashPartitioner,
+     org.apache.spark.rdd.RDD[(Long, Long)], Long)
+
   /** Memoized (adjacency RDD, partitioner, (node,node) seed RDD, |V|)
     * of the chunked co-purchase adjacency at weight threshold `minW` —
-    * same lifecycle as the DataFrame memos (dropped by [[clearMemos]]).
-    * The seed rides the partitioner so loop state never needs an
+    * same memo family as the DataFrame memos; a release unpersists both
+    * RDDs. The seed rides the partitioner so loop state never needs an
     * alignment shuffle. */
-  private val adjRddMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (org.apache.spark.rdd.RDD[(Long, (Long, Array[Long]))],
-             org.apache.spark.HashPartitioner,
-             org.apache.spark.rdd.RDD[(Long, Long)], Long)]()
-
   private[graft] def adjacencyRdd(s: SparkSession, d: String, minW: Long)
-      : (org.apache.spark.rdd.RDD[(Long, (Long, Array[Long]))],
-         org.apache.spark.HashPartitioner,
-         org.apache.spark.rdd.RDD[(Long, Long)], Long) = {
-    val key = s"$d#rdd$minW"
-    val memo = adjRddMemo.get(key)
-    if (memo != null && !memo._1.sparkContext.isStopped) return memo
-    import s.implicits._
-    val adjDf = coPurchaseAdjacency(s, d, minW)
-    val out = rddFormOf(
-      adjDf.select($"src", $"od", $"dsts").as[(Long, Long, Array[Long])]
+      : AdjRdd =
+    graft.Memo.releasing(s, "graph", s"rdd$minW", d, lineitemPath(d),
+      (v: AdjRdd) => { v._1.unpersist(); v._3.unpersist() }) {
+      import s.implicits._
+      rddFormOf(coPurchaseAdjacency(s, d, minW)
+        .select($"src", $"od", $"dsts").as[(Long, Long, Array[Long])]
         .rdd.map { case (src, od, dsts) => (src, (od, dsts)) },
-      s.sparkContext.defaultParallelism)
-    adjRddMemo.put(key, out)
-    out
-  }
+        s.sparkContext.defaultParallelism)
+    }
 
   /** Hash-partition + persist an adjacency RDD and derive its
     * (node, node) seed (distinct srcs, computed per-partition — the
@@ -279,10 +238,7 @@ object Graph {
     * specs can drive the loops on constructed graphs. */
   private[graft] def rddFormOf(
       raw: org.apache.spark.rdd.RDD[(Long, (Long, Array[Long]))],
-      parallelism: Int)
-      : (org.apache.spark.rdd.RDD[(Long, (Long, Array[Long]))],
-         org.apache.spark.HashPartitioner,
-         org.apache.spark.rdd.RDD[(Long, Long)], Long) = {
+      parallelism: Int): AdjRdd = {
     val part = new org.apache.spark.HashPartitioner(
       math.max(parallelism, raw.getNumPartitions))
     val adj = raw.partitionBy(part)

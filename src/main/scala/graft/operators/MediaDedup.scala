@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, Tables}
+import graft.{Memo, Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -72,9 +72,9 @@ import org.apache.spark.sql.functions._
   * relations are cached — but a fresh `.cache()` per invocation stacks
   * plan-identical cached copies ("Asked to cache already cached data",
   * the round-9 span-relation leak in miniature). Same remedy as
-  * `TextAnalysis.spansMemo`: ONE cached relation per (kind, dataset),
-  * built at most once (`compute` — atomic, no double-cache race),
-  * dropped via [[clearMemos]].
+  * the span memo: ONE cached relation per (kind, dataset) in
+  * [[graft.Memo]] (family "media"), guarded by the documents table's
+  * content.
   *
   * == Fixture ==
   *
@@ -101,42 +101,9 @@ object MediaDedup {
     * 8 bytes clean). */
   private val HammingT = 6
 
-  // ----- per-(kind, dataset) memoized cached relations --------------------
-  private val relMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-  private val buildCounts =
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      java.util.concurrent.atomic.AtomicLong]()
-  /** Times the (kind, dataset) relation was actually built — the spec's
-    * proof that pair/components/second-run consumers ride the memo. */
-  private[graft] def buildsFor(kind: String, d: String): Long = {
-    val c = buildCounts.get((kind, d))
-    if (c == null) 0L else c.get()
-  }
-  private[graft] def clearMemos(): Unit = {
-    relMemo.forEach { (_, df) =>
-      if (!df.sparkSession.sparkContext.isStopped) df.unpersist()
-    }
-    relMemo.clear()
-    buildCounts.clear()
-  }
-  private def memoized(kind: String, d: String)(build: => DataFrame)
-      : DataFrame = {
-    val k = (kind, d)
-    val prev = relMemo.get(k)
-    if (prev != null && !prev.sparkSession.sparkContext.isStopped)
-      return prev
-    // build OUTSIDE the map's bin lock (the Dedup.memoizedRel lesson:
-    // a builder that ever memoizes recursively would hit CHM's
-    // "Recursive update" when two keys share a bin); a rare concurrent
-    // double-build shares the single CacheManager entry, so the merge
-    // loser must NOT unpersist.
-    buildCounts.computeIfAbsent(k,
-      _ => new java.util.concurrent.atomic.AtomicLong()).incrementAndGet()
-    val built = build.cache()
-    relMemo.merge(k, built, (old, nw) =>
-      if (!old.sparkSession.sparkContext.isStopped) old else nw)
-  }
+  private def memoized(s: SparkSession, kind: String, d: String)(
+      build: => DataFrame): DataFrame =
+    Memo.frame(s, "media", kind, d, s"$d/documents.parquet")(build)
 
   /** (media_id, dhash_hi, dhash_lo) for the grouped near-dup fixture:
     * decode the group-base BMP, white out one sampled grid pixel per
@@ -323,7 +290,7 @@ object MediaDedup {
     * relation rides the per-dataset memo so pairs + components + both
     * join sides decode each image exactly once per session. */
   private def imgHashes(s: SparkSession, d: String): DataFrame =
-    memoized("img_dhash", d)(groupedDhashes(s, d))
+    memoized(s, "img_dhash", d)(groupedDhashes(s, d))
 
   private[operators] def dhashPairs(s: SparkSession, d: String): DataFrame = {
     bandedHammingPairs(imgHashes(s, d), "media_id", Nil)
@@ -349,25 +316,8 @@ object MediaDedup {
   /** Band-index format version (1 = (j1,j2,b1,b2,bmin,bcnt) rows). */
   private val MmIdxFmt = 1L
 
-  private val mmIdxChain = new graft.DeltaChain(
+  private[graft] val mmIdxChain = new graft.DeltaChain(
     "spark.graft.mmdhashidx.dir", "graft_mm_dhash_idx", MmIdxFmt, "bands")
-
-  private val mmIdxMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private[graft] def idxBuildsFor(d: String): Int = mmIdxChain.buildsFor(d)
-  private[graft] def idxAppendsFor(s: SparkSession, d: String): Long =
-    mmIdxChain.appendsFor(s, d)
-  private[graft] def idxPayloadDirsFor(s: SparkSession, d: String)
-      : Seq[String] = mmIdxChain.payloadDirsFor(s, d)
-  private[graft] def idxDir(s: SparkSession, d: String): java.nio.file.Path =
-    mmIdxChain.dir(s, d)
-  private[graft] def clearIdxMemos(): Unit = {
-    mmIdxMemo.forEach { (_, df) =>
-      if (!df.sparkSession.sparkContext.isStopped) df.unpersist()
-    }
-    mmIdxMemo.clear()
-  }
 
   /** Per-band-key summary of the base split of an id slice — build and
     * delta share it, so they cannot disagree on the indexed population
@@ -382,11 +332,14 @@ object MediaDedup {
     * above): returned cached, merged across payload dirs. Append
     * boundary: delivered doc_ids strictly above the build-time max. */
   private[graft] def mmDhashIndex(s: SparkSession, d: String): DataFrame = {
-    val memo = mmIdxMemo.get(d)
-    if (memo != null && !memo.sparkSession.sparkContext.isStopped)
-      return memo
-    import s.implicits._
     val tablePath = s"$d/documents.parquet"
+    Memo.frame(s, "media_idx", "mm_dhash_index", d, tablePath)(
+      mmDhashIndexOf(s, d, tablePath))
+  }
+
+  private def mmDhashIndexOf(s: SparkSession, d: String,
+      tablePath: String): DataFrame = {
+    import s.implicits._
     def mergeBands(df: DataFrame): DataFrame =
       df.groupBy($"j1", $"j2", $"b1", $"b2")
         .agg(min($"bmin").as("bmin"), sum($"bcnt").as("bcnt"))
@@ -405,10 +358,7 @@ object MediaDedup {
           bounds.getLong(1)))
       },
       merge = mergeBands)
-    val out = mergeBands(raw).cache()
-    Option(mmIdxMemo.put(d, out)).foreach(prev =>
-      if (!prev.sparkSession.sparkContext.isStopped) prev.unpersist())
-    out
+    mergeBands(raw)
   }
 
   /** The incremental image-dedup screen: decode + hash + band the
@@ -437,7 +387,7 @@ object MediaDedup {
     * members are near-identical (hamming <= 4), not byte-identical, so
     * only a TOLERANT matcher recovers the shared-clip structure. */
   private[graft] def videoFrameHashes(s: SparkSession, d: String)
-      : DataFrame = memoized("video_fh", d) {
+      : DataFrame = memoized(s, "video_fh", d) {
     import s.implicits._
     val vids = Tables.documents(s, d).filter($"doc_id" % 3 === 2)
       .select($"doc_id").as[Long]
@@ -479,7 +429,7 @@ object MediaDedup {
     * lossy decode is pixel-exactly predictable and the oracle derives
     * each frame hash from the closed-form JFIF formula. */
   private[graft] def videoFrameHashesMjpeg(s: SparkSession, d: String)
-      : DataFrame = memoized("video_fh_mjpeg", d) {
+      : DataFrame = memoized(s, "video_fh_mjpeg", d) {
     import s.implicits._
     val vids = Tables.documents(s, d).filter($"doc_id" % 3 === 0)
       .select($"doc_id").as[Long]
@@ -519,7 +469,7 @@ object MediaDedup {
     * (member m drops its first m windows — window-aligned, so the
     * contour suffix is a pure shift). */
   private[graft] def audioLandmarks(s: SparkSession, d: String)
-      : DataFrame = memoized("audio_lm", d) {
+      : DataFrame = memoized(s, "audio_lm", d) {
     import s.implicits._
     val ids = Tables.documents(s, d).filter($"doc_id" % 3 === 1)
       .select($"doc_id").as[Long]
@@ -617,7 +567,7 @@ object MediaDedup {
     * decode per session via the memo. Fixture doc on
     * mm_shot_boundaries. */
   private def shotFrameHashes(s: SparkSession, d: String): DataFrame =
-    memoized("shot_fh", d) {
+    memoized(s, "shot_fh", d) {
       import s.implicits._
       val ids = Tables.documents(s, d).filter($"doc_id" % 3 === 2)
         .select($"doc_id").as[Long]

@@ -36,47 +36,16 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Per-dataset memos of the collected index-build artifacts (trained PQ
-    * codebooks, IVF-PQ coarse centroids + residual codebooks) — tiny
-    * driver arrays; repeat invocations in one session reuse the trained
-    * model instead of re-training (same pattern as
-    * [[Clustering]]'s centroid memo). */
-  private val pqCbMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[Seq[Seq[Double]]]]()
-  private val ivfpqCentMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[Seq[Double]]]()
-  private val ivfpqCbMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[Seq[Seq[Double]]]]()
-  private val queryBlockMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[(Long, Array[Float])]]()
-  /** Encoded-corpus PQ codes per dataset — the rest of the "offline
-    * index build" artifact next to the codebook memos above. Encoding
-    * assigns 16 sub-codes per vector through interpreted lambda
-    * expressions (O(N·M·K) and NOT probe work — a real deployment
-    * persists codes next to the index), so the probe path reuses the
-    * cached result instead of re-encoding the corpus per query.
-    * Unlike the other memos this one holds a SparkSession-bound
-    * DataFrame, so entries built by a since-stopped session are
-    * rebuilt, not replayed into an IllegalStateException. */
-  private val ivfpqCodesMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, DataFrame]()
-
-  private def memoCodes(d: String, build: () => DataFrame): DataFrame =
-    ivfpqCodesMemo.compute(d, (_, prev) =>
-      if (prev != null && !prev.sparkSession.sparkContext.isStopped) prev
-      else build())
-
-  /** Test hook (ADVICE r4): memos are keyed by dataset dir only, so a
-    * test that regenerates data at the same path must clear them. */
-  private[graft] def clearMemos(): Unit = {
-    pqCbMemo.clear(); ivfpqCentMemo.clear(); ivfpqCbMemo.clear()
-    queryBlockMemo.clear(); corpusCountMemo.clear()
-    pcaStatsMemo.clear()
-    ivfpqCodesMemo.forEach { (_, df) =>
-      if (!df.sparkSession.sparkContext.isStopped) df.unpersist()
-    }
-    ivfpqCodesMemo.clear()
-  }
+  /** Per-dataset memos of the index-build artifacts (trained PQ
+    * codebooks, the IVF-PQ model with its encoded corpus, the collected
+    * query block, the corpus count) live in [[graft.Memo]] under family
+    * "similarity", guarded by the embeddings table's content: repeat
+    * invocations in one session reuse the trained model instead of
+    * re-training (same pattern as [[Clustering]]'s centroid memo). */
+  private def memoized[V](s: SparkSession, kind: String, d: String)(
+      build: => V): V =
+    graft.Memo.value(s, "similarity", kind, d, s"$d/embeddings.parquet")(
+      build)
 
   // ----- persisted IVF-PQ index artifact (round-8 verdict #4) -------------
   // A real 100 TB pipeline builds the ANN index offline ONCE and persists
@@ -91,18 +60,6 @@ object Similarity {
   // atomic move, so its presence is the commit marker for the whole
   // artifact; `rows` recorded inside guards against a dataset
   // regenerated at the same path (mismatch -> rebuild).
-
-  /** Per-dataset count of from-scratch index builds — test hook: a cold
-    * load from the persisted artifact must NOT bump it. Keyed by dataset
-    * so a spec driving its own copied dataset is immune to concurrent
-    * suites touching the shared ones. */
-  private val indexBuilds = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.atomic.AtomicInteger]()
-  private def bumpBuilds(d: String): Unit =
-    indexBuilds.computeIfAbsent(d,
-      _ => new java.util.concurrent.atomic.AtomicInteger).incrementAndGet()
-  private[graft] def buildsFor(d: String): Int =
-    Option(indexBuilds.get(d)).map(_.get).getOrElse(0)
 
   /** Artifact location: `spark.graft.ann.indexDir` (or java.io.tmpdir)
     * / md5(dataset dir) — content-addressed by dataset path because the
@@ -245,46 +202,43 @@ object Similarity {
     * NO re-train, no re-encode) -> full offline build, which persists
     * the artifact for the next session. */
   private[graft] def ivfpqIndex(s: SparkSession, d: String, e: DataFrame)
-      : (Seq[Seq[Double]], Seq[Seq[Seq[Double]]], DataFrame) = {
-    val mCent = ivfpqCentMemo.get(d)
-    val mCb = ivfpqCbMemo.get(d)
-    val mCodes = ivfpqCodesMemo.get(d)
-    if (mCent != null && mCb != null && mCodes != null &&
-        !mCodes.sparkSession.sparkContext.isStopped)
-      return (mCent, mCb, mCodes)
-    val rows = e.count() // cold path only: one pruned-scan count
-    loadIndex(s, d, rows) match {
-      case Some((cents, cb, codes)) =>
-        ivfpqCentMemo.put(d, cents); ivfpqCbMemo.put(d, cb)
-        ivfpqCodesMemo.put(d, codes)
-        (cents, cb, codes)
-      case None => tryAppend(s, d, e, rows).getOrElse {
-        import s.implicits._
-        bumpBuilds(d)
-        val cents = ivfpqCentMemo.computeIfAbsent(d, _ =>
-          Clustering.trainedCentroidArrays(s, d))
-        val asgAll = assignAll(e, cents)
-        // residual codebook: Lloyd-trained per subspace over the PRIMARY
-        // residuals only (standard IVFADC training), seeded from the
-        // first 32 residuals; secondary assignments reuse it
-        val cb = ivfpqCbMemo.computeIfAbsent(d, _ =>
-          trainCodebooks(subVectors(
-            asgAll.filter($"arank" === 0).select($"vec_id", $"r"), "r")))
-        val codes = memoCodes(d, () => {
-          // spread before caching — the encode chain rides the
-          // single-file embeddings scan partition (Spread doc)
-          val c = Spread.byKey(encodeAssigned(asgAll, cb), "vec_id").cache()
-          c.count() // materialize the index once, off the probe path
-          c
-        })
-        // build-time quantization quality: the append drift rule's
-        // reference point (one extra small agg, paid at build only)
-        val mq = asgAll.filter($"arank" === 0)
-          .agg(avg($"cd")).first().getDouble(0)
-        writeIndex(s, d, rows, cents, cb, codes, mq)
-        (cents, cb, codes)
-      }
+      : IvfpqModel =
+    graft.Memo.releasing(s, "similarity", "ivfpq", d,
+        s"$d/embeddings.parquet", (m: IvfpqModel) => m._3.unpersist()) {
+      val rows = e.count() // cold path only: one pruned-scan count
+      loadIndex(s, d, rows)
+        .orElse(tryAppend(s, d, e, rows))
+        .getOrElse(buildIndex(s, d, e, rows))
     }
+
+  /** (coarse centroids, residual codebooks, cached encoded corpus). */
+  private type IvfpqModel =
+    (Seq[Seq[Double]], Seq[Seq[Seq[Double]]], DataFrame)
+
+  /** The full offline build: train, encode, persist. Counted as
+    * `Memo.builds("ann_index", d)` — the specs' proof that a cold load
+    * from the persisted artifact never re-trains. */
+  private def buildIndex(s: SparkSession, d: String, e: DataFrame,
+      rows: Long): IvfpqModel = {
+    import s.implicits._
+    graft.Memo.countBuild("artifact", "ann_index", d)
+    val cents = Clustering.trainedCentroidArrays(s, d)
+    val asgAll = assignAll(e, cents)
+    // residual codebook: Lloyd-trained per subspace over the PRIMARY
+    // residuals only (standard IVFADC training), seeded from the
+    // first 32 residuals; secondary assignments reuse it
+    val cb = trainCodebooks(subVectors(
+      asgAll.filter($"arank" === 0).select($"vec_id", $"r"), "r"))
+    // spread before caching — the encode chain rides the single-file
+    // embeddings scan partition (Spread doc)
+    val codes = Spread.byKey(encodeAssigned(asgAll, cb), "vec_id").cache()
+    codes.count() // materialize the index once, off the probe path
+    // build-time quantization quality: the append drift rule's
+    // reference point (one extra small agg, paid at build only)
+    val mq = asgAll.filter($"arank" === 0)
+      .agg(avg($"cd")).first().getDouble(0)
+    writeIndex(s, d, rows, cents, cb, codes, mq)
+    (cents, cb, codes)
   }
 
   /** Redundant top-A coarse assignment of `e` under `cents`:
@@ -447,10 +401,6 @@ object Similarity {
     val codes = Spread.byKey(
       s.read.parquet(dir.resolve(newCdir).toString), "vec_id").cache()
     codes.count()
-    ivfpqCentMemo.put(d, cents)
-    ivfpqCbMemo.put(d, cb)
-    Option(ivfpqCodesMemo.put(d, codes)).foreach(prev =>
-      if (!prev.sparkSession.sparkContext.isStopped) prev.unpersist())
     Some((cents, cb, codes))
   }
 
@@ -639,13 +589,10 @@ object Similarity {
   private[graft] val MaxQueryBlock = 2048L
   private[graft] val QueryIdCap = 50L * MaxQueryBlock
 
-  /** Corpus row count, memoized per dataset (immutable inputs here) so
-    * repeated kernel invocations pay the count once per session. */
-  private val corpusCountMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, java.lang.Long]()
+  /** Corpus row count, memoized per dataset so repeated kernel
+    * invocations pay the count once per session. */
   private def corpusCount(s: SparkSession, d: String): Long =
-    corpusCountMemo.computeIfAbsent(d,
-      _ => Long.box(Tables.embeddings(s, d).count())).longValue()
+    memoized(s, "corpus_count", d)(Tables.embeddings(s, d).count())
 
   /** Fail fast when an exact Q×N scan crosses the flops threshold.
     * |Q| is the 1-in-50 sample capped at [[MaxQueryBlock]], so it
@@ -710,20 +657,15 @@ object Similarity {
   private val PcaScaleS = BigInt(1073741824L)   // 2^30 matrix scale
 
   /** (n, per-dim sums, d×d product sums) of the milli-unit matrix —
-    * ONE narrow pass, d²-bounded output, memoized per dataset. Long
-    * accumulators are exact to ~2.5e13 rows (|m| ≤ ~600 here, products
-    * ≤ 3.6e5); past that the partials would widen to BigInt. */
-  private val pcaStatsMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, Array[Long], Array[Long])]()
-
-  /** Targeted reset for bench reps (the clearSpanMemo/clearRelMemos
-    * pattern): drops ONLY the PCA scatter memo, leaving the query
-    * block and the persisted IVF-PQ codes cache alone. */
-  private[graft] def clearPcaMemo(): Unit = pcaStatsMemo.clear()
-
+    * ONE narrow pass, d²-bounded output, memoized per dataset in its
+    * own [[graft.Memo]] family ("sim_pca"), so a bench rep can drop it
+    * alone, leaving the query block and the IVF-PQ codes cache warm.
+    * Long accumulators are exact to ~2.5e13 rows (|m| ≤ ~600 here,
+    * products ≤ 3.6e5); past that the partials would widen to BigInt. */
   private def pcaStats(s: SparkSession, d: String)
       : (Long, Array[Long], Array[Long]) =
-    pcaStatsMemo.computeIfAbsent(d, _ => {
+    graft.Memo.value(s, "sim_pca", "pca_stats", d,
+        s"$d/embeddings.parquet") {
       import s.implicits._
       Tables.embeddings(s, d).select($"embedding").as[Array[Float]]
         .mapPartitions { it =>
@@ -756,7 +698,7 @@ object Similarity {
           while (i < dim * dim) { a._3(i) += b._3(i); i += 1 }
           (a._1 + b._1, a._2, a._3)
         }
-    })
+    }
 
   /** Top-k principal directions + the floored per-dim milli-unit mean.
     * Components are scaled-integer vectors (max |component| = 2^20);
@@ -833,8 +775,8 @@ object Similarity {
     // MaxQueryBlock (a CONSTANT, O(K) at any corpus size; the id-range
     // cap keeps it from growing with N) — memoized per dataset like
     // the trained codebooks
-    val qRows = queryBlockMemo.computeIfAbsent(d,
-      _ => emb.filter(r => r._1 % 50 == 0 && r._1 < QueryIdCap)
+    val qRows = memoized(s, "query_block", d)(
+      emb.filter(r => r._1 % 50 == 0 && r._1 < QueryIdCap)
         .collect().sortBy(_._1))
     if (qRows.isEmpty)
       // no query vectors -> empty result (grouped() yields no tiles, and
@@ -1632,13 +1574,12 @@ object Similarity {
           .select($"vec_id",
             expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
         // the codebook is M*k tiny sub-vectors (~16 KB) — collect it once
-        // per dataset (memoized like Clustering.centMemo) and embed it as
+        // per dataset (memoized like Clustering's centroids) and embed it as
         // a literal, so BOTH encode and LUT construction are pure per-row
         // projections: the corpus is never shuffled to build the index,
         // which is the whole point of PQ at 100 TB
         val cbData: Seq[Seq[Seq[Double]]] =
-          pqCbMemo.computeIfAbsent(d, _ =>
-            trainCodebooks(subVectors(e, "v")))
+          memoized(s, "pq_codebooks", d)(trainCodebooks(subVectors(e, "v")))
         val cbCol = typedLit(cbData).as("cb")
         val subDists =
           "transform(sequence(0, 15), m -> transform(element_at(cb, m + 1), " +

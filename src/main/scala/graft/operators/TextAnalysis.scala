@@ -106,32 +106,21 @@ object TextAnalysis {
   private val RepeatSpanL = 25
 
   // Both span queries (text_repeat_spans, text_strip_repeat_spans) share
-  // one span build per dataset, memoized the way Graph.edgeMemo /
-  // Similarity.memoCodes are (the round-9 advisory's sanctioned shape):
-  // ONE cached gram relation and ONE cached span relation per dataset,
-  // both lazy — the first consumer materializes them in a single pass
-  // (an eager count here would pay the whole sweep twice: once to
-  // materialize, once for the caller's own action — measured 2.1x on
-  // the bench). Repeated invocations no longer leak per-call cached
-  // copies; clearSpanMemo drops both relations.
+  // one span build per dataset, memoized in [[graft.Memo]] (family
+  // "spans"): ONE cached gram relation and ONE cached span relation per
+  // dataset, both lazy — the first consumer materializes them in a
+  // single pass (an eager count here would pay the whole sweep twice:
+  // once to materialize, once for the caller's own action — measured
+  // 2.1x on the bench). Repeated invocations no longer leak per-call
+  // cached copies; a release unpersists both relations.
   // The gram relation is scaffolding: once the span relation's cached
   // buffers are loaded it is dead weight, so each access checks the
   // cache manager and drops it (pinning a corpus-sized relation for
   // process lifetime would re-introduce the round-9 leak per-dataset).
-  // compute() (not plain put) makes the build atomic so two racing
-  // first callers cannot orphan a cached (grams, spans) pair.
-  private val spansMemo =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-        java.util.concurrent.atomic.AtomicBoolean)]()
-  private[graft] def clearSpanMemo(): Unit = {
-    spansMemo.forEach { (_, gs) =>
-      if (!gs._1.sparkSession.sparkContext.isStopped) {
-        gs._1.unpersist(); gs._2.unpersist()
-      }
-    }
-    spansMemo.clear()
-  }
+  private final case class SpanMemo(grams: org.apache.spark.sql.DataFrame,
+      spans: org.apache.spark.sql.DataFrame,
+      unpinned: java.util.concurrent.atomic.AtomicBoolean)
+
   /** True once `df`'s in-memory buffers have actually materialized (an
     * action ran), not merely been registered with the cache manager. */
   private def cacheLoaded(df: org.apache.spark.sql.DataFrame): Boolean =
@@ -142,25 +131,22 @@ object TextAnalysis {
       .exists(_.cachedRepresentation.cacheBuilder
         .isCachedColumnBuffersLoaded)
   /** Test hook: is the memoized gram relation for `d` still pinned? */
-  private[graft] def gramRelationPinned(d: String): Boolean = {
-    val m = spansMemo.get(d)
-    m != null && !m._3.get()
-  }
+  private[graft] def gramRelationPinned(d: String): Boolean =
+    graft.Memo.peek[SpanMemo]("spans", d).exists(!_.unpinned.get())
   private def repeatSpansDf(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    val memo = spansMemo.compute(d, (_, prev) =>
-      if (prev != null && !prev._1.sparkSession.sparkContext.isStopped)
-        prev
-      else {
-        val grams = repeatGramsDf(s, d).cache()
-        val spans = repeatSpansFromGrams(s, grams).cache()
-        (grams, spans,
-          new java.util.concurrent.atomic.AtomicBoolean(false))
-      })
-    if (!memo._3.get() && cacheLoaded(memo._2)
-        && memo._3.compareAndSet(false, true))
-      memo._1.unpersist()
-    memo._2
+    val memo = graft.Memo.releasing(s, "spans", "spans", d,
+      s"$d/documents.parquet", (m: SpanMemo) => {
+        m.grams.unpersist(); m.spans.unpersist()
+      }) {
+      val grams = repeatGramsDf(s, d).cache()
+      SpanMemo(grams, repeatSpansFromGrams(s, grams).cache(),
+        new java.util.concurrent.atomic.AtomicBoolean(false))
+    }
+    if (!memo.unpinned.get() && cacheLoaded(memo.spans)
+        && memo.unpinned.compareAndSet(false, true))
+      memo.grams.unpersist()
+    memo.spans
   }
 
   private def repeatGramsDf(s: org.apache.spark.sql.SparkSession,

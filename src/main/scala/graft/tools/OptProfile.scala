@@ -70,22 +70,9 @@ object OptProfile {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    def clearMemos(name: String): Unit = {
-      if (name.startsWith("text_repeat_spans") ||
-        name == "text_strip_repeat_spans")
-        graft.operators.TextAnalysis.clearSpanMemo()
-      if (name.startsWith("mm_dhash") || name.startsWith("mm_video") ||
-        name.startsWith("mm_audio"))
-        graft.operators.MediaDedup.clearMemos()
-      if (name.startsWith("dedup_"))
-        graft.operators.Dedup.clearRelMemos()
-      if (name.startsWith("sim_pca"))
-        graft.operators.Similarity.clearPcaMemo()
-    }
-
     names.foreach { n =>
       // warm-up (JIT, codegen, parquet footers) — not collected
-      clearMemos(n)
+      graft.Bench.clearCold(n)
       try graft.SparkEntry.queries(n)(spark, sfDir).count()
       catch { case e: Throwable =>
         println(s"$n WARMUP FAILED: ${e.getMessage}") }
@@ -93,7 +80,7 @@ object OptProfile {
       stages.clear()
       collecting = true
       val walls = (1 to 3).map { _ =>
-        clearMemos(n)
+        graft.Bench.clearCold(n)
         val t0 = System.nanoTime()
         graft.SparkEntry.queries(n)(spark, sfDir).count()
         (System.nanoTime() - t0) / 1e9

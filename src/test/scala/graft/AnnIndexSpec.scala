@@ -55,7 +55,7 @@ class AnnIndexSpec extends AnyFunSuite {
       val sim = graft.operators.Similarity
       val warm = runIvfpq(d)
       assert(warm.nonEmpty)
-      assert(sim.buildsFor(d) == 1, "first run trains + persists")
+      assert(Memo.builds("ann_index", d) == 1, "first run trains + persists")
       val idxDir = sim.annIndexDir(spark, d)
       assert(Files.exists(idxDir.resolve("model.json")),
         "codebook sidecar must be persisted")
@@ -63,9 +63,9 @@ class AnnIndexSpec extends AnyFunSuite {
         "encoded corpus must be persisted as parquet")
 
       // fresh-session cold start: empty memos, artifact on disk
-      sim.clearMemos()
+      Memo.clear("similarity")
       val cold = runIvfpq(d)
-      assert(sim.buildsFor(d) == 1,
+      assert(Memo.builds("ann_index", d) == 1,
         "cold run must load the artifact, not re-train")
       assert(cold == warm, "cold-loaded probe must be bit-identical")
 
@@ -86,10 +86,10 @@ class AnnIndexSpec extends AnyFunSuite {
         .orderBy("vec_id") // deterministic: limit without order depends on scan order
         .limit(50).selectExpr("vec_id + 100000 AS vec_id", "embedding")
       delivery.write.mode("append").parquet(d + "/embeddings.parquet")
-      sim.clearMemos()
+      Memo.clear("similarity")
       val appended = runIvfpq(d)
       assert(appended.nonEmpty)
-      assert(sim.buildsFor(d) == 1,
+      assert(Memo.builds("ann_index", d) == 1,
         "an append-only delivery must NOT retrain (append != rebuild)")
       assert(sim.appendsFor(spark, d) == 1,
         "the sidecar must record the append")
@@ -126,10 +126,10 @@ class AnnIndexSpec extends AnyFunSuite {
       // beat the append (this is what makes append the correct cheap
       // path, not a quality trade)
       deleteRec(Paths.get(idxBase))
-      sim.clearMemos()
-      graft.operators.Clustering.clearMemos()
+      Memo.clear("similarity")
+      Memo.clear("kmeans")
       val annRebuilt = pairs("sim_ann_ivfpq")
-      assert(sim.buildsFor(d) == 2, "artifact nuked → full retrain")
+      assert(Memo.builds("ann_index", d) == 2, "artifact nuked → full retrain")
       val rebuildRecall =
         annRebuilt.intersect(exact).size.toDouble / exact.size
       info(s"full-rebuild recall@5 = $rebuildRecall")
@@ -144,9 +144,9 @@ class AnnIndexSpec extends AnyFunSuite {
         .orderBy("vec_id").limit(70).filter("vec_id >= 50")
         .selectExpr("vec_id + 2000000 AS vec_id", "embedding")
       delivery2.write.mode("append").parquet(d + "/embeddings.parquet")
-      sim.clearMemos()
+      Memo.clear("similarity")
       runIvfpq(d)
-      assert(sim.buildsFor(d) == 2,
+      assert(Memo.builds("ann_index", d) == 2,
         "a delivery after a rebuild must append, not retrain")
       assert(sim.appendsFor(spark, d) == 1,
         "the rebuilt sidecar counts its own appends from zero")
@@ -161,10 +161,10 @@ class AnnIndexSpec extends AnyFunSuite {
         "transform(sequence(1, 64), i -> CAST(i * 1000.0 AS FLOAT)) " +
           "AS embedding")
       shifted.write.mode("append").parquet(d + "/embeddings.parquet")
-      sim.clearMemos()
-      graft.operators.Clustering.clearMemos()
+      Memo.clear("similarity")
+      Memo.clear("kmeans")
       runIvfpq(d)
-      assert(sim.buildsFor(d) == 3,
+      assert(Memo.builds("ann_index", d) == 3,
         "a drifted delivery must force a retrain, not a bad append")
       assert(sim.appendsFor(spark, d) == 0,
         "the rebuild resets the sidecar append count")
@@ -178,17 +178,17 @@ class AnnIndexSpec extends AnyFunSuite {
       Files.setLastModifiedTime(dataFile,
         java.nio.file.attribute.FileTime.fromMillis(
           System.currentTimeMillis() + 10000))
-      sim.clearMemos()
-      graft.operators.Clustering.clearMemos()
+      Memo.clear("similarity")
+      Memo.clear("kmeans")
       runIvfpq(d)
-      assert(sim.buildsFor(d) == 4,
+      assert(Memo.builds("ann_index", d) == 4,
         "a same-cardinality regeneration must rebuild (fingerprint)")
     } finally {
       prev match {
         case Some(v) => spark.conf.set("spark.graft.ann.indexDir", v)
         case None => spark.conf.unset("spark.graft.ann.indexDir")
       }
-      graft.operators.Similarity.clearMemos()
+      Memo.clear("similarity")
     }
   }
 
@@ -205,7 +205,7 @@ class AnnIndexSpec extends AnyFunSuite {
     try {
       val sim = graft.operators.Similarity
       runIvfpq(d)
-      assert(sim.buildsFor(d) == 1)
+      assert(Memo.builds("ann_index", d) == 1)
       assert(sim.codesDirFor(spark, d) == "codes")
       val baseRows = spark.read.parquet(d + "/embeddings.parquet").count()
       val delivery = spark.read
@@ -213,9 +213,9 @@ class AnnIndexSpec extends AnyFunSuite {
         .orderBy("vec_id").limit(50)
         .selectExpr("vec_id + 3000000 AS vec_id", "embedding")
       delivery.write.mode("append").parquet(d + "/embeddings.parquet")
-      sim.clearMemos()
+      Memo.clear("similarity")
       val afterCompact = runIvfpq(d)
-      assert(sim.buildsFor(d) == 1, "compacting append must not retrain")
+      assert(Memo.builds("ann_index", d) == 1, "compacting append must not retrain")
       assert(sim.appendsFor(spark, d) == 1)
       assert(sim.codesDirFor(spark, d) == "codes-c1",
         s"append over the bound must swap the codes dir, " +
@@ -238,19 +238,19 @@ class AnnIndexSpec extends AnyFunSuite {
       assert(dataFiles(idxDir.resolve("codes-c1")) == 1,
         "compaction output must honor the bound, not shuffle.partitions")
       // cold load resolves the swapped dir from the sidecar
-      sim.clearMemos()
+      Memo.clear("similarity")
       assert(runIvfpq(d) == afterCompact,
         "cold load of the compacted artifact must probe identically")
-      assert(sim.buildsFor(d) == 1)
+      assert(Memo.builds("ann_index", d) == 1)
       // and a further delivery appends INTO the compacted dir chain
       val delivery2 = spark.read
         .parquet("/root/testdata/sf0.01/embeddings.parquet")
         .orderBy("vec_id").limit(80).filter("vec_id >= 50")
         .selectExpr("vec_id + 4000000 AS vec_id", "embedding")
       delivery2.write.mode("append").parquet(d + "/embeddings.parquet")
-      sim.clearMemos()
+      Memo.clear("similarity")
       runIvfpq(d)
-      assert(sim.buildsFor(d) == 1)
+      assert(Memo.builds("ann_index", d) == 1)
       assert(sim.appendsFor(spark, d) == 2)
       assert(sim.codesDirFor(spark, d) == "codes-c2")
     } finally {
@@ -262,7 +262,7 @@ class AnnIndexSpec extends AnyFunSuite {
         case Some(v) => spark.conf.set("spark.graft.ann.codesFileBound", v)
         case None => spark.conf.unset("spark.graft.ann.codesFileBound")
       }
-      graft.operators.Similarity.clearMemos()
+      Memo.clear("similarity")
     }
   }
 }

@@ -60,16 +60,16 @@ class DedupIndexSpec extends AnyFunSuite {
         "the fixture must contain deliveries that hit the index")
       assert(first.exists(_._2 == 0L),
         "the fixture must contain clean deliveries (0 hit bands)")
-      assert(dd.idxBuildsFor(d) == 1, "first run builds + persists")
-      assert(Files.exists(dd.idxDir(spark, d).resolve("meta.json")))
-      assert(Files.exists(dd.idxDir(spark, d).resolve("buckets")))
+      assert(dd.idxChain.buildsFor(d) == 1, "first run builds + persists")
+      assert(Files.exists(dd.idxChain.dir(spark, d).resolve("meta.json")))
+      assert(Files.exists(dd.idxChain.dir(spark, d).resolve("buckets")))
       // warm memo: second run, no new build
       assert(run(d) == first)
-      assert(dd.idxBuildsFor(d) == 1)
+      assert(dd.idxChain.buildsFor(d) == 1)
       // cold start: cleared memo, artifact on disk
-      dd.clearIdxMemos()
+      Memo.clear("dedup_idx")
       assert(run(d) == first, "cold load must be identical")
-      assert(dd.idxBuildsFor(d) == 1,
+      assert(dd.idxChain.buildsFor(d) == 1,
         "cold session must load the artifact, not re-shingle the base")
       // regeneration at the same cardinality: only the fingerprint sees
       // it (same-row-count file touched)
@@ -79,16 +79,16 @@ class DedupIndexSpec extends AnyFunSuite {
       Files.setLastModifiedTime(dataFile,
         java.nio.file.attribute.FileTime.fromMillis(
           System.currentTimeMillis() + 10000))
-      dd.clearIdxMemos()
+      Memo.clear("dedup_idx")
       run(d)
-      assert(dd.idxBuildsFor(d) == 2,
+      assert(dd.idxChain.buildsFor(d) == 2,
         "a same-cardinality regeneration must rebuild (fingerprint)")
     } finally {
       prev match {
         case Some(v) => spark.conf.set("spark.graft.dedupidx.dir", v)
         case None => spark.conf.unset("spark.graft.dedupidx.dir")
       }
-      dd.clearIdxMemos()
+      Memo.clear("dedup_idx")
     }
   }
 
@@ -100,58 +100,58 @@ class DedupIndexSpec extends AnyFunSuite {
     spark.conf.set("spark.graft.dedupidx.dir", base)
     try {
       run(d)
-      assert(dd.idxBuildsFor(d) == 1)
-      assert(dd.idxAppendsFor(spark, d) == 0)
+      assert(dd.idxChain.buildsFor(d) == 1)
+      assert(dd.idxChain.appendsFor(spark, d) == 0)
       deliver(d, 60)
-      dd.clearIdxMemos()
+      Memo.clear("dedup_idx")
       val grown = run(d)
-      assert(dd.idxBuildsFor(d) == 1,
+      assert(dd.idxChain.buildsFor(d) == 1,
         "an append-only delivery must NOT re-shingle the base corpus")
-      assert(dd.idxAppendsFor(spark, d) == 1)
-      assert(Files.exists(dd.idxDir(spark, d).resolve("delta-1")))
+      assert(dd.idxChain.appendsFor(spark, d) == 1)
+      assert(Files.exists(dd.idxChain.dir(spark, d).resolve("delta-1")))
       // delivered probe docs (doc_id % 7 == 0 among the new ids) must
       // appear in the grown result
       assert(grown.size > 0)
       // a later cold session loads the appended artifact as-is
-      dd.clearIdxMemos()
+      Memo.clear("dedup_idx")
       assert(run(d) == grown)
-      assert(dd.idxBuildsFor(d) == 1 && dd.idxAppendsFor(spark, d) == 1)
+      assert(dd.idxChain.buildsFor(d) == 1 && dd.idxChain.appendsFor(spark, d) == 1)
       // ground truth: a fresh artifact dir forces the full rebuild over
       // the same grown dataset — results must be identical (the
       // merge-on-load fold reconstructs exactly the full-build summary)
       spark.conf.set("spark.graft.dedupidx.dir",
         Files.createTempDirectory("dedup_idx_fb").toString)
-      dd.clearIdxMemos()
+      Memo.clear("dedup_idx")
       assert(run(d) == grown,
         "appended screen must equal the full rebuild's")
-      assert(dd.idxBuildsFor(d) == 2, "the fresh dir really rebuilt")
+      assert(dd.idxChain.buildsFor(d) == 2, "the fresh dir really rebuilt")
     } finally {
       prev match {
         case Some(v) => spark.conf.set("spark.graft.dedupidx.dir", v)
         case None => spark.conf.unset("spark.graft.dedupidx.dir")
       }
-      dd.clearIdxMemos()
+      Memo.clear("dedup_idx")
     }
   }
 
   test("shingle/signature relations are memoized across dedup " +
       "consumers (no stacked plan-identical caches)") {
     val d = "/root/testdata/sf0.001"
-    dd.clearRelMemos()
+    Memo.clear("dedup")
     // build counters are cumulative across the suite run (another
     // suite may already have built for this dataset) — assert DELTAS
-    val sh0 = dd.relBuildsFor("shingles", d)
-    val sig0 = dd.relBuildsFor("signatures", d)
+    val sh0 = Memo.builds("shingles", d)
+    val sig0 = Memo.builds("signatures", d)
     try {
       SparkEntry.queries("dedup_ngram_jaccard")(spark, d).count()
       SparkEntry.queries("dedup_ppjoin")(spark, d).count()
       SparkEntry.queries("dedup_minhash_lsh")(spark, d).count()
       SparkEntry.queries("dedup_minhash_lsh")(spark, d).count()
-      assert(dd.relBuildsFor("shingles", d) == sh0 + 1,
+      assert(Memo.builds("shingles", d) == sh0 + 1,
         "all shingle consumers must share ONE cached relation")
-      assert(dd.relBuildsFor("signatures", d) == sig0 + 1,
+      assert(Memo.builds("signatures", d) == sig0 + 1,
         "repeated minhash runs must ride the signature memo")
-    } finally dd.clearRelMemos()
+    } finally Memo.clear("dedup")
   }
 
   test("rowBands (per-row HOF signatures, zero shuffle) equals the " +
@@ -190,36 +190,36 @@ class DedupIndexSpec extends AnyFunSuite {
         "the fixture must contain clean delivery docs")
       // every hit's match_doc must be a base-split id (not a probe id)
       assert(first.forall(r => r._2.forall(_ % 7 != 0)))
-      assert(dd.digestBuildsFor(d) == 1)
-      assert(Files.exists(dd.digestDir(spark, d).resolve("meta.json")))
+      assert(dd.digestChain.buildsFor(d) == 1)
+      assert(Files.exists(dd.digestChain.dir(spark, d).resolve("meta.json")))
       // cold session: artifact load, no rebuild
-      dd.clearDigestMemos()
+      Memo.clear("dedup_digest")
       assert(runExact(d) == first)
-      assert(dd.digestBuildsFor(d) == 1,
+      assert(dd.digestChain.buildsFor(d) == 1,
         "cold session must load the artifact, not re-digest the base")
       // strict growth: delta append, then full-rebuild ground truth
       deliver(d, 60)
-      dd.clearDigestMemos()
+      Memo.clear("dedup_digest")
       val grown = runExact(d)
-      assert(dd.digestBuildsFor(d) == 1,
+      assert(dd.digestChain.buildsFor(d) == 1,
         "an append-only delivery must not re-digest the base corpus")
-      assert(dd.digestAppendsFor(spark, d) == 1)
-      assert(Files.exists(dd.digestDir(spark, d).resolve("delta-1")))
+      assert(dd.digestChain.appendsFor(spark, d) == 1)
+      assert(Files.exists(dd.digestChain.dir(spark, d).resolve("delta-1")))
       // the delivery re-keys EXISTING docs, so every delivered probe
       // doc must now hit the index (its text is already indexed unless
       // its original lives on the probe split)
       spark.conf.set("spark.graft.digestidx.dir",
         Files.createTempDirectory("digest_idx_fb").toString)
-      dd.clearDigestMemos()
+      Memo.clear("dedup_digest")
       assert(runExact(d) == grown,
         "appended screen must equal the full rebuild's")
-      assert(dd.digestBuildsFor(d) == 2, "the fresh dir really rebuilt")
+      assert(dd.digestChain.buildsFor(d) == 2, "the fresh dir really rebuilt")
     } finally {
       prev match {
         case Some(v) => spark.conf.set("spark.graft.digestidx.dir", v)
         case None => spark.conf.unset("spark.graft.digestidx.dir")
       }
-      dd.clearDigestMemos()
+      Memo.clear("dedup_digest")
     }
   }
 
@@ -231,27 +231,27 @@ class DedupIndexSpec extends AnyFunSuite {
     spark.conf.set("spark.graft.digestidx.dir", base)
     try {
       val first = runExact(d)
-      assert(dd.digestBuildsFor(d) == 1)
+      assert(dd.digestChain.buildsFor(d) == 1)
       // a tmp cleaner removes the payload dir but the (recently
       // rewritten) sidecar survives — the cold load must fall through
       // to a full rebuild instead of throwing on every query forever
-      val payload = dd.digestDir(spark, d).resolve("digests")
+      val payload = dd.digestChain.dir(spark, d).resolve("digests")
       import scala.jdk.CollectionConverters._
       Files.walk(payload).iterator().asScala.toSeq.reverse
         .foreach(Files.delete)
-      dd.clearDigestMemos()
+      Memo.clear("dedup_digest")
       assert(runExact(d) == first, "rebuild must restore the screen")
-      assert(dd.digestBuildsFor(d) == 2, "the vanished payload rebuilt")
+      assert(dd.digestChain.buildsFor(d) == 2, "the vanished payload rebuilt")
       // and the rebuilt artifact cold-loads again
-      dd.clearDigestMemos()
+      Memo.clear("dedup_digest")
       assert(runExact(d) == first)
-      assert(dd.digestBuildsFor(d) == 2)
+      assert(dd.digestChain.buildsFor(d) == 2)
     } finally {
       prev match {
         case Some(v) => spark.conf.set("spark.graft.digestidx.dir", v)
         case None => spark.conf.unset("spark.graft.digestidx.dir")
       }
-      dd.clearDigestMemos()
+      Memo.clear("dedup_digest")
     }
   }
 
@@ -263,14 +263,14 @@ class DedupIndexSpec extends AnyFunSuite {
     spark.conf.set("spark.graft.dedupidx.dir", base)
     try {
       run(d)
-      assert(dd.idxBuildsFor(d) == 1)
+      assert(dd.idxChain.buildsFor(d) == 1)
       (1 to 7).foreach { k =>
         deliver(d, 20)
-        dd.clearIdxMemos()
+        Memo.clear("dedup_idx")
         run(d)
-        assert(dd.idxBuildsFor(d) == 1, s"delivery $k triggered a rebuild")
-        assert(dd.idxAppendsFor(spark, d) == k)
-        val dirs = dd.idxPayloadDirsFor(spark, d)
+        assert(dd.idxChain.buildsFor(d) == 1, s"delivery $k triggered a rebuild")
+        assert(dd.idxChain.appendsFor(spark, d) == k)
+        val dirs = dd.idxChain.payloadDirsFor(spark, d)
         if (k <= 5) assert(dirs.size == k + 1, s"delivery $k: $dirs")
         else if (k == 6) assert(dirs == Seq("buckets-c6"),
           s"delivery 6 must compact: $dirs")
@@ -280,16 +280,16 @@ class DedupIndexSpec extends AnyFunSuite {
       val appended = run(d)
       spark.conf.set("spark.graft.dedupidx.dir",
         Files.createTempDirectory("dedup_idx_cp_fb").toString)
-      dd.clearIdxMemos()
+      Memo.clear("dedup_idx")
       assert(run(d) == appended,
         "compacted+appended screen must equal the full rebuild's")
-      assert(dd.idxBuildsFor(d) == 2)
+      assert(dd.idxChain.buildsFor(d) == 2)
     } finally {
       prev match {
         case Some(v) => spark.conf.set("spark.graft.dedupidx.dir", v)
         case None => spark.conf.unset("spark.graft.dedupidx.dir")
       }
-      dd.clearIdxMemos()
+      Memo.clear("dedup_idx")
     }
   }
 }

@@ -49,36 +49,36 @@ class GraphArtifactSpec extends AnyFunSuite {
       val g = graft.operators.Graph
       val pr = runPr(d)
       assert(pr.nonEmpty)
-      assert(g.buildsFor(d) == 1, "first run builds + persists")
+      assert(g.chain.buildsFor(d) == 1, "first run builds + persists")
       val lpa = runLpa(d)
       assert(lpa.nonEmpty)
-      assert(g.buildsFor(d) == 1,
+      assert(g.chain.buildsFor(d) == 1,
         "LPA must reuse the edge build pagerank already paid for")
       val kc = runKcore(d)
       assert(kc.nonEmpty)
-      assert(g.buildsFor(d) == 1,
+      assert(g.chain.buildsFor(d) == 1,
         "kcore must ride the shared artifact, not rebuild the self-join")
-      val dir = g.graphDir(spark, d)
+      val dir = g.chain.dir(spark, d)
       assert(Files.exists(dir.resolve("meta.json")),
         "sidecar commit marker must be persisted")
       assert(Files.exists(dir.resolve("edges")),
         "edge relation must be persisted as parquet")
 
       // fresh-session cold start: empty memos, artifact on disk
-      g.clearMemos()
+      Memo.clear("graph")
       assert(runPr(d) == pr, "cold pagerank must be identical")
       assert(runLpa(d) == lpa, "cold LPA must be identical")
       assert(runKcore(d) == kc, "cold kcore must be identical")
-      assert(g.buildsFor(d) == 1,
+      assert(g.chain.buildsFor(d) == 1,
         "cold session must load the artifact, not re-join")
 
       // stale guard: the source table grows underneath the artifact —
       // append a full-schema row by duplicating an existing one
       val one = spark.read.parquet(d + "/lineitem.parquet").limit(1)
       one.write.mode("append").parquet(d + "/lineitem.parquet")
-      g.clearMemos()
+      Memo.clear("graph")
       runPr(d)
-      assert(g.buildsFor(d) == 2,
+      assert(g.chain.buildsFor(d) == 2,
         "a stale artifact (row-count mismatch) must rebuild")
 
       // regeneration at the SAME cardinality: row counts agree, only
@@ -90,16 +90,16 @@ class GraphArtifactSpec extends AnyFunSuite {
       Files.setLastModifiedTime(dataFile,
         java.nio.file.attribute.FileTime.fromMillis(
           System.currentTimeMillis() + 10000))
-      g.clearMemos()
+      Memo.clear("graph")
       runPr(d)
-      assert(g.buildsFor(d) == 3,
+      assert(g.chain.buildsFor(d) == 3,
         "a same-cardinality regeneration must rebuild (fingerprint)")
     } finally {
       prev match {
         case Some(v) => spark.conf.set("spark.graft.graph.dir", v)
         case None => spark.conf.unset("spark.graft.graph.dir")
       }
-      graft.operators.Graph.clearMemos()
+      Memo.clear("graph")
     }
   }
 
@@ -116,7 +116,7 @@ class GraphArtifactSpec extends AnyFunSuite {
         g.coPurchaseEdges(spark, d).collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       edgesSet()
-      assert(g.buildsFor(d) == 1)
+      assert(g.chain.buildsFor(d) == 1)
       // 7 successive monotone deliveries: appends 1..5 accumulate delta
       // dirs, append 6 crosses MaxPayloadDirs and compacts to ONE dir,
       // append 7 starts a fresh chain on top of the compacted dir
@@ -126,11 +126,11 @@ class GraphArtifactSpec extends AnyFunSuite {
         li.orderBy(col("l_orderkey")).limit(40)
           .withColumn("l_orderkey", col("l_orderkey") + maxOk + 1)
           .write.mode("append").parquet(d + "/lineitem.parquet")
-        g.clearMemos()
+        Memo.clear("graph")
         edgesSet()
-        assert(g.buildsFor(d) == 1, s"delivery $k triggered a rebuild")
-        assert(g.appendsFor(spark, d) == k)
-        val dirs = g.payloadDirsFor(spark, d)
+        assert(g.chain.buildsFor(d) == 1, s"delivery $k triggered a rebuild")
+        assert(g.chain.appendsFor(spark, d) == k)
+        val dirs = g.chain.payloadDirsFor(spark, d)
         if (k <= 5) assert(dirs.size == k + 1, s"delivery $k: $dirs")
         else if (k == 6) assert(dirs == Seq("edges-c6"),
           s"delivery 6 must compact: $dirs")
@@ -141,16 +141,16 @@ class GraphArtifactSpec extends AnyFunSuite {
       // ground truth: full rebuild of the 7-times-grown dataset
       spark.conf.set("spark.graft.graph.dir",
         Files.createTempDirectory("graph_art_cp_fb").toString)
-      g.clearMemos()
+      Memo.clear("graph")
       assert(edgesSet() == appended,
         "compacted+appended edges must equal the full rebuild's")
-      assert(g.buildsFor(d) == 2)
+      assert(g.chain.buildsFor(d) == 2)
     } finally {
       prev match {
         case Some(v) => spark.conf.set("spark.graft.graph.dir", v)
         case None => spark.conf.unset("spark.graft.graph.dir")
       }
-      graft.operators.Graph.clearMemos()
+      Memo.clear("graph")
     }
   }
 
@@ -164,8 +164,8 @@ class GraphArtifactSpec extends AnyFunSuite {
     try {
       val g = graft.operators.Graph
       runPr(d)
-      assert(g.buildsFor(d) == 1)
-      assert(g.appendsFor(spark, d) == 0)
+      assert(g.chain.buildsFor(d) == 1)
+      assert(g.chain.appendsFor(spark, d) == 0)
       // the delivery: 100 lineitem rows remapped to order keys ABOVE
       // the build-time max (the monotone append contract) — their
       // parts repeat existing parts, so delta pairs MERGE with base
@@ -175,37 +175,37 @@ class GraphArtifactSpec extends AnyFunSuite {
       li.orderBy(col("l_orderkey")).limit(100)
         .withColumn("l_orderkey", col("l_orderkey") + maxOk + 1)
         .write.mode("append").parquet(d + "/lineitem.parquet")
-      g.clearMemos()
+      Memo.clear("graph")
       val prGrown = runPr(d)
       val lpaGrown = runLpa(d)
-      assert(g.buildsFor(d) == 1,
+      assert(g.chain.buildsFor(d) == 1,
         "an append-only delivery must NOT re-run the full self-join")
-      assert(g.appendsFor(spark, d) == 1,
+      assert(g.chain.appendsFor(spark, d) == 1,
         "the sidecar must record the append")
-      assert(Files.exists(g.graphDir(spark, d).resolve("delta-1")),
+      assert(Files.exists(g.chain.dir(spark, d).resolve("delta-1")),
         "the delta payload dir must be persisted")
       // a later cold session loads the appended artifact (sidecar key
       // now matches the GROWN dataset) without building or appending
-      g.clearMemos()
+      Memo.clear("graph")
       assert(runPr(d) == prGrown, "cold load of appended artifact")
-      assert(g.buildsFor(d) == 1 && g.appendsFor(spark, d) == 1)
+      assert(g.chain.buildsFor(d) == 1 && g.chain.appendsFor(spark, d) == 1)
       // ground truth: a fresh artifact dir forces the full self-join
       // over the same grown dataset — results must be identical (the
       // merge-on-load fold reconstructs exactly the full-build edges)
       spark.conf.set("spark.graft.graph.dir",
         Files.createTempDirectory("graph_art_fb").toString)
-      g.clearMemos()
+      Memo.clear("graph")
       assert(runPr(d) == prGrown,
         "appended pagerank must equal the full rebuild's")
       assert(runLpa(d) == lpaGrown,
         "appended LPA must equal the full rebuild's (merged weights)")
-      assert(g.buildsFor(d) == 2, "the fresh dir really rebuilt")
+      assert(g.chain.buildsFor(d) == 2, "the fresh dir really rebuilt")
     } finally {
       prev match {
         case Some(v) => spark.conf.set("spark.graft.graph.dir", v)
         case None => spark.conf.unset("spark.graft.graph.dir")
       }
-      graft.operators.Graph.clearMemos()
+      Memo.clear("graph")
     }
   }
 }

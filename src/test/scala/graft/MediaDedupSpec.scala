@@ -319,21 +319,21 @@ class MediaDedupSpec extends AnyFunSuite {
 
   test("memoized hash relations: pair/components/second-run consumers " +
       "build each relation exactly once") {
-    graft.operators.MediaDedup.clearMemos()
+    Memo.clear("media")
     SparkEntry.queries("mm_dhash_pairs")(spark, sf).count()
     SparkEntry.queries("mm_dhash_components")(spark, sf).count()
     SparkEntry.queries("mm_dhash_pairs")(spark, sf).count()
-    assert(graft.operators.MediaDedup.buildsFor("img_dhash", sf) == 1,
+    assert(Memo.builds("img_dhash", sf) == 1,
       "image hash relation rebuilt across consumers")
     SparkEntry.queries("mm_video_overlap")(spark, sf).count()
     SparkEntry.queries("mm_video_overlap")(spark, sf).count()
-    assert(graft.operators.MediaDedup.buildsFor("video_fh", sf) == 1,
+    assert(Memo.builds("video_fh", sf) == 1,
       "video frame-hash relation rebuilt across runs")
     SparkEntry.queries("mm_audio_overlap")(spark, sf).count()
     SparkEntry.queries("mm_audio_overlap")(spark, sf).count()
-    assert(graft.operators.MediaDedup.buildsFor("audio_lm", sf) == 1,
+    assert(Memo.builds("audio_lm", sf) == 1,
       "audio landmark relation rebuilt across runs")
-    graft.operators.MediaDedup.clearMemos()
-    assert(graft.operators.MediaDedup.buildsFor("img_dhash", sf) == 0)
+    Memo.clear("media")
+    assert(Memo.builds("img_dhash", sf) == 0)
   }
 }

@@ -59,16 +59,16 @@ class MmDhashIndexSpec extends AnyFunSuite {
       assert(first.exists(_._2 > 0L),
         "the grouped fixture must contain probes that hit the index " +
           "(every non-base group member is within hamming 4 of one)")
-      assert(md.idxBuildsFor(d) == 1, "first run builds + persists")
-      assert(Files.exists(md.idxDir(spark, d).resolve("meta.json")))
-      assert(Files.exists(md.idxDir(spark, d).resolve("bands")))
+      assert(md.mmIdxChain.buildsFor(d) == 1, "first run builds + persists")
+      assert(Files.exists(md.mmIdxChain.dir(spark, d).resolve("meta.json")))
+      assert(Files.exists(md.mmIdxChain.dir(spark, d).resolve("bands")))
       // warm memo: second run, no new build
       assert(run(d) == first)
-      assert(md.idxBuildsFor(d) == 1)
+      assert(md.mmIdxChain.buildsFor(d) == 1)
       // cold start: cleared memo, artifact on disk
-      md.clearIdxMemos()
+      Memo.clear("media_idx")
       assert(run(d) == first, "cold load must be identical")
-      assert(md.idxBuildsFor(d) == 1,
+      assert(md.mmIdxChain.buildsFor(d) == 1,
         "cold session must load the artifact, not re-decode the base")
       // regeneration at the same cardinality: only the fingerprint
       // sees it (same-row-count file touched)
@@ -78,16 +78,16 @@ class MmDhashIndexSpec extends AnyFunSuite {
       Files.setLastModifiedTime(dataFile,
         java.nio.file.attribute.FileTime.fromMillis(
           System.currentTimeMillis() + 10000))
-      md.clearIdxMemos()
+      Memo.clear("media_idx")
       run(d)
-      assert(md.idxBuildsFor(d) == 2,
+      assert(md.mmIdxChain.buildsFor(d) == 2,
         "a same-cardinality regeneration must rebuild (fingerprint)")
     } finally {
       prev match {
         case Some(v) => spark.conf.set("spark.graft.mmdhashidx.dir", v)
         case None => spark.conf.unset("spark.graft.mmdhashidx.dir")
       }
-      md.clearIdxMemos()
+      Memo.clear("media_idx")
     }
   }
 
@@ -99,35 +99,35 @@ class MmDhashIndexSpec extends AnyFunSuite {
     spark.conf.set("spark.graft.mmdhashidx.dir", base)
     try {
       run(d)
-      assert(md.idxBuildsFor(d) == 1)
-      assert(md.idxAppendsFor(spark, d) == 0)
+      assert(md.mmIdxChain.buildsFor(d) == 1)
+      assert(md.mmIdxChain.appendsFor(spark, d) == 0)
       deliver(d, 60)
-      md.clearIdxMemos()
+      Memo.clear("media_idx")
       val grown = run(d)
-      assert(md.idxBuildsFor(d) == 1,
+      assert(md.mmIdxChain.buildsFor(d) == 1,
         "an append-only delivery must NOT re-decode the base corpus")
-      assert(md.idxAppendsFor(spark, d) == 1)
-      assert(Files.exists(md.idxDir(spark, d).resolve("delta-1")))
+      assert(md.mmIdxChain.appendsFor(spark, d) == 1)
+      assert(Files.exists(md.mmIdxChain.dir(spark, d).resolve("delta-1")))
       assert(grown.nonEmpty)
       // a later cold session loads the appended artifact as-is
-      md.clearIdxMemos()
+      Memo.clear("media_idx")
       assert(run(d) == grown)
-      assert(md.idxBuildsFor(d) == 1 && md.idxAppendsFor(spark, d) == 1)
+      assert(md.mmIdxChain.buildsFor(d) == 1 && md.mmIdxChain.appendsFor(spark, d) == 1)
       // ground truth: a fresh artifact dir forces the full rebuild over
       // the same grown dataset — results must be identical (the
       // min/sum merge fold reconstructs exactly the full-build summary)
       spark.conf.set("spark.graft.mmdhashidx.dir",
         Files.createTempDirectory("mm_idx_fb").toString)
-      md.clearIdxMemos()
+      Memo.clear("media_idx")
       assert(run(d) == grown,
         "appended screen must equal the full rebuild's")
-      assert(md.idxBuildsFor(d) == 2, "the fresh dir really rebuilt")
+      assert(md.mmIdxChain.buildsFor(d) == 2, "the fresh dir really rebuilt")
     } finally {
       prev match {
         case Some(v) => spark.conf.set("spark.graft.mmdhashidx.dir", v)
         case None => spark.conf.unset("spark.graft.mmdhashidx.dir")
       }
-      md.clearIdxMemos()
+      Memo.clear("media_idx")
     }
   }
 }

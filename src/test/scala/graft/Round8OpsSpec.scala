@@ -84,7 +84,7 @@ class Round8OpsSpec extends AnyFunSuite {
   test("the span memo drops its corpus-sized gram relation once the " +
       "span relation materializes (round-11 advisory)") {
     val ta = graft.operators.TextAnalysis
-    ta.clearSpanMemo()
+    Memo.clear("spans")
     // first action materializes the cached span relation; the NEXT
     // access must notice and unpersist the gram scaffolding — pinning
     // it for process lifetime would re-introduce the round-9 leak in
@@ -93,7 +93,7 @@ class Round8OpsSpec extends AnyFunSuite {
     SparkEntry.queries("text_strip_repeat_spans")(spark, sf).count()
     assert(!ta.gramRelationPinned(sf),
       "gram relation still pinned after the span relation materialized")
-    ta.clearSpanMemo()
+    Memo.clear("spans")
   }
 
   test("text_strip_repeat_spans removes exactly the detected spans " +

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.nio.file.Files
+import graft.Memo
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -63,12 +64,12 @@ class CorpusScreenStreamSpec extends AnyFunSuite {
     val prev = spark.conf.getOption("spark.graft.digestidx.dir")
     spark.conf.set("spark.graft.digestidx.dir", art)
     try {
-      dd.clearDigestMemos()
+      Memo.clear("dedup_digest")
       val twin = twinRows() // also builds + persists the index (once)
       assert(twin.nonEmpty && twin.exists(_._3 > 0L) &&
         twin.exists(_._3 == 0L),
         "twin must contain both hits and clean rows")
-      val builds = dd.digestBuildsFor(sf)
+      val builds = dd.digestChain.buildsFor(sf)
       landWaves(land, waves = 3, which = 0 until 3)
       // wave dirs hold one parquet file each; stream admits one FILE
       // per trigger, so the delivery spans >= 3 micro-batches
@@ -83,14 +84,14 @@ class CorpusScreenStreamSpec extends AnyFunSuite {
       finally query.stop()
       assert(sinkRows("screen1") == twin,
         "streamed rows must equal the batch twin exactly")
-      assert(dd.digestBuildsFor(sf) == builds,
+      assert(dd.digestChain.buildsFor(sf) == builds,
         "the stream must ride the persisted index, not rebuild it")
     } finally {
       prev match {
         case Some(v) => spark.conf.set("spark.graft.digestidx.dir", v)
         case None => spark.conf.unset("spark.graft.digestidx.dir")
       }
-      dd.clearDigestMemos()
+      Memo.clear("dedup_digest")
     }
   }
 
@@ -106,11 +107,11 @@ class CorpusScreenStreamSpec extends AnyFunSuite {
     val prev = spark.conf.getOption("spark.graft.dedupidx.dir")
     spark.conf.set("spark.graft.dedupidx.dir", art)
     try {
-      dd.clearIdxMemos()
+      Memo.clear("dedup_idx")
       val twin = lshTwinRows() // builds + persists the bucket index
       assert(twin.nonEmpty,
         "re-keyed near-identical deliveries must hit index buckets")
-      val builds = dd.idxBuildsFor(sf)
+      val builds = dd.idxChain.buildsFor(sf)
       landWaves(land, waves = 3, which = 0 until 3)
       val query = CorpusScreenStream.lshScreened(spark, sf,
           land.toString + "/wave*")
@@ -125,14 +126,14 @@ class CorpusScreenStreamSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
       assert(got == twin,
         "streamed (doc, band, bmin) rows must equal the batch twin")
-      assert(dd.idxBuildsFor(sf) == builds,
+      assert(dd.idxChain.buildsFor(sf) == builds,
         "the stream must ride the persisted bucket index")
     } finally {
       prev match {
         case Some(v) => spark.conf.set("spark.graft.dedupidx.dir", v)
         case None => spark.conf.unset("spark.graft.dedupidx.dir")
       }
-      dd.clearIdxMemos()
+      Memo.clear("dedup_idx")
     }
   }
 
@@ -150,11 +151,11 @@ class CorpusScreenStreamSpec extends AnyFunSuite {
     val prev = spark.conf.getOption("spark.graft.mmdhashidx.dir")
     spark.conf.set("spark.graft.mmdhashidx.dir", art)
     try {
-      md.clearIdxMemos()
+      Memo.clear("media_idx")
       val twin = dhashTwinRows() // builds + persists the band index
       assert(twin.nonEmpty,
         "re-keyed re-fetched images must hit index band keys")
-      val builds = md.idxBuildsFor(sf)
+      val builds = md.mmIdxChain.buildsFor(sf)
       // land the image delivery in 3 single-file waves
       val rows = md.dhashDelivery(spark, sf)
         .orderBy(org.apache.spark.sql.functions.col("doc_id")).collect()
@@ -183,7 +184,7 @@ class CorpusScreenStreamSpec extends AnyFunSuite {
         .toSet
       assert(got == twin,
         "streamed (doc, j1, j2, bmin) rows must equal the batch twin")
-      assert(md.idxBuildsFor(sf) == builds,
+      assert(md.mmIdxChain.buildsFor(sf) == builds,
         "the stream must ride the persisted band index, not re-decode " +
           "the base corpus")
     } finally {
@@ -191,7 +192,7 @@ class CorpusScreenStreamSpec extends AnyFunSuite {
         case Some(v) => spark.conf.set("spark.graft.mmdhashidx.dir", v)
         case None => spark.conf.unset("spark.graft.mmdhashidx.dir")
       }
-      md.clearIdxMemos()
+      Memo.clear("media_idx")
     }
   }
 
@@ -203,7 +204,7 @@ class CorpusScreenStreamSpec extends AnyFunSuite {
     val prev = spark.conf.getOption("spark.graft.digestidx.dir")
     spark.conf.set("spark.graft.digestidx.dir", art)
     try {
-      dd.clearDigestMemos()
+      Memo.clear("dedup_digest")
       val twin = twinRows()
       landWaves(land, waves = 3, which = 0 until 2)
       val out = Files.createTempDirectory("screen_out")
@@ -246,7 +247,7 @@ class CorpusScreenStreamSpec extends AnyFunSuite {
         case Some(v) => spark.conf.set("spark.graft.digestidx.dir", v)
         case None => spark.conf.unset("spark.graft.digestidx.dir")
       }
-      dd.clearDigestMemos()
+      Memo.clear("dedup_digest")
     }
   }
 }
