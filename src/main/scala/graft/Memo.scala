@@ -12,7 +12,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * An entry is keyed on (kind, d): `kind` names the artifact, `d` the
   * dataset (or table path) it was built for. It belongs to a family,
   * the unit [[clear]] drops. It records the [[Tables.fingerprint]] of
-  * the table it derives from and the SparkContext it was built in; a
+  * the table it derives from (or a guard its caller folded from a
+  * listing it already holds) and the SparkContext it was built in; a
   * hit whose fingerprint differs (the table was rewritten or grew in
   * place) or whose context has stopped is released and rebuilt.
   *
@@ -82,8 +83,21 @@ object Memo {
     * `release` frees it (cached relations, persisted RDDs) when the
     * entry is cleared or replaced. */
   def releasing[V](s: SparkSession, family: String, kind: String,
-      d: String, source: String, release: V => Unit)(build: => V): V = {
-    val fp = Tables.fingerprint(source)
+      d: String, source: String, release: V => Unit)(build: => V): V =
+    guarded[V](s, family, kind, d, Tables.fingerprint(source), release)(
+      build)
+
+  /** [[value]] guarded by a fingerprint the caller already holds, for a
+    * source that [[Tables.fingerprint]] would have to list again (the
+    * pcap scan folds its sidecars' statuses from the listing it made
+    * anyway). A caller that must not be served a hit passes a guard no
+    * entry was built under. */
+  def value[V](s: SparkSession, family: String, kind: String, d: String,
+      guard: Long)(build: => V): V =
+    guarded[V](s, family, kind, d, guard, _ => ())(build)
+
+  private def guarded[V](s: SparkSession, family: String, kind: String,
+      d: String, fp: Long, release: V => Unit)(build: => V): V = {
     val sl = slot(family, kind, d)
     val cur = sl.current
     if (cur != null) {

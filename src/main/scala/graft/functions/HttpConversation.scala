@@ -1,7 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions.{col, when, xxhash64}
+import org.apache.spark.sql.types.LongType
 
 /** One TCP segment of an HTTP conversation, tagged with its direction.
   * Field names are the bridge's column names, so the segment relation
@@ -70,6 +72,20 @@ class HttpConversationAgg(maxBytesPerDirection: Long) extends Serializable {
 object HttpConversation {
   val Rejected: CorpusDoc = CorpusDoc(ok = false, null, 0L, null)
 
+  /** The direction-normalized conversation key: (server, client,
+    * client_port). */
+  type ConvKey = (String, String, Int)
+
+  // Both bridges' typed encoders, derived once: each derivation reflects
+  // over the product type, which a per-query `implicits` lookup repeats
+  // on every bridge construction
+  val keyEncoder: Encoder[ConvKey] = ExpressionEncoder[ConvKey]()
+  val segEncoder: Encoder[ConvSeg] = ExpressionEncoder[ConvSeg]()
+  /** The batch bridge's document row: (client, client_port, host,
+    * n_tokens, body). */
+  val docRowEncoder: Encoder[(String, Int, String, Long, Array[Byte])] =
+    ExpressionEncoder[(String, Int, String, Long, Array[Byte])]()
+
   private val HostHeader =
     java.util.regex.Pattern.compile(HttpParse.headerRegex("Host"))
   private val Utf8 = java.nio.charset.StandardCharsets.UTF_8
@@ -118,6 +134,6 @@ object HttpConversation {
   /** Both bridges' doc_id: `client_port - docIdBase` when
     * `docIdBase >= 0`, else a 64-bit hash of the client endpoint. */
   def docId(docIdBase: Int): Column =
-    if (docIdBase >= 0) (col("client_port") - docIdBase).cast("long")
+    if (docIdBase >= 0) (col("client_port") - docIdBase).cast(LongType)
     else xxhash64(col("client"), col("client_port"))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import graft.{Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, LongType, StringType}
 
 /** Queries over the `pcap` source itself (SURVEY.md §2A) — the reference's
   * own demonstrated workloads re-expressed on our DSv2 format.
@@ -1822,14 +1823,14 @@ object PcapQueries {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     httpCorpusGated(s, path, serverPort, docIdBase)
-      .withColumn("body_md5", md5($"text".cast("binary")))
+      .withColumn("body_md5", md5($"text".cast(BinaryType)))
       .withColumn("rn", row_number().over(
         Window.partitionBy($"body_md5").orderBy($"doc_id")))
       .withColumn("n_dups",
         count(lit(1)).over(Window.partitionBy($"body_md5")))
       .filter($"rn" === 1)
       .select($"doc_id", $"host", $"n_tokens",
-        $"n_dups".cast("long").as("n_dups"), $"body_md5")
+        $"n_dups".cast(LongType).as("n_dups"), $"body_md5")
   }
 
   /** The bridge's GATED pre-dedup relation (doc_id, host, n_tokens,
@@ -1853,19 +1854,23 @@ object PcapQueries {
         graft.functions.Reassemble.DefaultMaxStreamBytes): DataFrame = {
     import s.implicits._
     import graft.functions.{ConvSeg, HttpConversation, HttpConversationAgg}
+    import HttpConversation.ConvKey
     val keys = Seq($"server", $"client", $"client_port")
     val segs = HttpConversation.segments(s.read.format("pcap").load(path),
       serverPort)
     val agg = new HttpConversationAgg(maxBytesPerDirection)
     Spread.forGrouping(segs, keys: _*)
-      .groupBy(keys: _*).as[(String, String, Int), ConvSeg]
-      .flatMapGroups { (k: (String, String, Int), rows: Iterator[ConvSeg]) =>
+      .groupBy(keys: _*)
+      .as[ConvKey, ConvSeg](HttpConversation.keyEncoder,
+        HttpConversation.segEncoder)
+      .flatMapGroups { (k: ConvKey, rows: Iterator[ConvSeg]) =>
         val d = agg.finish(rows.foldLeft(agg.zero)(agg.reduce))
         if (d.ok) Iterator.single((k._2, k._3, d.host, d.n_tokens, d.body))
         else Iterator.empty
-      }.toDF("client", "client_port", "host", "n_tokens", "body")
+      }(HttpConversation.docRowEncoder)
+      .toDF("client", "client_port", "host", "n_tokens", "body")
       .select(HttpConversation.docId(docIdBase).as("doc_id"), $"host",
-        $"n_tokens", $"body".cast("string").as("text"))
+        $"n_tokens", $"body".cast(StringType).as("text"))
   }
 
   private def httpConvOracle(n: Int): String = {

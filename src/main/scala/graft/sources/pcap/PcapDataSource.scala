@@ -46,7 +46,16 @@ import graft.sources.HadoopConfBroadcast
   *   - `.gz` (any Hadoop codec) transparently decompressed, matching
   *     PcapInputFormat.java:46-49;
   *   - the Hadoop conf reaches executors as one per-session broadcast
-  *     ([[graft.sources.HadoopConfBroadcast]]), never inside a task.
+  *     ([[graft.sources.HadoopConfBroadcast]]), never inside a task;
+  *   - every query lists its directories once, so new files show, but
+  *     opens no `.tsidx` sidecar the session has already read: the
+  *     sidecar stats come from one `graft.Memo` entry per listed
+  *     directory, guarded by the (name, length, mtime) of the sidecars
+  *     in that same listing, and a sidecar within
+  *     [[PcapTsIndex.RacyMarginMs]] of the listing is read again until
+  *     it is older ([[PcapTsIndex.listedStats]]). The scan reports the
+  *     files listed and pruned and the sidecars read and served from the
+  *     memo as driver metrics ([[PcapScanMetrics]]).
   *
   * Options: `decoder` = `ip` (default) | `dns`; `md5` = `true` to compute
   * the frame digest (reference conf flag
@@ -115,12 +124,22 @@ object PcapTable {
     * file set or a pushed count could cover different files than a
     * scan would read). */
   def listDataFiles(options: CaseInsensitiveStringMap,
-      conf: Configuration): Seq[FileStatus] = {
+      conf: Configuration): Seq[FileStatus] = list(options, conf).files
+
+  /** [[listDataFiles]] with, for each directory it lists, the statuses
+    * of the captures' sidecars that the same `listStatus` call returned:
+    * a capture whose sidecar is not among them has none, and needs no
+    * `exists` call. A capture matched directly (a single-file path, a
+    * glob) carries no listed sidecars. */
+  def list(options: CaseInsensitiveStringMap,
+      conf: Configuration): PcapListing = {
     graft.sources.ListingStats.listings.increment()
     val declared = paths(options)
     if (declared.isEmpty)
       throw new IllegalArgumentException("pcap source requires a path")
-    declared.flatMap { p =>
+    val files = IndexedSeq.newBuilder[FileStatus]
+    val dirs = IndexedSeq.newBuilder[PcapTsIndex.ListedSidecars]
+    declared.foreach { p =>
       val path = new Path(p)
       val fs = path.getFileSystem(conf)
       val matches = Option(fs.globStatus(path)).map(_.toSeq).getOrElse {
@@ -128,12 +147,52 @@ object PcapTable {
       }
       if (matches.isEmpty)
         throw new java.io.FileNotFoundException(s"pcap path does not exist: $p")
-      matches.flatMap { st =>
-        if (st.isDirectory)
-          fs.listStatus(st.getPath).toSeq.filter(_.isFile)
-            .filter(s => isDataFile(s.getPath.getName))
-        else Seq(st)
-      }.filterNot(st => PcapTsIndex.isSidecar(st.getPath.getName))
+      matches.foreach { st =>
+        if (st.isDirectory) {
+          val listedAt = System.currentTimeMillis()
+          val (sidecars, data) = fs.listStatus(st.getPath).filter(_.isFile)
+            .partition(s => PcapTsIndex.isSidecar(s.getPath.getName))
+          val kept = data.filter(s => isDataFile(s.getPath.getName))
+          val names = kept.map(_.getPath.getName + PcapTsIndex.SidecarSuffix)
+            .toSet
+          val listed = new PcapTsIndex.ListedSidecars(st.getPath.toString,
+            fs, sidecars.filter(s => names(s.getPath.getName))
+              .sortBy(_.getPath.getName), listedAt)
+          kept.foreach { f => files += f; dirs += listed }
+        } else if (!PcapTsIndex.isSidecar(st.getPath.getName)) {
+          files += st; dirs += null
+        }
+      }
+    }
+    new PcapListing(files.result(), dirs.result(), conf)
+  }
+}
+
+/** One scan build's listing: its data files and, per file, the listed
+  * sidecars of its directory (null for a file matched directly). The
+  * sidecar stats are read once per listing, and only when a query needs
+  * them (a ts window or a metadata aggregate). */
+final class PcapListing(val files: IndexedSeq[FileStatus],
+    dirs: IndexedSeq[PcapTsIndex.ListedSidecars], conf: Configuration) {
+
+  val reads = new PcapTsIndex.SidecarReads
+
+  /** Per file, its sidecar's (min ts, max ts, count), if it has one. */
+  lazy val stats: IndexedSeq[Option[(Long, Long, Option[Long])]] = {
+    val tables =
+      scala.collection.mutable.HashMap[PcapTsIndex.ListedSidecars,
+        PcapTsIndex.SidecarTable]()
+    files.indices.map { i =>
+      val f = files(i).getPath
+      dirs(i) match {
+        case null =>
+          val st = PcapTsIndex.readSidecarStats(f.getFileSystem(conf), f)
+          if (st.isDefined) reads.read.increment()
+          st
+        case d =>
+          tables.getOrElseUpdate(d, PcapTsIndex.listedStats(d, reads))
+            .stats(f.getName + PcapTsIndex.SidecarSuffix)
+      }
     }
   }
 }
@@ -221,31 +280,26 @@ class PcapScanBuilder(options: CaseInsensitiveStringMap)
   private lazy val hadoopConf: Configuration =
     SparkSession.active.sessionState.newHadoopConf()
 
-  private lazy val listedFilesMemo: Seq[FileStatus] =
-    PcapTable.listDataFiles(options, hadoopConf)
+  private lazy val listing: PcapListing =
+    PcapTable.list(options, hadoopConf)
 
   private def sidecarStats(): Option[(Long, Long, Option[Long])] = {
-    val files = listedFilesMemo
-    if (files.isEmpty) return None
+    if (listing.files.isEmpty) return None
     var mn = Long.MaxValue
     var mx = Long.MinValue
     var total: Option[Long] = Some(0L)
-    files.foreach { st =>
-      PcapTsIndex.readSidecarStats(
-          st.getPath.getFileSystem(hadoopConf), st.getPath) match {
-        case Some((lo, hi, n)) =>
-          mn = math.min(mn, lo)
-          mx = math.max(mx, hi)
-          total = for (t <- total; c <- n) yield t + c
-        case None => return None
-      }
+    listing.stats.foreach {
+      case Some((lo, hi, n)) =>
+        mn = math.min(mn, lo)
+        mx = math.max(mx, hi)
+        total = for (t <- total; c <- n) yield t + c
+      case None => return None
     }
     Some((mn, mx, total))
   }
 
   // Memoized: the planner probes supportCompletePushDown AND
-  // pushAggregation, and each sidecarStats() is a driver-side directory
-  // listing plus one sidecar read per capture — pay it once per builder.
+  // pushAggregation; fold the listing's sidecar stats once per builder.
   private lazy val sidecarStatsMemo: Option[(Long, Long, Option[Long])] =
     sidecarStats()
 
@@ -276,16 +330,18 @@ class PcapScanBuilder(options: CaseInsensitiveStringMap)
         case 'c' => total.get
         case 'n' => mn
         case 'x' => mx
-      })
+      }, listing)
     case _ => new PcapScan(required, options, pushed, hadoopConf,
-      () => listedFilesMemo)
+      () => listing)
   }
 }
 
 /** The metadata-only stats scan: one partition, one row, the pushed
   * COUNT(*)/MIN(ts)/MAX(ts) values in aggregate order — no capture
-  * file is ever opened. */
-class PcapStatsScan(values: Seq[Long]) extends Scan with Batch {
+  * file is ever opened. `listing` is the one its values were folded
+  * from. */
+class PcapStatsScan(values: Seq[Long], listing: PcapListing)
+  extends Scan with Batch {
   override def readSchema(): StructType = {
     var st = new StructType()
     values.indices.foreach(i => st = st.add(s"stat_$i",
@@ -299,6 +355,12 @@ class PcapStatsScan(values: Seq[Long]) extends Scan with Batch {
     Array(PcapStatsPartition(values))
   override def createReaderFactory(): PartitionReaderFactory =
     new PcapStatsReaderFactory
+  override def supportedCustomMetrics():
+      Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+    PcapScanMetrics.driver
+  override def reportDriverMetrics():
+      Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    PcapScanMetrics.report(listing, pruned = 0)
 }
 
 case class PcapStatsPartition(values: Seq[Long]) extends InputPartition
@@ -325,7 +387,7 @@ class PcapStatsReaderFactory extends PartitionReaderFactory {
 class PcapScan(requiredSchema: StructType, options: CaseInsensitiveStringMap,
     val pushedFilters: Array[org.apache.spark.sql.sources.Filter],
     hadoopConf: Configuration,
-    listed: () => Seq[FileStatus])
+    listed: () => PcapListing)
   extends Scan with Batch
   with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
@@ -357,7 +419,12 @@ class PcapScan(requiredSchema: StructType, options: CaseInsensitiveStringMap,
   // (PcapRecordReader.java:66-76, SURVEY.md §2A op 6)
   override def supportedCustomMetrics():
       Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    Array(new PcapPacketsMetric, new PcapBytesMetric)
+    Array(new PcapPacketsMetric, new PcapBytesMetric) ++ PcapScanMetrics.driver
+
+  override def reportDriverMetrics():
+      Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    PcapScanMetrics.report(listed(),
+      pruned = listed().files.length - prunedFilesMemo.length)
 
   // Spark builds a micro-batch scan without filter pushdown (a streaming
   // query's filters stay post-scan), so no pushed filter is lost here
@@ -376,18 +443,17 @@ class PcapScan(requiredSchema: StructType, options: CaseInsensitiveStringMap,
     * first/last-record probe; files without stats always survive, and
     * the decoder still applies the pushed bounds to every packet of a
     * kept file. */
-  private def pruneByTs(files: Seq[FileStatus]): Seq[FileStatus] =
+  private def pruneByTs(listing: PcapListing): Seq[FileStatus] = {
+    val files = listing.files
     PcapTsIndex.tsBounds(pushedFilters) match {
       case Some((lo, hi)) if options.getBoolean("tsPruning", true) =>
-        val conf = hadoopConf
         val assumeMono = options.getBoolean("assumeMonotonicTs", false)
-        val kept = files.filter { st =>
-          val stats = PcapTsIndex
-            .readSidecar(st.getPath.getFileSystem(conf), st.getPath)
-            .orElse(if (assumeMono) PcapTsIndex.firstLastTs(conf, st)
-                    else None)
+        val kept = files.indices.filter { i =>
+          val stats = listing.stats(i).map { case (mn, mx, _) => (mn, mx) }
+            .orElse(if (assumeMono) PcapTsIndex.firstLastTs(hadoopConf,
+              files(i)) else None)
           stats.forall { case (mn, mx) => mx >= lo && mn <= hi }
-        }
+        }.map(files)
         val dropped = files.length - kept.length
         if (dropped > 0) {
           PcapTsIndex.prunedFiles.add(dropped.toLong)
@@ -398,6 +464,7 @@ class PcapScan(requiredSchema: StructType, options: CaseInsensitiveStringMap,
         kept
       case _ => files
     }
+  }
 
   /** Whole-file partitions, bin-packed to maxPartitionBytes
     * (best-fit decreasing via [[graft.sources.BinPack]] — O(n log n)
@@ -465,6 +532,39 @@ class PcapPacketsMetric extends org.apache.spark.sql.connector.metric.CustomSumM
 class PcapBytesMetric extends org.apache.spark.sql.connector.metric.CustomSumMetric {
   override def name(): String = "bytesDecoded"
   override def description(): String = "pcap bytes decoded"
+}
+
+/** A planning-time count the scan reports to its `BatchScanExec`
+  * through `Scan.reportDriverMetrics`. */
+sealed abstract class PcapDriverMetric(n: String, d: String)
+  extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = n
+  override def description(): String = d
+}
+class PcapFilesListedMetric extends PcapDriverMetric("filesListed",
+  "pcap files listed")
+class PcapFilesPrunedMetric extends PcapDriverMetric("filesPrunedByTs",
+  "pcap files pruned by ts")
+class PcapSidecarsReadMetric extends PcapDriverMetric("sidecarsRead",
+  "pcap .tsidx sidecars read")
+class PcapSidecarsMemoMetric extends PcapDriverMetric("sidecarsFromMemo",
+  "pcap .tsidx sidecars served from the memo")
+
+object PcapScanMetrics {
+  def driver: Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+    Array(new PcapFilesListedMetric, new PcapFilesPrunedMetric,
+      new PcapSidecarsReadMetric, new PcapSidecarsMemoMetric)
+
+  def report(listing: PcapListing, pruned: Int)
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    Array(listing.files.length.toLong, pruned.toLong,
+      listing.reads.read.sum(), listing.reads.served.sum())
+      .zip(driver).map { case (v, m) =>
+        new org.apache.spark.sql.connector.metric.CustomTaskMetric {
+          override def name(): String = m.name()
+          override def value(): Long = v
+        }
+      }
 }
 
 /** Helper to open a (possibly codec-compressed) pcap file as a stream. */

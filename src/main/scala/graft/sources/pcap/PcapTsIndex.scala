@@ -27,6 +27,18 @@ import graft.pcap.PcapStreamReader._
   * Files with no stats are never pruned, and the scan's pushed ts
   * predicate still checks every packet of a kept file — pruning can only
   * skip work, not change results.
+  *
+  * Sidecars of a listed directory are read through the `graft.Memo`
+  * registry ([[listedStats]]): one entry per directory, family `pcap`,
+  * guarded by a fingerprint of the (name, length, mtime) of the sidecars
+  * that the scan's own listing returned, so a query over an unchanged
+  * directory opens none, and a changed directory re-reads only its new
+  * or changed sidecars. The racy rule (git's racy-clean check): a
+  * sidecar whose mtime is within [[RacyMarginMs]] of the listing could
+  * be rewritten in place at the same length within the same mtime tick,
+  * so it is never served from the memo; it is read again on each query
+  * until it is older. A capture matched directly (a single-file path, a
+  * glob) keeps the uncached [[readSidecarStats]].
   */
 object PcapTsIndex {
 
@@ -44,25 +56,172 @@ object PcapTsIndex {
     * third, OPTIONAL field — sidecars written before round 9 carry only
     * the ts pair and still prune; count-dependent callers (the
     * metadata-only count(*) pushdown) treat its absence as "fall back
-    * to the scan". */
+    * to the scan". The uncached read, for a capture whose listing could
+    * not show its sidecar (a single-file path, a glob); a directory
+    * listing goes through [[listedStats]]. */
   def readSidecarStats(fs: FileSystem, file: Path)
       : Option[(Long, Long, Option[Long])] =
     try {
       val sp = sidecar(file)
-      if (!fs.exists(sp)) None
-      else {
-        val in = fs.open(sp)
-        val txt =
-          try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-          finally in.close()
-        txt.trim.split("\\s+") match {
-          case Array(mn, mx) => Some((mn.toLong, mx.toLong, None))
-          case Array(mn, mx, n) => Some((mn.toLong, mx.toLong,
-            Some(n.toLong)))
-          case _ => None
-        }
-      }
+      if (!fs.exists(sp)) None else parse(fs, sp)
     } catch { case _: Exception => None }
+
+  /** Reads and parses the sidecar at `sp`; None if it is malformed. */
+  private def parse(fs: FileSystem, sp: Path)
+      : Option[(Long, Long, Option[Long])] = {
+    val in = fs.open(sp)
+    val txt =
+      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+      finally in.close()
+    txt.trim.split("\\s+") match {
+      case Array(mn, mx) => Some((mn.toLong, mx.toLong, None))
+      case Array(mn, mx, n) => Some((mn.toLong, mx.toLong, Some(n.toLong)))
+      case _ => None
+    }
+  }
+
+  /** How old a sidecar's mtime must be, at the start of the listing that
+    * shows it, before its stats may be served from the memo. Some
+    * stores keep whole-second mtimes (S3's Last-Modified, HTTP-backed
+    * file systems), so an in-place rewrite of the same length within
+    * the second of an earlier read keeps (length, mtime); the second
+    * second covers the skew between the store's clock, which stamps
+    * mtimes, and the driver's, which reads the listing time. */
+  val RacyMarginMs = 2000L
+
+  /** One listed directory's sidecars: the statuses of the captures'
+    * sidecars that its `listStatus` call returned, sorted by name, and
+    * the wall-clock time just before that call. */
+  final class ListedSidecars(val dir: String, val fs: FileSystem,
+      val statuses: Array[FileStatus], val listedAt: Long)
+
+  /** Sidecar reads of one listing: opened and parsed, or served from the
+    * memo. */
+  final class SidecarReads {
+    val read = new java.util.concurrent.atomic.LongAdder
+    val served = new java.util.concurrent.atomic.LongAdder
+  }
+
+  /** Stats of one directory's sidecars as of its latest listing, in
+    * primitive arrays sorted by sidecar name. `counts` holds the packet
+    * count, [[NoCount]] for a two-field sidecar, [[NoStats]] for one
+    * that did not parse. `trusted` is false for a sidecar that was racy
+    * at its read (see [[RacyMarginMs]]) or unreadable: a later rebuild
+    * reads it again. */
+  final class SidecarTable private[PcapTsIndex] (
+      private[PcapTsIndex] val names: Array[String],
+      private[PcapTsIndex] val lens: Array[Long],
+      private[PcapTsIndex] val mtimes: Array[Long],
+      private[PcapTsIndex] val mins: Array[Long],
+      private[PcapTsIndex] val maxs: Array[Long],
+      private[PcapTsIndex] val counts: Array[Long],
+      private[PcapTsIndex] val trusted: Array[Boolean]) {
+
+    def size: Int = names.length
+
+    private[PcapTsIndex] def indexOf(name: String): Int =
+      java.util.Arrays.binarySearch(names.asInstanceOf[Array[AnyRef]],
+        name: AnyRef)
+
+    private[PcapTsIndex] def copy(j: Int, to: SidecarTable, i: Int): Unit = {
+      to.mins(i) = mins(j); to.maxs(i) = maxs(j); to.counts(i) = counts(j)
+      to.trusted(i) = true
+    }
+
+    private[PcapTsIndex] def set(i: Int,
+        stats: Option[(Long, Long, Option[Long])], trust: Boolean): Unit = {
+      stats match {
+        case Some((mn, mx, n)) =>
+          mins(i) = mn; maxs(i) = mx; counts(i) = n.getOrElse(NoCount)
+        case None => counts(i) = NoStats
+      }
+      trusted(i) = trust && stats.isDefined
+    }
+
+    /** The stats of the sidecar named `name`, if this listing showed it
+      * and it parsed. */
+    def stats(name: String): Option[(Long, Long, Option[Long])] = {
+      val i = indexOf(name)
+      if (i < 0 || counts(i) == NoStats) None
+      else Some((mins(i), maxs(i),
+        if (counts(i) == NoCount) None else Some(counts(i))))
+    }
+  }
+
+  private val NoCount = -1L
+  private val NoStats = -2L
+
+  /** Makes each listing that shows a racy sidecar a guard no entry was
+    * built under. */
+  private val racyGuards = new java.util.concurrent.atomic.AtomicLong
+
+  private def mix(h: Long, x: Long): Long = {
+    val z = (h ^ x) * 0x9E3779B97F4A7C15L
+    z ^ (z >>> 31)
+  }
+
+  /** One directory's sidecar stats, served from one `graft.Memo` entry
+    * per listed directory (family `pcap`), guarded by a fingerprint
+    * folded from the listed sidecars' (name, length, mtime): a listing
+    * of an unchanged directory opens no sidecar. On a miss, only the
+    * sidecars that are new, changed or untrusted are read; the rest are
+    * copied from the previous entry, and deleted ones drop out. A
+    * sidecar whose mtime is within [[RacyMarginMs]] of the listing (or
+    * unknown, 0) is racy: the listing's guard then matches no entry, so
+    * the sidecar is read again on every query until it is old enough. */
+  def listedStats(ls: ListedSidecars, reads: SidecarReads): SidecarTable = {
+    var guard = ls.statuses.length.toLong
+    var racy = false
+    ls.statuses.foreach { st =>
+      val name = st.getPath.getName
+      var h = 0L
+      var k = 0
+      while (k < name.length) { h = mix(h, name.charAt(k)); k += 1 }
+      guard = mix(mix(mix(guard, h), st.getLen), st.getModificationTime)
+      racy |= !settled(st, ls.listedAt)
+    }
+    if (racy) guard = mix(guard, racyGuards.incrementAndGet())
+    val prev = graft.Memo.peek[SidecarTable](MemoKind, ls.dir).orNull
+    var built = false
+    val table = graft.Memo.value(org.apache.spark.sql.SparkSession.active,
+        "pcap", MemoKind, ls.dir, guard) {
+      built = true
+      build(ls, prev, reads)
+    }
+    if (!built) reads.served.add(table.size.toLong)
+    table
+  }
+
+  private val MemoKind = "pcap.tsidx"
+
+  private def settled(st: FileStatus, listedAt: Long): Boolean =
+    st.getModificationTime > 0 &&
+      listedAt - st.getModificationTime >= RacyMarginMs
+
+  private def build(ls: ListedSidecars, prev: SidecarTable,
+      reads: SidecarReads): SidecarTable = {
+    val n = ls.statuses.length
+    val t = new SidecarTable(ls.statuses.map(_.getPath.getName),
+      ls.statuses.map(_.getLen), ls.statuses.map(_.getModificationTime),
+      new Array[Long](n), new Array[Long](n), new Array[Long](n),
+      new Array[Boolean](n))
+    var i = 0
+    while (i < n) {
+      val st = ls.statuses(i)
+      val j = if (prev == null) -1 else prev.indexOf(st.getPath.getName)
+      if (j >= 0 && prev.trusted(j) && prev.lens(j) == t.lens(i) &&
+          prev.mtimes(j) == t.mtimes(i)) {
+        prev.copy(j, t, i)
+        reads.served.increment()
+      } else {
+        t.set(i, try parse(ls.fs, st.getPath)
+          catch { case _: Exception => None }, settled(st, ls.listedAt))
+        reads.read.increment()
+      }
+      i += 1
+    }
+    t
+  }
 
   /** Exact (minTs, maxTs) from the sidecar, if present and well-formed. */
   def readSidecar(fs: FileSystem, file: Path): Option[(Long, Long)] =

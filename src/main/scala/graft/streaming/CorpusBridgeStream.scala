@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoder}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 import graft.functions.{ConvBuf, ConvSeg, HttpConversation,
@@ -70,6 +71,11 @@ object CorpusBridgeStream {
       client_port: Int, is_req: Boolean, tcp_seq: Long, pkt_idx: Long,
       payload: Array[Byte], time: java.sql.Timestamp)
 
+  // derived once, as the batch bridge's are (HttpConversation.keyEncoder)
+  private val segInEncoder: Encoder[SegIn] = ExpressionEncoder[SegIn]()
+  private val docOutEncoder: Encoder[CorpusDocOut] =
+    ExpressionEncoder[CorpusDocOut]()
+
   /** `packets`: streaming DataFrame with the pcap source's schema
     * (`time`, `protocol`, `src`/`dst`, ports, `tcp_seq`, `pkt_idx`,
     * `payload`). Emits append-mode (doc_id, host, n_tokens, body_md5)
@@ -85,11 +91,11 @@ object CorpusBridgeStream {
     import s.implicits._
     val segs = HttpConversation.segments(packets, serverPort, $"time")
       .withWatermark("time", watermark)
-      .as[SegIn]
+      .as[SegIn](segInEncoder)
     val agg = new HttpConversationAgg(maxBytesPerDirection)
-    implicit val stateEncoder: Encoder[ConvBuf] = agg.stateEncoder
     val docs = segs
-      .groupByKey(x => (x.server, x.client, x.client_port))
+      .groupByKey(x => (x.server, x.client, x.client_port))(
+        HttpConversation.keyEncoder)
       .flatMapGroupsWithState[ConvBuf, CorpusDocOut](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         case ((_, client, cport), _, state) if state.hasTimedOut =>
@@ -123,7 +129,7 @@ object CorpusBridgeStream {
               maxEventMs + idleSeconds * 1000L,
               state.getCurrentWatermarkMs() + 1000L))
           Iterator.empty
-      }.toDF()
+      }(agg.stateEncoder, docOutEncoder).toDF()
     docs.select(HttpConversation.docId(docIdBase).as("doc_id"), $"host",
       $"n_tokens", $"body_md5")
   }
