@@ -90,8 +90,7 @@ object Memo {
   /** [[value]] guarded by a fingerprint the caller already holds, for a
     * source that [[Tables.fingerprint]] would have to list again (the
     * pcap scan folds its sidecars' statuses from the listing it made
-    * anyway). A caller that must not be served a hit passes a guard no
-    * entry was built under. */
+    * anyway). */
   def value[V](s: SparkSession, family: String, kind: String, d: String,
       guard: Long)(build: => V): V =
     guarded[V](s, family, kind, d, guard, _ => ())(build)

@@ -51,11 +51,13 @@ import graft.sources.HadoopConfBroadcast
   *     opens no `.tsidx` sidecar the session has already read: the
   *     sidecar stats come from one `graft.Memo` entry per listed
   *     directory, guarded by the (name, length, mtime) of the sidecars
-  *     in that same listing, and a sidecar within
-  *     [[PcapTsIndex.RacyMarginMs]] of the listing is read again until
-  *     it is older ([[PcapTsIndex.listedStats]]). The scan reports the
-  *     files listed and pruned and the sidecars read and served from the
-  *     memo as driver metrics ([[PcapScanMetrics]]).
+  *     in that same listing; a changed directory's sidecars are all
+  *     read again, and a listing that shows a sidecar within
+  *     [[PcapTsIndex.RacyMarginMs]] of it bypasses the memo until the
+  *     sidecar is older ([[PcapTsIndex.listedStats]]). A ts-windowed
+  *     scan reports the files listed and pruned and the sidecars read
+  *     and served from the memo as driver metrics
+  *     ([[PcapScanMetrics]]).
   *
   * Options: `decoder` = `ip` (default) | `dns`; `md5` = `true` to compute
   * the frame digest (reference conf flag
@@ -417,13 +419,21 @@ class PcapScan(requiredSchema: StructType, options: CaseInsensitiveStringMap,
   // task-level decode metrics in the Spark UI / listener bus — the DSv2
   // mapping of the reference's getPos/getProgress reporting
   // (PcapRecordReader.java:66-76, SURVEY.md §2A op 6)
+  // The planning counts only on a ts-windowed scan, the one that reads
+  // sidecar stats; an unwindowed scan ships no extra metrics to its
+  // tasks.
+  private def windowed = PcapTsIndex.tsBounds(pushedFilters).isDefined
+
   override def supportedCustomMetrics():
       Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    Array(new PcapPacketsMetric, new PcapBytesMetric) ++ PcapScanMetrics.driver
+    Array[org.apache.spark.sql.connector.metric.CustomMetric](
+      new PcapPacketsMetric, new PcapBytesMetric) ++
+      (if (windowed) PcapScanMetrics.driver else Array.empty)
 
   override def reportDriverMetrics():
       Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    PcapScanMetrics.report(listed(),
+    if (!windowed) Array.empty
+    else PcapScanMetrics.report(listed(),
       pruned = listed().files.length - prunedFilesMemo.length)
 
   // Spark builds a micro-batch scan without filter pushdown (a streaming

@@ -32,13 +32,14 @@ import graft.pcap.PcapStreamReader._
   * registry ([[listedStats]]): one entry per directory, family `pcap`,
   * guarded by a fingerprint of the (name, length, mtime) of the sidecars
   * that the scan's own listing returned, so a query over an unchanged
-  * directory opens none, and a changed directory re-reads only its new
-  * or changed sidecars. The racy rule (git's racy-clean check): a
-  * sidecar whose mtime is within [[RacyMarginMs]] of the listing could
-  * be rewritten in place at the same length within the same mtime tick,
-  * so it is never served from the memo; it is read again on each query
-  * until it is older. A capture matched directly (a single-file path, a
-  * glob) keeps the uncached [[readSidecarStats]].
+  * directory opens none, and a changed directory reads its sidecars
+  * again. The racy rule (git's racy-clean check): a sidecar whose mtime
+  * is within [[RacyMarginMs]] of the listing could be rewritten in place
+  * at the same length within the same mtime tick, so a listing that
+  * shows one neither uses nor fills the memo; its sidecars are read
+  * again on each query until the sidecar is older. A capture matched
+  * directly (a single-file path, a glob) keeps the uncached
+  * [[readSidecarStats]].
   */
 object PcapTsIndex {
 
@@ -102,46 +103,23 @@ object PcapTsIndex {
     val served = new java.util.concurrent.atomic.LongAdder
   }
 
-  /** Stats of one directory's sidecars as of its latest listing, in
-    * primitive arrays sorted by sidecar name. `counts` holds the packet
-    * count, [[NoCount]] for a two-field sidecar, [[NoStats]] for one
-    * that did not parse. `trusted` is false for a sidecar that was racy
-    * at its read (see [[RacyMarginMs]]) or unreadable: a later rebuild
-    * reads it again. */
+  /** Stats of one directory's sidecars as of one listing, in primitive
+    * arrays sorted by sidecar name. `counts` holds the packet count,
+    * [[NoCount]] for a two-field sidecar, [[NoStats]] for one that did
+    * not parse. */
   final class SidecarTable private[PcapTsIndex] (
       private[PcapTsIndex] val names: Array[String],
-      private[PcapTsIndex] val lens: Array[Long],
-      private[PcapTsIndex] val mtimes: Array[Long],
       private[PcapTsIndex] val mins: Array[Long],
       private[PcapTsIndex] val maxs: Array[Long],
-      private[PcapTsIndex] val counts: Array[Long],
-      private[PcapTsIndex] val trusted: Array[Boolean]) {
+      private[PcapTsIndex] val counts: Array[Long]) {
 
     def size: Int = names.length
-
-    private[PcapTsIndex] def indexOf(name: String): Int =
-      java.util.Arrays.binarySearch(names.asInstanceOf[Array[AnyRef]],
-        name: AnyRef)
-
-    private[PcapTsIndex] def copy(j: Int, to: SidecarTable, i: Int): Unit = {
-      to.mins(i) = mins(j); to.maxs(i) = maxs(j); to.counts(i) = counts(j)
-      to.trusted(i) = true
-    }
-
-    private[PcapTsIndex] def set(i: Int,
-        stats: Option[(Long, Long, Option[Long])], trust: Boolean): Unit = {
-      stats match {
-        case Some((mn, mx, n)) =>
-          mins(i) = mn; maxs(i) = mx; counts(i) = n.getOrElse(NoCount)
-        case None => counts(i) = NoStats
-      }
-      trusted(i) = trust && stats.isDefined
-    }
 
     /** The stats of the sidecar named `name`, if this listing showed it
       * and it parsed. */
     def stats(name: String): Option[(Long, Long, Option[Long])] = {
-      val i = indexOf(name)
+      val i = java.util.Arrays.binarySearch(
+        names.asInstanceOf[Array[AnyRef]], name: AnyRef)
       if (i < 0 || counts(i) == NoStats) None
       else Some((mins(i), maxs(i),
         if (counts(i) == NoCount) None else Some(counts(i))))
@@ -151,10 +129,6 @@ object PcapTsIndex {
   private val NoCount = -1L
   private val NoStats = -2L
 
-  /** Makes each listing that shows a racy sidecar a guard no entry was
-    * built under. */
-  private val racyGuards = new java.util.concurrent.atomic.AtomicLong
-
   private def mix(h: Long, x: Long): Long = {
     val z = (h ^ x) * 0x9E3779B97F4A7C15L
     z ^ (z >>> 31)
@@ -163,30 +137,28 @@ object PcapTsIndex {
   /** One directory's sidecar stats, served from one `graft.Memo` entry
     * per listed directory (family `pcap`), guarded by a fingerprint
     * folded from the listed sidecars' (name, length, mtime): a listing
-    * of an unchanged directory opens no sidecar. On a miss, only the
-    * sidecars that are new, changed or untrusted are read; the rest are
-    * copied from the previous entry, and deleted ones drop out. A
-    * sidecar whose mtime is within [[RacyMarginMs]] of the listing (or
-    * unknown, 0) is racy: the listing's guard then matches no entry, so
-    * the sidecar is read again on every query until it is old enough. */
+    * of an unchanged directory opens no sidecar, and a miss reads every
+    * listed sidecar again and replaces the entry. A listing that shows
+    * a racy sidecar (mtime within [[RacyMarginMs]] of the listing, or
+    * unknown, 0) bypasses the memo: its sidecars are read and nothing is
+    * installed, on every query until the sidecar is old enough. */
   def listedStats(ls: ListedSidecars, reads: SidecarReads): SidecarTable = {
+    if (ls.statuses.isEmpty ||
+        ls.statuses.exists(st => st.getModificationTime <= 0 ||
+          ls.listedAt - st.getModificationTime < RacyMarginMs))
+      return read(ls, reads)
     var guard = ls.statuses.length.toLong
-    var racy = false
+    // a name-hash collision cannot serve wrong stats: the table keeps
+    // the names it was read under, and a lookup misses on any other
     ls.statuses.foreach { st =>
-      val name = st.getPath.getName
-      var h = 0L
-      var k = 0
-      while (k < name.length) { h = mix(h, name.charAt(k)); k += 1 }
-      guard = mix(mix(mix(guard, h), st.getLen), st.getModificationTime)
-      racy |= !settled(st, ls.listedAt)
+      guard = mix(mix(mix(guard, st.getPath.getName.hashCode), st.getLen),
+        st.getModificationTime)
     }
-    if (racy) guard = mix(guard, racyGuards.incrementAndGet())
-    val prev = graft.Memo.peek[SidecarTable](MemoKind, ls.dir).orNull
     var built = false
     val table = graft.Memo.value(org.apache.spark.sql.SparkSession.active,
         "pcap", MemoKind, ls.dir, guard) {
       built = true
-      build(ls, prev, reads)
+      read(ls, reads)
     }
     if (!built) reads.served.add(table.size.toLong)
     table
@@ -194,32 +166,21 @@ object PcapTsIndex {
 
   private val MemoKind = "pcap.tsidx"
 
-  private def settled(st: FileStatus, listedAt: Long): Boolean =
-    st.getModificationTime > 0 &&
-      listedAt - st.getModificationTime >= RacyMarginMs
-
-  private def build(ls: ListedSidecars, prev: SidecarTable,
-      reads: SidecarReads): SidecarTable = {
+  private def read(ls: ListedSidecars, reads: SidecarReads): SidecarTable = {
     val n = ls.statuses.length
     val t = new SidecarTable(ls.statuses.map(_.getPath.getName),
-      ls.statuses.map(_.getLen), ls.statuses.map(_.getModificationTime),
-      new Array[Long](n), new Array[Long](n), new Array[Long](n),
-      new Array[Boolean](n))
+      new Array[Long](n), new Array[Long](n), new Array[Long](n))
     var i = 0
     while (i < n) {
-      val st = ls.statuses(i)
-      val j = if (prev == null) -1 else prev.indexOf(st.getPath.getName)
-      if (j >= 0 && prev.trusted(j) && prev.lens(j) == t.lens(i) &&
-          prev.mtimes(j) == t.mtimes(i)) {
-        prev.copy(j, t, i)
-        reads.served.increment()
-      } else {
-        t.set(i, try parse(ls.fs, st.getPath)
-          catch { case _: Exception => None }, settled(st, ls.listedAt))
-        reads.read.increment()
+      (try parse(ls.fs, ls.statuses(i).getPath)
+       catch { case _: Exception => None }) match {
+        case Some((mn, mx, c)) =>
+          t.mins(i) = mn; t.maxs(i) = mx; t.counts(i) = c.getOrElse(NoCount)
+        case None => t.counts(i) = NoStats
       }
       i += 1
     }
+    reads.read.add(n.toLong)
     t
   }
 

@@ -74,14 +74,14 @@ class PcapSidecarMemoSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     Seq("filesListed", "filesPrunedByTs", "sidecarsRead", "sidecarsFromMemo")
 
   /** The rows of `df` and its one pcap scan's driver metrics, in [[Keys]]
-    * order. */
+    * order (none for a scan with no ts window). */
   private def run(df: DataFrame): (Seq[Row], Seq[Long], String) = {
     val rows = df.collect().toSeq.sortBy(_.toString)
     val scans = collect(df.queryExecution.executedPlan) {
       case b: BatchScanExec => b
     }
     assert(scans.size == 1, df.queryExecution.executedPlan.toString)
-    (rows, Keys.map(scans.head.metrics(_).value),
+    (rows, Keys.flatMap(scans.head.metrics.get(_).map(_.value)),
       scans.head.scan.description())
   }
 
@@ -106,11 +106,13 @@ class PcapSidecarMemoSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val dir = zone()
     run(inWindow(dir, 1))
     // a wider (still exact as a bound) range at a new mtime: capture 0
-    // now meets capture 1's window and is kept; only it is read again
+    // now meets capture 1's window and is kept; the directory's
+    // sidecars are read again
     writeSidecar(dir, 0, Base, Base + 140, 5, Old + 1000)
     val (rows, m, _) = run(inWindow(dir, 1))
     assert(rows.size == 5)
-    assert(m == Seq(4, 2, 1, 3))
+    assert(m == Seq(4, 2, 4, 0))
+    assert(Memo.builds("pcap.tsidx", memoKey(dir)) == 2)
 
     // racy: an mtime a minute ahead of the driver's clock (a store whose
     // clock runs ahead) stays within the margin however slow the host
@@ -118,14 +120,16 @@ class PcapSidecarMemoSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     writeSidecar(dir, 2, Base + 200, Base + 240, 5, racy)
     val (rows2, m2, _) = run(inWindow(dir, 2))
     assert(rows2.size == 5)
-    assert(m2 == Seq(4, 3, 1, 3))
+    assert(m2 == Seq(4, 3, 4, 0))
     // rewritten to the same length and the same mtime: a guard on
     // (name, length, mtime) alone would serve the old range and count
     writeSidecar(dir, 2, Base + 900, Base + 940, 6, racy)
     val (rows3, m3, _) = run(inWindow(dir, 2))
     assert(rows3.isEmpty, "capture 2's sidecar now excludes its window")
-    assert(m3 == Seq(4, 4, 1, 3))
+    assert(m3 == Seq(4, 4, 4, 0))
     assert(run(counted(dir))._1 == Seq(Row(21L)))
+    // a listing that shows a racy sidecar installs no entry
+    assert(Memo.builds("pcap.tsidx", memoKey(dir)) == 2)
   }
 
   test("an added capture is planned; a deleted sidecar leaves its " +
@@ -136,16 +140,17 @@ class PcapSidecarMemoSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     addCapture(dir, 4)
     val (rows, m, _) = run(inWindow(dir, 4))
     assert(rows.size == 5)
-    assert(m == Seq(5, 4, 1, 4))
+    assert(m == Seq(5, 4, 5, 0))
     assert(run(counted(dir))._1 == Seq(Row(25L)))
 
     Files.delete(dir.resolve("cap2.pcap.tsidx"))
     val (rows2, m2, _) = run(inWindow(dir, 0))
     assert(rows2.size == 5)
-    assert(m2 == Seq(5, 3, 0, 4), "capture 2 is kept, unpruned")
-    val (cnt, _, desc) = run(counted(dir))
+    assert(m2 == Seq(5, 3, 4, 0), "capture 2 is kept, unpruned")
+    val (cnt, m3, desc) = run(counted(dir))
     assert(desc.startsWith("PcapScan"), desc)
     assert(cnt == Seq(Row(25L)))
+    assert(m3.isEmpty, "a scan with no ts window reports no planning counts")
   }
 
   // stops the suite's session, so it runs last; later suites get a new
@@ -164,11 +169,11 @@ class PcapSidecarMemoSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     current = session()
-    // the entry of the stopped context is rebuilt; its sidecars, whose
-    // (length, mtime) did not change, are copied, not read
+    // the entry of the stopped context is rebuilt, its sidecars read
     val (rows2, m2, _) = run(inWindow(dir, 3))
     assert(rows2 == rows)
-    assert(m2 == Seq(4, 3, 0, 4))
+    assert(m2 == Seq(4, 3, 4, 0))
+    assert(run(inWindow(dir, 3))._2 == Seq(4, 3, 0, 4))
     assert(Memo.builds("pcap.tsidx", d) == 2)
   }
 }
