@@ -193,7 +193,7 @@ object Bench {
       val p = new org.apache.hadoop.fs.Path(
         benchDir.resolve(f"part$i%02d.pcap").toString)
       if (!fs.exists(graft.sources.pcap.PcapTsIndex.sidecar(p))) {
-        val in = graft.sources.pcap.PcapFileOpener.open(conf, p.toString)
+        val in = graft.sources.FileSource.open(conf, p.toString)
         val st = try graft.sources.pcap.PcapTsIndex.scanMinMax(in)
           finally in.close()
         st.foreach { case (mn, mx, n) =>

@@ -26,7 +26,7 @@ object PcapChunker {
     val destFs = destPath.getFileSystem(conf)
     destFs.mkdirs(destPath)
     val in = new DataInputStream(
-      graft.sources.pcap.PcapFileOpener.open(conf, src))
+      graft.sources.FileSource.open(conf, src))
     try {
       val globalHeader = new Array[Byte](PcapStreamReader.GlobalHeaderSize)
       try in.readFully(globalHeader)

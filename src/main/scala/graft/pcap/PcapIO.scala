@@ -1,6 +1,10 @@
 package graft.pcap
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+
+import graft.sources.{FileSource, HadoopConfBroadcast}
+import graft.sources.pcap.PcapTable
 
 /** Typed entry point: `Dataset[PacketRecord]` (SURVEY.md §1.4 — the
   * decoder core is a plain `Iterator[PacketRecord]`; this lifts it into a
@@ -9,6 +13,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *
   * Stays inside the Dataset API (typed `flatMap` with the product
   * encoder) — one partition per file slice, decode runs on executors.
+  * `path` lists as `spark.read.format("pcap").load(path)` does.
   */
 object PcapIO {
 
@@ -16,31 +21,15 @@ object PcapIO {
       options: DecodeOptions = DecodeOptions()): Dataset[PacketRecord] = {
     import spark.implicits._
     val conf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    val files: Seq[String] = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val matches = Option(fs.globStatus(p)).map(_.toSeq).getOrElse {
-        if (fs.exists(p)) Seq(fs.getFileStatus(p)) else Seq.empty
-      }
-      if (matches.isEmpty)
-        throw new java.io.FileNotFoundException(s"pcap path does not exist: $path")
-      matches.flatMap { st =>
-        if (st.isDirectory)
-          fs.listStatus(st.getPath).toSeq.filter(_.isFile)
-            .filterNot(_.getPath.getName.startsWith("_"))
-        else Seq(st)
-      }.map(_.getPath.toString)
-    }
+    val files = PcapTable.listDataFiles(
+      new CaseInsensitiveStringMap(java.util.Map.of("path", path)), conf)
+      .map(_.getPath.toString)
+    val bc = HadoopConfBroadcast(spark, conf)
     val parallelism = math.min(files.length,
       spark.sparkContext.defaultParallelism).max(1)
     spark.createDataset(files)
       .repartition(parallelism)
-      .flatMap { file =>
-        // executor-side: fresh Hadoop conf (not serializable across the
-        // closure); decoder streams the file
-        val c = new org.apache.hadoop.conf.Configuration()
-        PacketReaders.open(
-          graft.sources.pcap.PcapFileOpener.open(c, file), options)
-      }
+      .flatMap(file =>
+        PacketReaders.open(FileSource.open(bc.value.value, file), options))
   }
 }

@@ -26,8 +26,8 @@ import graft.sources.HadoopConfBroadcast
   * both write. One part file per task
   * (`part-<partition>-<task>.pcap`), little-endian microsecond magic,
   * original length = captured length. Task output commits by atomic
-  * rename from an `.inprogress` temp name; aborted tasks delete it —
-  * no partial files become visible.
+  * rename from a hidden `.part-….inprogress` temp name that no listing
+  * shows; aborted tasks delete it — no partial files become visible.
   *
   * Scale: writers stream row-by-row (no buffering of the partition), so
   * a repartitioned export of any size writes with constant memory per
@@ -107,7 +107,7 @@ class PcapDataWriter(dir: String, linkType: Int,
   private val fs = new Path(dir).getFileSystem(conf.value.value)
   private val finalPath = new Path(dir,
     f"part-$partitionId%05d-$taskId." + (if (ng) "pcapng" else "pcap"))
-  private val tmpPath = new Path(dir, finalPath.getName + ".inprogress")
+  private val tmpPath = graft.sources.FileSource.staging(finalPath)
   private val out = new java.io.BufferedOutputStream(fs.create(tmpPath, true),
     1 << 20)
   private var wroteHeader = false

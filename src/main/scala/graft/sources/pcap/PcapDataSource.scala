@@ -2,13 +2,9 @@ package graft.sources.pcap
 
 import java.util
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -18,7 +14,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.pcap.DecodeOptions
-import graft.sources.HadoopConfBroadcast
+import graft.sources.{BinPack, FileSource, ScanBuild, StatsScan}
 
 /** `spark.read.format("pcap")` — DataSource V2 batch source for classic
   * libpcap capture files.
@@ -35,6 +31,10 @@ import graft.sources.HadoopConfBroadcast
   * is evaluated once, per packet, and never again post-scan.
   *
   * Scale design:
+  *   - input is what the shared data-file rule ([[graft.sources.FileSource]])
+  *     keeps: a declared directory is listed one level deep, and a file
+  *     named `_…` or `.…` (writer temps, markers) or a `.tsidx` sidecar is
+  *     never read as a capture, whether listed or matched by a glob;
   *   - pcap has no sync markers → never byte-range split
   *     (`isSplitable=false` in the reference, PcapInputFormat.java:66-75);
   *     parallelism unit is the whole file;
@@ -91,111 +91,67 @@ class PcapTable(options: CaseInsensitiveStringMap) extends Table
 
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo):
-      org.apache.spark.sql.connector.write.WriteBuilder = {
-    val merged = new util.HashMap[String, String]()
-    merged.putAll(options)
-    merged.putAll(info.options())
-    new PcapWriteBuilder(new CaseInsensitiveStringMap(merged), info)
-  }
+      org.apache.spark.sql.connector.write.WriteBuilder =
+    new PcapWriteBuilder(FileSource.merged(options, info.options()), info)
 
-  override def newScanBuilder(caseInsensitiveOptions: CaseInsensitiveStringMap): ScanBuilder = {
-    // `options` (table properties) carries the path; scan options carry
-    // per-read settings. Merge, scan options winning.
-    val merged = new util.HashMap[String, String]()
-    merged.putAll(options)
-    merged.putAll(caseInsensitiveOptions)
-    new PcapScanBuilder(new CaseInsensitiveStringMap(merged))
-  }
+  override def newScanBuilder(scanOptions: CaseInsensitiveStringMap): ScanBuilder =
+    new PcapScanBuilder(FileSource.merged(options, scanOptions))
 }
 
 object PcapTable {
   def paths(options: CaseInsensitiveStringMap): Seq[String] =
     graft.sources.PathOptions.paths(options, "pcap")
 
-  /** ONE definition of which directory entries are capture data — the
-    * batch and streaming listings must agree or a file class admitted
-    * by only one of them crashes the other's reader ("_"/"." prefixes
-    * are the Hadoop/Spark hidden-file conventions; `.tsidx` sidecars
-    * are this source's own stats files). */
-  def isDataFile(name: String): Boolean =
-    !name.startsWith("_") && !name.startsWith(".") &&
-      !PcapTsIndex.isSidecar(name)
+  /** pcap's part of the shared data-file rule: its `.tsidx` sidecars are
+    * its index files. */
+  val Rule: FileSource.Rule =
+    FileSource.Rule("pcap", isIndex = PcapTsIndex.isSidecar)
 
-  /** ONE file-listing implementation shared by the scan and the
-    * aggregate-pushdown probe in the builder (they must agree on the
-    * file set or a pushed count could cover different files than a
-    * scan would read). */
+  /** The captures a pcap read of `options` lists: `PcapIO` and
+    * `PcapStatsWriter` list here, by the same [[Rule]] as the scan and
+    * the stream. */
   def listDataFiles(options: CaseInsensitiveStringMap,
-      conf: Configuration): Seq[FileStatus] = list(options, conf).files
-
-  /** [[listDataFiles]] with, for each directory it lists, the statuses
-    * of the captures' sidecars that the same `listStatus` call returned:
-    * a capture whose sidecar is not among them has none, and needs no
-    * `exists` call. A capture matched directly (a single-file path, a
-    * glob) carries no listed sidecars. */
-  def list(options: CaseInsensitiveStringMap,
-      conf: Configuration): PcapListing = {
-    graft.sources.ListingStats.listings.increment()
-    val declared = paths(options)
-    if (declared.isEmpty)
-      throw new IllegalArgumentException("pcap source requires a path")
-    val files = IndexedSeq.newBuilder[FileStatus]
-    val dirs = IndexedSeq.newBuilder[PcapTsIndex.ListedSidecars]
-    declared.foreach { p =>
-      val path = new Path(p)
-      val fs = path.getFileSystem(conf)
-      val matches = Option(fs.globStatus(path)).map(_.toSeq).getOrElse {
-        if (fs.exists(path)) Seq(fs.getFileStatus(path)) else Seq.empty
-      }
-      if (matches.isEmpty)
-        throw new java.io.FileNotFoundException(s"pcap path does not exist: $p")
-      matches.foreach { st =>
-        if (st.isDirectory) {
-          val listedAt = System.currentTimeMillis()
-          val (sidecars, data) = fs.listStatus(st.getPath).filter(_.isFile)
-            .partition(s => PcapTsIndex.isSidecar(s.getPath.getName))
-          val kept = data.filter(s => isDataFile(s.getPath.getName))
-          val names = kept.map(_.getPath.getName + PcapTsIndex.SidecarSuffix)
-            .toSet
-          val listed = new PcapTsIndex.ListedSidecars(st.getPath.toString,
-            fs, sidecars.filter(s => names(s.getPath.getName))
-              .sortBy(_.getPath.getName), listedAt)
-          kept.foreach { f => files += f; dirs += listed }
-        } else if (!PcapTsIndex.isSidecar(st.getPath.getName)) {
-          files += st; dirs += null
-        }
-      }
-    }
-    new PcapListing(files.result(), dirs.result(), conf)
-  }
+      conf: Configuration): Seq[FileStatus] =
+    FileSource.list(options, conf, Rule).files
 }
 
-/** One scan build's listing: its data files and, per file, the listed
-  * sidecars of its directory (null for a file matched directly). The
-  * sidecar stats are read once per listing, and only when a query needs
-  * them (a ts window or a metadata aggregate). */
-final class PcapListing(val files: IndexedSeq[FileStatus],
-    dirs: IndexedSeq[PcapTsIndex.ListedSidecars], conf: Configuration) {
+/** One scan build's listing, and per file the stats of its `.tsidx`
+  * sidecar, read once per listing and only when a query needs them (a ts
+  * window or a metadata aggregate). A capture listed in a directory has a
+  * sidecar only if that directory's `listStatus` call returned it, so no
+  * `exists` call is made; a capture matched directly (a single-file path,
+  * a glob) is looked up on its own. */
+final class PcapListing(val build: ScanBuild) {
+
+  def files: IndexedSeq[FileStatus] = build.files
 
   val reads = new PcapTsIndex.SidecarReads
 
   /** Per file, its sidecar's (min ts, max ts, count), if it has one. */
   lazy val stats: IndexedSeq[Option[(Long, Long, Option[Long])]] = {
     val tables =
-      scala.collection.mutable.HashMap[PcapTsIndex.ListedSidecars,
-        PcapTsIndex.SidecarTable]()
+      scala.collection.mutable.HashMap[FileSource.Dir, PcapTsIndex.SidecarTable]()
+    val dirs = build.listing.dirs
     files.indices.map { i =>
       val f = files(i).getPath
       dirs(i) match {
         case null =>
-          val st = PcapTsIndex.readSidecarStats(f.getFileSystem(conf), f)
+          val st = PcapTsIndex.readSidecarStats(f.getFileSystem(build.conf), f)
           if (st.isDefined) reads.read.increment()
           st
         case d =>
-          tables.getOrElseUpdate(d, PcapTsIndex.listedStats(d, reads))
+          tables.getOrElseUpdate(d, PcapTsIndex.listedStats(sidecars(d), reads))
             .stats(f.getName + PcapTsIndex.SidecarSuffix)
       }
     }
+  }
+
+  /** The listed sidecars of `d`'s captures, sorted by name. */
+  private def sidecars(d: FileSource.Dir): PcapTsIndex.ListedSidecars = {
+    val names = d.files.map(_.getPath.getName + PcapTsIndex.SidecarSuffix).toSet
+    new PcapTsIndex.ListedSidecars(d.path.toString, d.fs,
+      d.index.filter(s => names(s.getPath.getName)).sortBy(_.getPath.getName),
+      d.listedAt)
   }
 }
 
@@ -271,20 +227,14 @@ class PcapScanBuilder(options: CaseInsensitiveStringMap)
     Some(tags)
   }
 
+  // one Hadoop conf and one listing per scan build, shared with the scan
+  // this builder produces
+  private val listing = new PcapListing(new ScanBuild(options, PcapTable.Rule))
+
   /** Fold (min ts, max ts, Σ count) over the exact file set the scan
     * would read; None if the set is empty (MIN/MAX would be NULL —
     * let the scan path answer that) or ANY file lacks a sidecar; the
     * count is None if any sidecar is count-less (pre-round-9 format). */
-  // ONE Hadoop conf and ONE listing per scan BUILD, shared with the
-  // scan this builder produces: the aggregate probe, the ts pruning, the
-  // scan's stats/planning and the executors' broadcast all use them (a
-  // session conf copy is ~1,100 entries; the listing is O(files) RPCs)
-  private lazy val hadoopConf: Configuration =
-    SparkSession.active.sessionState.newHadoopConf()
-
-  private lazy val listing: PcapListing =
-    PcapTable.list(options, hadoopConf)
-
   private def sidecarStats(): Option[(Long, Long, Option[Long])] = {
     if (listing.files.isEmpty) return None
     var mn = Long.MaxValue
@@ -328,68 +278,22 @@ class PcapScanBuilder(options: CaseInsensitiveStringMap)
 
   override def build(): Scan = statValues match {
     case Some((mn, mx, total)) if statCols.nonEmpty =>
-      new PcapStatsScan(statCols.map {
+      val values = statCols.map {
         case 'c' => total.get
         case 'n' => mn
         case 'x' => mx
-      }, listing)
-    case _ => new PcapScan(required, options, pushed, hadoopConf,
-      () => listing)
+      }
+      new StatsScan(values,
+        s"PcapStatsScan(values=[${values.mkString(",")}], fromSidecars=true)",
+        PcapScanMetrics.driver, PcapScanMetrics.report(listing, pruned = 0))
+    case _ => new PcapScan(required, options, pushed, listing)
   }
 }
 
-/** The metadata-only stats scan: one partition, one row, the pushed
-  * COUNT(*)/MIN(ts)/MAX(ts) values in aggregate order — no capture
-  * file is ever opened. `listing` is the one its values were folded
-  * from. */
-class PcapStatsScan(values: Seq[Long], listing: PcapListing)
-  extends Scan with Batch {
-  override def readSchema(): StructType = {
-    var st = new StructType()
-    values.indices.foreach(i => st = st.add(s"stat_$i",
-      org.apache.spark.sql.types.LongType, false))
-    st
-  }
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"PcapStatsScan(values=[${values.mkString(",")}], fromSidecars=true)"
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(PcapStatsPartition(values))
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PcapStatsReaderFactory
-  override def supportedCustomMetrics():
-      Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    PcapScanMetrics.driver
-  override def reportDriverMetrics():
-      Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    PcapScanMetrics.report(listing, pruned = 0)
-}
-
-case class PcapStatsPartition(values: Seq[Long]) extends InputPartition
-
-class PcapStatsReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition):
-      org.apache.spark.sql.connector.read.PartitionReader[
-        org.apache.spark.sql.catalyst.InternalRow] = {
-    val p = partition.asInstanceOf[PcapStatsPartition]
-    new org.apache.spark.sql.connector.read.PartitionReader[
-        org.apache.spark.sql.catalyst.InternalRow] {
-      private var emitted = false
-      override def next(): Boolean =
-        if (emitted) false else { emitted = true; true }
-      override def get(): org.apache.spark.sql.catalyst.InternalRow =
-        org.apache.spark.sql.catalyst.InternalRow.fromSeq(p.values)
-      override def close(): Unit = ()
-    }
-  }
-}
-
-/** The decoding scan. `hadoopConf` and `listed` are the builder's one
-  * conf and one listing. */
+/** The decoding scan over its builder's one listing. */
 class PcapScan(requiredSchema: StructType, options: CaseInsensitiveStringMap,
     val pushedFilters: Array[org.apache.spark.sql.sources.Filter],
-    hadoopConf: Configuration,
-    listed: () => PcapListing)
+    listing: PcapListing)
   extends Scan with Batch
   with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
@@ -403,8 +307,7 @@ class PcapScan(requiredSchema: StructType, options: CaseInsensitiveStringMap,
   // ONE listing + ts-prune per scan: estimateStatistics and
   // planInputPartitions both need the file set, and a repeated
   // listing is O(files) RPCs per query on an object store
-  private lazy val prunedFilesMemo: Seq[FileStatus] =
-    pruneByTs(listed())
+  private lazy val prunedFilesMemo: Seq[FileStatus] = pruneByTs()
 
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics =
@@ -433,19 +336,17 @@ class PcapScan(requiredSchema: StructType, options: CaseInsensitiveStringMap,
   override def reportDriverMetrics():
       Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
     if (!windowed) Array.empty
-    else PcapScanMetrics.report(listed(),
-      pruned = listed().files.length - prunedFilesMemo.length)
+    else PcapScanMetrics.report(listing,
+      pruned = listing.files.length - prunedFilesMemo.length)
 
   // Spark builds a micro-batch scan without filter pushdown (a streaming
   // query's filters stay post-scan), so no pushed filter is lost here
   override def toMicroBatchStream(checkpointLocation: String):
       org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new PcapMicroBatchStream(options, requiredSchema, hadoopConf)
+    new PcapMicroBatchStream(options, requiredSchema, listing.build.conf)
   override def description(): String =
     s"PcapScan(columns=[${requiredSchema.fieldNames.mkString(",")}], " +
       s"pushedFilters=[${pushedFilters.mkString(",")}])"
-
-  private def sparkSession = SparkSession.active
 
   /** Drop files whose per-file ts stats cannot intersect the pushed ts
     * bounds (SURVEY.md §4 file-level skipping). Stats come from exact
@@ -453,50 +354,39 @@ class PcapScan(requiredSchema: StructType, options: CaseInsensitiveStringMap,
     * first/last-record probe; files without stats always survive, and
     * the decoder still applies the pushed bounds to every packet of a
     * kept file. */
-  private def pruneByTs(listing: PcapListing): Seq[FileStatus] = {
+  private def pruneByTs(): Seq[FileStatus] = {
     val files = listing.files
     PcapTsIndex.tsBounds(pushedFilters) match {
       case Some((lo, hi)) if options.getBoolean("tsPruning", true) =>
         val assumeMono = options.getBoolean("assumeMonotonicTs", false)
         val kept = files.indices.filter { i =>
           val stats = listing.stats(i).map { case (mn, mx, _) => (mn, mx) }
-            .orElse(if (assumeMono) PcapTsIndex.firstLastTs(hadoopConf,
+            .orElse(if (assumeMono) PcapTsIndex.firstLastTs(listing.build.conf,
               files(i)) else None)
           stats.forall { case (mn, mx) => mx >= lo && mn <= hi }
         }.map(files)
         val dropped = files.length - kept.length
-        if (dropped > 0) {
-          PcapTsIndex.prunedFiles.add(dropped.toLong)
+        if (dropped > 0)
           org.slf4j.LoggerFactory.getLogger(classOf[PcapScan]).info(
             s"pcap ts pruning: skipped $dropped of ${files.length} " +
               s"files for ts in [$lo, $hi]")
-        }
         kept
       case _ => files
     }
   }
 
-  /** Whole-file partitions, bin-packed to maxPartitionBytes
+  /** Whole-file partitions, bin-packed to the partition target
     * (best-fit decreasing via [[graft.sources.BinPack]] — O(n log n)
     * planning, million-file-lake safe). A file larger than the target
     * gets its own partition — pcap is not byte-range splittable. */
   override def planInputPartitions(): Array[InputPartition] = {
-    // source option override, e.g. .option("maxBytesPerPartition", "16m"),
-    // for decode-bound workloads where smaller tasks beat fewer tasks
-    val openCost = sparkSession.sessionState.conf.filesOpenCostInBytes
     val files = prunedFilesMemo.map(f => f.getPath.toString -> f.getLen)
-    val maxBytes = Option(options.get("maxBytesPerPartition"))
-      .map(v => org.apache.spark.network.util.JavaUtils.byteStringAsBytes(v))
-      .getOrElse(graft.sources.BinPack.adaptiveTarget(
-        sparkSession.sessionState.conf.filesMaxPartitionBytes, openCost,
-        files.map(_._2).sum,
-        sparkSession.sparkContext.defaultParallelism))
-    graft.sources.BinPack.pack(files, maxBytes, openCost)
+    BinPack.adaptiveTarget(options, files.map(_._2).sum).pack(files)
       .map(b => PcapInputPartition(b): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PcapReaderFactory(HadoopConfBroadcast(sparkSession, hadoopConf),
+    new PcapReaderFactory(listing.build.broadcast,
       requiredSchema,
       PcapSchema.decodeOptions(requiredSchema, options, pushedFilters),
       PcapPacketFilter.compile(pushedFilters),
@@ -575,27 +465,4 @@ object PcapScanMetrics {
           override def value(): Long = v
         }
       }
-}
-
-/** Helper to open a (possibly codec-compressed) pcap file as a stream. */
-object PcapFileOpener {
-  def open(conf: Configuration, pathStr: String): java.io.InputStream = {
-    val path = new Path(pathStr)
-    val fs = path.getFileSystem(conf)
-    val raw = fs.open(path)
-    val name = path.getName.toLowerCase(java.util.Locale.ROOT)
-    val decoded =
-      // .zst/.zstd captures (the compression modern rotating-capture
-      // setups apply) go through zstd-jni's streaming decoder, which is
-      // already on Spark's classpath; Hadoop's own ZStandardCodec needs
-      // the native libhadoop build most clusters don't ship
-      if (name.endsWith(".zst") || name.endsWith(".zstd"))
-        new com.github.luben.zstd.ZstdInputStream(raw): java.io.InputStream
-      else Option(new CompressionCodecFactory(conf).getCodec(path))
-        .map(_.createInputStream(raw).asInstanceOf[java.io.InputStream])
-        .getOrElse(raw: java.io.InputStream)
-    // the decoder issues many small reads (16-byte packet headers);
-    // unbuffered they each hit the (checksummed) Hadoop stream
-    new java.io.BufferedInputStream(decoded, 1 << 20)
-  }
 }

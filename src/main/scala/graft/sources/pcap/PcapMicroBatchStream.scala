@@ -1,7 +1,6 @@
 package graft.sources.pcap
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsTriggerAvailableNow}
@@ -115,21 +114,12 @@ class PcapMicroBatchStream(
     else latestMtime - maxFileAgeMs
 
   private def refresh(): Unit = synchronized {
-    val found = PcapTable.paths(options).flatMap { p =>
-      val path = new Path(p)
-      val fs = path.getFileSystem(conf)
-      val matches = Option(fs.globStatus(path)).map(_.toSeq).getOrElse(Seq.empty)
-      matches.flatMap { st =>
-        if (st.isDirectory)
-          fs.listStatus(st.getPath).toSeq.filter(_.isFile)
-            // the SHARED data-file predicate (PcapTable.isDataFile):
-            // admitting what the batch listing skips — e.g. a .tsidx
-            // sidecar a landing ETL wrote next to its capture — would
-            // plan a partition whose reader throws on the magic check
-            .filter(s => PcapTable.isDataFile(s.getPath.getName))
-        else Seq(st)
-      }
-    }.map(st => FileEntry(st.getPath.toString, st.getModificationTime))
+    // the batch scan's listing (a capture's .tsidx sidecar is never
+    // admitted, neither listed nor glob-matched: its reader would throw on
+    // the magic check); a landing path that does not exist yet is empty
+    val found = graft.sources.FileSource.list(options, conf, PcapTable.Rule,
+      missingIsEmpty = true).files
+      .map(st => FileEntry(st.getPath.toString, st.getModificationTime))
     found.foreach(f => latestMtime = math.max(latestMtime, f.mtime))
     val h = horizon
     // age-filter BEFORE the seen-check: a file older than the horizon is

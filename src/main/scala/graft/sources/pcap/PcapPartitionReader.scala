@@ -36,7 +36,7 @@ private[pcap] class PacketFeed(
     val path = fileIter.next()
     currentFileBytes = path.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     currentFile = UTF8String.fromBytes(currentFileBytes)
-    stream = PcapFileOpener.open(conf, path)
+    stream = graft.sources.FileSource.open(conf, path)
     reader = graft.pcap.PacketReaders.open(stream, decode)
     slot = reader.slot
     pktIdx = 0L

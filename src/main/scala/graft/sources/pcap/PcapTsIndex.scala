@@ -43,10 +43,6 @@ import graft.pcap.PcapStreamReader._
   */
 object PcapTsIndex {
 
-  /** Files dropped by ts pruning in this JVM (diagnostic/test hook; the
-    * scan also logs per-query counts). */
-  val prunedFiles = new java.util.concurrent.atomic.LongAdder
-
   val SidecarSuffix = ".tsidx"
 
   def sidecar(file: Path): Path = file.suffix(SidecarSuffix)
@@ -184,16 +180,13 @@ object PcapTsIndex {
     t
   }
 
-  /** Exact (minTs, maxTs) from the sidecar, if present and well-formed. */
-  def readSidecar(fs: FileSystem, file: Path): Option[(Long, Long)] =
-    readSidecarStats(fs, file).map { case (mn, mx, _) => (mn, mx) }
-
-  /** Atomic sidecar write (temp file + rename — a crashed writer never
-    * leaves a truncated sidecar behind; ADVICE r4's fixture lesson). */
+  /** Atomic sidecar write (hidden temp file + rename — a crashed writer
+    * never leaves a truncated sidecar behind, and no listing shows the
+    * temp it leaves). */
   def writeSidecar(fs: FileSystem, file: Path, min: Long, max: Long,
       count: Option[Long] = None): Unit = {
     val sp = sidecar(file)
-    val tmp = sp.suffix(".tmp")
+    val tmp = graft.sources.FileSource.staging(sp)
     val out = fs.create(tmp, true)
     val line = count match {
       case Some(n) => s"$min $max $n\n"

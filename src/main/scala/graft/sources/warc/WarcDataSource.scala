@@ -5,7 +5,6 @@ import java.util
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -17,7 +16,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.sources.HadoopConfBroadcast
+import graft.sources.{BinPack, FileSource, ScanBuild, StatsScan}
 
 /** Web ARChive (WARC 1.0/1.1, ISO 28500) DSv2 source
   * (`format("warc")`) — the container the canonical LLM text pipeline
@@ -46,9 +45,14 @@ import graft.sources.HadoopConfBroadcast
   * through raw — the column lets a pipeline route them.
   *
   * Scale shape — the wds/pcap discipline applied to WARC:
+  *   - input is what the shared data-file rule
+  *     ([[graft.sources.FileSource]]) keeps: a declared directory is
+  *     listed one level deep, and a file named `_…` or `.…`, a `.wcdx` or
+  *     `.cdxj` index or an empty file is never read as a crawl, whether
+  *     listed or matched by a glob;
   *   - whole-file partitions (member-gzip has no index; mid-file entry
   *     is impossible without decompressing from the start), bin-packed
-  *     to `maxPartitionBytes` by [[graft.sources.BinPack]];
+  *     to the partition target by [[graft.sources.BinPack]];
   *   - the record walk STREAMS: headers are read line-at-a-time with a
   *     hard line-length cap, the block is materialized ONLY when the
   *     projection needs `payload` — a (url, status) survey of a crawl
@@ -103,36 +107,16 @@ object WarcTable {
   def paths(options: CaseInsensitiveStringMap): Seq[String] =
     graft.sources.PathOptions.paths(options, "warc")
 
+  /** warc's part of the shared data-file rule: its `.wcdx` sidecars and
+    * `.cdxj` indexes are index files, and a zero-length file carries no
+    * records (and, when `.gz`, is not even a valid gzip stream). */
+  val Rule: FileSource.Rule = FileSource.Rule("warc",
+    isIndex = n => WarcCdx.isSidecar(n) || n.endsWith(".cdxj"),
+    keep = (_, len) => len > 0)
+
   def listDataFiles(options: CaseInsensitiveStringMap,
-      conf: Configuration): Seq[org.apache.hadoop.fs.FileStatus] = {
-    graft.sources.ListingStats.listings.increment()
-    val declared = paths(options)
-    if (declared.isEmpty)
-      throw new IllegalArgumentException("warc source requires a path")
-    declared.flatMap { p =>
-      val path = new Path(p)
-      val fs = path.getFileSystem(conf)
-      val matches = Option(fs.globStatus(path)).map(_.toSeq).getOrElse {
-        if (fs.exists(path)) Seq(fs.getFileStatus(path)) else Seq.empty
-      }
-      if (matches.isEmpty)
-        throw new java.io.FileNotFoundException(
-          s"warc path does not exist: $p")
-      matches.flatMap { st =>
-        // zero-length files carry no records and (when .gz) are not
-        // even valid gzip streams — skip, never crash on them
-        def isIndex(n: String): Boolean =
-          WarcCdx.isSidecar(n) || n.endsWith(".cdxj")
-        if (st.isDirectory)
-          fs.listStatus(st.getPath).toSeq.filter(_.isFile)
-            .filter(s => !s.getPath.getName.startsWith("_") &&
-              !s.getPath.getName.startsWith(".") &&
-              !isIndex(s.getPath.getName) && s.getLen > 0)
-        else Seq(st).filter(s =>
-          !isIndex(s.getPath.getName) && s.getLen > 0)
-      }
-    }
-  }
+      conf: Configuration): Seq[org.apache.hadoop.fs.FileStatus] =
+    FileSource.list(options, conf, Rule).files
 }
 
 class WarcTable(options: CaseInsensitiveStringMap) extends Table
@@ -148,21 +132,13 @@ class WarcTable(options: CaseInsensitiveStringMap) extends Table
       TableCapability.TRUNCATE, TableCapability.ACCEPT_ANY_SCHEMA)
 
   override def newScanBuilder(scanOptions: CaseInsensitiveStringMap)
-      : ScanBuilder = {
-    val merged = new util.HashMap[String, String]()
-    merged.putAll(options)
-    merged.putAll(scanOptions)
-    new WarcScanBuilder(new CaseInsensitiveStringMap(merged))
-  }
+      : ScanBuilder =
+    new WarcScanBuilder(FileSource.merged(options, scanOptions))
 
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder = {
-    val merged = new util.HashMap[String, String]()
-    merged.putAll(options)
-    merged.putAll(info.options())
-    new WarcWriteBuilder(new CaseInsensitiveStringMap(merged), info)
-  }
+      : org.apache.spark.sql.connector.write.WriteBuilder =
+    new WarcWriteBuilder(FileSource.merged(options, info.options()), info)
 }
 
 /** Record-level predicate pushdown, split at the two skip points the
@@ -298,28 +274,13 @@ class WarcScanBuilder(options: CaseInsensitiveStringMap)
   // alone — O(files), not O(bytes) — when EVERY file has a fresh
   // sidecar and no record filter is pushed. Any file without one
   // declines and the record walk counts for real.
-  // ONE listing per scan BUILD, shared with the scan this builder
-  // produces (the aggregate probe and the scan's stats/planning all
-  // need the same file set)
-  private lazy val listedFilesMemo: Seq[org.apache.hadoop.fs.FileStatus] =
-    WarcTable.listDataFiles(options,
-      SparkSession.active.sessionState.newHadoopConf())
+  // one Hadoop conf, one listing and one sidecar-count fold per scan
+  // build, shared with the scan this builder produces
+  private val scanBuild = new ScanBuild(options, WarcTable.Rule)
 
-  private def sidecarCount(): Option[Long] = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val files = listedFilesMemo
-    if (files.isEmpty) return None
-    var total = 0L
-    files.foreach { st =>
-      WarcCdx.readCount(st.getPath.getFileSystem(conf), st) match {
-        case Some(n) => total += n
-        case None => return None
-      }
-    }
-    Some(total)
-  }
-
-  private lazy val sidecarCountMemo: Option[Long] = sidecarCount()
+  private lazy val sidecarCount: Option[Long] =
+    FileSource.sumCounts(scanBuild.files)(st =>
+      WarcCdx.readCount(st.getPath.getFileSystem(scanBuild.conf), st))
 
   override def supportCompletePushDown(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
@@ -334,44 +295,15 @@ class WarcScanBuilder(options: CaseInsensitiveStringMap)
     if (agg.groupByExpressions.nonEmpty ||
         agg.aggregateExpressions.toSeq.length != 1 ||
         !agg.aggregateExpressions.head.isInstanceOf[CountStar]) return false
-    pushedCount = sidecarCountMemo
+    pushedCount = sidecarCount
     pushedCount.isDefined
   }
 
   override def build(): Scan = pushedCount match {
-    case Some(n) => new WarcStatsScan(n)
+    case Some(n) =>
+      new StatsScan(Seq(n), s"WarcStatsScan(count=$n, fromSidecars=true)")
     case None =>
-      new WarcScan(required, options, pushed, () => listedFilesMemo)
-  }
-}
-
-/** The metadata-only COUNT(*) scan: one partition, one row, no warc
-  * byte ever read. */
-class WarcStatsScan(count: Long) extends Scan with Batch {
-  override def readSchema(): StructType = new StructType()
-    .add("count", LongType, nullable = false)
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"WarcStatsScan(count=$count, fromSidecars=true)"
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(WarcStatsPartition(count))
-  override def createReaderFactory(): PartitionReaderFactory =
-    new WarcStatsReaderFactory
-}
-
-case class WarcStatsPartition(count: Long) extends InputPartition
-
-class WarcStatsReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition)
-      : PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[WarcStatsPartition]
-    new PartitionReader[InternalRow] {
-      private var emitted = false
-      override def next(): Boolean =
-        if (emitted) false else { emitted = true; true }
-      override def get(): InternalRow = InternalRow(p.count)
-      override def close(): Unit = ()
-    }
+      new WarcScan(required, options, pushed, scanBuild, () => sidecarCount)
   }
 }
 
@@ -393,11 +325,12 @@ class WarcSkippedBytesMetric extends CustomSumMetric {
     "record block bytes skipped (payload column pruned)"
 }
 
+/** The record-walking scan over its builder's one conf and listing;
+  * `sidecarCount` is the builder's fold of the files' `.wcdx` counts. */
 class WarcScan(requiredSchema: StructType,
     options: CaseInsensitiveStringMap,
-    pushedFilters: Array[org.apache.spark.sql.sources.Filter] =
-      Array.empty,
-    listed: () => Seq[org.apache.hadoop.fs.FileStatus] = null)
+    pushedFilters: Array[org.apache.spark.sql.sources.Filter],
+    build: ScanBuild, sidecarCount: () => Option[Long])
   extends Scan with Batch
   with SupportsReportStatistics {
 
@@ -411,37 +344,14 @@ class WarcScan(requiredSchema: StructType,
     * DSv2 scan reports defaultSizeInBytes (effectively infinite), so
     * a small crawl joined against a big relation could never plan a
     * static broadcast — AQE would have to rescue it at runtime. */
-  // ONE listing per scan: estimateStatistics and planInputPartitions
-  // both need the file set (repeated listings are O(files) RPCs per
-  // query on an object store); shared with the builder's memo when
-  // the builder already listed for its aggregate probe
-  private lazy val listedFiles: Seq[org.apache.hadoop.fs.FileStatus] =
-    if (listed != null) listed()
-    else WarcTable.listDataFiles(options, hadoopConf)
-
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics =
     new org.apache.spark.sql.connector.read.Statistics {
-      private val files = listedFiles
-      private val bytes = files.map(_.getLen).sum
+      private val bytes = build.files.map(_.getLen).sum
       // exact row count when EVERY file carries a fresh .wcdx and no
       // pushed filter drops records mid-scan
-      private val rows: Option[Long] =
-        if (pushedFilters.nonEmpty || files.isEmpty) None
-        else {
-          var total = 0L
-          val it = files.iterator
-          var ok = true
-          while (ok && it.hasNext) {
-            val st = it.next()
-            WarcCdx.readCount(
-                st.getPath.getFileSystem(hadoopConf), st) match {
-              case Some(n) => total += n
-              case None => ok = false
-            }
-          }
-          if (ok) Some(total) else None
-        }
+      private val rows =
+        if (pushedFilters.nonEmpty) None else sidecarCount()
       override def sizeInBytes(): java.util.OptionalLong =
         java.util.OptionalLong.of(bytes)
       override def numRows(): java.util.OptionalLong =
@@ -453,19 +363,10 @@ class WarcScan(requiredSchema: StructType,
       : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
     Array(new WarcRecordsMetric, new WarcSkippedBytesMetric)
 
-  private def sparkSession = SparkSession.active
-  private def hadoopConf: Configuration =
-    sparkSession.sessionState.newHadoopConf()
-
   override def planInputPartitions(): Array[InputPartition] = {
-    val openCost = sparkSession.sessionState.conf.filesOpenCostInBytes
-    val maxBytes = Option(options.get("maxBytesPerPartition"))
-      .map(v => org.apache.spark.network.util.JavaUtils.byteStringAsBytes(v))
-      .getOrElse(graft.sources.BinPack.adaptiveTarget(
-        sparkSession.sessionState.conf.filesMaxPartitionBytes, openCost,
-        listedFiles.map(_.getLen).sum,
-        sparkSession.sparkContext.defaultParallelism))
-    val conf = hadoopConf
+    val target = BinPack.adaptiveTarget(options, build.files.map(_.getLen).sum)
+    val maxBytes = target.maxBytes
+    val conf = build.conf
     val useWcdx = options.getBoolean("useWcdx", true)
     // index-aware planning, in preference order per file:
     //   1. pushed predicates + fresh .wcdx sidecar -> slices over ONLY
@@ -518,7 +419,7 @@ class WarcScan(requiredSchema: StructType,
           options.getLong("cdxMaxLoadBytes", 1L << 28)), false)
       }.getOrElse((Map.empty, false))
     val mergeGap = options.getLong("cdxMergeGap", 1L << 16)
-    val slices = listedFiles.flatMap { st =>
+    val slices = build.files.flatMap { st =>
       val whole = Seq(WarcFileSlice(st.getPath.toString, 0L, st.getLen))
       if (!useWcdx) whole
       else {
@@ -553,13 +454,12 @@ class WarcScan(requiredSchema: StructType,
         }
       }
     }
-    graft.sources.BinPack.pack(slices.map(s => s -> s.length),
-        maxBytes, openCost)
+    target.pack(slices.map(s => s -> s.length))
       .map(b => WarcInputPartition(b): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new WarcReaderFactory(HadoopConfBroadcast(sparkSession),
+    new WarcReaderFactory(build.broadcast,
       requiredSchema, options.getLong("maxRecordBytes", 1L << 30),
       pushedFilters,
       options.getBoolean("decodeContentEncoding", true))

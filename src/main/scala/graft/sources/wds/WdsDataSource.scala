@@ -4,7 +4,6 @@ import java.util
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -21,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.operators.Multimodal.TarCodec
-import graft.sources.HadoopConfBroadcast
+import graft.sources.{BinPack, FileSource, HadoopConfBroadcast, ScanBuild, StatsScan}
 
 /** WebDataset-style tar-shard source + sink (`format("wds")`) — the
   * layout multimodal training actually reads: samples packed as
@@ -97,30 +96,13 @@ object WdsTable {
   def paths(options: CaseInsensitiveStringMap): Seq[String] =
     graft.sources.PathOptions.paths(options, "wds")
 
+  /** wds's part of the shared data-file rule: none; its `_<shard>.widx`
+    * sidecars are hidden names. */
+  val Rule: FileSource.Rule = FileSource.Rule("wds")
+
   def listDataFiles(options: CaseInsensitiveStringMap,
-      conf: Configuration): Seq[FileStatus] = {
-    graft.sources.ListingStats.listings.increment()
-    val declared = paths(options)
-    if (declared.isEmpty)
-      throw new IllegalArgumentException("wds source requires a path")
-    declared.flatMap { p =>
-      val path = new Path(p)
-      val fs = path.getFileSystem(conf)
-      val matches = Option(fs.globStatus(path)).map(_.toSeq).getOrElse {
-        if (fs.exists(path)) Seq(fs.getFileStatus(path)) else Seq.empty
-      }
-      if (matches.isEmpty)
-        throw new java.io.FileNotFoundException(
-          s"wds path does not exist: $p")
-      matches.flatMap { st =>
-        if (st.isDirectory)
-          fs.listStatus(st.getPath).toSeq.filter(_.isFile)
-            .filter(s => !s.getPath.getName.startsWith("_") &&
-              !s.getPath.getName.startsWith("."))
-        else Seq(st)
-      }
-    }
-  }
+      conf: Configuration): Seq[FileStatus] =
+    FileSource.list(options, conf, Rule).files
 
   /** key/ext split at the FIRST dot of the basename (the WebDataset
     * convention — extensions are compound: "a/sample.seg.png" ->
@@ -148,27 +130,18 @@ class WdsTable(options: CaseInsensitiveStringMap) extends Table
       TableCapability.ACCEPT_ANY_SCHEMA)
 
   override def newScanBuilder(scanOptions: CaseInsensitiveStringMap)
-      : ScanBuilder = {
-    val merged = new util.HashMap[String, String]()
-    merged.putAll(options)
-    merged.putAll(scanOptions)
-    new WdsScanBuilder(new CaseInsensitiveStringMap(merged))
-  }
+      : ScanBuilder =
+    new WdsScanBuilder(FileSource.merged(options, scanOptions))
 
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    val merged = new util.HashMap[String, String]()
-    merged.putAll(options)
-    merged.putAll(info.options())
-    new WdsWriteBuilder(new CaseInsensitiveStringMap(merged), info)
-  }
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+    new WdsWriteBuilder(FileSource.merged(options, info.options()), info)
 }
 
 // --------------------------------------------------------------- read side
 
 /** Executor-visible read counters — the spec seam proving the pruned
-  * walk really skips payload bytes (same pattern as
-  * [[graft.sources.pcap.PcapTsIndex.prunedFiles]]); the DSv2 custom
-  * metrics surface the same numbers on the scan node. */
+  * walk really skips payload bytes; the DSv2 custom metrics surface the
+  * same numbers on the scan node. */
 object WdsReadStats {
   val entriesRead = new java.util.concurrent.atomic.LongAdder
   val payloadBytesSkipped = new java.util.concurrent.atomic.LongAdder
@@ -257,29 +230,13 @@ class WdsScanBuilder(options: CaseInsensitiveStringMap)
   // O(bytes). Any shard missing a sidecar (foreign tars, hand-built
   // fixtures) declines and the streaming walk counts for real.
   // `option("countPushdown","false")` disables.
-  // ONE listing per scan BUILD, shared with the scan this builder
-  // produces (the aggregate probe and the scan's stats/planning all
-  // need the same shard set)
-  private lazy val listedFilesMemo: Seq[FileStatus] =
-    WdsTable.listDataFiles(options,
-      SparkSession.active.sessionState.newHadoopConf())
+  // one Hadoop conf, one listing and one sidecar-count fold per scan
+  // build, shared with the scan this builder produces
+  private val scanBuild = new ScanBuild(options, WdsTable.Rule)
 
-  private def sidecarCount(): Option[Long] = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val files = listedFilesMemo
-    if (files.isEmpty) return None
-    var total = 0L
-    files.foreach { st =>
-      WdsIndex.readEntries(
-          st.getPath.getFileSystem(conf), st.getPath) match {
-        case Some(n) => total += n
-        case None => return None
-      }
-    }
-    Some(total)
-  }
-
-  private lazy val sidecarCountMemo: Option[Long] = sidecarCount()
+  private lazy val sidecarCount: Option[Long] =
+    FileSource.sumCounts(scanBuild.files)(st =>
+      WdsIndex.readEntries(st.getPath.getFileSystem(scanBuild.conf), st.getPath))
 
   override def supportCompletePushDown(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
@@ -297,52 +254,24 @@ class WdsScanBuilder(options: CaseInsensitiveStringMap)
     if (agg.groupByExpressions.nonEmpty ||
         agg.aggregateExpressions.toSeq.length != 1 ||
         !agg.aggregateExpressions.head.isInstanceOf[CountStar]) return false
-    pushedCount = sidecarCountMemo
+    pushedCount = sidecarCount
     pushedCount.isDefined
   }
 
   override def build(): Scan = pushedCount match {
-    case Some(n) => new WdsStatsScan(n)
+    case Some(n) =>
+      new StatsScan(Seq(n), s"WdsStatsScan(count=$n, fromSidecars=true)")
     case None =>
-      new WdsScan(required, options, pushed, () => listedFilesMemo)
+      new WdsScan(required, options, pushed, scanBuild, () => sidecarCount)
   }
 }
 
-/** The metadata-only COUNT(*) scan: one partition, one row, no shard
-  * ever opened. */
-class WdsStatsScan(count: Long) extends Scan with Batch {
-  override def readSchema(): StructType = new StructType()
-    .add("count", org.apache.spark.sql.types.LongType, nullable = false)
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"WdsStatsScan(count=$count, fromSidecars=true)"
-  override def planInputPartitions(): Array[InputPartition] =
-    Array(WdsStatsPartition(count))
-  override def createReaderFactory(): PartitionReaderFactory =
-    new WdsStatsReaderFactory
-}
-
-case class WdsStatsPartition(count: Long) extends InputPartition
-
-class WdsStatsReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition)
-      : PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[WdsStatsPartition]
-    new PartitionReader[InternalRow] {
-      private var emitted = false
-      override def next(): Boolean =
-        if (emitted) false else { emitted = true; true }
-      override def get(): InternalRow = InternalRow(p.count)
-      override def close(): Unit = ()
-    }
-  }
-}
-
+/** The tar-walking scan over its builder's one conf and listing;
+  * `sidecarCount` is the builder's fold of the shards' `.widx` counts. */
 class WdsScan(requiredSchema: StructType,
     options: CaseInsensitiveStringMap,
-    pushedFilters: Array[org.apache.spark.sql.sources.Filter] =
-      Array.empty,
-    listed: () => Seq[FileStatus] = null) extends Scan with Batch
+    pushedFilters: Array[org.apache.spark.sql.sources.Filter],
+    build: ScanBuild, sidecarCount: () => Option[Long]) extends Scan with Batch
   with SupportsReportStatistics {
 
   override def readSchema(): StructType = requiredSchema
@@ -356,35 +285,12 @@ class WdsScan(requiredSchema: StructType,
     * exact row count from the sidecars, so a small lake joined
     * against a big relation plans a static broadcast instead of
     * waiting for AQE to rescue it. */
-  // ONE listing per scan: estimateStatistics and planInputPartitions
-  // both need the shard set (repeated listings are O(files) RPCs per
-  // query on an object store); shared with the builder's memo when
-  // the builder already listed for its aggregate probe
-  private lazy val listedFiles: Seq[FileStatus] =
-    if (listed != null) listed()
-    else WdsTable.listDataFiles(options, hadoopConf)
-
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics =
     new org.apache.spark.sql.connector.read.Statistics {
-      private val files = listedFiles
-      private val bytes = files.map(_.getLen).sum
-      private val rows: Option[Long] =
-        if (pushedFilters.nonEmpty || files.isEmpty) None
-        else {
-          var total = 0L
-          val it = files.iterator
-          var ok = true
-          while (ok && it.hasNext) {
-            val st = it.next()
-            WdsIndex.readEntries(
-                st.getPath.getFileSystem(hadoopConf), st.getPath) match {
-              case Some(n) => total += n
-              case None => ok = false
-            }
-          }
-          if (ok) Some(total) else None
-        }
+      private val bytes = build.files.map(_.getLen).sum
+      private val rows =
+        if (pushedFilters.nonEmpty) None else sidecarCount()
       override def sizeInBytes(): java.util.OptionalLong =
         java.util.OptionalLong.of(bytes)
       override def numRows(): java.util.OptionalLong =
@@ -396,26 +302,16 @@ class WdsScan(requiredSchema: StructType,
       : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
     Array(new WdsEntriesMetric, new WdsSkippedBytesMetric)
 
-  private def sparkSession = SparkSession.active
-
-  private def hadoopConf: Configuration =
-    sparkSession.sessionState.newHadoopConf()
-
   /** Whole-shard units (tar has no splittable framing: no central
     * directory, sizes only in per-entry headers), bin-packed to
-    * maxPartitionBytes by best-fit decreasing
+    * the partition target by best-fit decreasing
     * ([[graft.sources.BinPack]], O(n log n) — million-shard-lake
     * safe) — the pcap discipline: a lake of many small shards plans
     * into balanced tasks; a shard larger than the target gets its own
     * task. */
   override def planInputPartitions(): Array[InputPartition] = {
-    val openCost = sparkSession.sessionState.conf.filesOpenCostInBytes
-    val maxBytes = Option(options.get("maxBytesPerPartition"))
-      .map(v => org.apache.spark.network.util.JavaUtils.byteStringAsBytes(v))
-      .getOrElse(graft.sources.BinPack.adaptiveTarget(
-        sparkSession.sessionState.conf.filesMaxPartitionBytes, openCost,
-        listedFiles.map(_.getLen).sum,
-        sparkSession.sparkContext.defaultParallelism))
+    val target = BinPack.adaptiveTarget(options, build.files.map(_.getLen).sum)
+    val maxBytes = target.maxBytes
     // OPT-IN byte-range splitting of big PLAIN .tar shards with
     // reader-side 512-block header resync (WdsResync). Opt-in, not
     // default: tar's framing cannot distinguish an embedded tar
@@ -424,7 +320,7 @@ class WdsScan(requiredSchema: StructType,
     // must stay on whole-file planning. Compressed shards cannot
     // split regardless (single-stream codecs).
     val resync = options.getBoolean("resyncSplit", false)
-    val (big, packable) = listedFiles.partition { f =>
+    val (big, packable) = build.files.partition { f =>
       resync && f.getLen > maxBytes &&
         f.getPath.getName.toLowerCase(java.util.Locale.ROOT)
           .endsWith(".tar")
@@ -438,13 +334,13 @@ class WdsScan(requiredSchema: StructType,
       }
     }
     val files = packable.map(f => f.getPath.toString -> f.getLen)
-    (graft.sources.BinPack.pack(files, maxBytes, openCost)
+    (target.pack(files)
       .map(b => WdsInputPartition(b.map(p => WdsSlice(p, 0L, -1L)))
         : InputPartition) ++ ranged).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new WdsReaderFactory(HadoopConfBroadcast(sparkSession),
+    new WdsReaderFactory(build.broadcast,
       requiredSchema,
       options.getLong("maxEntryBytes", 1L << 30),
       pushedFilters)
@@ -469,29 +365,6 @@ class WdsReaderFactory(conf: Broadcast[SerializableConfiguration],
     new WdsPartitionReader(
       partition.asInstanceOf[WdsInputPartition].slices, conf.value.value,
       schema, maxEntryBytes, WdsEntryFilter.compile(pushedFilters))
-}
-
-/** Open a (possibly codec-compressed) shard as a stream: `.tar.zst`
-  * via zstd-jni's streaming decoder (Hadoop's ZStandardCodec needs
-  * the native libhadoop build most clusters don't ship),
-  * `.tar.gz`/`.tgz`/`.tar.bz2` via the Hadoop codec factory, plain
-  * `.tar` raw — buffered either way (the walk issues many 512-byte
-  * header reads). */
-object WdsShardOpener {
-  def open(conf: Configuration, pathStr: String): java.io.InputStream = {
-    val path = new Path(pathStr)
-    val fs = path.getFileSystem(conf)
-    val raw = fs.open(path)
-    val lower = path.getName.toLowerCase(java.util.Locale.ROOT)
-    val decoded =
-      if (lower.endsWith(".zst") || lower.endsWith(".zstd") ||
-          lower.endsWith(".tzst"))
-        new com.github.luben.zstd.ZstdInputStream(raw): java.io.InputStream
-      else Option(new CompressionCodecFactory(conf).getCodec(path))
-        .map(_.createInputStream(raw): java.io.InputStream)
-        .getOrElse(raw: java.io.InputStream)
-    new java.io.BufferedInputStream(decoded, 1 << 20)
-  }
 }
 
 /** Streaming ustar walk over one open shard stream: headers are read
@@ -642,7 +515,7 @@ class WdsPartitionReader(slices: Seq[WdsSlice], conf: Configuration,
         val slice = slices(fileIdx)
         shardName = new Path(slice.path).getName
         in =
-          if (slice.length < 0) WdsShardOpener.open(conf, slice.path)
+          if (slice.length < 0) graft.sources.FileSource.open(conf, slice.path)
           else WdsResync.openSlice(conf, slice)
         walk = new WdsTarWalk(in, shardName, needData, maxEntryBytes, pred)
       }

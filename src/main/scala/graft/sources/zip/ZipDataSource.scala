@@ -15,7 +15,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.sources.HadoopConfBroadcast
+import graft.sources.{BinPack, FileSource, PathOptions, ScanBuild}
 
 /** ZIP archive source (`format("zip")`) — the container public datasets
   * actually ship in (Kaggle exports, ImageNet-style image bundles,
@@ -32,7 +32,8 @@ import graft.sources.HadoopConfBroadcast
   *     the DRIVER plans per-entry slices without touching entry bytes,
   *     and a 50 GB archive fans out across executors (unlike tar,
   *     which has no index and stays a sequential walk). Entries are
-  *     bin-packed by compressed size to `maxPartitionBytes`.
+  *     bin-packed by compressed size to the partition target
+  *     (`maxBytesPerPartition`, as in every source).
   *   - **Projection pushdown.** A name/size census (`data` pruned)
   *     answers from the central directory alone — zero entry bytes
   *     read (ZipSourceSpec pins the counter).
@@ -77,31 +78,9 @@ object ZipTable {
     .add("crc32", LongType, nullable = false)
     .add("data", BinaryType, nullable = true)
 
-  def listDataFiles(options: CaseInsensitiveStringMap,
-      conf: Configuration): Seq[FileStatus] = {
-    graft.sources.ListingStats.listings.increment()
-    val declared = graft.sources.PathOptions.paths(options, "zip")
-    if (declared.isEmpty)
-      throw new IllegalArgumentException("zip source requires a path")
-    declared.flatMap { p =>
-      val path = new Path(p)
-      val fs = path.getFileSystem(conf)
-      val matches = Option(fs.globStatus(path)).map(_.toSeq).getOrElse {
-        if (fs.exists(path)) Seq(fs.getFileStatus(path)) else Seq.empty
-      }
-      if (matches.isEmpty)
-        throw new java.io.FileNotFoundException(
-          s"zip path does not exist: $p")
-      matches.flatMap { st =>
-        if (st.isDirectory)
-          fs.listStatus(st.getPath).toSeq
-            .filter(s => s.isFile && s.getLen > 0 &&
-              !s.getPath.getName.startsWith("_") &&
-              !s.getPath.getName.startsWith("."))
-        else Seq(st)
-      }
-    }
-  }
+  /** zip's part of the shared data-file rule: a zero-length file is no
+    * archive. */
+  val Rule: FileSource.Rule = FileSource.Rule("zip", keep = (_, len) => len > 0)
 }
 
 /** Test/ops seam: entry payload bytes actually read (census paths must
@@ -113,16 +92,13 @@ object ZipReadStats {
 class ZipTable(options: CaseInsensitiveStringMap) extends Table
     with SupportsRead {
   override def name(): String =
-    s"zip(${graft.sources.PathOptions.paths(options, "zip").mkString(",")})"
+    s"zip(${PathOptions.paths(options, "zip").mkString(",")})"
   override def schema(): StructType = ZipTable.ReadSchema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(scanOptions: CaseInsensitiveStringMap)
-      : ScanBuilder = {
-    val merged = new util.HashMap[String, String](options)
-    merged.putAll(scanOptions)
-    new ZipScanBuilder(new CaseInsensitiveStringMap(merged))
-  }
+      : ScanBuilder =
+    new ZipScanBuilder(FileSource.merged(options, scanOptions))
 }
 
 class ZipScanBuilder(options: CaseInsensitiveStringMap)
@@ -147,24 +123,17 @@ class ZipScanBuilder(options: CaseInsensitiveStringMap)
   override def pushedFilters(): Array[Filter] = pushed
 
   override def build(): Scan =
-    new ZipScan(required, options, pushed)
+    new ZipScan(required, options, pushed, new ScanBuild(options, ZipTable.Rule))
 }
 
+/** The entry-reading scan over one conf and one listing. */
 class ZipScan(requiredSchema: StructType,
-    options: CaseInsensitiveStringMap, pushed: Array[Filter])
+    options: CaseInsensitiveStringMap, pushed: Array[Filter], build: ScanBuild)
     extends Scan with Batch {
   override def readSchema(): StructType = requiredSchema
   override def toBatch: Batch = this
   override def description(): String =
     s"zip pushed=[${pushed.mkString(", ")}]"
-
-  private val sparkSession = org.apache.spark.sql.SparkSession.active
-  private def hadoopConf =
-    sparkSession.sessionState.newHadoopConf()
-
-  // one listing per scan (the memoized-listing discipline)
-  private lazy val listedFiles: Seq[FileStatus] =
-    ZipTable.listDataFiles(options, hadoopConf)
 
   private def entryKeep(name: String, archive: String): Boolean =
     pushed.forall {
@@ -176,17 +145,9 @@ class ZipScan(requiredSchema: StructType,
     }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val openCost = sparkSession.sessionState.conf.filesOpenCostInBytes
-    val maxBytes = Option(options.get("maxPartitionBytes"))
-      .map(v => org.apache.spark.network.util.JavaUtils.byteStringAsBytes(v))
-      .getOrElse(graft.sources.BinPack.adaptiveTarget(
-        sparkSession.sessionState.conf.filesMaxPartitionBytes, openCost,
-        listedFiles.map(_.getLen).sum,
-        sparkSession.sparkContext.defaultParallelism))
-    val conf = hadoopConf
     val wantData = requiredSchema.fieldNames.contains("data")
-    val units = listedFiles.flatMap { st =>
-      val fs = st.getPath.getFileSystem(conf)
+    val units = build.files.flatMap { st =>
+      val fs = st.getPath.getFileSystem(build.conf)
       val cd = ZipCentralDirectory.read(fs, st)
       val archive = st.getPath.getName
       cd.filter(e => entryKeep(e.name, archive)).map { e =>
@@ -197,13 +158,12 @@ class ZipScan(requiredSchema: StructType,
           e.csize, e.usize, e.method, e.crc) -> w
       }
     }
-    graft.sources.BinPack.pack(units, maxBytes, openCost)
+    BinPack.adaptiveTarget(options, build.files.map(_.getLen).sum).pack(units)
       .map(b => ZipInputPartition(b): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new ZipReaderFactory(HadoopConfBroadcast(sparkSession),
-      requiredSchema)
+    new ZipReaderFactory(build.broadcast, requiredSchema)
 }
 
 /** One entry, with everything the reader needs taken from the CENTRAL

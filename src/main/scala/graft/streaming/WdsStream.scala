@@ -28,7 +28,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object WdsStream {
 
   /** Default admission glob: everything the batch listing would read —
-    * plain tars plus every codec wrapping [[WdsShardOpener]] decodes.
+    * plain tars plus every codec wrapping [[graft.sources.FileSource.open]]
+    * decodes.
     * The r13 default (`*.tar` only) silently ignored compressed shards
     * the same lake's batch scan would read — a batch/stream asymmetry. */
   val DefaultShardGlob =
@@ -53,7 +54,7 @@ object WdsStream {
       .select($"path").as[String]
       .flatMap { path =>
         val shard = path.substring(path.lastIndexOf('/') + 1)
-        val in = graft.sources.wds.WdsShardOpener.open(conf.value.value, path)
+        val in = graft.sources.FileSource.open(conf.value.value, path)
         // a flatMap iterator has no close() hook, so a corrupt shard
         // (walk throws) or an unconsumed iterator (a limit upstream)
         // would leak the open FS stream — the task-completion listener

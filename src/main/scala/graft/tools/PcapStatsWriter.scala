@@ -1,42 +1,38 @@
 package graft.tools
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sources.pcap.{PcapFileOpener, PcapTsIndex}
+import graft.sources.FileSource
+import graft.sources.pcap.{PcapTable, PcapTsIndex}
 
 /** ETL-side sidecar generator: writes an exact `.tsidx` (minTs maxTs)
-  * next to every classic-pcap capture under a directory, enabling
+  * next to every classic-pcap capture a path lists, enabling
   * file-level ts pruning in the `pcap` source without opening files at
-  * query time. One sequential header-walk per capture (bodies skipped;
-  * compressed files stream through their codec) — the kind of pass a
-  * landing-zone ETL runs once per arriving file.
+  * query time. A path lists as `spark.read.format("pcap").load(path)`
+  * does: a directory one level deep, a glob's matches, hidden names and
+  * sidecars skipped. One sequential header-walk per capture (bodies
+  * skipped; compressed files stream through their codec) — the kind of
+  * pass a landing-zone ETL runs once per arriving file.
   *
-  * Usage: PcapStatsWriter <dirOrFile> [dirOrFile...]
+  * Usage: PcapStatsWriter <dirFileOrGlob> [dirFileOrGlob...]
   */
 object PcapStatsWriter {
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: PcapStatsWriter <dirOrFile>...")
+    require(args.nonEmpty, "usage: PcapStatsWriter <dirFileOrGlob>...")
     val conf = new Configuration()
     args.foreach { a =>
-      val p = new Path(a)
-      val fs = p.getFileSystem(conf)
-      val files =
-        if (fs.getFileStatus(p).isDirectory)
-          fs.listStatus(p).toSeq.filter(_.isFile)
-            .filterNot(st => st.getPath.getName.startsWith("_") ||
-              PcapTsIndex.isSidecar(st.getPath.getName) ||
-              st.getPath.getName.endsWith(".tmp"))
-        else Seq(fs.getFileStatus(p))
+      val files = PcapTable.listDataFiles(
+        new CaseInsensitiveStringMap(java.util.Map.of("path", a)), conf)
       files.foreach { st =>
-        val in = PcapFileOpener.open(conf, st.getPath.toString)
+        val in = FileSource.open(conf, st.getPath.toString)
         val stats = try PcapTsIndex.scanMinMax(in) finally in.close()
         // non-classic containers (pcapng) have no fixed record chain for
         // the header walk — fall back to a full decode pass for the same
         // exact stats (slower, still one-time ETL work). The count
         // covers EVERY packet (also ones without a usable ts).
         val resolved = stats.orElse {
-          val in2 = PcapFileOpener.open(conf, st.getPath.toString)
+          val in2 = FileSource.open(conf, st.getPath.toString)
           try {
             var mn = Long.MaxValue
             var mx = Long.MinValue
@@ -55,7 +51,8 @@ object PcapStatsWriter {
         }
         resolved match {
           case Some((mn, mx, n)) =>
-            PcapTsIndex.writeSidecar(fs, st.getPath, mn, mx, Some(n))
+            PcapTsIndex.writeSidecar(st.getPath.getFileSystem(conf),
+              st.getPath, mn, mx, Some(n))
             println(s"${st.getPath}: ts [$mn, $mx], $n packets")
           case None =>
             println(s"${st.getPath}: no packet stats (skipped)")

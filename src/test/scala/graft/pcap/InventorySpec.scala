@@ -72,7 +72,7 @@ class InventorySpec extends AnyFunSuite {
     val conf = spark.sessionState.newHadoopConf()
     rows.foreach { case (name, n, first, last) =>
       val p = new org.apache.hadoop.fs.Path(s"/tmp/graft_synth_capdir/$name")
-      val in = graft.sources.pcap.PcapFileOpener.open(conf, p.toString)
+      val in = graft.sources.FileSource.open(conf, p.toString)
       val st = try graft.sources.pcap.PcapTsIndex.scanMinMax(in)
         finally in.close()
       // the sidecar scan records whole seconds; the fixture's usec

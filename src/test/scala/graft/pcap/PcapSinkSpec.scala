@@ -1,13 +1,15 @@
 package graft.pcap
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The pcap WRITE path: SQL-filtered packets re-export as a valid
   * classic-libpcap capture (a capability the reference lacks — its
   * pipeline is strictly read-only). Round-trip contract: read -> filter
   * -> write -> read decodes the exact surviving packets. */
-class PcapSinkSpec extends AnyFunSuite {
+class PcapSinkSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -158,22 +160,22 @@ class PcapSinkSpec extends AnyFunSuite {
       .filter(_.getName.endsWith(".pcap")).sortBy(_.getName)
     assert(parts.length == 2)
     parts.foreach { f =>
-      val sc = graft.sources.pcap.PcapTsIndex.readSidecar(fs,
+      val sc = graft.sources.pcap.PcapTsIndex.readSidecarStats(fs,
         new org.apache.hadoop.fs.Path(f.toString))
       assert(sc.isDefined, s"missing sidecar for $f")
       val tss = spark.read.format("pcap").load(f.toString)
         .select("ts").collect().map(_.getLong(0))
-      assert(sc.get == ((tss.min, tss.max)))
+      assert(sc.get == ((tss.min, tss.max, Some(tss.length.toLong))))
     }
 
     // a ts-bounded query over the re-exported lake skips the other band
-    graft.sources.pcap.PcapTsIndex.prunedFiles.reset()
-    val n = spark.read.format("pcap").load(outDir)
-      .filter("ts < 1750000000").count()
-    assert(n == 100)
-    // >= 1: the scan may plan more than once per action (each planning
-    // pass re-counts the same pruned file)
-    assert(graft.sources.pcap.PcapTsIndex.prunedFiles.sum() >= 1,
+    val windowed = spark.read.format("pcap").load(outDir)
+      .filter("ts < 1750000000").groupBy().count()
+    assert(windowed.collect().head.getLong(0) == 100)
+    val pruned = collect(windowed.queryExecution.executedPlan) {
+      case b: BatchScanExec => b.metrics("filesPrunedByTs").value
+    }
+    assert(pruned == Seq(1L),
       "the out-of-range part file must be pruned via its sidecar")
     // opting out leaves no sidecars behind
     val outDir2 = java.nio.file.Files.createTempDirectory("sink_nots").toString
